@@ -9344,14 +9344,11 @@ object SparkEntry {
         graft.sources.Warc.read(s, path + "/*.warc*"))
       // r18 opt (guide §5, §1.2): `extracted` (WARC parse + jusText —
       // the pipeline's most expensive projection) feeds BOTH the
-      // LangId.train fit and the serving chain, and `cleaned` (which
-      // adds the LangId scoring projection) is referenced three times
-      // inside dropCommonLines' plan (lines x2 + the rebuild join).
-      // Uncached, the stage profile showed the WARC+extract subtree
-      // evaluated 3x (ProbeStages r18: 15.8 s + 5.3 s + 1.7 s exec on
-      // identical 464 KB input). Caching both computes each heavy
-      // projection once per run — from parquet, inside the timed
-      // region; Bench clears the cache between passes.
+      // LangId.train fit and the serving chain. Uncached, the stage
+      // profile showed the WARC+extract subtree evaluated 3x
+      // (ProbeStages r18: 15.8 s + 5.3 s + 1.7 s exec on identical
+      // 464 KB input). Caching computes it once per run — inside the
+      // timed region; Bench clears the cache between passes.
       val extracted = bodies.select(
           regexp_extract(col("target_uri"), "/doc/(\\d+)$", 1)
             .cast("long").as("doc_id"),
@@ -9365,14 +9362,11 @@ object SparkEntry {
         "text", "true_lang", m = 512)
       val labeled = graft.operators.LangId.classify(
         extracted, "text", model, m = 512)
-      // localCheckpoint (eager), not cache: the three dropCommonLines
-      // branches run CONCURRENTLY in one job, and a lazily-filled
-      // cache lets each branch recompute the classify projection
-      // before any partition is cached (measured: 3 identical heavy
-      // stages). The eager cut materializes classify exactly once.
+      // dropCommonLines materializes its input once (its contract),
+      // so the classify projection runs exactly once without a cut
+      // here
       val cleaned = labeled.select(col("doc_id"), col("lang"),
         TF.c4CleanLines(col("text")).as("text"))
-        .localCheckpoint()
       val decommon = graft.operators.Repetition.dropCommonLines(
         cleaned, "doc_id", "text", maxDocs = 20)
       val quality = decommon.filter(

@@ -874,52 +874,60 @@ object Dedup {
     * pattern); runs until converged — O(log(component diameter))
     * rounds. The per-component window partitions on the component
     * label: dup clusters are small by nature, so no mega-partition
-    * risk. */
+    * risk.
+    *
+    * Materialize-once contract: the input feeds both the pair search
+    * and the final anti-join, so the call runs ONE job that
+    * evaluates `df` once into a local checkpoint (memory and disk)
+    * before the pair search; the result reads that checkpoint, never
+    * the upstream. The call is therefore eager (the pair search and
+    * the component labeling run their own jobs after it); the
+    * checkpoint blocks are released when the result is dropped (the
+    * ContextCleaner drops them once it is garbage-collected). */
   def minhashDedup(df: DataFrame, idCol: String, textCol: String,
                    numHashes: Int = 64, bands: Int = 16,
                    shingleLen: Int = 3, threshold: Double = 0.8,
-                   maxIter: Int = 50, keepCol: String = ""): DataFrame = {
-    val pairs = minhashPairs(df, idCol, textCol, numHashes, bands,
-      shingleLen, threshold).select(col("id_a"), col("id_b"))
-    val reps = connectedComponentMinLabel(pairs, maxIter)
-    val toDrop =
-      if (keepCol.isEmpty) reps.filter(col("id") =!= col("rep")).select(col("id"))
-      else {
-        val scored = reps.join(
-          df.select(col(idCol).as("id"), col(keepCol).as("__s")), Seq("id"))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("rep"))
-          .orderBy(col("__s").desc, col("id").asc)
-        scored.withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") > 1).select(col("id"))
-      }
-    df.join(toDrop.withColumnRenamed("id", idCol), Seq(idCol), "left_anti")
-  }
+                   maxIter: Int = 50, keepCol: String = ""): DataFrame =
+    keepOnePerComponent(df, idCol, maxIter, keepCol)(in =>
+      minhashPairs(in, idCol, textCol, numHashes, bands, shingleLen,
+        threshold))
 
   /** [[minhashDedup]]'s contract over ANY 64-bit fingerprint column
     * (text simhash, image aHash/dHash): near-dup groups = connected
     * components of [[signaturePairs]], keep the min id per component
     * (or the best `keepCol` row, ties to lower id) — so transitive
     * chains (a~b, b~c without a~c) collapse to ONE survivor, the
-    * same closure the pairwise min-id rule cannot give. */
+    * same closure the pairwise min-id rule cannot give. Same
+    * materialize-once contract as [[minhashDedup]]. */
   def signatureDedup(df: DataFrame, idCol: String, sigCol: String,
                      maxDistance: Int = 3, maxBucketSize: Int = 1000,
-                     maxIter: Int = 50, keepCol: String = ""): DataFrame = {
-    val pairs = signaturePairs(df, idCol, sigCol, maxDistance,
-      maxBucketSize).select(col("id_a"), col("id_b"))
-    val reps = connectedComponentMinLabel(pairs, maxIter)
+                     maxIter: Int = 50, keepCol: String = ""): DataFrame =
+    keepOnePerComponent(df, idCol, maxIter, keepCol)(in =>
+      signaturePairs(in, idCol, sigCol, maxDistance, maxBucketSize))
+
+  /** the tail [[minhashDedup]] and [[signatureDedup]] share: the input
+    * materialized once (see the materialize-once contract), its
+    * near-dup pairs → [[connectedComponentMinLabel]] → every
+    * component member but the kept one (min id, or the best `keepCol`
+    * row, ties to the lower id) left-anti-joined away */
+  private def keepOnePerComponent(df: DataFrame, idCol: String,
+                                  maxIter: Int, keepCol: String)(
+      pairsOf: DataFrame => DataFrame): DataFrame = {
+    val in = df.localCheckpoint()
+    val reps = connectedComponentMinLabel(
+      pairsOf(in).select(col("id_a"), col("id_b")), maxIter)
     val toDrop =
       if (keepCol.isEmpty) reps.filter(col("id") =!= col("rep")).select(col("id"))
       else {
         val scored = reps.join(
-          df.select(col(idCol).as("id"), col(keepCol).as("__s")), Seq("id"))
+          in.select(col(idCol).as("id"), col(keepCol).as("__s")), Seq("id"))
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("rep"))
           .orderBy(col("__s").desc, col("id").asc)
         scored.withColumn("__rn", row_number().over(w))
           .filter(col("__rn") > 1).select(col("id"))
       }
-    df.join(toDrop.withColumnRenamed("id", idCol), Seq(idCol), "left_anti")
+    in.join(toDrop.withColumnRenamed("id", idCol), Seq(idCol), "left_anti")
   }
 
   /** Near-dup cluster audit: component representative → member count

@@ -270,6 +270,16 @@ object Repetition {
     * strips only spaces) and no CRLF line would ever match its LF
     * twin; line endings normalize to LF on reassembly.
     *
+    * Materialize-once contract: the input sits under three plan
+    * branches (the line census, the anti-join and the join back), so
+    * the call runs ONE job that evaluates `df` once into a local
+    * checkpoint (memory and disk), and every branch reads that.
+    * Without it each action on the result would run the whole
+    * upstream — a WARC parse, extraction, language id — three times.
+    * The call is therefore eager; the checkpoint blocks are released
+    * when the result is dropped (the ContextCleaner drops them once
+    * the result is garbage-collected).
+    *
     * Shape at 100 TB: one explode → (trimmed-line, doc) distinct →
     * line doc-frequency partial-agg (the only corpus-wide shuffle,
     * keyed on line content); the common set is boilerplate-sized —
@@ -280,8 +290,9 @@ object Repetition {
   def dropCommonLines(df: DataFrame, idCol: String, textCol: String,
                       maxDocs: Long): DataFrame = {
     require(maxDocs >= 1, s"maxDocs must be >= 1, got $maxDocs")
+    val in = df.localCheckpoint()
     val id = col(idCol)
-    val lines = df.select(id,
+    val lines = in.select(id,
         posexplode(split(coalesce(col(textCol), lit("")), "\r?\n"))
           .as(Seq("__pos", "__line")))
       .withColumn("__key", trim(col("__line")))
@@ -295,9 +306,9 @@ object Repetition {
       .agg(array_join(transform(
         sort_array(collect_list(struct(col("__pos"), col("__line")))),
         s => s.getField("__line")), "\n").as("__clean"))
-    df.drop(textCol)
+    in.drop(textCol)
       .join(rebuilt, Seq(idCol), "left")
-      .select(df.columns.map {
+      .select(in.columns.map {
         case c if c == textCol => coalesce(col("__clean"), lit(""))
           .as(textCol)
         case c => col(c)

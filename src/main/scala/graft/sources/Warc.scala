@@ -1,9 +1,16 @@
 package graft.sources
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, LocatedFileStatus, Path}
+import org.apache.hadoop.mapreduce.{InputSplit, Job, RecordReader,
+  TaskAttemptContext}
+import org.apache.hadoop.mapreduce.lib.input.FileInputFormat
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.util.SerializableConfiguration
 
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 /** WARC (Web ARChive) reader — the container format upstream of the
@@ -17,10 +24,15 @@ import scala.util.control.NonFatal
   * third-party parser.
   *
   * Reading is STREAMING, record at a time (r17): one task per WARC
-  * file via `sparkContext.binaryFiles`' [[org.apache.spark.input
-  * .PortableDataStream]] — the file is never materialized as a byte
-  * array, gzip members inflate through `GZIPInputStream`'s native
-  * multi-member handling (the `.warc.gz` record-per-member
+  * file — [[read]] lists the input with Hadoop's `FileInputFormat`
+  * (the listing `sparkContext.binaryFiles` uses: globs, comma-
+  * separated paths, directories, and the `_`/`.` hidden-file filter)
+  * and reads each file in its own partition. (`binaryFiles` itself
+  * is not used: its `CombineFileInputFormat` splits pack small files
+  * together, so a shard of a few ~40 KB files ran as ONE task
+  * whatever `minPartitions` asked.) The file is never materialized
+  * as a byte array, gzip members inflate through `GZIPInputStream`'s
+  * native multi-member handling (the `.warc.gz` record-per-member
   * convention) directly off the file stream, and each record's
   * payload is the only allocation. **Per-member memory contract:
   * O(one record) = O(header + min(Content-Length, maxPayloadBytes))
@@ -29,15 +41,15 @@ import scala.util.control.NonFatal
   * Content-Length exceeds `maxPayloadBytes` (default 1 GiB — far
   * above any real crawl document, safely under the JVM's 2 GiB
   * array ceiling) keep their headers and get a NULL payload; the
-  * parse skips their octets and continues. The Common Crawl layout
-  * (many ~1 GB members) parallelizes across files, which is how
-  * every published WARC pipeline shards; only header fields and the
-  * payload leave the parser, and nothing ever shuffles at read time.
-  * **Parallelism is per FILE** (gzip members are not splittable, so
-  * one task streams one file end to end): a corpus of many WARCs —
-  * the only layout crawls ship — saturates a cluster, but a single
-  * multi-TB WARC would serialize into one task; re-shard such a
-  * file into the standard ~1 GB pieces before reading.
+  * parse skips their octets and continues. Only header fields and
+  * the payload leave the parser, and nothing ever shuffles at read
+  * time. **Parallelism is exactly one partition per FILE** (gzip
+  * members are not splittable, so one task streams one file end to
+  * end): N files give N tasks, so a shard of as many files as cores
+  * runs on every core, and a corpus of many WARCs — the only layout
+  * crawls ship — saturates a cluster; a single multi-TB WARC would
+  * serialize into one task, so re-shard such a file into the
+  * standard ~1 GB pieces before reading.
   *
   * **Codec scope (pinned, r18)**: this reader decodes exactly what
   * the JVM standard library ships — gzip/x-gzip, deflate (zlib and
@@ -78,13 +90,23 @@ object Warc {
   /** WARC/HTTP header blocks larger than this are malformed. */
   private val MaxHeaderBytes = 1 << 20
 
-  /** read every record of every WARC file under `path` (glob ok).
+  /** read every record of every WARC file under `path` — a file, a
+    * directory, a glob, or a comma-separated list of those, resolved
+    * exactly as `sparkContext.binaryFiles` resolves them (hidden
+    * `_`/`.` files skipped, sub-directories not descended). The
+    * listing runs here, at call time (like a DataFrame file source),
+    * so a pattern matching nothing throws now; each listed file
+    * becomes one partition, placed on its first block's hosts.
     * Streaming per task: the file bytes never co-reside in memory —
     * see the object scaladoc for the per-member memory contract. */
   def read(spark: SparkSession, path: String): DataFrame = {
-    val rdd = spark.sparkContext.binaryFiles(path).flatMap {
-      case (file, pds) =>
-        val in = pds.open()
+    val sc = spark.sparkContext
+    val files = listFiles(sc.hadoopConfiguration, path)
+    val conf = sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration))
+    val rdd = sc.makeRDD(files.map(f => (f.getPath.toString, hostsOf(f))))
+      .flatMap { file =>
+        val p = new Path(file)
+        val in = p.getFileSystem(conf.value.value).open(p)
         // close the OUTERMOST stream (the gzip decorator when one
         // was stacked) — closing only the raw file stream would
         // leave each GZIPInputStream's native Inflater buffers to
@@ -112,8 +134,35 @@ object Warc {
                 .map(java.lang.Long.valueOf).orNull,
               rec.payload)
         }
-    }
+      }
     spark.createDataFrame(rdd, schema)
+  }
+
+  /** the files `path` names, by the `FileInputFormat` listing that
+    * `binaryFiles` runs (directories dropped, as its splits drop
+    * them), in path order */
+  private def listFiles(conf: Configuration, path: String)
+  : Seq[FileStatus] = {
+    val job = Job.getInstance(conf)
+    FileInputFormat.setInputPaths(job, path)
+    job.getConfiguration.setIfUnset(FileInputFormat.LIST_STATUS_NUM_THREADS,
+      Runtime.getRuntime.availableProcessors().toString)
+    new Lister().files(job).filterNot(_.isDirectory)
+      .sortBy(_.getPath.toString)
+  }
+
+  /** exposes the protected `listStatus`; reads nothing */
+  private final class Lister extends FileInputFormat[Void, Void] {
+    def files(job: Job): Seq[FileStatus] = listStatus(job).asScala.toSeq
+    override def createRecordReader(split: InputSplit,
+                                    ctx: TaskAttemptContext)
+    : RecordReader[Void, Void] = throw new UnsupportedOperationException
+  }
+
+  private def hostsOf(f: FileStatus): Seq[String] = f match {
+    case l: LocatedFileStatus =>
+      l.getBlockLocations.headOption.toSeq.flatMap(_.getHosts.toSeq)
+    case _ => Nil
   }
 
   /** `response` records unwrapped from their HTTP envelope:

@@ -1,9 +1,15 @@
 package graft.tools
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.{ExternalRDDScanExec, RDDScanExec,
+  SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+  QueryStageExec}
+import org.apache.spark.sql.execution.exchange.{Exchange,
+  ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoinExec}
+import org.apache.spark.storage.StorageLevel
 
 /** Engine-wide physical-plan linter: builds (does not execute) every
   * catalog query's initial physical plan and flags scale red-flags —
@@ -11,7 +17,9 @@ import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoin
   * columns, filter-bearing scans without pushed filters, and (r4)
   * latency-floor checks: more shuffle exchanges than any sane plan of
   * ours needs, or a shuffled join whose build side the optimizer
-  * estimates small enough to broadcast. Intentional exceptions are
+  * estimates small enough to broadcast — and one recompute check:
+  * the same uncached, uncheckpointed RDD scanned by more than one
+  * plan leaf. Intentional exceptions are
   * allow-listed with the reason inline. Run:
   * `sbt "runMain graft.tools.PlanLint"`. Exit code 1 on unexpected
   * findings (used as a local gate before benching). */
@@ -41,6 +49,29 @@ object PlanLint {
       sizes.reduceOption(_ min _).filter(_ < smallSideBytes)
         .map(s => s"$kind(minSide=${s}B)")
     }
+  }
+
+  /** RDDs the plan scans at more than one leaf while neither cached
+    * nor checkpointed: each extra leaf recomputes the RDD's whole
+    * lineage (a WARC parse, a decode) once more per action. Exchanges
+    * are deduplicated by canonical form, as exchange reuse would
+    * deduplicate them, so a subtree read through a reused exchange
+    * counts once; cached relations are leaves and never descended. */
+  private[graft] def repeatedRddScans(p: SparkPlan): Seq[String] = {
+    val exchanges = scala.collection.mutable.Set[SparkPlan]()
+    def scans(n: SparkPlan): Seq[RDD[_]] = n match {
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case q: QueryStageExec => scans(q.plan)
+      case _: ReusedExchangeExec => Nil
+      case e: Exchange if !exchanges.add(e.canonicalized) => Nil
+      case r: RDDScanExec => Seq(r.rdd)
+      case r: ExternalRDDScanExec[_] => Seq(r.rdd)
+      case _ => n.children.flatMap(scans)
+    }
+    scans(p).filter(r => r.getStorageLevel == StorageLevel.NONE &&
+        !r.isCheckpointed)
+      .groupBy(_.id).collect { case (id, rs) if rs.size > 1 =>
+        s"repeatedRddScan(rdd=$id x${rs.size})" }.toSeq
   }
 
   // queries where a "red flag" node is the intended plan shape
@@ -115,7 +146,12 @@ object PlanLint {
       "precedent)"),
     "q213_ivfpq_bounded" -> ("rides exactL2TopK (and ivfPqTopK for " +
       "the recall boolean): same broadcast-query-batch exact " +
-      "baseline as q212 (q49/q145 precedent)"))
+      "baseline as q212 (q49/q145 precedent)"),
+    "q168_sorted_neighbor" -> ("both sides of the rank self-join " +
+      "scan Blocking.withSortRank's ranked RDD, whose range-partition " +
+      "shuffle output is kept and reused: the second scan repeats " +
+      "only the partition-local sort and the rank stamp, never the " +
+      "upstream; checkpointing it would cost a full copy to save that"))
 
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder().master("local[4]")
@@ -225,7 +261,8 @@ object PlanLint {
             "BroadcastNestedLoopJoin" ->
               plan.contains("BroadcastNestedLoopJoin"),
             s"exchanges=$nExchanges" -> (nExchanges > maxExchanges)
-          ).collect { case (f, true) => f } ++ smallJoins
+          ).collect { case (f, true) => f } ++ smallJoins ++
+            repeatedRddScans(physical)
           if (flags.nonEmpty) {
             allow.get(name) match {
               case Some(reason) =>

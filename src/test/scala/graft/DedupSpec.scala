@@ -505,6 +505,23 @@ class DedupSpec extends SparkTestBase {
     assert(r.count() < corpus.count())
   }
 
+  test("minhashDedup evaluates its input once: each upstream row " +
+    "runs once through the call plus one action, both keep rules") {
+    val n = corpus.count()
+    Seq("", "len").foreach { keep =>
+      val evals = spark.sparkContext.longAccumulator("upstream rows")
+      // nondeterministic: keeps the counter out of inferred join
+      // filters, so it counts upstream evaluations only
+      val counted = udf { (_: Long) => evals.add(1); true }.asNondeterministic()
+      val in = corpus.withColumn("len", length($"text"))
+        .filter(counted($"doc_id"))
+      val kept = Dedup.minhashDedup(in, "doc_id", "text",
+        numHashes = 64, bands = 32, threshold = 0.6, keepCol = keep).count()
+      assert(kept < n)
+      assert(evals.value == n, s"keepCol='$keep'")
+    }
+  }
+
   test("simhash pairs: exact dups at distance 0, verified <= k") {
     val pairs = Dedup.simhashPairs(corpus, "doc_id", "text", maxDistance = 3)
       .cache()

@@ -248,6 +248,23 @@ class RepetitionSpec extends SparkTestBase {
     assert(loose(1L) == "unique alpha\ncookie banner here\n\nbody one")
   }
 
+  test("dropCommonLines evaluates its input once: each upstream row " +
+    "runs once through the call plus one action") {
+    import org.apache.spark.sql.functions.{concat, lit, udf}
+    val evals = spark.sparkContext.longAccumulator("upstream rows")
+    // nondeterministic: keeps the counter out of inferred join
+    // filters, so it counts upstream evaluations only
+    val counted = udf { (_: Long) => evals.add(1); true }.asNondeterministic()
+    val docs = spark.range(1, 41)
+      .select($"id".as("doc_id"), concat(lit("line "), $"id",
+        lit("\ncommon footer\nbody "), $"id" % 7).as("text"))
+      .filter(counted($"doc_id"))
+    val out = Repetition.dropCommonLines(docs, "doc_id", "text", 4L)
+      .collect()
+    assert(out.length == 40 && !out.exists(_.getString(1).contains("footer")))
+    assert(evals.value == 40L)
+  }
+
   test("gopherRepetitionFlags: published thresholds gate the " +
     "conjunction; clean docs pass, repetitive docs fail") {
     // doc 1 must be LONG to pass: with all-distinct words the top

@@ -79,6 +79,56 @@ class WarcSpec extends SparkTestBase {
     dir.toFile.listFiles().foreach(_.delete()); dir.toFile.delete()
   }
 
+  test("read: one partition per file — N small files give N " +
+    "partitions, listed exactly as binaryFiles lists them") {
+    val dir = java.nio.file.Files.createTempDirectory("warc_parts")
+    val n = 5
+    (0 until n).foreach { f =>
+      val recs = (0 until 3).map(i =>
+        rec("response", s"http://x/$f/$i", Warc.httpBytes(s"p$f.$i".getBytes)))
+      val bytes =
+        if (f % 2 == 0) Warc.warcBytes(recs)
+        else recs.map(r => gzBytes(Warc.warcBytes(Seq(r)))).reduce(_ ++ _)
+      java.nio.file.Files.write(
+        dir.resolve(f"part$f%02d.warc" + (if (f % 2 == 0) "" else ".gz")),
+        bytes)
+    }
+    // hidden files and a sub-directory: never records
+    java.nio.file.Files.write(dir.resolve("_SUCCESS"), Array.emptyByteArray)
+    java.nio.file.Files.write(dir.resolve(".part00.warc.crc"),
+      Warc.warcBytes(threeRecords))
+    java.nio.file.Files.write(dir.resolve("_hidden.warc"),
+      Warc.warcBytes(threeRecords))
+    java.nio.file.Files.createDirectory(dir.resolve("nested"))
+    val d = dir.toString
+    // the reader this one replaced: binaryFiles + the same parser;
+    // its (file, record_idx, uri) triples are the expected values
+    def before(path: String): Set[(String, Int, String)] =
+      spark.sparkContext.binaryFiles(path).flatMap { case (f, pds) =>
+        Warc.parse(pds.toArray()).zipWithIndex.map { case (r, i) =>
+          (f, i, r.headers("warc-target-uri")) }
+      }.collect().toSet
+    def after(path: String): Set[(String, Int, String)] =
+      Warc.read(spark, path)
+        .select($"warc_file", $"record_idx", $"target_uri")
+        .as[(String, Int, String)].collect().toSet
+    val paths = Seq(d, d + "/*.warc*", s"$d/part00.warc,$d/part03.warc.gz",
+      s"$d/part0[12]*,$d/part04.warc")
+    paths.foreach { p =>
+      val want = before(p)
+      assert(want.nonEmpty, p)
+      assert(after(p) == want, p)
+    }
+    assert(after(d).map(_._1).size == n)
+    assert(Warc.read(spark, d).rdd.getNumPartitions == n)
+    assert(Warc.read(spark, d + "/*.warc").rdd.getNumPartitions == 3)
+    def rm(f: java.io.File): Unit = {
+      if (f.isDirectory) f.listFiles().foreach(rm)
+      f.delete(): Unit
+    }
+    rm(dir.toFile)
+  }
+
   test("recordIterator: oversized Content-Length keeps metadata, " +
     "nulls the payload, and the parse CONTINUES (the 512 MiB-member " +
     "sizing path, exercised via the maxPayloadBytes knob)") {
