@@ -148,6 +148,39 @@ object Dedup {
     out
   }
 
+  /** bucket rows → one collected id list per bucket: a single hash
+    * aggregation on `keys` over (id, keys...) rows */
+  private def collectBuckets(keyed: DataFrame, keys: Seq[String]): DataFrame =
+    keyed.groupBy(keys.map(col): _*).agg(collect_list(col("id")).as("ids"))
+
+  /** candidate pairs from (id, keys...) bucket rows: pairs are
+    * generated per bucket from a collected id array (one hash
+    * aggregation) instead of a bucket self-join — no join-row blowup,
+    * and the size guard [2, cap] is a cheap filter on the aggregated
+    * row. Pairs are deduplicated before the (expensive) verification,
+    * since near-identical items share most buckets. */
+  private def bucketPairs(keyed: DataFrame, keys: Seq[String],
+                          cap: Int): DataFrame =
+    pairsFromBuckets(collectBuckets(keyed, keys)
+      .filter(size(col("ids")).between(2, cap)))
+
+  /** exact verification of (id_a, id_b) candidates: each side's
+    * `payload` joins in by id, `measure` of the two payloads is
+    * emitted as `out`, and only pairs passing `keep` stay. The result
+    * is materialized and the cached `items` (id, payload) released. */
+  private def verifyPairs(cand: DataFrame, items: DataFrame, payload: String,
+                          out: String, measure: (Column, Column) => Column)(
+      keep: Column => Column): DataFrame = {
+    def side(s: String) =
+      items.select(col("id").as(s"id_$s"), col(payload).as(s"${payload}_$s"))
+    materializeAndRelease(cand
+      .join(side("a"), Seq("id_a"))
+      .join(side("b"), Seq("id_b"))
+      .select(col("id_a"), col("id_b"),
+        measure(col(s"${payload}_a"), col(s"${payload}_b")).as(out))
+      .filter(keep(col(out))), items)
+  }
+
   /** candidate near-dup pairs by MinHash LSH, verified by exact
     * Jaccard on word `shingleLen`-grams. Returns (id_a, id_b, jaccard)
     * with id_a < id_b and jaccard >= threshold.
@@ -158,8 +191,9 @@ object Dedup {
     * fit threshold 0.8 (recall 0.9998 there, ~0.89 at 0.6); for a
     * 0.6 threshold use bands = 32 (2 rows/band — recall 1-6e-7 at
     * 0.6), as the catalog's screen queries do. Verification is exact,
-    * so a too-coarse banding only loses recall, never precision. */
-  /** `maxBucketSize`: band buckets larger than this are skipped during
+    * so a too-coarse banding only loses recall, never precision.
+    *
+    * `maxBucketSize`: band buckets larger than this are skipped during
     * candidate generation. Oversized buckets arise from high-frequency
     * shingles dominating a band's minima and contribute m^2 mostly-
     * false candidates; true near-dup pairs (which agree on most bands,
@@ -170,37 +204,9 @@ object Dedup {
                    numHashes: Int = 64, bands: Int = 16,
                    shingleLen: Int = 3, threshold: Double = 0.8,
                    seed: Long = 42L,
-                   maxBucketSize: Int = 1000): DataFrame = {
-    val rows = numHashes / bands
-    // raw projection spread first so the shingling itself runs wide
-    // (ADVICE r18 — an exchange above the shingle projection leaves
-    // wordShingles evaluating map-side in the narrow scan stage)
-    val sh = shingledSpread(df, idCol, textCol, shingleLen)
-      .cache() // reused for banding and for verification joins
-    // band rows carry ONLY (id, band, bucket): the shingle payload
-    // would otherwise be duplicated `bands` times through the shuffle
-    val banded = sh
-      .select(col("id"),
-        explode(minhashBands(minhashSignature(col("sh"), numHashes, seed),
-          bands, rows)).as("bb"))
-      .select(col("id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-    // pairs generated per bucket from a collected id array (one hash
-    // aggregation) instead of a bucket self-join: no join-row blowup,
-    // and the size guard is a cheap filter on the aggregated row.
-    // Near-identical docs share most bands, so pairs are dedup'd
-    // BEFORE the (expensive) jaccard verification.
-    val cand = pairsFromBuckets(banded
-      .groupBy(col("band"), col("bucket"))
-      .agg(collect_list(col("id")).as("ids"))
-      .filter(size(col("ids")).between(2, maxBucketSize)))
-    val verified = cand
-      .join(sh.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-      .join(sh.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-    materializeAndRelease(verified, sh)
-  }
+                   maxBucketSize: Int = 1000): DataFrame =
+    lshPairs(minhashLsh(idCol, textCol, numHashes, bands, shingleLen, seed),
+      df, maxBucketSize, threshold)
 
   private def shingledFor(d: DataFrame, idCol: String, textCol: String,
                           shingleLen: Int): DataFrame =
@@ -209,20 +215,21 @@ object Dedup {
       .filter(size(col("sh")) > 0)
 
   /** [[shingledFor]] with the parallelism guard applied to the RAW
-    * (id, text) projection, not above the shingle projection —
-    * ADVICE r18: with `spread(shingledFor(...))` the repartition
-    * exchange sat ABOVE the shingles, so `wordShingles` still
-    * evaluated map-side inside the narrow 1–3-partition scan stage
-    * and only downstream banding/jaccard ran wide. Spreading the raw
+    * (id, text) projection, not above the shingle projection: an
+    * exchange above the shingles would leave `wordShingles` evaluating
+    * map-side inside a narrow 1–3-partition scan stage, with only the
+    * downstream banding/jaccard running wide. Spreading the raw
     * projection first makes the shingling itself run at session
     * parallelism, and the exchange moves text bytes instead of the
-    * strictly larger shingle arrays. `spread` still never shrinks
-    * wide inputs, so a 100 TB corpus scan is untouched. */
+    * strictly larger shingle arrays. `spread` never shrinks wide
+    * inputs, so a 100 TB corpus scan is untouched. */
   private def shingledSpread(d: DataFrame, idCol: String, textCol: String,
                              shingleLen: Int): DataFrame =
     shingledFor(Partitioning.spread(d.select(col(idCol), col(textCol))),
       idCol, textCol, shingleLen)
 
+  /** band rows carry ONLY (id, band, bucket): the shingle payload
+    * would otherwise be duplicated `bands` times through the shuffle */
   private def bandedFor(s: DataFrame, numHashes: Int, bands: Int,
                         seed: Long): DataFrame =
     s.select(col("id"),
@@ -234,7 +241,7 @@ object Dedup {
   /** Index FORMAT version, stamped as `__fmt` alongside the build
     * params. Bumped whenever the hash family or bucket layout changes
     * incompatibly — the build params alone cannot capture that: after
-    * the r7 minhash hash-family fix (d0911a9, mixed-width modulus →
+    * the minhash hash-family fix (d0911a9, mixed-width modulus →
     * true Z_p permutations) an index persisted by the old library has
     * identical (numHashes, bands, shingleLen, seed) yet shares ~zero
     * buckets with a batch banded by the new one, so a screen would
@@ -245,14 +252,66 @@ object Dedup {
   private[graft] val MinhashIndexFormat = 2
   /** [[MinhashIndexFormat]]'s embedding sibling: versions the
     * hyperplane-code layout (table id in the code's high bits, Gaussian
-    * planes drawn from the seeded generator). v1 = the r7 layout. */
+    * planes drawn from the seeded generator). v1 = the first layout. */
   private[graft] val EmbeddingIndexFormat = 1
 
-  // Param columns (__fmt, __numHashes, __bands, __shingleLen, __seed,
-  // __maxBucketSize) are stamped into every minhashIndex row: constant
-  // per index, so parquet RLE stores them for free, and they make the
-  // "batch MUST use the same params" contract enforceable after a
-  // round-trip through storage (validateIndexParams).
+  /** One LSH family as the shared pair, index and screen cores see
+    * it: `items` turns a frame into the (id, `payload`, ...) rows a
+    * candidate verifies on, `keyed` turns items into (id, keys...)
+    * bucket rows, and `measure` (emitted as `out`, kept when
+    * ≥ threshold) is the exact verification. `params` are the build
+    * params (format version first — the clearest failure) stamped
+    * into, and validated against, the persisted index. `foldItems` is
+    * the batch side of an index fold and `corpusItems` the corpus side
+    * of a screen's verification join. */
+  private final case class Lsh(keys: Seq[String], payload: String,
+                               out: String,
+                               measure: (Column, Column) => Column,
+                               params: Seq[(String, Any)],
+                               items: DataFrame => DataFrame,
+                               foldItems: DataFrame => DataFrame,
+                               corpusItems: DataFrame => DataFrame,
+                               keyed: DataFrame => DataFrame)
+
+  /** MinHash over word shingles, verified by Jaccard. The folds band
+    * the batch unspread ([[shingledFor]]). */
+  private def minhashLsh(idCol: String, textCol: String, numHashes: Int,
+                         bands: Int, shingleLen: Int, seed: Long): Lsh =
+    Lsh(Seq("band", "bucket"), "sh", "jaccard", jaccard,
+      Seq("__fmt" -> MinhashIndexFormat, "__numHashes" -> numHashes,
+        "__bands" -> bands, "__shingleLen" -> shingleLen, "__seed" -> seed),
+      items = shingledSpread(_, idCol, textCol, shingleLen),
+      foldItems = shingledFor(_, idCol, textCol, shingleLen),
+      corpusItems = shingledSpread(_, idCol, textCol, shingleLen),
+      keyed = bandedFor(_, numHashes, bands, seed))
+
+  /** hyperplane LSH over an embedding column, verified by cosine.
+    * (table, code) is one long (table id in the high bits), so the
+    * bucket key shuffles 8 bytes per (doc, table). */
+  private def embeddingLsh(idCol: String, vecCol: String, dim: Int,
+                           nTables: Int, bitsPerTable: Int,
+                           seed: Long): Lsh = {
+    val codes = embCodes(_: DataFrame, idCol, vecCol, dim, nTables,
+      bitsPerTable, seed)
+    Lsh(Seq("code"), "v", "cosine", VectorFunctions.cosine,
+      Seq("__fmt" -> EmbeddingIndexFormat, "__nTables" -> nTables,
+        "__bitsPerTable" -> bitsPerTable, "__dim" -> dim, "__seed" -> seed),
+      items = codes, foldItems = codes,
+      corpusItems = _.select(col(idCol).as("id"), col(vecCol).as("v")),
+      keyed = _.select(col("id"), explode(col("codes")).as("code")))
+  }
+
+  /** the persisted stamp: `params` plus the skew cap */
+  private def withCap(params: Seq[(String, Any)],
+                      maxBucketSize: Int): Seq[(String, Any)] =
+    params :+ ("__maxBucketSize" -> maxBucketSize)
+
+  /** Stamp the param columns into every index row: constant per index,
+    * so parquet RLE stores them for free, and they make the "batch
+    * MUST use the same params" contract enforceable after a round-trip
+    * through storage ([[validateIndexParams]]). */
+  private def stamp(index: DataFrame, params: Seq[(String, Any)]): DataFrame =
+    params.foldLeft(index) { case (d, (k, v)) => d.withColumn(k, lit(v)) }
 
   /** bucket rows → the index's (ids, n) shape: `n` is the TRUE member
     * count; buckets over the skew cap keep their row but empty their
@@ -270,23 +329,92 @@ object Dedup {
           .otherwise(slice(col("ids"), 1, 0)).as("ids") :+
         size(col("ids")).cast("long").as("n"): _*)
 
-  private def rawIndex(corpus: DataFrame, idCol: String, textCol: String,
-                       numHashes: Int, bands: Int, shingleLen: Int,
-                       seed: Long, maxBucketSize: Int): DataFrame =
-    capBuckets(
-      // r18 opt (guide §2.5): the corpus often arrives as a small
-      // single-file scan (1-3 partitions), which serialized the
-      // 64-hash minhash banding on a handful of tasks (q115 probe:
-      // one 3-task stage, 3.3 s exec of a 4.1 s query). spread never
-      // shrinks wide inputs, so a 100 TB corpus scan is untouched;
-      // the groupBy below shuffles anyway. r19: spread moved below
-      // the shingle projection (shingledSpread) so the shingling
-      // itself also runs wide (ADVICE r18).
-      bandedFor(shingledSpread(corpus, idCol, textCol, shingleLen),
-          numHashes, bands, seed)
-        .groupBy(col("band"), col("bucket"))
-        .agg(collect_list(col("id")).as("ids")),
+  /** the unstamped corpus index. The corpus often arrives as a small
+    * single-file scan (1-3 partitions); the family's spread `items`
+    * keep the banding/hashing from serializing on a handful of tasks,
+    * and the groupBy shuffles anyway. */
+  private def rawIndex(f: Lsh, corpus: DataFrame,
+                       maxBucketSize: Int): DataFrame =
+    capBuckets(collectBuckets(f.keyed(f.items(corpus)), f.keys),
       maxBucketSize)
+
+  private def lshIndex(f: Lsh, corpus: DataFrame,
+                       maxBucketSize: Int): DataFrame =
+    stamp(rawIndex(f, corpus, maxBucketSize), withCap(f.params, maxBucketSize))
+
+  /** a batch's uncapped (keys, ids, n) buckets: the add side of a fold */
+  private def batchBuckets(f: Lsh, batch: DataFrame): DataFrame =
+    collectBuckets(f.keyed(f.foldItems(batch)), f.keys)
+      .select(f.keys.map(col) :+ col("ids") :+
+        size(col("ids")).cast("long").as("n"): _*)
+
+  /** candidate pairs within `df`, verified by the family's measure */
+  private def lshPairs(f: Lsh, df: DataFrame, maxBucketSize: Int,
+                       threshold: Double): DataFrame = {
+    // reused for bucketing and for the verification joins
+    val items = f.items(df).cache()
+    verifyPairs(bucketPairs(f.keyed(items), f.keys, maxBucketSize), items,
+      f.payload, f.out, f.measure)(_ >= threshold)
+  }
+
+  /** (new, corpus) pairs: the batch's bucket rows (batch-sized, so
+    * broadcast unless `broadcastNew = false`) join the corpus index,
+    * and only candidate-matched corpus rows are read for verification */
+  private def lshScreen(f: Lsh, newDf: DataFrame, corpus: DataFrame,
+                        corpusIndex: DataFrame, threshold: Double,
+                        broadcastNew: Boolean): DataFrame = {
+    val items = f.items(newDf).cache()
+    val newKeys = f.keyed(items)
+      .select(col("id").as("id_new") +: f.keys.map(col): _*)
+    val cand = corpusIndex
+      .join(if (broadcastNew) broadcast(newKeys) else newKeys, f.keys)
+      .select(col("id_new"), explode(col("ids")).as("id_corpus"))
+      .distinct()
+    val (pNew, pCor) = (s"${f.payload}_new", s"${f.payload}_cor")
+    val verified = cand
+      .join(items.select(col("id").as("id_new"), col(f.payload).as(pNew)),
+        Seq("id_new"))
+      .join(f.corpusItems(corpus)
+        .select(col("id").as("id_corpus"), col(f.payload).as(pCor)),
+        Seq("id_corpus"))
+      .select(col("id_new"), col("id_corpus"),
+        f.measure(col(pNew), col(pCor)).as(f.out))
+      .filter(col(f.out) >= threshold)
+    materializeAndRelease(verified, items)
+  }
+
+  /** [[lshScreen]] against a PREBUILT index, its stamp validated first */
+  private def lshScreenIndex(f: Lsh, what: String, newDf: DataFrame,
+                             corpus: DataFrame, corpusIndex: DataFrame,
+                             threshold: Double, broadcastNew: Boolean,
+                             acceptUnvalidated: Boolean): DataFrame =
+    lshScreen(f, newDf, corpus,
+      validateIndexParams(corpusIndex, what, f.params, acceptUnvalidated),
+      threshold, broadcastNew)
+
+  /** full-swap fold of a batch into a persisted index. The update ALSO
+    * asks the skew cap: [[mergeIndex]] re-applies the caller's cap to
+    * every merged bucket, so updating with a cap different from the
+    * build's silently diverges from a rebuild (a larger cap cannot
+    * revive already-dead buckets; a smaller one re-kills live ones) —
+    * the "exactly equivalent to rebuild" contract only holds
+    * cap-for-cap, so a mismatch throws. */
+  private def lshIndexUpdate(f: Lsh, what: String, index: DataFrame,
+                             newBatch: DataFrame, maxBucketSize: Int,
+                             acceptUnvalidated: Boolean): DataFrame = {
+    val stampCols = withCap(f.params, maxBucketSize)
+    val old = validateIndexParams(index, what, stampCols, acceptUnvalidated)
+    requireCounts(old, what)
+    stamp(mergeIndex(old.select(f.keys.map(col) :+ col("ids") :+ col("n"): _*),
+        batchBuckets(f, newBatch), f.keys, maxBucketSize),
+      stampCols)
+  }
+
+  private def requireCounts(index: DataFrame, what: String): Unit =
+    require(index.columns.contains("n"),
+      s"$what requires a graft-built index carrying the true bucket " +
+        "count column `n` (hand-built indexes cannot distinguish a " +
+        "dead oversized bucket from an absent one)")
 
   /** Build the corpus's persistable LSH index for incremental
     * screening: (band, bucket, ids, n) with the `maxBucketSize` skew
@@ -305,50 +433,9 @@ object Dedup {
                    numHashes: Int = 64, bands: Int = 16,
                    shingleLen: Int = 3, seed: Long = 42L,
                    maxBucketSize: Int = 1000): DataFrame =
-    stampMinhashParams(
-      rawIndex(corpus, idCol, textCol, numHashes, bands, shingleLen, seed,
-        maxBucketSize),
-      numHashes, bands, shingleLen, seed, maxBucketSize)
+    lshIndex(minhashLsh(idCol, textCol, numHashes, bands, shingleLen, seed),
+      corpus, maxBucketSize)
 
-  private def stampMinhashParams(index: DataFrame, numHashes: Int,
-                                 bands: Int, shingleLen: Int, seed: Long,
-                                 maxBucketSize: Int): DataFrame =
-    index
-      .withColumn("__fmt", lit(MinhashIndexFormat))
-      .withColumn("__numHashes", lit(numHashes))
-      .withColumn("__bands", lit(bands))
-      .withColumn("__shingleLen", lit(shingleLen))
-      .withColumn("__seed", lit(seed))
-      .withColumn("__maxBucketSize", lit(maxBucketSize))
-
-  /** [[minhashPairsAgainst]] with a PREBUILT corpus index (from
-    * [[minhashIndex]], typically read back from parquet): per-batch
-    * cost is the batch's own banding, one broadcast join into the
-    * index, and jaccard verification against only candidate-matched
-    * corpus rows — the corpus is scanned once (verification) and
-    * never re-banded. The index's embedded `__fmt` format version and
-    * build params are validated against this library and this call's
-    * params, and a mismatch (or an index carrying no param columns at
-    * all) throws rather than silently reducing recall; pass
-    * `acceptUnvalidated = true` to run a hand-built
-    * (band, bucket, ids) index on your own contract. */
-  /** Validate an index's embedded `__`-prefixed param columns and
-    * strip them. Enforced, in order:
-    *  - an index with NO param columns is rejected unless the caller
-    *    explicitly opts in (`acceptUnvalidated`) — a param-less index
-    *    is indistinguishable from one persisted by a pre-versioning
-    *    library whose hash family this one no longer matches, and the
-    *    failure mode is a silent ~zero-candidate screen;
-    *  - EVERY distinct param tuple in the index is checked (one
-    *    column-pruned scan of constant RLE columns + a partial-agg
-    *    distinct — cheap at any scale), so an index accidentally
-    *    assembled by unioning differently-parameterized builds fails
-    *    instead of screening with mixed-recall buckets;
-    *  - each param in `asked` must be present and equal; params the
-    *    call does not ask about (the skew cap at screen time, or
-    *    params added by a future format) only need to be constant.
-    * An EMPTY index (zero rows) passes vacuously: there is nothing to
-    * validate and every screen over it returns zero candidates. */
   /** Session-scoped memo of SUCCESSFUL validations, keyed on (the
     * index's input files, the asked param list). Only BARE file scans
     * are cacheable — any transformation over the scan (a test's
@@ -357,10 +444,10 @@ object Dedup {
     * pass. A rewritten index produces new part-file names (parquet
     * writers never reuse names), so the key misses and the rewrite
     * re-validates. Bounded; failures are never cached (they throw).
-    * This amortizes the per-call distinct-scan the r8 every-tuple
-    * validation added: an admission loop re-reading the same
-    * persisted index pays one validation job per (files, params), not
-    * one per update/screen call. */
+    * This amortizes the per-call every-tuple distinct scan: an
+    * admission loop re-reading the same persisted index pays one
+    * validation job per (files, params), not one per update/screen
+    * call. */
   private val validatedIndexes =
     java.util.concurrent.ConcurrentHashMap.newKeySet[(Seq[String], Seq[(String, String)])]()
 
@@ -381,6 +468,23 @@ object Dedup {
     }
   }
 
+  /** Validate an index's embedded `__`-prefixed param columns and
+    * strip them. Enforced, in order:
+    *  - an index with NO param columns is rejected unless the caller
+    *    explicitly opts in (`acceptUnvalidated`) — a param-less index
+    *    is indistinguishable from one persisted by a pre-versioning
+    *    library whose hash family this one no longer matches, and the
+    *    failure mode is a silent ~zero-candidate screen;
+    *  - EVERY distinct param tuple in the index is checked (one
+    *    column-pruned scan of constant RLE columns + a partial-agg
+    *    distinct — cheap at any scale), so an index accidentally
+    *    assembled by unioning differently-parameterized builds fails
+    *    instead of screening with mixed-recall buckets;
+    *  - each param in `asked` must be present and equal; params the
+    *    call does not ask about (the skew cap at screen time, or
+    *    params added by a future format) only need to be constant.
+    * An EMPTY index (zero rows) passes vacuously: there is nothing to
+    * validate and every screen over it returns zero candidates. */
   private[operators] def validateIndexParams(index: DataFrame, what: String,
                                   asked: Seq[(String, Any)],
                                   acceptUnvalidated: Boolean): DataFrame = {
@@ -401,7 +505,7 @@ object Dedup {
         return index.drop(paramCols: _*)
       // no .limit(3) guard here: a limit over a shuffle runs the
       // incremental try-1-then-2-then-4-partitions probe — FOUR jobs
-      // per validation at gate scale (r11 ProbeAdmit). The distinct
+      // per validation at gate scale. The distinct
       // of constant-per-build columns is bounded by the number of
       // builds ever unioned into the file set (1 for any graft-
       // written index), so a plain collect is one job and bytes.
@@ -438,15 +542,17 @@ object Dedup {
     }
   }
 
-  /** the asked-param list shared by the minhash screen and update:
-    * format version first (clearest failure), then the band-family
-    * params. The skew cap is asked only by the update (the screen has
-    * no cap parameter — any constant cap is valid to screen). */
-  private def minhashAsked(numHashes: Int, bands: Int, shingleLen: Int,
-                           seed: Long): Seq[(String, Any)] =
-    Seq("__fmt" -> MinhashIndexFormat, "__numHashes" -> numHashes,
-      "__bands" -> bands, "__shingleLen" -> shingleLen, "__seed" -> seed)
-
+  /** [[minhashPairsAgainst]] with a PREBUILT corpus index (from
+    * [[minhashIndex]], typically read back from parquet): per-batch
+    * cost is the batch's own banding, one broadcast join into the
+    * index, and jaccard verification against only candidate-matched
+    * corpus rows — the corpus is scanned once (verification) and
+    * never re-banded. The index's embedded `__fmt` format version and
+    * build params are validated against this library and this call's
+    * params, and a mismatch (or an index carrying no param columns at
+    * all) throws rather than silently reducing recall; pass
+    * `acceptUnvalidated = true` to run a hand-built
+    * (band, bucket, ids) index on your own contract. */
   def minhashPairsAgainstIndex(newDf: DataFrame, corpus: DataFrame,
                                corpusIndex: DataFrame,
                                idCol: String, textCol: String,
@@ -455,12 +561,11 @@ object Dedup {
                                threshold: Double = 0.8,
                                seed: Long = 42L,
                                broadcastNew: Boolean = true,
-                               acceptUnvalidated: Boolean = false): DataFrame = {
-    val idx = validateIndexParams(corpusIndex, "minhashPairsAgainstIndex",
-      minhashAsked(numHashes, bands, shingleLen, seed), acceptUnvalidated)
-    screenAgainstIndex(newDf, corpus, idx, idCol, textCol, numHashes,
-      bands, shingleLen, threshold, seed, broadcastNew)
-  }
+                               acceptUnvalidated: Boolean = false): DataFrame =
+    lshScreenIndex(
+      minhashLsh(idCol, textCol, numHashes, bands, shingleLen, seed),
+      "minhashPairsAgainstIndex", newDf, corpus, corpusIndex, threshold,
+      broadcastNew, acceptUnvalidated)
 
   /** Incrementally admit a screened batch into a persisted
     * [[minhashIndex]] WITHOUT re-banding the corpus — the index-
@@ -485,33 +590,11 @@ object Dedup {
                          numHashes: Int = 64, bands: Int = 16,
                          shingleLen: Int = 3, seed: Long = 42L,
                          maxBucketSize: Int = 1000,
-                         acceptUnvalidated: Boolean = false): DataFrame = {
-    // the update ALSO asks the skew cap: mergeIndex re-applies the
-    // caller's cap to every merged bucket, so updating with a cap
-    // different from the build's silently diverges from a rebuild (a
-    // larger cap cannot revive already-dead buckets; a smaller one
-    // re-kills live ones) — the "exactly equivalent to rebuild"
-    // contract only holds cap-for-cap, so a mismatch throws.
-    val old = validateIndexParams(index, "minhashIndexUpdate",
-      minhashAsked(numHashes, bands, shingleLen, seed) :+
-        ("__maxBucketSize" -> maxBucketSize),
+                         acceptUnvalidated: Boolean = false): DataFrame =
+    lshIndexUpdate(
+      minhashLsh(idCol, textCol, numHashes, bands, shingleLen, seed),
+      "minhashIndexUpdate", index, newBatch, maxBucketSize,
       acceptUnvalidated)
-    require(old.columns.contains("n"),
-      "minhashIndexUpdate requires a graft-built index carrying the " +
-        "true bucket count column `n` (hand-built (band, bucket, ids) " +
-        "indexes cannot distinguish a dead oversized bucket from an " +
-        "absent one)")
-    val nb = bandedFor(shingledFor(newBatch, idCol, textCol, shingleLen),
-        numHashes, bands, seed)
-      .groupBy(col("band"), col("bucket"))
-      .agg(collect_list(col("id")).as("ids"))
-      .select(col("band"), col("bucket"), col("ids"),
-        size(col("ids")).cast("long").as("n"))
-    stampMinhashParams(
-      mergeIndex(old.select(col("band"), col("bucket"), col("ids"), col("n")),
-        nb, Seq("band", "bucket"), maxBucketSize),
-      numHashes, bands, shingleLen, seed, maxBucketSize)
-  }
 
   /** union + re-aggregate two capped bucket tables on `keys`: member
     * lists concatenate, TRUE counts add, and the cap re-applies on the
@@ -604,24 +687,22 @@ object Dedup {
     * table format, the real deployment surface at 100 TB, the commit
     * is atomic and this caveat disappears). */
   private def partitionedUpdateCore(spark: org.apache.spark.sql.SparkSession,
-                                    path: String, what: String,
-                                    asked: Seq[(String, Any)],
-                                    keys: Seq[String],
-                                    batchBuckets: DataFrame,
+                                    path: String, what: String, f: Lsh,
+                                    newBatch: DataFrame,
                                     maxBucketSize: Int, numParts: Int,
                                     acceptUnvalidated: Boolean,
-                                    restamp: DataFrame => DataFrame,
                                     preRead: Option[DataFrame])
   : PartialUpdateStats = {
+    val (keys, asked) = (f.keys, withCap(f.params, maxBucketSize))
+    val buckets = batchBuckets(f, newBatch)
     // preRead: a caller that already holds a DataFrame over `path`
     // (the admission loop reads the index once per cycle for its
     // screens) passes it here to skip a second read — above
     // spark.sql.sources.parallelPartitionDiscovery.threshold (32)
     // dirs, EVERY fresh read of the partitioned layout runs a
-    // numParts-task listing job (r12 ProbeQ129: 128 tasks, the
-    // fold's single biggest job). Only valid while no writer has
-    // touched `path` since the frame was created — the admission
-    // cycle's single-writer contract.
+    // numParts-task listing job (the fold's single biggest job). Only
+    // valid while no writer has touched `path` since the frame was
+    // created — the admission cycle's single-writer contract.
     val index = preRead.getOrElse(spark.read.parquet(path))
     require(index.columns.contains("part"),
       s"$what: index at $path is not partitioned — persist it with " +
@@ -629,8 +710,8 @@ object Dedup {
     // numParts = 0 means "the index's own layout": read the embedded
     // __numParts (one head row of a constant RLE column — a limit
     // over a bare scan is one 1-task job, not the limit-over-shuffle
-    // probe trap). r12: the head read now also runs for EXPLICIT
-    // numParts and asserts agreement — with param validation pruned
+    // probe trap). The head read also runs for an EXPLICIT numParts
+    // and asserts agreement — with param validation pruned
     // to dirty partitions (below), an all-new dirty set would
     // otherwise let a wrong explicit numParts slip through and hash
     // buckets into the wrong layout partitions.
@@ -662,12 +743,11 @@ object Dedup {
         a
       case (a, None) => a // unstamped legacy layout: caller's contract
     }
-    // r12 review fix: the dirty-pruned validation below is VACUOUS
-    // when every dirty partition is new (zero existing param tuples
-    // in the pruned scan) — a wrong-param caller would then merge
-    // unvalidated and restamp those partitions with its own params,
-    // corrupting the index into the mixed-param state the full-index
-    // validation used to refuse up front. The one-row head read
+    // The dirty-pruned validation below is VACUOUS when every dirty
+    // partition is new (zero existing param tuples in the pruned
+    // scan) — a wrong-param caller would then merge unvalidated and
+    // restamp those partitions with its own params, corrupting the
+    // index into a mixed-param state. The one-row head read
     // above already carries the index's param stamp (uniform across
     // partitions by every writer's contract), so the caller's params
     // are checked against it here at zero extra jobs. Hand-assembled
@@ -685,26 +765,24 @@ object Dedup {
       }
     }
     // batch banding: CACHE, populated by the dirty-scan collect below
-    // and reused by the merge — r12 job diet (VERDICT item 3): the
-    // previous localCheckpoint-then-collect shape ran the banding as
-    // its own job and the dirty scan as a second; the cache folds
-    // them into one. Safe where a checkpoint was required for
-    // `merged`: nb derives from the BATCH, not from the index files
-    // the overwrite below replaces.
-    val nb = batchBuckets.withColumn("part", partOf(keys, np)).cache()
+    // and reused by the merge, so banding and the dirty scan run as
+    // one job. Safe where a checkpoint was required for `merged`: nb
+    // derives from the BATCH, not from the index files the overwrite
+    // below replaces.
+    val nb = buckets.withColumn("part", partOf(keys, np)).cache()
     val dirty = nb.select(col("part")).distinct()
       .collect().map(_.getInt(0)).sorted
     if (dirty.isEmpty) { // empty batch
       nb.unpersist()
       return PartialUpdateStats(0, np)
     }
-    // r12 job diet, part 2: validate build params against the DIRTY
-    // partitions only — the same partition-pruned scan the merge
-    // reads — instead of the whole index. The full-index validation
-    // was the fold's one corpus-proportional READ (and the file set
-    // changes every fold, so the validation cache never hit on cycle
-    // 2+). Sound because every partitioned-index writer
-    // (indexWritePartitioned and this fold's restamp) stamps params
+    // validate build params against the DIRTY partitions only — the
+    // same partition-pruned scan the merge reads — instead of the
+    // whole index: a full-index validation would be the fold's one
+    // corpus-proportional READ (and the file set changes every fold,
+    // so the validation cache never hits on cycle 2+). Sound because
+    // every partitioned-index writer
+    // (indexWritePartitioned and this fold's stamp) stamps params
     // uniformly across partitions — the screen side still validates
     // the full index each cycle, so a hand-assembled mixed-param
     // union is caught there. Dirty partitions that do not exist yet
@@ -713,13 +791,11 @@ object Dedup {
     val pruned = index.filter(col("part").isin(dirty.map(Int.box): _*))
     val old = validateIndexParams(pruned, what,
       asked :+ ("__numParts" -> np), acceptUnvalidated)
-    require(old.columns.contains("n"),
-      s"$what requires a graft-built index carrying the true bucket " +
-        "count column `n`")
+    requireCounts(old, what)
     val cols = keys.map(col) :+ col("ids") :+ col("n")
-    val merged = restamp(
+    val merged = stamp(
         mergeIndex(old.select(cols: _*),
-          nb.select(cols: _*), keys, maxBucketSize))
+          nb.select(cols: _*), keys, maxBucketSize), asked)
       .withColumn("__numParts", lit(np))
       .withColumn("part", partOf(keys, np))
       .repartition(col("part"))
@@ -757,22 +833,10 @@ object Dedup {
                                     numParts: Int = 0,
                                     acceptUnvalidated: Boolean = false,
                                     preRead: Option[DataFrame] = None)
-  : PartialUpdateStats = {
-    val nb = bandedFor(shingledFor(newBatch, idCol, textCol, shingleLen),
-        numHashes, bands, seed)
-      .groupBy(col("band"), col("bucket"))
-      .agg(collect_list(col("id")).as("ids"))
-      .select(col("band"), col("bucket"), col("ids"),
-        size(col("ids")).cast("long").as("n"))
+  : PartialUpdateStats =
     partitionedUpdateCore(spark, path, "minhashIndexUpdatePartitioned",
-      minhashAsked(numHashes, bands, shingleLen, seed) :+
-        ("__maxBucketSize" -> maxBucketSize),
-      Seq("band", "bucket"), nb, maxBucketSize, numParts,
-      acceptUnvalidated,
-      stampMinhashParams(_, numHashes, bands, shingleLen, seed,
-        maxBucketSize),
-      preRead)
-  }
+      minhashLsh(idCol, textCol, numHashes, bands, shingleLen, seed),
+      newBatch, maxBucketSize, numParts, acceptUnvalidated, preRead)
 
   /** [[minhashIndexUpdatePartitioned]]'s embedding sibling. */
   def embeddingIndexUpdatePartitioned(
@@ -782,54 +846,10 @@ object Dedup {
       nTables: Int = 8, bitsPerTable: Int = 16, seed: Long = 42L,
       maxBucketSize: Int = 10000, numParts: Int = 0,
       acceptUnvalidated: Boolean = false,
-      preRead: Option[DataFrame] = None): PartialUpdateStats = {
-    val nb = embCodes(newBatch, idCol, vecCol, dim, nTables, bitsPerTable,
-        seed)
-      .select(col("id"), explode(col("codes")).as("code"))
-      .groupBy(col("code"))
-      .agg(collect_list(col("id")).as("ids"))
-      .select(col("code"), col("ids"), size(col("ids")).cast("long").as("n"))
+      preRead: Option[DataFrame] = None): PartialUpdateStats =
     partitionedUpdateCore(spark, path, "embeddingIndexUpdatePartitioned",
-      embAsked(nTables, bitsPerTable, dim, seed) :+
-        ("__maxBucketSize" -> maxBucketSize),
-      Seq("code"), nb, maxBucketSize, numParts, acceptUnvalidated,
-      stampEmbParams(_, nTables, bitsPerTable, dim, seed, maxBucketSize),
-      preRead)
-  }
-
-  private def screenAgainstIndex(newDf: DataFrame, corpus: DataFrame,
-                                 corpusIndex: DataFrame,
-                                 idCol: String, textCol: String,
-                                 numHashes: Int, bands: Int,
-                                 shingleLen: Int, threshold: Double,
-                                 seed: Long,
-                                 broadcastNew: Boolean): DataFrame = {
-    val newSh =
-      shingledSpread(newDf, idCol, textCol, shingleLen).cache()
-    val newBands = bandedFor(newSh, numHashes, bands, seed)
-      .select(col("id").as("id_new"), col("band"), col("bucket"))
-    val cand = corpusIndex
-      .join(if (broadcastNew) broadcast(newBands) else newBands,
-        Seq("band", "bucket"))
-      .select(col("id_new"), explode(col("ids")).as("id_corpus"))
-      .distinct()
-    val verified = cand
-      .join(newSh.select(col("id").as("id_new"), col("sh").as("sh_new")),
-        Seq("id_new"))
-      // r18 opt (guide §2.5): the verification shingling of the
-      // corpus side ran serialized on a 1-3-partition corpus scan.
-      // r19 (ADVICE r18): the spread now sits BELOW the shingle
-      // projection (shingledSpread), so the shingling itself — not
-      // just the downstream jaccard join — runs at session
-      // parallelism; no-op on already-wide scans.
-      .join(shingledSpread(corpus, idCol, textCol, shingleLen)
-        .select(col("id").as("id_corpus"), col("sh").as("sh_cor")),
-        Seq("id_corpus"))
-      .select(col("id_new"), col("id_corpus"),
-        jaccard(col("sh_new"), col("sh_cor")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-    materializeAndRelease(verified, newSh)
-  }
+      embeddingLsh(idCol, vecCol, dim, nTables, bitsPerTable, seed),
+      newBatch, maxBucketSize, numParts, acceptUnvalidated, preRead)
 
   /** Incremental near-dup matching: (new, corpus) pairs by MinHash
     * LSH between a NEW batch and an EXISTING corpus, verified by
@@ -855,14 +875,13 @@ object Dedup {
                           numHashes: Int = 64, bands: Int = 16,
                           shingleLen: Int = 3, threshold: Double = 0.8,
                           seed: Long = 42L, maxBucketSize: Int = 1000,
-                          broadcastNew: Boolean = true): DataFrame =
+                          broadcastNew: Boolean = true): DataFrame = {
     // the inline index is built with these very params, so skip the
     // validation head read (it would trigger an extra banding job)
-    screenAgainstIndex(newDf, corpus,
-      rawIndex(corpus, idCol, textCol, numHashes, bands, shingleLen,
-        seed, maxBucketSize),
-      idCol, textCol, numHashes, bands, shingleLen, threshold, seed,
-      broadcastNew)
+    val f = minhashLsh(idCol, textCol, numHashes, bands, shingleLen, seed)
+    lshScreen(f, newDf, corpus, rawIndex(f, corpus, maxBucketSize),
+      threshold, broadcastNew)
+  }
 
   /** full MinHash dedup: pairs → connected components (min-id label
     * propagation with pointer jumping) → keep one row per component.
@@ -1295,39 +1314,24 @@ object Dedup {
   /** shared pair machinery over a precomputed (id, sim) table. */
   private def simhashPairsOn(sh0: DataFrame, maxDistance: Int,
                              maxBucketSize: Int): DataFrame = {
-    val chunks = maxDistance + 1
     val sh = Partitioning.spread(sh0).cache()
     val chunked = sh.select(col("id"),
-        explode(simhashChunks(col("sim"), chunks)).as("ck"))
+        explode(simhashChunks(col("sim"), maxDistance + 1)).as("ck"))
       .select(col("id"), col("ck.chunk").as("chunk"), col("ck.key").as("key"))
-    // pairs from a per-bucket collected id array (one hash
-    // aggregation + in-row expansion), not a bucket self-join: no
-    // join-row blowup, and the size guard is a filter on the
-    // aggregated row — identical shape to minhashPairs
-    val cand = pairsFromBuckets(chunked
-      .groupBy(col("chunk"), col("key"))
-      .agg(collect_list(col("id")).as("ids"))
-      .filter(size(col("ids")).between(2, maxBucketSize)))
-    val verified = cand
-      .join(sh.select(col("id").as("id_a"), col("sim").as("sim_a")), Seq("id_a"))
-      .join(sh.select(col("id").as("id_b"), col("sim").as("sim_b")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        hammingDistance(col("sim_a"), col("sim_b")).as("hamming"))
-      .filter(col("hamming") <= maxDistance)
-    materializeAndRelease(verified, sh)
+    verifyPairs(bucketPairs(chunked, Seq("chunk", "key"), maxBucketSize), sh,
+      "sim", "hamming", hammingDistance)(_ <= maxDistance)
   }
 
   /** n-gram Jaccard dedup without LSH (exact all-pairs within a
     * blocking key to bound cost; the caller provides the blocking
-    * column). Quadratic per block — prefer [[jaccardPairsPrefix]],
+    * column). Quadratic per block — prefer [[jaccardPairsExact]],
     * which is exact without a caller key and near-linear on rare
     * shingles. */
   def jaccardPairs(df: DataFrame, idCol: String, textCol: String,
                    blockCol: String, shingleLen: Int = 3,
                    threshold: Double = 0.5): DataFrame = {
     // spread the RAW projection so the shingling itself runs wide
-    // (ADVICE r18 — an exchange above the shingle projection leaves
-    // wordShingles evaluating map-side in the narrow scan stage)
+    // (see shingledSpread)
     val sh = Partitioning.spread(
         df.select(col(idCol).as("id"), col(blockCol).as("blk"),
           col(textCol).as("__t")))
@@ -1353,10 +1357,8 @@ object Dedup {
     * counted; no arrays ever cross a shuffle and no LSH approximation
     * is involved. Cost is Σ_tok C(freq_tok, 2) join rows — the
     * canonical all-pairs-similarity cost, near-linear when shingles
-    * are rare. THE shape for low thresholds, where prefix filtering
-    * ([[jaccardPairsPrefix]]) degenerates to emitting almost every
-    * shingle; prefer the prefix variant for t ≳ 0.7 (short prefixes →
-    * far fewer candidates).
+    * are rare — the shape that stays exact at low thresholds, where
+    * prefix filtering degenerates to emitting almost every shingle.
     *
     * `maxTokenBucket`: shingles shared by more docs than this are
     * excluded from counting (boilerplate guard at corpus scale). A
@@ -1387,8 +1389,6 @@ object Dedup {
       out: String, threshold: Double,
       counted: (Column, Column, Column) => Column,
       verify: (Column, Column) => Column): DataFrame = {
-    // raw projection spread first so the shingling runs wide
-    // (ADVICE r18); the shingled frame stays the cached artifact
     val sh = shingledSpread(df, idCol, textCol, shingleLen).cache()
     val tok0 = sh.select(col("id"), size(col("sh")).as("sz"),
       explode(col("sh")).as("tok"))
@@ -1406,21 +1406,13 @@ object Dedup {
       .filter(col("id_a") < col("id_b"))
       .groupBy(col("id_a"), col("id_b"), col("sz_a"), col("sz_b"))
       .agg(count(lit(1)).as("inter"))
-    val result =
-      if (!capped)
-        counts.select(col("id_a"), col("id_b"),
+    if (!capped)
+      materializeAndRelease(counts.select(col("id_a"), col("id_b"),
           counted(col("inter"), col("sz_a"), col("sz_b")).as(out))
-          .filter(col(out) >= threshold)
-      else // capped counts are lower bounds → re-verify exactly
-        counts.select(col("id_a"), col("id_b"))
-          .join(sh.select(col("id").as("id_a"), col("sh").as("sh_a")),
-            Seq("id_a"))
-          .join(sh.select(col("id").as("id_b"), col("sh").as("sh_b")),
-            Seq("id_b"))
-          .select(col("id_a"), col("id_b"),
-            verify(col("sh_a"), col("sh_b")).as(out))
-          .filter(col(out) >= threshold)
-    materializeAndRelease(result, sh)
+        .filter(col(out) >= threshold), sh)
+    else // capped counts are lower bounds → re-verify exactly
+      verifyPairs(counts.select(col("id_a"), col("id_b")), sh, "sh", out,
+        verify)(_ >= threshold)
   }
 
   /** Exact CONTAINMENT join (asymmetric Jaccard) — the
@@ -1638,52 +1630,6 @@ object Dedup {
       .filter(col("tok").isNotNull && pred)
   }
 
-  /** EXACT all-pairs n-gram Jaccard join via prefix filtering
-    * (AllPairs/PPJoin family — Bayardo, Ma & Srikant, WWW'07;
-    * public algorithm). Shingles are globally ordered rarest-first
-    * (frequency asc, shingle asc); each doc emits only its first
-    * |sh| - ceil(t*|sh|) + 1 shingles as candidate keys. Any pair
-    * with J >= t has |A∩B| >= t*|A|, so the globally-smallest common
-    * shingle provably sits inside BOTH prefixes — recall is 1 by
-    * construction, no LSH approximation. Candidate volume is
-    * Σ_tok prefixCount(tok)^2, near-linear when shingles are rare
-    * (frequent shingles are pushed out of every prefix by the
-    * ordering).
-    *
-    * `maxTokenBucket` caps a degenerate token's bucket (a boilerplate
-    * shingle shared by >cap docs' prefixes); capping trades the
-    * recall guarantee for bounded cost — leave at the default for
-    * exactness. */
-  def jaccardPairsPrefix(df: DataFrame, idCol: String, textCol: String,
-                         shingleLen: Int = 3, threshold: Double = 0.5,
-                         maxTokenBucket: Int = Int.MaxValue): DataFrame = {
-    // raw projection spread first so the shingling runs wide
-    // (ADVICE r18); the shingled frame stays the cached artifact
-    val sh = shingledSpread(df, idCol, textCol, shingleLen).cache()
-    val tok = sh.select(col("id"), explode(col("sh")).as("tok"))
-    // global shingle frequencies: partial (map-side) aggregation, then
-    // a broadcast-or-shuffle join back — both stages linear in corpus
-    val freq = tok.groupBy(col("tok")).agg(count(lit(1)).as("freq"))
-    val ordered = tok.join(freq, Seq("tok"))
-      .groupBy(col("id"))
-      .agg(sort_array(collect_list(struct(col("freq"), col("tok")))).as("st"))
-      .select(col("id"), expr("transform(st, x -> x.tok)").as("toks"))
-    val pref = ordered.select(col("id"), expr(
-      s"slice(toks, 1, size(toks) - cast(ceil($threshold * size(toks)) as int) + 1)")
-      .as("pref"))
-    val cand = pairsFromBuckets(pref
-      .select(explode(col("pref")).as("tok"), col("id"))
-      .groupBy(col("tok")).agg(collect_list(col("id")).as("ids"))
-      .filter(size(col("ids")).between(2, maxTokenBucket)))
-    val verified = cand
-      .join(sh.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-      .join(sh.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-    materializeAndRelease(verified, sh)
-  }
-
   /** embedding near-dup pairs: multi-table hyperplane-LSH bucket join
     * + exact cosine verification. `nTables` independent tables of
     * `bitsPerTable` hyperplanes each — a pair collides if it shares
@@ -1703,48 +1649,9 @@ object Dedup {
                      dim: Int, threshold: Double = 0.95,
                      nTables: Int = 8, bitsPerTable: Int = 16,
                      seed: Long = 42L,
-                     maxBucketSize: Int = 10000): DataFrame = {
-    val sig = Partitioning.spread(
-      df.select(col(idCol).as("id"), col(vecCol).as("v")))
-      .withColumn("codes",
-        VectorFunctions.hyperplaneCodes(col("v"), nTables, bitsPerTable,
-          dim, seed))
-      .cache()
-    // (table, code) is one long (table id in the high bits): the
-    // bucket key shuffles 8 bytes per (doc, table)
-    val banded = sig.select(col("id"), explode(col("codes")).as("code"))
-    val cand = pairsFromBuckets(banded
-      .groupBy(col("code")).agg(collect_list(col("id")).as("ids"))
-      .filter(size(col("ids")).between(2, maxBucketSize)))
-    val verified = cand
-      .join(sig.select(col("id").as("id_a"), col("v").as("v_a")), Seq("id_a"))
-      .join(sig.select(col("id").as("id_b"), col("v").as("v_b")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        VectorFunctions.cosine(col("v_a"), col("v_b")).as("cosine"))
-      .filter(col("cosine") >= threshold)
-    materializeAndRelease(verified, sig)
-  }
-
-  // Every embeddingIndex row is stamped with (__fmt, __nTables,
-  // __bitsPerTable, __dim, __seed, __maxBucketSize) — same
-  // enforceable-contract discipline as minhashIndex's.
-
-  /** [[minhashAsked]]'s embedding sibling. */
-  private def embAsked(nTables: Int, bitsPerTable: Int, dim: Int,
-                       seed: Long): Seq[(String, Any)] =
-    Seq("__fmt" -> EmbeddingIndexFormat, "__nTables" -> nTables,
-      "__bitsPerTable" -> bitsPerTable, "__dim" -> dim, "__seed" -> seed)
-
-  private def stampEmbParams(index: DataFrame, nTables: Int,
-                             bitsPerTable: Int, dim: Int, seed: Long,
-                             maxBucketSize: Int): DataFrame =
-    index
-      .withColumn("__fmt", lit(EmbeddingIndexFormat))
-      .withColumn("__nTables", lit(nTables))
-      .withColumn("__bitsPerTable", lit(bitsPerTable))
-      .withColumn("__dim", lit(dim))
-      .withColumn("__seed", lit(seed))
-      .withColumn("__maxBucketSize", lit(maxBucketSize))
+                     maxBucketSize: Int = 10000): DataFrame =
+    lshPairs(embeddingLsh(idCol, vecCol, dim, nTables, bitsPerTable, seed),
+      df, maxBucketSize, threshold)
 
   private def embCodes(d: DataFrame, idCol: String, vecCol: String,
                        dim: Int, nTables: Int, bitsPerTable: Int,
@@ -1753,17 +1660,6 @@ object Dedup {
       .withColumn("codes",
         VectorFunctions.hyperplaneCodes(col("v"), nTables, bitsPerTable,
           dim, seed))
-
-  private def rawEmbIndex(corpus: DataFrame, idCol: String,
-                          vecCol: String, dim: Int, nTables: Int,
-                          bitsPerTable: Int, seed: Long,
-                          maxBucketSize: Int): DataFrame =
-    capBuckets(
-      embCodes(corpus, idCol, vecCol, dim, nTables, bitsPerTable, seed)
-        .select(col("id"), explode(col("codes")).as("code"))
-        .groupBy(col("code"))
-        .agg(collect_list(col("id")).as("ids")),
-      maxBucketSize)
 
   /** Persistable hyperplane-LSH index over the corpus's embedding
     * column for incremental cosine screening: (code, ids, n) buckets
@@ -1779,10 +1675,8 @@ object Dedup {
                      dim: Int, nTables: Int = 8, bitsPerTable: Int = 16,
                      seed: Long = 42L,
                      maxBucketSize: Int = 10000): DataFrame =
-    stampEmbParams(
-      rawEmbIndex(corpus, idCol, vecCol, dim, nTables, bitsPerTable, seed,
-        maxBucketSize),
-      nTables, bitsPerTable, dim, seed, maxBucketSize)
+    lshIndex(embeddingLsh(idCol, vecCol, dim, nTables, bitsPerTable, seed),
+      corpus, maxBucketSize)
 
   /** [[embeddingPairsAgainst]] with a PREBUILT corpus index (from
     * [[embeddingIndex]], typically read back from parquet): per-batch
@@ -1801,13 +1695,11 @@ object Dedup {
                                  nTables: Int = 8, bitsPerTable: Int = 16,
                                  seed: Long = 42L,
                                  broadcastNew: Boolean = true,
-                                 acceptUnvalidated: Boolean = false): DataFrame = {
-    val idx = validateIndexParams(corpusIndex,
-      "embeddingPairsAgainstIndex",
-      embAsked(nTables, bitsPerTable, dim, seed), acceptUnvalidated)
-    embScreenAgainstIndex(newDf, corpus, idx, idCol, vecCol, dim,
-      threshold, nTables, bitsPerTable, seed, broadcastNew)
-  }
+                                 acceptUnvalidated: Boolean = false): DataFrame =
+    lshScreenIndex(
+      embeddingLsh(idCol, vecCol, dim, nTables, bitsPerTable, seed),
+      "embeddingPairsAgainstIndex", newDf, corpus, corpusIndex, threshold,
+      broadcastNew, acceptUnvalidated)
 
   /** [[minhashIndexUpdate]]'s embedding sibling: fold a screened
     * batch into a persisted [[embeddingIndex]] without re-hashing the
@@ -1818,54 +1710,11 @@ object Dedup {
                            nTables: Int = 8, bitsPerTable: Int = 16,
                            seed: Long = 42L,
                            maxBucketSize: Int = 10000,
-                           acceptUnvalidated: Boolean = false): DataFrame = {
-    // cap asked for the same reason as minhashIndexUpdate: the
-    // update≡rebuild contract only holds cap-for-cap
-    val old = validateIndexParams(index, "embeddingIndexUpdate",
-      embAsked(nTables, bitsPerTable, dim, seed) :+
-        ("__maxBucketSize" -> maxBucketSize),
+                           acceptUnvalidated: Boolean = false): DataFrame =
+    lshIndexUpdate(
+      embeddingLsh(idCol, vecCol, dim, nTables, bitsPerTable, seed),
+      "embeddingIndexUpdate", index, newBatch, maxBucketSize,
       acceptUnvalidated)
-    require(old.columns.contains("n"),
-      "embeddingIndexUpdate requires a graft-built index carrying the " +
-        "true bucket count column `n`")
-    val nb = embCodes(newBatch, idCol, vecCol, dim, nTables, bitsPerTable,
-        seed)
-      .select(col("id"), explode(col("codes")).as("code"))
-      .groupBy(col("code"))
-      .agg(collect_list(col("id")).as("ids"))
-      .select(col("code"), col("ids"), size(col("ids")).cast("long").as("n"))
-    stampEmbParams(
-      mergeIndex(old.select(col("code"), col("ids"), col("n")), nb,
-        Seq("code"), maxBucketSize),
-      nTables, bitsPerTable, dim, seed, maxBucketSize)
-  }
-
-  private def embScreenAgainstIndex(newDf: DataFrame, corpus: DataFrame,
-                                    corpusIndex: DataFrame,
-                                    idCol: String, vecCol: String,
-                                    dim: Int, threshold: Double,
-                                    nTables: Int, bitsPerTable: Int,
-                                    seed: Long,
-                                    broadcastNew: Boolean): DataFrame = {
-    val newSig = embCodes(newDf, idCol, vecCol, dim, nTables,
-      bitsPerTable, seed).cache()
-    val newBands = newSig
-      .select(col("id").as("id_new"), explode(col("codes")).as("code"))
-    val cand = corpusIndex
-      .join(if (broadcastNew) broadcast(newBands) else newBands,
-        Seq("code"))
-      .select(col("id_new"), explode(col("ids")).as("id_corpus"))
-      .distinct()
-    val verified = cand
-      .join(newSig.select(col("id").as("id_new"), col("v").as("v_new")),
-        Seq("id_new"))
-      .join(corpus.select(col(idCol).as("id_corpus"),
-        col(vecCol).as("v_cor")), Seq("id_corpus"))
-      .select(col("id_new"), col("id_corpus"),
-        VectorFunctions.cosine(col("v_new"), col("v_cor")).as("cosine"))
-      .filter(col("cosine") >= threshold)
-    materializeAndRelease(verified, newSig)
-  }
 
   /** Incremental embedding-cosine screen: (new, corpus) candidate
     * pairs by hyperplane LSH between a NEW batch and an EXISTING
@@ -1887,14 +1736,13 @@ object Dedup {
                             threshold: Double = 0.95,
                             nTables: Int = 8, bitsPerTable: Int = 16,
                             seed: Long = 42L, maxBucketSize: Int = 10000,
-                            broadcastNew: Boolean = true): DataFrame =
+                            broadcastNew: Boolean = true): DataFrame = {
     // inline index is built with these very params: skip the
     // validation head read (it would trigger an extra hashing job)
-    embScreenAgainstIndex(newDf, corpus,
-      rawEmbIndex(corpus, idCol, vecCol, dim, nTables, bitsPerTable,
-        seed, maxBucketSize),
-      idCol, vecCol, dim, threshold, nTables, bitsPerTable, seed,
-      broadcastNew)
+    val f = embeddingLsh(idCol, vecCol, dim, nTables, bitsPerTable, seed)
+    lshScreen(f, newDf, corpus, rawIndex(f, corpus, maxBucketSize),
+      threshold, broadcastNew)
+  }
 
   /** Exact edit-distance similarity join (record linkage / fuzzy-key
     * dedup): every pair with levenshtein ≤ `maxDist`. Candidates come
@@ -1951,12 +1799,6 @@ object Dedup {
     val cand = pairsFromBuckets(variants
       .groupBy(col("v")).agg(array_distinct(collect_list(col("id"))).as("ids"))
       .filter(bucketKeep))
-    val verified = cand
-      .join(base.select(col("id").as("id_a"), col("s").as("s_a")), Seq("id_a"))
-      .join(base.select(col("id").as("id_b"), col("s").as("s_b")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        levenshtein(col("s_a"), col("s_b")).as("dist"))
-      .filter(col("dist") <= maxDist)
-    materializeAndRelease(verified, base)
+    verifyPairs(cand, base, "s", "dist", levenshtein(_, _))(_ <= maxDist)
   }
 }

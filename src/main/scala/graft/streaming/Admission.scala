@@ -118,17 +118,16 @@ object Admission {
     * recall (batch docs invisible to SOME future band/code probes
     * until an index rebuild), the same degrade-recall-never-corrupt
     * class as the swap's append-then-crash window; a replay is still
-    * a no-op (the id screen) and does NOT repair the partial fold. */
-  /** Layout refusal BEFORE any write (review r13, shared by the
-    * semantic and signature spaces): admitCore dispatches to
-    * foldInPlace only AFTER the corpus append — an error raised
-    * there would leave the corpus mutated with the index unfolded.
-    * The layout is knowable from the schema of the cycle's own index
-    * read, so the unsupported case refuses write-free. (r18 opt:
-    * this check used to be a separate pre-read of the index path —
-    * one extra parquet listing/footer read per cycle; it now rides
-    * the index frame admitCore reads anyway, same refusal point:
-    * before any count, screen, or write.) */
+    * a no-op (the id screen) and does NOT repair the partial fold.
+    *
+    * `refuseInPlace` is the layout refusal BEFORE any write, for the
+    * spaces without an in-place fold (semantic and signature):
+    * admitCore dispatches to foldInPlace only AFTER the corpus
+    * append, so an error raised there would leave the corpus mutated
+    * with the index unfolded. The layout is knowable from the schema
+    * of the cycle's own index read, so the unsupported case refuses
+    * write-free — before any count, screen or write, and without a
+    * separate listing/footer read of the index path. */
   private def admitCore(batch: DataFrame, corpusPath: String,
                         indexPath: String, idCol: String, batchId: Long,
                         within: Boolean, collectStats: Boolean,

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** scratch diagnostics main — time a subset of SparkEntry queries:
   * runMain graft.tools.BenchSome <sfDir> <q1> <q2> ... (not part of
@@ -9,13 +8,7 @@ object BenchSome {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     // warmup to exclude JVM/codegen startup from the first query
     graft.SparkEntry.queries("q02_select")(spark, sfDir).count()
     spark.catalog.clearCache()

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{ExternalRDDScanExec, RDDScanExec,
   SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
@@ -154,11 +153,7 @@ object PlanLint {
       "upstream; checkpointing it would cost a full copy to save that"))
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local("4")
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")

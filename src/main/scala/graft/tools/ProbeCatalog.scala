@@ -4,7 +4,6 @@ import java.lang.management.ManagementFactory
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import scala.jdk.CollectionConverters._
 
 /** scratch diagnostics main (r18 optimization round) — full-catalog
@@ -24,14 +23,7 @@ object ProbeCatalog {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val n = args.lift(1).map(_.toInt).getOrElse(1)
     val prefixes = args.drop(2).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     val jobs = new AtomicInteger(0)
     val tasks = new AtomicInteger(0)
     @volatile var execRunMs = 0L

@@ -4,7 +4,6 @@ import java.lang.management.ManagementFactory
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import scala.jdk.CollectionConverters._
 
 /** scratch diagnostics main — variance probe for the CC-loop gate
@@ -28,13 +27,7 @@ object ProbeVariance {
     val n = args.lift(1).map(_.toInt).getOrElse(10)
     val names = if (args.length > 2) args.drop(2).toSeq
                 else Seq("q62_dbscan", "q80_dedup_keep_best")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     val jobs = new AtomicInteger(0)
     val tasks = new AtomicInteger(0)
     @volatile var execRunMs = 0L

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** scratch diagnostics main — scaling smoke for the dedup family:
@@ -10,6 +9,28 @@ import org.apache.spark.sql.functions._
   * scale. Verifies the operators' growth curves empirically rather
   * than by assertion. Not part of the library surface. */
 object ScaleSmoke {
+
+  /** Prints one `[scale-smoke] <prefix> <label> <secs> s` line per
+    * timed step, followed by `<unit>=<n>`: the result's size for a
+    * collection, the result itself otherwise. */
+  private final class Timer(prefix: String) {
+    def timed[T](label: String, unit: String = "")(f: => T): T = {
+      val t0 = System.nanoTime()
+      val r = f
+      val tail = r match {
+        case _ if unit.isEmpty => ""
+        case c: Iterable[_] => s"  $unit=${c.size}"
+        case n => s"  $unit=$n"
+      }
+      println(f"[scale-smoke] $prefix $label%-18s " +
+        f"${(System.nanoTime() - t0) / 1e9}%7.2f s$tail")
+      r
+    }
+
+    /** the common step: `f` returns a row count */
+    def apply(label: String)(f: => Long): Unit = timed(label, "rows")(f): Unit
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     // non-numeric args select sections (dedup/budget/incr/exact/emb/
@@ -22,18 +43,13 @@ object ScaleSmoke {
     def on(s: String): Boolean = sections.isEmpty || sections(s)
     val scaleArgs = args.drop(1).filter(_.forall(_.isDigit)).map(_.toInt)
     val scales = if (scaleArgs.nonEmpty) scaleArgs.toSeq else Seq(1, 4, 8)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // the bkt section persists a bucketed TABLE (bucket metadata
-      // lives in the catalog, not parquet); keep the warehouse out of
-      // the repo tree
-      .config("spark.sql.warehouse.dir", java.nio.file.Files
-        .createTempDirectory("graft_smoke_warehouse").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.GraftSession.envCpus
+    // the bkt section persists a bucketed TABLE (bucket metadata lives
+    // in the catalog, not parquet); keep the warehouse out of the repo
+    // tree
+    val spark = graft.GraftSession.local(cpus, Seq(
+      "spark.sql.warehouse.dir" -> java.nio.file.Files
+        .createTempDirectory("graft_smoke_warehouse").toString))
     val base = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
 
@@ -45,12 +61,7 @@ object ScaleSmoke {
     if (on("dedup")) scales.foreach { k =>
       val c = corpus(k)
       val n = c.count() // materialize cache outside timings
-      def time(label: String)(f: => Long): Unit = {
-        val t0 = System.nanoTime()
-        val rows = f
-        println(f"[scale-smoke] k=$k%-2d n=$n%-6d $label%-18s " +
-          f"${(System.nanoTime() - t0) / 1e9}%7.2f s  rows=$rows")
-      }
+      val time = new Timer(f"k=$k%-2d n=$n%-6d")
       time("exact")(graft.operators.Dedup
         .exact(c, Seq("text"), "doc_id").count())
       time("minhashPairs")(graft.operators.Dedup
@@ -86,12 +97,7 @@ object ScaleSmoke {
             ((col("doc_id") + j) % 10 + 1).cast("int"))), " ")
           .as("text")).cache()
       val n = c.count()
-      def time(label: String)(f: => Long): Unit = {
-        val t0 = System.nanoTime()
-        val rows = f
-        println(f"[scale-smoke] k=$k%-2d n=$n%-6d $label%-18s " +
-          f"${(System.nanoTime() - t0) / 1e9}%7.2f s  rows=$rows")
-      }
+      val time = new Timer(f"k=$k%-2d n=$n%-6d")
       time("lid-train")(graft.operators.LangId
         .train(c, "text", "lang", m = 4096).count())
       // cache + materialize the model so the serve timings don't
@@ -123,12 +129,7 @@ object ScaleSmoke {
           .as("lang"),
         col("text")).cache()
       val n = c.count()
-      def time(label: String)(f: => Long): Unit = {
-        val t0 = System.nanoTime()
-        val rows = f
-        println(f"[scale-smoke] k=$k%-2d n=$n%-6d $label%-18s " +
-          f"${(System.nanoTime() - t0) / 1e9}%7.2f s  rows=$rows")
-      }
+      val time = new Timer(f"k=$k%-2d n=$n%-6d")
       time("lm-train")(graft.operators.LanguageModel
         .trainNgram(c, "text", "lang", n = 3, m = 4096).count())
       val model = graft.operators.LanguageModel
@@ -154,12 +155,7 @@ object ScaleSmoke {
         when(col("doc_id") % 2 === 0, "zh").otherwise("en").as("lang"),
         col("text")).cache()
       val n = c.count()
-      def time(label: String)(f: => Long): Unit = {
-        val t0 = System.nanoTime()
-        val rows = f
-        println(f"[scale-smoke] k=$k%-2d n=$n%-6d $label%-18s " +
-          f"${(System.nanoTime() - t0) / 1e9}%7.2f s  rows=$rows")
-      }
+      val time = new Timer(f"k=$k%-2d n=$n%-6d")
       time("cjk-entropy")(c
         .select(CQ.charEntropy(col("text")).as("h"))
         .filter(col("h") >= 0.0).count())
@@ -242,12 +238,7 @@ object ScaleSmoke {
       scales.foreach { k =>
         val dir = mkDir(k)
         val n = 4 * k * 500
-        def time(label: String)(f: => Long): Unit = {
-          val t0 = System.nanoTime()
-          val rows = f
-          println(f"[scale-smoke] k=$k%-2d n=$n%-6d $label%-18s " +
-            f"${(System.nanoTime() - t0) / 1e9}%7.2f s  rows=$rows")
-        }
+        val time = new Timer(f"k=$k%-2d n=$n%-6d")
         time("web-parse")(Warc.read(spark, dir + "/*.warc.gz").count())
         time("web-unwrap")(Warc.httpResponses(
           Warc.read(spark, dir + "/*.warc.gz")).count())
@@ -307,12 +298,7 @@ object ScaleSmoke {
     budgetScales.foreach { k =>
       val c = megaCorpus(k)
       val n = c.count()
-      def time(label: String)(f: => Long): Unit = {
-        val t0 = System.nanoTime()
-        val rows = f
-        println(f"[scale-smoke] k=$k%-2d n=$n%-6d $label%-18s " +
-          f"${(System.nanoTime() - t0) / 1e9}%7.2f s  rows=$rows")
-      }
+      val time = new Timer(f"k=$k%-2d n=$n%-6d")
       time("budgetExact")(graft.operators.Budget.tokenBudgetSelect(
         c, "lang", "doc_id", "quality", "n_tok", budget = 5000L).count())
       time("budgetThreshold")(graft.operators.Budget
@@ -351,12 +337,7 @@ object ScaleSmoke {
       Seq(1, 4, 8).foreach { k =>
         val c = corpus(k)
         val n = c.count()
-        def time(label: String)(f: => Long): Unit = {
-          val t0 = System.nanoTime()
-          val rows = f
-          println(f"[scale-smoke] k=$k%-2d n=$n%-6d $label%-18s " +
-            f"${(System.nanoTime() - t0) / 1e9}%7.2f s  rows=$rows")
-        }
+        val time = new Timer(f"k=$k%-2d n=$n%-6d")
         time("pairsAgainst")(graft.operators.Dedup.minhashPairsAgainst(
           newBatch, c, "doc_id", "text", threshold = 0.8).count())
         time("pairsFull")(graft.operators.Dedup.minhashPairs(
@@ -387,12 +368,7 @@ object ScaleSmoke {
       scales.foreach { k =>
         val c = corpus(k)
         val n = c.count()
-        def time(label: String)(f: => Long): Unit = {
-          val t0 = System.nanoTime()
-          val rows = f
-          println(f"[scale-smoke] k=$k%-2d n=$n%-6d $label%-18s " +
-            f"${(System.nanoTime() - t0) / 1e9}%7.2f s  rows=$rows")
-        }
+        val time = new Timer(f"k=$k%-2d n=$n%-6d")
         time("exactScreenBcast")(graft.operators.Dedup.exactAgainst(
           newBatch, c, Seq("text")).count())
         time("exactScreenShuf")(graft.operators.Dedup.exactAgainst(
@@ -418,12 +394,7 @@ object ScaleSmoke {
       scales.foreach { k =>
         val c = corpus(k)
         val n = c.count()
-        def time(label: String)(f: => Long): Unit = {
-          val t0 = System.nanoTime()
-          val rows = f
-          println(f"[scale-smoke] k=$k%-2d n=$n%-6d $label%-18s " +
-            f"${(System.nanoTime() - t0) / 1e9}%7.2f s  rows=$rows")
-        }
+        val time = new Timer(f"k=$k%-2d n=$n%-6d")
         val dir = java.nio.file.Files
           .createTempDirectory("graft_smoke_idx").toString
         graft.operators.Dedup.minhashIndex(c, "doc_id", "text")
@@ -502,12 +473,7 @@ object ScaleSmoke {
     if (on("adm")) scales.foreach { k =>
       val c = corpus(k)
       val n = c.count()
-      def time(label: String)(f: => Long): Unit = {
-        val t0 = System.nanoTime()
-        val rows = f
-        println(f"[scale-smoke] k=$k%-2d n=$n%-6d $label%-18s " +
-          f"${(System.nanoTime() - t0) / 1e9}%7.2f s  rows=$rows")
-      }
+      val time = new Timer(f"k=$k%-2d n=$n%-6d")
       val dir = java.nio.file.Files.createTempDirectory("graft_smoke_adm")
       val corpusDir = dir.resolve("corpus").toString
       val indexDir = dir.resolve("index").toString
@@ -542,12 +508,7 @@ object ScaleSmoke {
       val k = scales.max
       val c = corpus(k)
       val n = c.count()
-      def time(label: String)(f: => Long): Unit = {
-        val t0 = System.nanoTime()
-        val rows = f
-        println(f"[scale-smoke] k=$k%-2d n=$n%-6d $label%-18s " +
-          f"${(System.nanoTime() - t0) / 1e9}%7.2f s  rows=$rows")
-      }
+      val time = new Timer(f"k=$k%-2d n=$n%-6d")
       val plainDir = java.nio.file.Files
         .createTempDirectory("graft_smoke_bkt_plain").toString
       c.write.mode("overwrite").parquet(plainDir)
@@ -631,12 +592,7 @@ object ScaleSmoke {
       import spark.implicits._
       val chain = spark.range(nEdges)
         .select(col("id").as("id_a"), (col("id") + 1).as("id_b"))
-      def time(label: String)(f: => Long): Unit = {
-        val t0 = System.nanoTime()
-        val rows = f
-        println(f"[scale-smoke] k=1  n=$nEdges%-7d $label%-18s " +
-          f"${(System.nanoTime() - t0) / 1e9}%7.2f s  rows=$rows")
-      }
+      val time = new Timer(f"k=1  n=$nEdges%-7d")
       time("ccDriver")(graft.operators.Dedup
         .connectedComponentMinLabel(chain).count())
       time("ccDistributed")(graft.operators.Dedup
@@ -665,12 +621,7 @@ object ScaleSmoke {
       scales.foreach { k =>
         val c = embCorpus(k)
         val n = c.count()
-        def time(label: String)(f: => Long): Unit = {
-          val t0 = System.nanoTime()
-          val rows = f
-          println(f"[scale-smoke] k=$k%-2d n=$n%-6d $label%-18s " +
-            f"${(System.nanoTime() - t0) / 1e9}%7.2f s  rows=$rows")
-        }
+        val time = new Timer(f"k=$k%-2d n=$n%-6d")
         time("embScreen")(graft.operators.Dedup.embeddingPairsAgainst(
           newBatch, c, "vec_id", "embedding", dim = 64,
           threshold = 0.95).count())
@@ -691,20 +642,13 @@ object ScaleSmoke {
           min(col("v")).as("lo"), max(col("v")).as("hi"))
           .collect().map(r => r.getInt(0) ->
             ((r.getLong(1), r.getDouble(2), r.getDouble(3)))).toMap
-      def time(label: String)(f: => Map[Int, (Long, Double, Double)])
-          : Map[Int, (Long, Double, Double)] = {
-        val t0 = System.nanoTime()
-        val h = f
-        println(f"[scale-smoke] k=$k%-2d n=$n%-8d $label%-18s " +
-          f"${(System.nanoTime() - t0) / 1e9}%7.2f s  buckets=${h.size}")
-        h
-      }
+      val time = new Timer(f"k=$k%-2d n=$n%-8d")
       val tie = Seq("l_orderkey", "l_linenumber", "__r")
-      val hWindow = time("ntileWindow") {
+      val hWindow = time.timed("ntileWindow", "buckets") {
         val w = Window.orderBy((col("v") +: tie.map(col)).map(_.asc): _*)
         hist(c.withColumn("b", ntile(10).over(w)))
       }
-      val hRange = time("ntileGlobal") {
+      val hRange = time.timed("ntileGlobal", "buckets") {
         hist(graft.ddf.DDF(c).ntileGlobal("v", 10, out = "b",
           tieCols = tie).toDF)
       }
@@ -726,14 +670,8 @@ object ScaleSmoke {
           .otherwise("B"))
         .cache()
       val n = c.count()
-      def time[T](label: String)(f: => T): T = {
-        val t0 = System.nanoTime()
-        val r = f
-        println(f"[scale-smoke] k=$k%-2d n=$n%-8d $label%-18s " +
-          f"${(System.nanoTime() - t0) / 1e9}%7.2f s")
-        r
-      }
-      val rWindow = time("mwWindow") {
+      val time = new Timer(f"k=$k%-2d n=$n%-8d")
+      val rWindow = time.timed("mwWindow") {
         // the pre-r12 shape, verbatim
         val wOrd = Window.orderBy(col("v"))
         val wTie = Window.partitionBy(col("v"))
@@ -747,7 +685,7 @@ object ScaleSmoke {
           sum((pow(col("__t"), 3) - col("__t")) / col("__t")).as("__tt"))
         a.collect().head.toSeq
       }
-      val rCensus = time("mwMidrank") {
+      val rCensus = time.timed("mwMidrank") {
         val u = graft.operators.AbTest.mannWhitneyU(c, "g", "v", "A", "B")
         u.collect().head.toSeq
       }
@@ -785,12 +723,7 @@ object ScaleSmoke {
     if (on("sub")) scales.foreach { k =>
       val c = corpus(k)
       val n = c.count()
-      def time(label: String)(f: => Long): Unit = {
-        val t0 = System.nanoTime()
-        val rows = f
-        println(f"[scale-smoke] k=$k%-2d n=$n%-6d $label%-18s " +
-          f"${(System.nanoTime() - t0) / 1e9}%7.2f s  rows=$rows")
-      }
+      val time = new Timer(f"k=$k%-2d n=$n%-6d")
       val hashSpans = graft.operators.SubstringDedup
         .duplicateSpans(c, "doc_id", "text", k = 8)
       time("subSpansHash")(hashSpans.count())
@@ -835,12 +768,7 @@ object ScaleSmoke {
       idx.write.mode("overwrite").parquet(appendDir)
       idx.write.mode("overwrite").parquet(rewriteDir)
       val nIdx = spark.read.parquet(appendDir).count()
-      def time(label: String)(f: => Long): Unit = {
-        val t0 = System.nanoTime()
-        val rows = f
-        println(f"[scale-smoke] k=$k%-2d idx=$nIdx%-8d $label%-18s " +
-          f"${(System.nanoTime() - t0) / 1e9}%7.2f s  rows=$rows")
-      }
+      val time = new Timer(f"k=$k%-2d idx=$nIdx%-8d")
       time("gramAppendFold")(graft.operators.SubstringDedup
         .gramIndexAppendInPlace(spark, appendDir, batch,
           "doc_id", "text", k = 8))
@@ -872,12 +800,7 @@ object ScaleSmoke {
         graft.functions.TextFunctions.tokens(col("text"))).as("token"))
         .cache()
       val n = toks.count()
-      def time(label: String)(f: => Long): Unit = {
-        val t0 = System.nanoTime()
-        val rows = f
-        println(f"[scale-smoke] k=$k%-2d n=$n%-8d $label%-18s " +
-          f"${(System.nanoTime() - t0) / 1e9}%7.2f s  rows=$rows")
-      }
+      val time = new Timer(f"k=$k%-2d n=$n%-8d")
       val share = 0.002
       val mg = graft.operators.Frequent.heavyHitters(toks, "token", share)
       time("hhTwoPass")(mg.count())
@@ -902,22 +825,15 @@ object ScaleSmoke {
     if (on("bpe")) scales.foreach { k =>
       val c = corpus(k)
       val n = c.count()
-      def timeMerges(label: String)(f: => Seq[(Int, String, String, Long)])
-          : Seq[(Int, String, String, Long)] = {
-        val t0 = System.nanoTime()
-        val m = f
-        println(f"[scale-smoke] k=$k%-2d n=$n%-6d $label%-18s " +
-          f"${(System.nanoTime() - t0) / 1e9}%7.2f s  merges=${m.size}")
-        m
-      }
+      val time = new Timer(f"k=$k%-2d n=$n%-6d")
       def collectMerges(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(r => (r.getInt(0), r.getString(1),
           r.getString(2), r.getLong(3))).toSeq
-      val mDist = timeMerges("bpeTrainDist") {
+      val mDist = time.timed("bpeTrainDist", "merges") {
         collectMerges(graft.operators.Bpe.train(c, "text", 40,
           driverCutover = 0L))
       }
-      val mLocal = timeMerges("bpeTrainLocal") {
+      val mLocal = time.timed("bpeTrainLocal", "merges") {
         collectMerges(graft.operators.Bpe.train(c, "text", 40))
       }
       require(mDist == mLocal, s"k=$k: train paths diverged")
@@ -926,11 +842,11 @@ object ScaleSmoke {
       // corpus — same flat-in-k claim) and the WordPiece trainer
       // (two aggs per distributed merge instead of one; still
       // word-table-sized, so still flat in k)
-      val bDist = timeMerges("byteBpeDist") {
+      val bDist = time.timed("byteBpeDist", "merges") {
         collectMerges(graft.operators.Bpe.train(c, "text", 40,
           driverCutover = 0L, byteLevel = true))
       }
-      val bLocal = timeMerges("byteBpeLocal") {
+      val bLocal = time.timed("byteBpeLocal", "merges") {
         collectMerges(graft.operators.Bpe.train(c, "text", 40,
           byteLevel = true))
       }
@@ -939,19 +855,11 @@ object ScaleSmoke {
         df.collect().filter(r => !r.isNullAt(2))
           .map(r => (r.getInt(0), r.getString(1), r.getDouble(2),
             r.getLong(3))).toSeq
-      def timeWp(label: String)(f: => Seq[(Int, String, Double, Long)])
-          : Seq[(Int, String, Double, Long)] = {
-        val t0 = System.nanoTime()
-        val m = f
-        println(f"[scale-smoke] k=$k%-2d n=$n%-6d $label%-18s " +
-          f"${(System.nanoTime() - t0) / 1e9}%7.2f s  merges=${m.size}")
-        m
-      }
-      val wDist = timeWp("wpTrainDist") {
+      val wDist = time.timed("wpTrainDist", "merges") {
         collectWp(graft.operators.WordPiece.train(c, "text", 40,
           driverCutover = 0L))
       }
-      val wLocal = timeWp("wpTrainLocal") {
+      val wLocal = time.timed("wpTrainLocal", "merges") {
         collectWp(graft.operators.WordPiece.train(c, "text", 40))
       }
       require(wDist == wLocal, s"k=$k: wordpiece train paths diverged")

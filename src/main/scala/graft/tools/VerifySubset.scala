@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** scratch diagnostics main — Verify for a named subset of queries:
@@ -11,14 +10,7 @@ object VerifySubset {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val outDir = args(1)
     val wanted = args.drop(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     new java.io.File(outDir).mkdirs()
     val sel = graft.SparkEntry.queries.filter { case (n, _) =>
       wanted.exists(n.startsWith) }

@@ -169,6 +169,21 @@ class DedupSpec extends SparkTestBase {
         bands = 32, threshold = 0.6)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(fromDisk == inline && inline.nonEmpty)
+    // the persisted schema is a format: column names, order and __fmt
+    assertIndexSchema(spark.read.parquet(dir), minhashIndexCols, 2)
+  }
+
+  private val minhashIndexCols = Seq("band", "bucket", "ids", "n", "__fmt",
+    "__numHashes", "__bands", "__shingleLen", "__seed", "__maxBucketSize")
+  private val embeddingIndexCols = Seq("code", "ids", "n", "__fmt",
+    "__nTables", "__bitsPerTable", "__dim", "__seed", "__maxBucketSize")
+  private val partitionedCols = Seq("__numParts", "part")
+
+  private def assertIndexSchema(index: org.apache.spark.sql.DataFrame,
+                                cols: Seq[String], fmt: Int): Unit = {
+    assert(index.columns.toSeq == cols)
+    assert(index.select("__fmt").distinct().collect().map(_.getInt(0))
+      .toSeq == Seq(fmt))
   }
 
   test("minhash index: param mismatch throws, legacy index gated") {
@@ -290,6 +305,7 @@ class DedupSpec extends SparkTestBase {
     Dedup.embeddingIndex(embCorpus, "vec_id", "embedding", dim = 64)
       .write.mode("overwrite").parquet(dir)
     val idx = spark.read.parquet(dir)
+    assertIndexSchema(idx, embeddingIndexCols, 1)
     val fromDisk = Dedup.embeddingPairsAgainstIndex(embBatch, embCorpus,
         idx, "vec_id", "embedding", dim = 64, threshold = 0.95)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -327,11 +343,13 @@ class DedupSpec extends SparkTestBase {
     for (cap <- Seq(1000, 2)) {
       val rebuilt = key(Dedup.minhashIndex(corpus, "doc_id", "text",
         numHashes = 64, bands = 32, maxBucketSize = cap))
-      val updated = key(Dedup.minhashIndexUpdate(
+      val updatedIndex = Dedup.minhashIndexUpdate(
         Dedup.minhashIndex(c1, "doc_id", "text", numHashes = 64,
           bands = 32, maxBucketSize = cap),
         c2, "doc_id", "text", numHashes = 64, bands = 32,
-        maxBucketSize = cap))
+        maxBucketSize = cap)
+      assertIndexSchema(updatedIndex, minhashIndexCols, 2)
+      val updated = key(updatedIndex)
       assert(updated == rebuilt, s"cap=$cap: update diverged from rebuild")
       if (cap == 2) // the adversarial cap really did kill buckets
         assert(rebuilt.values.exists { case (ids, n) => ids.isEmpty && n > 2 })
@@ -390,6 +408,8 @@ class DedupSpec extends SparkTestBase {
     val rebuilt = key(Dedup.minhashIndex(corpus, "doc_id", "text",
       numHashes = 64, bands = 32))
     assert(key(spark.read.parquet(dir)) == rebuilt)
+    assertIndexSchema(spark.read.parquet(dir),
+      minhashIndexCols ++ partitionedCols, 2)
     // layout-param mismatch fails fast like every other param
     val e = intercept[IllegalArgumentException] {
       Dedup.minhashIndexUpdatePartitioned(spark, dir, batch,
@@ -439,6 +459,8 @@ class DedupSpec extends SparkTestBase {
     val rebuilt = key(Dedup.embeddingIndex(embCorpus, "vec_id",
       "embedding", dim = 64))
     assert(key(spark.read.parquet(dir)) == rebuilt)
+    assertIndexSchema(spark.read.parquet(dir),
+      embeddingIndexCols ++ partitionedCols, 1)
     // head-stamp guard, embedding face (shared core with the minhash
     // pin): wrong params refuse before any write even when the
     // dirty-pruned validation would be vacuous (empty batch)
@@ -468,10 +490,12 @@ class DedupSpec extends SparkTestBase {
     for (cap <- Seq(10000, 2)) {
       val rebuilt = key(Dedup.embeddingIndex(embCorpus, "vec_id",
         "embedding", dim = 64, maxBucketSize = cap))
-      val updated = key(Dedup.embeddingIndexUpdate(
+      val updatedIndex = Dedup.embeddingIndexUpdate(
         Dedup.embeddingIndex(c1, "vec_id", "embedding", dim = 64,
           maxBucketSize = cap),
-        c2, "vec_id", "embedding", dim = 64, maxBucketSize = cap))
+        c2, "vec_id", "embedding", dim = 64, maxBucketSize = cap)
+      assertIndexSchema(updatedIndex, embeddingIndexCols, 1)
+      val updated = key(updatedIndex)
       assert(updated == rebuilt, s"cap=$cap: update diverged from rebuild")
     }
   }
@@ -910,10 +934,6 @@ class DedupSpec extends SparkTestBase {
     // ground truth: single-block variant = exact all-pairs
     val truth = pairSet(Dedup.jaccardPairs(docs.withColumn("blk", lit(1)),
       "doc_id", "text", "blk", shingleLen = 3, threshold = 0.15))
-    val prefix = pairSet(Dedup.jaccardPairsPrefix(docs, "doc_id", "text",
-      shingleLen = 3, threshold = 0.15))
-    assert(prefix == truth, s"prefix=${prefix.size} truth=${truth.size} " +
-      s"missing=${truth -- prefix} extra=${prefix -- truth}")
     // count-based exact join, uncapped (trusted counts)...
     val counted = pairSet(Dedup.jaccardPairsExact(docs, "doc_id", "text",
       shingleLen = 3, threshold = 0.15))
