@@ -262,15 +262,18 @@ object Dedup {
     * ≥ threshold) is the exact verification. `params` are the build
     * params (format version first — the clearest failure) stamped
     * into, and validated against, the persisted index. `foldItems` is
-    * the batch side of an index fold and `corpusItems` the corpus side
-    * of a screen's verification join. */
+    * the batch side of an index fold. A screen's corpus side is the
+    * raw (`idCol`, `source`) columns: they pass through the
+    * verification join, and `payloadOf(source)` is derived above it,
+    * so only candidate-matched corpus rows are shingled or hashed. */
   private final case class Lsh(keys: Seq[String], payload: String,
                                out: String,
                                measure: (Column, Column) => Column,
                                params: Seq[(String, Any)],
                                items: DataFrame => DataFrame,
                                foldItems: DataFrame => DataFrame,
-                               corpusItems: DataFrame => DataFrame,
+                               idCol: String, source: String,
+                               payloadOf: Column => Column,
                                keyed: DataFrame => DataFrame)
 
   /** MinHash over word shingles, verified by Jaccard. The folds band
@@ -282,7 +285,8 @@ object Dedup {
         "__bands" -> bands, "__shingleLen" -> shingleLen, "__seed" -> seed),
       items = shingledSpread(_, idCol, textCol, shingleLen),
       foldItems = shingledFor(_, idCol, textCol, shingleLen),
-      corpusItems = shingledSpread(_, idCol, textCol, shingleLen),
+      idCol = idCol, source = textCol,
+      payloadOf = wordShingles(_, shingleLen),
       keyed = bandedFor(_, numHashes, bands, seed))
 
   /** hyperplane LSH over an embedding column, verified by cosine.
@@ -297,7 +301,7 @@ object Dedup {
       Seq("__fmt" -> EmbeddingIndexFormat, "__nTables" -> nTables,
         "__bitsPerTable" -> bitsPerTable, "__dim" -> dim, "__seed" -> seed),
       items = codes, foldItems = codes,
-      corpusItems = _.select(col(idCol).as("id"), col(vecCol).as("v")),
+      idCol = idCol, source = vecCol, payloadOf = identity,
       keyed = _.select(col("id"), explode(col("codes")).as("code")))
   }
 
@@ -342,11 +346,13 @@ object Dedup {
                        maxBucketSize: Int): DataFrame =
     stamp(rawIndex(f, corpus, maxBucketSize), withCap(f.params, maxBucketSize))
 
-  /** a batch's uncapped (keys, ids, n) buckets: the add side of a fold */
-  private def batchBuckets(f: Lsh, batch: DataFrame): DataFrame =
-    collectBuckets(f.keyed(f.foldItems(batch)), f.keys)
-      .select(f.keys.map(col) :+ col("ids") :+
-        size(col("ids")).cast("long").as("n"): _*)
+  /** a batch's bucket rows in the index's shape, one per (doc, key):
+    * (keys, [id], 1) — the add side of a fold, aggregated only by the
+    * fold's one [[mergeIndex]] */
+  private def batchRows(f: Lsh, batch: DataFrame): DataFrame =
+    f.keyed(f.foldItems(batch))
+      .select(f.keys.map(col) :+ array(col("id")).as("ids") :+
+        lit(1L).as("n"): _*)
 
   /** candidate pairs within `df`, verified by the family's measure */
   private def lshPairs(f: Lsh, df: DataFrame, maxBucketSize: Int,
@@ -359,7 +365,12 @@ object Dedup {
 
   /** (new, corpus) pairs: the batch's bucket rows (batch-sized, so
     * broadcast unless `broadcastNew = false`) join the corpus index,
-    * and only candidate-matched corpus rows are read for verification */
+    * and the RAW corpus rows join the candidates by id — the corpus
+    * payload (shingles) is derived above that join, for
+    * candidate-matched rows only, never for the whole corpus scan.
+    * No corpus-side emptiness filter is needed: index ids only ever
+    * come from non-empty shingle sets ([[rawIndex]] and the folds
+    * band filtered items). */
   private def lshScreen(f: Lsh, newDf: DataFrame, corpus: DataFrame,
                         corpusIndex: DataFrame, threshold: Double,
                         broadcastNew: Boolean): DataFrame = {
@@ -370,15 +381,14 @@ object Dedup {
       .join(if (broadcastNew) broadcast(newKeys) else newKeys, f.keys)
       .select(col("id_new"), explode(col("ids")).as("id_corpus"))
       .distinct()
-    val (pNew, pCor) = (s"${f.payload}_new", s"${f.payload}_cor")
+    val pNew = s"${f.payload}_new"
     val verified = cand
       .join(items.select(col("id").as("id_new"), col(f.payload).as(pNew)),
         Seq("id_new"))
-      .join(f.corpusItems(corpus)
-        .select(col("id").as("id_corpus"), col(f.payload).as(pCor)),
-        Seq("id_corpus"))
+      .join(corpus.select(col(f.idCol).as("id_corpus"),
+        col(f.source).as("src_cor")), Seq("id_corpus"))
       .select(col("id_new"), col("id_corpus"),
-        f.measure(col(pNew), col(pCor)).as(f.out))
+        f.measure(col(pNew), f.payloadOf(col("src_cor"))).as(f.out))
       .filter(col(f.out) >= threshold)
     materializeAndRelease(verified, items)
   }
@@ -405,8 +415,8 @@ object Dedup {
     val stampCols = withCap(f.params, maxBucketSize)
     val old = validateIndexParams(index, what, stampCols, acceptUnvalidated)
     requireCounts(old, what)
-    stamp(mergeIndex(old.select(f.keys.map(col) :+ col("ids") :+ col("n"): _*),
-        batchBuckets(f, newBatch), f.keys, maxBucketSize),
+    stamp(mergeIndex(old.select(f.keys.map(col) :+ col("ids") :+ col("n"): _*)
+        .unionByName(batchRows(f, newBatch)), f.keys, maxBucketSize),
       stampCols)
   }
 
@@ -436,20 +446,35 @@ object Dedup {
     lshIndex(minhashLsh(idCol, textCol, numHashes, bands, shingleLen, seed),
       corpus, maxBucketSize)
 
-  /** Session-scoped memo of SUCCESSFUL validations, keyed on (the
-    * index's input files, the asked param list). Only BARE file scans
-    * are cacheable — any transformation over the scan (a test's
-    * `withColumn("__seed", …)`, a union, a filter) gets None and
-    * always re-validates, so a mutated plan can never ride a cached
-    * pass. A rewritten index produces new part-file names (parquet
-    * writers never reuse names), so the key misses and the rewrite
-    * re-validates. Bounded; failures are never cached (they throw).
-    * This amortizes the per-call every-tuple distinct scan: an
-    * admission loop re-reading the same persisted index pays one
-    * validation job per (files, params), not one per update/screen
-    * call. */
-  private val validatedIndexes =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(Seq[String], Seq[(String, String)])]()
+  /** Process-wide memo of validated index stamps, keyed on the index's
+    * input file set alone. A stamp is the index's ONE distinct `__`
+    * param tuple by column, or None for an index with zero rows; a
+    * stored stamp has passed the
+    * every-distinct-tuple scan (≤ 1 tuple), so any asked param list is
+    * then checked against it with no job ([[validateIndexParams]]).
+    * Only BARE file scans are keyed — any transformation over the scan
+    * (a test's `withColumn("__seed", …)`, a union, a filter) gets None
+    * and always re-validates, so a mutated plan can never ride a
+    * stored stamp. A rewritten index produces new part-file names
+    * (parquet writers never reuse names), so the key misses and a
+    * foreign rewrite re-validates in full. The one writer that adds
+    * entries without a scan is the partitioned fold
+    * ([[partitionedUpdateCore]]): when it wrote exactly the stamp it
+    * validated, it registers the index's new file set, so the next
+    * cycle's screen over the same files validates without a job — one
+    * validation per WRITTEN file set, not one per read. Bounded;
+    * failures are never stored (a multi-tuple index throws). */
+  private val validatedIndexes = new java.util.concurrent
+    .ConcurrentHashMap[Seq[String], Option[Map[String, Any]]]()
+
+  private def rememberStamp(files: Seq[String],
+                            stamp: Option[Map[String, Any]]): Unit =
+    if (validatedIndexes.size < 4096) validatedIndexes.put(files, stamp)
+
+  /** the memo's stamp when `files` (a bare scan's) were validated */
+  private def knownStamp(files: Option[Seq[String]])
+  : Option[Option[Map[String, Any]]] =
+    files.flatMap(fs => Option(validatedIndexes.get(fs)))
 
   /** input-file key when (and only when) the plan is a bare scan,
     * possibly under subquery aliases */
@@ -484,7 +509,10 @@ object Dedup {
     *    call does not ask about (the skew cap at screen time, or
     *    params added by a future format) only need to be constant.
     * An EMPTY index (zero rows) passes vacuously: there is nothing to
-    * validate and every screen over it returns zero candidates. */
+    * validate and every screen over it returns zero candidates.
+    * The distinct scan runs once per bare-scan file set: its stamp is
+    * memoized ([[validatedIndexes]]) and later calls check their own
+    * `asked` list against it without a job. */
   private[operators] def validateIndexParams(index: DataFrame, what: String,
                                   asked: Seq[(String, Any)],
                                   acceptUnvalidated: Boolean): DataFrame = {
@@ -499,48 +527,50 @@ object Dedup {
           "run a hand-built index on your own contract.")
       index
     } else {
-      val cacheKey = bareScanFiles(index)
-        .map(fs => (fs, asked.map { case (k, v) => k -> String.valueOf(v) }))
-      if (cacheKey.exists(validatedIndexes.contains))
-        return index.drop(paramCols: _*)
-      // no .limit(3) guard here: a limit over a shuffle runs the
-      // incremental try-1-then-2-then-4-partitions probe — FOUR jobs
-      // per validation at gate scale. The distinct
-      // of constant-per-build columns is bounded by the number of
-      // builds ever unioned into the file set (1 for any graft-
-      // written index), so a plain collect is one job and bytes.
-      val tuples = index.select(paramCols.map(col): _*).distinct()
-        .collect()
-      require(tuples.length <= 1,
-        s"$what: index carries ${tuples.length}+ distinct build-param " +
-          s"tuples ${tuples.map(_.toString).mkString(", ")} over " +
-          s"(${paramCols.mkString(", ")}) — it was assembled from " +
-          "differently-parameterized builds (a union of indexes?) and " +
-          "would screen with mixed-recall buckets. Rebuild from one " +
-          "parameter set.")
-      tuples.headOption.foreach { r =>
-        val built = paramCols.zipWithIndex
-          .map { case (c, i) => c -> r.get(i) }.toMap
-        asked.foreach { case (k, v) =>
-          require(built.contains(k),
-            s"$what: index lacks the $k param column — it was " +
-              "persisted by an older graft version whose index format " +
-              "this library no longer reads compatibly. Rebuild the " +
-              "index (or pass acceptUnvalidated = true after dropping " +
-              "the __param columns, on your own contract).")
-          require(built(k) == v,
-            s"$what: index was built with $k = ${built(k)} but the " +
-              s"batch is being screened with $k = $v — candidate " +
-              "recall would silently collapse. Rebuild the index or " +
-              "match the batch params.")
-        }
+      val files = bareScanFiles(index)
+      val built = knownStamp(files).getOrElse {
+        // no .limit(3) guard here: a limit over a shuffle runs the
+        // incremental try-1-then-2-then-4-partitions probe — FOUR jobs
+        // per validation at gate scale. The distinct
+        // of constant-per-build columns is bounded by the number of
+        // builds ever unioned into the file set (1 for any graft-
+        // written index), so a plain collect is one job and bytes.
+        val tuples = index.select(paramCols.map(col): _*).distinct()
+          .collect()
+        require(tuples.length <= 1,
+          s"$what: index carries ${tuples.length}+ distinct build-param " +
+            s"tuples ${tuples.map(_.toString).mkString(", ")} over " +
+            s"(${paramCols.mkString(", ")}) — it was assembled from " +
+            "differently-parameterized builds (a union of indexes?) and " +
+            "would screen with mixed-recall buckets. Rebuild from one " +
+            "parameter set.")
+        val fresh = tuples.headOption.map(r =>
+          paramCols.zipWithIndex.map { case (c, i) => c -> r.get(i) }.toMap)
+        files.foreach(rememberStamp(_, fresh))
+        fresh
       }
-      cacheKey.foreach { k =>
-        if (validatedIndexes.size < 4096) validatedIndexes.add(k)
-      }
+      built.foreach(requireAsked(_, what, asked))
       index.drop(paramCols: _*)
     }
   }
+
+  /** each param in `asked` must be present in the validated stamp
+    * `built` and equal to it */
+  private def requireAsked(built: Map[String, Any], what: String,
+                           asked: Seq[(String, Any)]): Unit =
+    asked.foreach { case (k, v) =>
+      require(built.contains(k),
+        s"$what: index lacks the $k param column — it was " +
+          "persisted by an older graft version whose index format " +
+          "this library no longer reads compatibly. Rebuild the " +
+          "index (or pass acceptUnvalidated = true after dropping " +
+          "the __param columns, on your own contract).")
+      require(built(k) == v,
+        s"$what: index was built with $k = ${built(k)} but the " +
+          s"batch is being screened with $k = $v — candidate " +
+          "recall would silently collapse. Rebuild the index or " +
+          "match the batch params.")
+    }
 
   /** [[minhashPairsAgainst]] with a PREBUILT corpus index (from
     * [[minhashIndex]], typically read back from parquet): per-batch
@@ -596,17 +626,19 @@ object Dedup {
       "minhashIndexUpdate", index, newBatch, maxBucketSize,
       acceptUnvalidated)
 
-  /** union + re-aggregate two capped bucket tables on `keys`: member
-    * lists concatenate, TRUE counts add, and the cap re-applies on the
-    * summed count — so a bucket that a full rebuild would kill dies
-    * here too, no matter which side(s) its members came from. */
-  private def mergeIndex(old: DataFrame, add: DataFrame,
-                         keys: Seq[String], maxBucketSize: Int): DataFrame =
-    old.unionByName(add)
-      .groupBy(keys.map(col): _*)
+  /** re-aggregate (by..., ids, n) bucket rows — the old index's capped
+    * buckets unioned with the batch's [[batchRows]] — on `by` in ONE
+    * aggregation: member lists concatenate, TRUE counts add, and the
+    * cap re-applies on the summed count — so a bucket that a full
+    * rebuild would kill dies here too, no matter which side(s) its
+    * members came from. `by` is the bucket key, led by the layout
+    * `part` for the partitioned fold. */
+  private def mergeIndex(rows: DataFrame, by: Seq[String],
+                         maxBucketSize: Int): DataFrame =
+    rows.groupBy(by.map(col): _*)
       .agg(flatten(collect_list(col("ids"))).as("ids"),
         sum(col("n")).as("n"))
-      .select(keys.map(col) :+
+      .select(by.map(col) :+
         when(col("n") <= maxBucketSize, col("ids"))
           .otherwise(slice(col("ids"), 1, 0)).as("ids") :+
         col("n"): _*)
@@ -676,6 +708,21 @@ object Dedup {
     * first: they must be materialized before the overwrite because
     * they are derived from the very files being replaced.
     *
+    * Stamp contract: when the index frame's file set is already in
+    * the validation memo ([[validatedIndexes]] — the admission cycle's
+    * screen validated this very frame), the fold takes the index's
+    * stamp from the memo and checks its own params and `__numParts`
+    * against it without a job. Otherwise (a standalone call) it reads
+    * one head row for the stamp and validates the dirty partitions it
+    * merges. After the overwrite, if the stamp it wrote equals the
+    * memo stamp it validated, it registers the index's new file set
+    * (the frame's files outside the dirty partitions plus a listing of
+    * the dirty partition directories only), so the next cycle's
+    * screen over the same files is a memo hit. That relies on the
+    * same single-writer contract as `preRead`; a foreign rewrite
+    * writes new file names, so the memo misses and the next read
+    * validates in full.
+    *
     * Durability contract vs [[graft.streaming.Admission]]'s staged
     * swap: the swap is one atomic rename (a crash leaves old or new,
     * never a mix); dynamic partition overwrite commits per partition,
@@ -694,7 +741,6 @@ object Dedup {
                                     preRead: Option[DataFrame])
   : PartialUpdateStats = {
     val (keys, asked) = (f.keys, withCap(f.params, maxBucketSize))
-    val buckets = batchBuckets(f, newBatch)
     // preRead: a caller that already holds a DataFrame over `path`
     // (the admission loop reads the index once per cycle for its
     // screens) passes it here to skip a second read — above
@@ -707,22 +753,27 @@ object Dedup {
     require(index.columns.contains("part"),
       s"$what: index at $path is not partitioned — persist it with " +
         "indexWritePartitioned (or use the full-swap update)")
-    // numParts = 0 means "the index's own layout": read the embedded
-    // __numParts (one head row of a constant RLE column — a limit
-    // over a bare scan is one 1-task job, not the limit-over-shuffle
-    // probe trap). The head read also runs for an EXPLICIT numParts
-    // and asserts agreement — with param validation pruned
-    // to dirty partitions (below), an all-new dirty set would
-    // otherwise let a wrong explicit numParts slip through and hash
-    // buckets into the wrong layout partitions.
     val allParamCols = index.columns.filter(_.startsWith("__")).toSeq
-    val headParams: Option[Map[String, Any]] =
-      if (allParamCols.nonEmpty) {
+    val files = bareScanFiles(index)
+    // the whole file set's stamp, when the memo already holds it
+    val known = knownStamp(files)
+    // numParts = 0 means "the index's own layout": read the embedded
+    // __numParts from the stamp — the memo's, or else one head row of
+    // the constant RLE columns (a limit over a bare scan is one 1-task
+    // job, not the limit-over-shuffle probe trap). The stamp is also
+    // read for an EXPLICIT numParts and asserts agreement — with param
+    // validation pruned to dirty partitions (below), an all-new dirty
+    // set would otherwise let a wrong explicit numParts slip through
+    // and hash buckets into the wrong layout partitions.
+    val headParams: Option[Map[String, Any]] = known match {
+      case Some(memo) => memo
+      case None if allParamCols.nonEmpty =>
         val head = index.select(allParamCols.map(col): _*).limit(1).collect()
         head.headOption.map(r =>
           allParamCols.zipWithIndex.map { case (c, i) => c -> r.get(i) }
             .toMap)
-      } else None
+      case None => None
+    }
     val embedded: Option[Int] =
       headParams.flatMap(_.get("__numParts").collect { case i: Int => i })
     val np = (numParts, embedded) match {
@@ -743,19 +794,20 @@ object Dedup {
         a
       case (a, None) => a // unstamped legacy layout: caller's contract
     }
+    val written = asked :+ ("__numParts" -> np)
     // The dirty-pruned validation below is VACUOUS when every dirty
     // partition is new (zero existing param tuples in the pruned
     // scan) — a wrong-param caller would then merge unvalidated and
     // restamp those partitions with its own params, corrupting the
-    // index into a mixed-param state. The one-row head read
-    // above already carries the index's param stamp (uniform across
-    // partitions by every writer's contract), so the caller's params
-    // are checked against it here at zero extra jobs. Hand-assembled
-    // MIXED stamps remain the screen side's full-index validation to
-    // catch (and the pruned check below still catches them among the
-    // partitions actually read).
+    // index into a mixed-param state. The stamp read above (uniform
+    // across partitions by every writer's contract) is therefore
+    // checked against the caller's params here, at zero extra jobs.
+    // Hand-assembled MIXED stamps remain the full-index validation's
+    // to catch (the screen's, or the memo stamp's that it left; a
+    // standalone fold's pruned check below still catches them among
+    // the partitions actually read).
     headParams.foreach { built =>
-      (asked :+ ("__numParts" -> np)).foreach { case (k, v) =>
+      written.foreach { case (k, v) =>
         require(!built.contains(k) || built(k) == v,
           s"$what: index at $path was built with $k = ${built(k)} " +
             s"but this update was called with $k = $v — folding " +
@@ -764,41 +816,49 @@ object Dedup {
             "params.")
       }
     }
-    // batch banding: CACHE, populated by the dirty-scan collect below
+    // batch band rows: CACHE, populated by the dirty-scan collect below
     // and reused by the merge, so banding and the dirty scan run as
     // one job. Safe where a checkpoint was required for `merged`: nb
     // derives from the BATCH, not from the index files the overwrite
     // below replaces.
-    val nb = buckets.withColumn("part", partOf(keys, np)).cache()
+    val nb = batchRows(f, newBatch).withColumn("part", partOf(keys, np))
+      .cache()
     val dirty = nb.select(col("part")).distinct()
       .collect().map(_.getInt(0)).sorted
     if (dirty.isEmpty) { // empty batch
       nb.unpersist()
       return PartialUpdateStats(0, np)
     }
-    // validate build params against the DIRTY partitions only — the
-    // same partition-pruned scan the merge reads — instead of the
-    // whole index: a full-index validation would be the fold's one
-    // corpus-proportional READ (and the file set changes every fold,
-    // so the validation cache never hits on cycle 2+). Sound because
-    // every partitioned-index writer
-    // (indexWritePartitioned and this fold's stamp) stamps params
-    // uniformly across partitions — the screen side still validates
-    // the full index each cycle, so a hand-assembled mixed-param
-    // union is caught there. Dirty partitions that do not exist yet
-    // (all-new buckets) validate vacuously here — the caller-param
-    // guard for that case is the head-stamp check above.
     val pruned = index.filter(col("part").isin(dirty.map(Int.box): _*))
-    val old = validateIndexParams(pruned, what,
-      asked :+ ("__numParts" -> np), acceptUnvalidated)
+    val old = known match {
+      // the whole file set passed the every-tuple scan: its one stamp
+      // answers for the dirty partitions too
+      case Some(memo) =>
+        memo.foreach(requireAsked(_, what, written))
+        pruned.drop(allParamCols: _*)
+      // validate build params against the DIRTY partitions only — the
+      // same partition-pruned scan the merge reads — instead of the
+      // whole index: a full-index validation would be the fold's one
+      // corpus-proportional READ. Sound because every partitioned-index
+      // writer (indexWritePartitioned and this fold's stamp) stamps
+      // params uniformly across partitions — the screen side validates
+      // the full index, so a hand-assembled mixed-param union is caught
+      // there. Dirty partitions that do not exist yet (all-new buckets)
+      // validate vacuously here — the caller-param guard for that case
+      // is the stamp check above.
+      case None =>
+        validateIndexParams(pruned, what, written, acceptUnvalidated)
+    }
     requireCounts(old, what)
     val cols = keys.map(col) :+ col("ids") :+ col("n")
-    val merged = stamp(
-        mergeIndex(old.select(cols: _*),
-          nb.select(cols: _*), keys, maxBucketSize), asked)
+    // one exchange: the union clusters on the layout partition, which
+    // also satisfies the (part, keys...) aggregation and lands each
+    // layout partition's rows in one task (one file per directory)
+    val merged = stamp(mergeIndex(
+        old.select(cols :+ partOf(keys, np).as("part"): _*)
+          .unionByName(nb).repartition(col("part")),
+        "part" +: keys, maxBucketSize), asked)
       .withColumn("__numParts", lit(np))
-      .withColumn("part", partOf(keys, np))
-      .repartition(col("part"))
       .localCheckpoint()
     nb.unpersist()
     val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
@@ -811,7 +871,37 @@ object Dedup {
       case None =>
         spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
     }
+    for (memo <- known; built <- memo; before <- files
+         if built == written.toMap)
+      rememberStamp(rewrittenFiles(spark, path, before, dirty), memo)
     PartialUpdateStats(dirty.length, np)
+  }
+
+  /** the partitioned index's file set after a fold rewrote the `dirty`
+    * layout partitions: the `before` files outside them, plus a listing
+    * of the dirty directories alone (never a listing of the whole
+    * index — above 32 partitions that is a listing job). Hidden and
+    * metadata files are skipped as the parquet file index skips them;
+    * any difference from what a later read lists only makes the memo
+    * miss. */
+  private def rewrittenFiles(spark: org.apache.spark.sql.SparkSession,
+                             path: String, before: Seq[String],
+                             dirty: Seq[Int]): Seq[String] = {
+    import org.apache.hadoop.fs.Path
+    val dirs = dirty.map(p => s"part=$p").toSet
+    val kept = before.filterNot(f =>
+      dirs(new Path(new java.net.URI(f)).getParent.getName))
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val fresh = dirs.toSeq.flatMap { d =>
+      fs.listStatus(fs.makeQualified(new Path(root, d))).toSeq
+        .filter(st => st.isFile && {
+          val n = st.getPath.getName
+          !n.startsWith("_") && !n.startsWith(".") && !n.endsWith("._COPYING_")
+        })
+        .map(_.getPath.toUri.toString)
+    }
+    (kept ++ fresh).sorted
   }
 
   /** [[minhashIndexUpdate]] against a partitioned on-disk index

@@ -37,9 +37,11 @@ private[graft] object Partitioning {
     //     without executing; these are the batch-bounded screen
     //     shapes, so an explicit batch-sized repartition is cheap
     //     and parallelizes the hashing it exists for.
-    //   - exchange-free plan (pure scan/project) -> Dataset.rdd is
-    //     genuinely free (nothing adaptive to materialize); keep the
-    //     exact width check so a 100 TB corpus scan that already has
+    //   - exchange-free plan (pure scan/project) -> the width of
+    //     queryExecution.toRdd is genuinely free (nothing adaptive to
+    //     materialize, and unlike Dataset.rdd it adds no deserializing
+    //     plan and posts no SQL execution of its own); keep the exact
+    //     width check so a 100 TB corpus scan that already has
     //     thousands of splits is NEVER needlessly reshuffled.
     val physical = df.queryExecution.executedPlan match {
       case a: AdaptiveSparkPlanExec => a.initialPlan
@@ -77,7 +79,8 @@ private[graft] object Partitioning {
       if (scanWidth.nonEmpty && scanWidth.max >= target) df
       else df.repartition(target)
     }
-    else if (df.rdd.getNumPartitions < target) df.repartition(target)
+    else if (df.queryExecution.toRdd.getNumPartitions < target)
+      df.repartition(target)
     else df
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, Row}
 import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.Path
 
@@ -79,6 +79,15 @@ import graft.operators.Dedup
   * lost doc; corpus-before-keys crash = duplicate on replay). Choose
   * it only on a transactional table format where corpus + keys +
   * index commit atomically.
+  *
+  * Per-cycle fixed work: the corpus is read twice but shingled only
+  * for candidate pairs — the verification join carries the raw
+  * text/vector column and derives the payload above the join. The
+  * index's param stamp is validated once per WRITTEN file set, not
+  * per read: the partitioned fold registers the files it wrote with
+  * the stamp it validated, so the next cycle's screen validation is a
+  * memo hit (a foreign rewrite writes new file names and re-validates
+  * in full).
   *
   * [[admitBatchEmbedding]] / [[admitStreamEmbedding]] are the
   * embedding-space siblings: identical skeleton and contracts, with
@@ -171,9 +180,13 @@ object Admission {
     val screened = fresh.join(matched, Seq(idCol), "left_anti")
     val surviving = if (within) dedupWithin(screened) else screened
     // eager lineage cut: the writes below mutate this plan's inputs,
-    // so the admitted set must be physically settled first
-    val admitted = surviving.localCheckpoint()
-    val nAdmitted = admitted.count()
+    // so the admitted set must be physically settled first. The row
+    // count rides the checkpoint's own job as an observed metric
+    // instead of a second action over the checkpoint.
+    val admittedObs = Observation()
+    val admitted = surviving
+      .observe(admittedObs, count(lit(1)).as("rows")).localCheckpoint()
+    val nAdmitted = admittedObs.get("rows").asInstanceOf[Long]
     if (nAdmitted > 0) {
       admitted.write.mode("append").parquet(corpusPath)
       // the cycle's own index frame rides along: no writer touched

@@ -193,6 +193,44 @@ class AdmissionSpec extends SparkTestBase {
     assert(corpusIds(c) == ((0L until 40L) :+ 100L))
   }
 
+  test("partitioned cycle after a fold: <= 7 SQL executions, no stamp re-validation") {
+    // the benchmark/catalog admission shape: partitioned MinHash index,
+    // bands 32, threshold 0.6, no within-batch pass, no batch count.
+    // Cycle 1's fold registers the files it wrote with the stamp it
+    // validated, so cycle 2's screen and fold validate without a job:
+    // id screen, screen checkpoint, admitted checkpoint, corpus
+    // append, dirty collect, merge checkpoint, index write.
+    val corpusDir = Files.createTempDirectory("graft_adm_cx").toString
+    val indexDir = Files.createTempDirectory("graft_adm_ix").toString + "/idx"
+    corpusDf.write.mode("overwrite").parquet(corpusDir)
+    Dedup.indexWritePartitioned(
+      Dedup.minhashIndex(corpusDf, "doc_id", "text",
+        numHashes = 64, bands = 32),
+      indexDir, numParts = 16)
+    def cycle(b: DataFrame, id: Long) =
+      Admission.admitBatch(b, corpusDir, indexDir, "doc_id", "text",
+        numHashes = 64, bands = 32, threshold = 0.6,
+        dedupWithinBatch = false, batchId = id, collectStats = false)
+    val s1 = cycle(Seq(100L -> freshText("n100"), 101L -> freshText("n101"),
+      102L -> freshText("c0")).toDF("doc_id", "text"), 1L)
+    assert(s1.admitted == 2L)
+    var s2: Admission.AdmitStats = null
+    val execs = sqlExecutionsDuring {
+      s2 = cycle(Seq(200L -> (freshText("n100") + " k"),
+        201L -> freshText("n201"), 0L -> freshText("c0"))
+        .toDF("doc_id", "text"), 2L)
+    }
+    assert(s2 == Admission.AdmitStats(2L, -1L, 2L, 1L))
+    assert(corpusIds(corpusDir) ==
+      ((0L until 40L) ++ Seq(100L, 101L, 201L)))
+    def heads = execs.map(_.linesIterator.slice(1, 4).mkString(" | "))
+      .mkString("\n  ")
+    assert(execs.size <= 7,
+      s"cycle 2 started ${execs.size} SQL executions:\n  $heads")
+    assert(stampScans(execs).isEmpty,
+      s"cycle 2 re-read the index stamp:\n  $heads")
+  }
+
   test("compactCorpus collapses per-batch append files, row-preserving") {
     val (c, i) = setup()
     admit(Seq(100L -> freshText("n100")).toDF("doc_id", "text"), c, i)

@@ -439,6 +439,92 @@ class DedupSpec extends SparkTestBase {
     assert(e3.getMessage.contains("mixed-param state"))
   }
 
+  test("validation memo: a fold registers its files, a foreign stamp still fails") {
+    val batch = corpus.filter($"doc_id".isin(3L, 7L, 11L))
+    val hist = corpus.filter(!$"doc_id".isin(3L, 7L, 11L))
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_mh_index_memo").toString
+    // 3 docs x 32 bands = 96 bucket keys: every one of 4 layout
+    // partitions is dirty, so the fold below rewrites all of them
+    Dedup.indexWritePartitioned(
+      Dedup.minhashIndex(hist, "doc_id", "text", numHashes = 64,
+        bands = 32),
+      dir, numParts = 4)
+    def screen(idx: org.apache.spark.sql.DataFrame) =
+      Dedup.minhashPairsAgainstIndex(batch, hist, idx, "doc_id", "text",
+        numHashes = 64, bands = 32, threshold = 0.6).count()
+    def fold(idx: org.apache.spark.sql.DataFrame) =
+      Dedup.minhashIndexUpdatePartitioned(spark, dir, batch,
+        "doc_id", "text", numHashes = 64, bands = 32, preRead = Some(idx))
+    // the cycle shape: the screen validates the frame once, the fold
+    // over the same frame reads no stamp and registers what it wrote
+    val idx = spark.read.parquet(dir)
+    assert(stampScans(sqlExecutionsDuring(screen(idx))).size == 1)
+    assert(stampScans(sqlExecutionsDuring(fold(idx))).isEmpty)
+    assert(stampScans(
+      sqlExecutionsDuring(screen(spark.read.parquet(dir)))).isEmpty,
+      "the folded file set must be a memo hit")
+    // a foreign writer restamps one layout partition with another seed
+    val foreign = spark.read.parquet(dir).filter($"part" === 0)
+      .withColumn("__seed", lit(43L)).localCheckpoint()
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    try foreign.write.mode("overwrite").partitionBy("part").parquet(dir)
+    finally spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+    val e1 = intercept[IllegalArgumentException](
+      screen(spark.read.parquet(dir)))
+    assert(e1.getMessage.contains("distinct build-param tuples"))
+    def listing() = new java.io.File(dir).listFiles()
+      .filter(_.isDirectory).flatMap(_.listFiles().map(_.getPath)).toSet
+    val before = listing()
+    val e2 = intercept[IllegalArgumentException](
+      fold(spark.read.parquet(dir)))
+    assert(e2.getMessage.contains("distinct build-param tuples") ||
+      e2.getMessage.contains("mixed-param state"), e2.getMessage)
+    assert(listing() == before, "a refused fold must write nothing")
+  }
+
+  test("index screen shingles corpus rows only above the verify join") {
+    // the corpus side of the verification join is the raw (id, text)
+    // scan: shingling it there would shingle every corpus row (and,
+    // through a pushed-down emptiness filter, twice) instead of only
+    // the candidate-matched ones
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import graft.expressions.TextExpressions.WordShingles
+    val batch = corpus.filter($"doc_id".isin(11L, 10003L, 20007L))
+    val hist = corpus.filter(!$"doc_id".isin(11L, 10003L, 20007L))
+    val idx = Dedup.minhashIndex(hist, "doc_id", "text", numHashes = 64,
+      bands = 32)
+    val qes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val l = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        qes.add(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    val n = try {
+      val c = Dedup.minhashPairsAgainstIndex(batch, hist, idx, "doc_id",
+        "text", numHashes = 64, bands = 32, threshold = 0.6).count()
+      Thread.sleep(1000) // listener bus is async
+      c
+    } finally spark.listenerManager.unregister(l)
+    assert(n >= 2) // planted copies 10003 (of doc 3), 20007 (of doc 7)
+    import scala.jdk.CollectionConverters._
+    def names(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) =
+      p.output.map(_.name).toSet
+    val corpusSides = qes.asScala.toSeq
+      .flatMap(_.optimizedPlan.collect { case j: Join => j })
+      .flatMap(j => Seq(j.left, j.right))
+      .filter(s => names(s)("id_corpus") && !names(s)("id_new"))
+    assert(corpusSides.nonEmpty, "no verification join was captured")
+    corpusSides.foreach { s =>
+      assert(!s.exists(_.expressions.exists(
+        _.exists(_.isInstanceOf[WordShingles]))),
+        s"corpus side shingles below the join:\n$s")
+    }
+  }
+
   test("partitioned embedding index update == rebuild from disk") {
     val batch = embCorpus.filter($"vec_id" < 10)
     val hist = embCorpus.filter($"vec_id" >= 10)

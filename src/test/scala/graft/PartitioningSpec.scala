@@ -65,6 +65,20 @@ class PartitioningSpec extends SparkTestBase {
       spark.sparkContext.defaultParallelism)
   }
 
+  test("spread: deciding on an exchange-free scan starts no SQL execution") {
+    // the width probe reads the planned RDD's partition count; going
+    // through Dataset.rdd would plan a deserializing copy of the query
+    // and post it as an execution of its own on every call
+    val dir = java.nio.file.Files.createTempDirectory("graft_spread").toString
+    spark.range(0, 100, 1, 1).toDF("id").write.mode("overwrite").parquet(dir)
+    val scan = spark.read.parquet(dir).withColumn("x", F.col("id") * 2)
+    var out: DataFrame = null
+    val execs = sqlExecutionsDuring { out = Partitioning.spread(scan) }
+    assert(execs.isEmpty,
+      s"deciding started ${execs.size} SQL execution(s)")
+    assert(out ne scan, "a one-file scan is narrow and must be widened")
+  }
+
   test("spread: never shrinks an already-wide exchange-free input") {
     val wide = spark.range(0, 100, 1,
       spark.sparkContext.defaultParallelism * 4).toDF("id")

@@ -47,4 +47,34 @@ abstract class SparkTestBase extends AnyFunSuite {
     }
     n.get
   }
+
+  /** Physical plan descriptions of the SQL executions `body` starts,
+    * in start order. Unlike countJobs it leaves AQE and broadcast
+    * joins as configured: an execution count is a property of the
+    * plan shapes the operators build under the session defaults. */
+  def sqlExecutionsDuring(body: => Unit): Seq[String] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          seen.add(s.physicalPlanDescription)
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(l)
+    try { body; Thread.sleep(1000) /* listener bus is async */ }
+    finally spark.sparkContext.removeSparkListener(l)
+    import scala.jdk.CollectionConverters._
+    seen.asScala.toSeq
+  }
+
+  /** the executions among `plans` that scan an LSH index's stamp:
+    * the every-tuple validation aggregates on the `__` param columns
+    * (in no fixed order), the fold's standalone stamp read is a
+    * one-row limit over them */
+  def stampScans(plans: Seq[String]): Seq[String] =
+    plans.filter(p => "Keys \\[\\d+\\]: \\[__".r.findFirstIn(p).isDefined ||
+      p.contains("CollectLimit"))
 }
