@@ -127,6 +127,24 @@ object Bench {
     ranked.toSeq.sortBy(-_._2).take(n).map(_._1).sorted
   }
 
+  /** The gate's LAST stdout line: the headline fields of the full
+    * JSON line in at most 500 bytes, so a reader that keeps only a
+    * short tail of stdout still gets the totals. Same
+    * `value`/`value_best` text as the full line; `failed` is the
+    * number of red queries (their names stay in the full line); `sf`
+    * keeps its last 48 chars, every char outside printable ASCII
+    * written as a JSON unicode escape. */
+  def summaryLine(value: Double, valueBest: Double, failed: Int,
+                  sf: String, cpus: Int, contended: Boolean): String = {
+    val sfJson = sf.takeRight(48).flatMap {
+      case '"'  => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' || c > '~' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    }
+    s"""{"metric":"total","value":$value,"unit":"sec","value_best":$valueBest,"failed":$failed,"sf":"$sfJson","cpus":$cpus,"contended":$contended}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.local()
@@ -143,17 +161,18 @@ object Bench {
     // The two CC-label-propagation queries (many small jobs +
     // localCheckpoints) are the catalog's most scheduler/JIT-
     // sensitive shapes and have swung 2-4x across rounds on identical
-    // bytecode. ProbeVariance (r7, 12 interleaved runs, quiet host)
-    // showed their job/task counts are DETERMINISTIC (31 jobs/745
-    // tasks and 23/249 every run) and steady-state wall spread is a
+    // bytecode. 12 interleaved runs on a quiet host (r7, BENCH_NOTES
+    // "q62/q80 gate-variance instrumented") showed their job/task
+    // counts are DETERMINISTIC (31 jobs/745 tasks and 23/249 every
+    // run) and steady-state wall spread is a
     // tight 1.2x — the outlier is the first post-warmup run (2.3x,
     // JIT-cold for these specific shapes; the generic q02 warmup
     // doesn't touch them). min-of-2 keeps one foot in that cold
     // window, so for THESE queries the gate runs a third pass and
     // reports the MEDIAN of three in queries_best — one scheduler
     // hiccup or cold pass can no longer pollute round comparisons.
-    // q124_admission_embed joined in r11: ProbeVariance showed the
-    // identical profile (deterministic 58 jobs/654 tasks, first
+    // q124_admission_embed joined in r11: 12 interleaved runs showed
+    // the identical profile (deterministic 58 jobs/654 tasks, first
     // post-warmup run 2.6x JIT-cold at 9.4-9.7 s, steady 3.7-4.6 s)
     // — attribution table in BENCH_NOTES r11.
     // q182_pagerank_personalized joined in r16 (VERDICT r15 item 3):
@@ -161,8 +180,9 @@ object Bench {
     // deterministic many-small-jobs shape — swung 2.2 <-> 5.4 s
     // across QUIET windows on byte-identical bytecode (plan unchanged
     // since r11), polluting every cross-round comparison.
-    // q251/q227 joined in r17 (VERDICT r16 item 3): ProbeVariance on
-    // 12 interleaved quiet runs shows constant jobs/tasks (32/261,
+    // q251/q227 joined in r17 (BENCH_NOTES "Round-17 q251/q227
+    // attribution"): 12 interleaved quiet runs show constant
+    // jobs/tasks (32/261,
     // 49-50/~645) with wall swinging 3.6 <-> 13.0 s / 5.2 <-> 11.4 s
     // and executor time moving with wall — scheduler/JIT noise on a
     // deterministic plan, the exact median-of-3 criterion; the r16
@@ -251,8 +271,12 @@ object Bench {
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("/root/repo/bench_last.json"), json)
     catch { case _: Throwable => }
+    val cpus = spark.sparkContext.defaultParallelism
     spark.stop()
-    // final line of the process, after Spark's shutdown logging
+    // after Spark's shutdown logging: the full line, then the compact
+    // summary as the process's final line
     println(json)
+    println(summaryLine(totalCold, totalBest, failed.size, sfDir, cpus,
+      contended))
   }
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.SparkSession
 object GraftSession {
 
   /** core count from `SPARK_GRAFT_CPUS`, 4 when unset */
-  def envCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+  private def envCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
 
   def local(cpus: String = envCpus,
             extra: Seq[(String, String)] = Nil): SparkSession = {

@@ -111,11 +111,9 @@ object SparkEntry {
     * so handing out the template dir itself would corrupt later
     * passes. A recursive copy of the few-MB state is ~50 ms vs the
     * ~2 s rebuild; answers are byte-identical because the copied
-    * state is. Same per-(JVM, sfDir) memo pattern as q241's
+    * state is. The template is a [[fixtureDir]] like q241's
     * sigIndexPath (fixture cost, not operator cost — admitBatch/
     * admitStream still run their full cycles live every pass). */
-  private val admTemplateCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), java.nio.file.Path]
 
   /** Session-scoped scratch root for every temp dir the catalog's
     * fixtures create (ADVICE r15): previously each createTempDirectory
@@ -144,6 +142,23 @@ object SparkEntry {
   private def scratchTemp(prefix: String): java.nio.file.Path =
     java.nio.file.Files.createTempDirectory(scratchRoot, prefix)
 
+  private val fixtureCache = scala.collection.concurrent.TrieMap
+    .empty[(String, String), java.nio.file.Path]
+
+  /** A read-only on-disk fixture, built once per (JVM, `tag`, sfDir)
+    * into a `graft_<tag>` scratch dir and reused by every later call:
+    * a bench cold pass pays the build, the best-of pass measures the
+    * operator. Process-scoped, so a code change can never serve a
+    * stale fixture. */
+  private def fixtureDir(tag: String, dir: String)
+                        (build: java.nio.file.Path => Unit)
+  : java.nio.file.Path =
+    fixtureCache.getOrElseUpdate((tag, dir), {
+      val p = scratchTemp(s"graft_$tag")
+      build(p)
+      p
+    })
+
   /** one gzip member around `b` — the .warc.gz record-per-member
     * convention for the WARC fixtures */
   private def gzipMember(b: Array[Byte]): Array[Byte] = {
@@ -166,11 +181,9 @@ object SparkEntry {
   private def admissionStateMemo(tag: String, dir: String)
                                 (build: (String, String) => Unit)
   : (String, String, java.nio.file.Path) = {
-    val template = admTemplateCache.getOrElseUpdate((tag, dir), {
-      val t = scratchTemp(s"graft_admtpl_$tag")
+    val template = fixtureDir(s"admtpl_$tag", dir) { t =>
       build(t.resolve("corpus").toString, t.resolve("index").toString)
-      t
-    })
+    }
     val tmp = scratchTemp(s"graft_adm_$tag")
     copyTree(template, tmp)
     (tmp.resolve("corpus").toString, tmp.resolve("index").toString, tmp)
@@ -648,36 +661,25 @@ object SparkEntry {
       |  WHERE s.event_id % 3 = 0 AND s.event_id = e.event_id)
       |GROUP BY 1 ORDER BY 1""".stripMargin
 
-  /** Build q117's persisted corpus index once per (JVM, sfDir) and
-    * reuse the parquet across calls — the ingestion-cadence cost
-    * model: a bench cold pass pays build+write, the best-of pass
-    * shows the amortized per-batch screen. Process-scoped so a code
-    * change can never serve a stale on-disk index. */
-  private val mhIndexCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  /** q117's persisted corpus index — the ingestion-cadence cost
+    * model: the index is built once, each screen reads it. */
   private def mhIndexPath(s: SparkSession, dir: String): String =
-    mhIndexCache.getOrElseUpdate(dir, {
-      val p = scratchTemp("graft_mh_index_q117").toString
+    fixtureDir("mh_index_q117", dir) { p =>
       Dedup.minhashIndex(
           docsWithDups(s, dir).filter(col("doc_id") < 10000),
           "doc_id", "text", numHashes = 64, bands = 32)
-        .write.mode("overwrite").parquet(p)
-      p
-    })
+        .write.mode("overwrite").parquet(p.toString)
+    }.toString
 
   /** q137's persisted corpus gram index (exact keys so the oracle can
-    * replay), cached per (JVM, sfDir) like q117's minhash index. */
-  private val gramIndexCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+    * replay). */
   private def gramIndexPath(s: SparkSession, dir: String): String =
-    gramIndexCache.getOrElseUpdate(dir, {
-      val p = scratchTemp("graft_gram_index_q137").toString
+    fixtureDir("gram_index_q137", dir) { p =>
       SubstringDedup.gramIndex(
           docsWithDups(s, dir).filter(col("doc_id") < 10000),
           "doc_id", "text", k = 8, hashKeys = false)
-        .write.mode("overwrite").parquet(p)
-      p
-    })
+        .write.mode("overwrite").parquet(p.toString)
+    }.toString
 
   /** q118's oracle — exhaustive cross cosine between the planted
     * scaled-copy batch (vec_id >= 10000; scaling preserves direction,
@@ -712,37 +714,29 @@ object SparkEntry {
         transform(col("embedding"), x => x * lit(2.0f)).as("embedding"))
   }
 
-  /** q119's persisted embedding index, built once per (JVM, sfDir) —
-    * same amortization contract as q117's minhash index. */
-  private val embIndexCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  /** q119's persisted embedding index — same amortization contract
+    * as q117's minhash index. */
   private def embIndexPath(s: SparkSession, dir: String): String =
-    embIndexCache.getOrElseUpdate(dir, {
-      val p = scratchTemp("graft_emb_index_q119").toString
+    fixtureDir("emb_index_q119", dir) { p =>
       Dedup.embeddingIndex(t(s, dir, "embeddings"), "vec_id",
           "embedding", dim = 64)
-        .write.mode("overwrite").parquet(p)
-      p
-    })
+        .write.mode("overwrite").parquet(p.toString)
+    }.toString
 
   /** q120's index: built on HALF the corpus, then the other half is
     * folded in with minhashIndexUpdate and the result persisted —
     * the full production maintenance cycle (build → update → persist
-    * → screen), cached per (JVM, sfDir) like q117's. */
-  private val mhUpdIndexCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+    * → screen). */
   private def mhUpdIndexPath(s: SparkSession, dir: String): String =
-    mhUpdIndexCache.getOrElseUpdate(dir, {
-      val p = scratchTemp("graft_mh_index_q120").toString
+    fixtureDir("mh_index_q120", dir) { p =>
       val corpus = docsWithDups(s, dir).filter(col("doc_id") < 10000)
       Dedup.minhashIndexUpdate(
           Dedup.minhashIndex(corpus.filter(col("doc_id") % 2 === 0),
             "doc_id", "text", numHashes = 64, bands = 32),
           corpus.filter(col("doc_id") % 2 =!= 0),
           "doc_id", "text", numHashes = 64, bands = 32)
-        .write.mode("overwrite").parquet(p)
-      p
-    })
+        .write.mode("overwrite").parquet(p.toString)
+    }.toString
 
   /** Fano-plane lines: the white-column patterns of the image-dedup
     * fixtures (q237/q240/q241). Any two lines share exactly one
@@ -917,22 +911,17 @@ object SparkEntry {
     }(enc)
   }
 
-  /** q241's persisted signature index over the q240 corpus hashes,
-    * cached per (JVM, sfDir) like q117's. */
-  private val sigIndexCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  /** q241's persisted signature index over the q240 corpus hashes. */
   private def sigIndexPath(s: SparkSession, dir: String): String =
-    sigIndexCache.getOrElseUpdate(dir, {
-      val p = scratchTemp("graft_sig_index_q241").toString
+    fixtureDir("sig_index_q241", dir) { p =>
       val corpus = patternMedia(
         t(s, dir, "documents").select(col("doc_id"))
           .filter(col("doc_id") < 196),
         id => fanoLines((id % 7).toInt).toSet)
       Dedup.signatureIndex(Multimodal.imageHashes(corpus, "ahash"),
           "media_id", "img_hash", maxDistance = 8)
-        .write.mode("overwrite").parquet(p)
-      p
-    })
+        .write.mode("overwrite").parquet(p.toString)
+    }.toString
 
   // ---- q257/q258 HTML-extraction fixture (r16) --------------------------
 
@@ -1084,39 +1073,42 @@ object SparkEntry {
     * the Common Crawl layout in miniature),
     * written once per (JVM, sfDir). The collect is gate-fixture-
     * bounded (500 rows × ~1.5 KB html). */
-  private val warcFixtureCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private def warcFixture(s: SparkSession, dir: String): String =
-    warcFixtureCache.getOrElseUpdate(dir, {
-      val out = scratchTemp("graft_warc_q261")
-      val rows = extractHtml(s, dir).collect()
-      val nFiles = 4
-      (0 until nFiles).foreach { f =>
-        val recs = rows.zipWithIndex
-          .filter(_._2 % nFiles == f).map(_._1).toSeq.map { r =>
-            (Seq("WARC-Type" -> "response",
-              "WARC-Record-ID" -> s"<urn:uuid:${r.getLong(0)}>",
-              "WARC-Date" -> "2026-08-16T00:00:00Z",
-              "WARC-Target-URI" ->
-                s"http://example.com/doc/${r.getLong(0)}",
-              "Content-Type" -> "application/http; msgtype=response"),
-              graft.sources.Warc.httpBytes(r.getString(1)
-                .getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-          }
-        // parts 0-1 plain .warc, parts 2-3 .warc.gz in the
-        // record-per-member convention — the gate drives BOTH the
-        // plain and the multi-member-gzip streaming parse paths
-        if (f < 2)
-          java.nio.file.Files.write(out.resolve(f"part$f%02d.warc"),
-            graft.sources.Warc.warcBytes(recs))
-        else
-          java.nio.file.Files.write(out.resolve(f"part$f%02d.warc.gz"),
-            recs.map(r => gzipMember(
-              graft.sources.Warc.warcBytes(Seq(r))))
-              .foldLeft(Array.emptyByteArray)(_ ++ _))
-      }
-      out.toString
-    })
+    fixtureDir("warc_q261", dir) { out =>
+      writeWarcParts(out, extractHtml(s, dir).collect().toSeq, "")
+    }.toString
+
+  /** Writes `rows` (doc_id, html) as HTTP/1.1 response records,
+    * round-robin over four part files: parts 0-1 plain .warc, parts
+    * 2-3 .warc.gz in the record-per-member convention — the gate
+    * drives BOTH the plain and the multi-member-gzip streaming parse
+    * paths. `idPrefix` prefixes each WARC-Record-ID's uuid. */
+  private def writeWarcParts(out: java.nio.file.Path,
+                             rows: Seq[org.apache.spark.sql.Row],
+                             idPrefix: String): Unit = {
+    val nFiles = 4
+    (0 until nFiles).foreach { f =>
+      val recs = rows.zipWithIndex
+        .filter(_._2 % nFiles == f).map(_._1).map { r =>
+          (Seq("WARC-Type" -> "response",
+            "WARC-Record-ID" -> s"<urn:uuid:$idPrefix${r.getLong(0)}>",
+            "WARC-Date" -> "2026-08-16T00:00:00Z",
+            "WARC-Target-URI" ->
+              s"http://example.com/doc/${r.getLong(0)}",
+            "Content-Type" -> "application/http; msgtype=response"),
+            graft.sources.Warc.httpBytes(r.getString(1)
+              .getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+        }
+      if (f < 2)
+        java.nio.file.Files.write(out.resolve(f"part$f%02d.warc"),
+          graft.sources.Warc.warcBytes(recs))
+      else
+        java.nio.file.Files.write(out.resolve(f"part$f%02d.warc.gz"),
+          recs.map(r => gzipMember(
+            graft.sources.Warc.warcBytes(Seq(r))))
+            .foldLeft(Array.emptyByteArray)(_ ++ _))
+    }
+  }
 
   /** q262's planted multilingual fixture: three separable
     * pseudo-languages (en/fr/de-flavored 10-word pools), text = 30
@@ -1351,40 +1343,11 @@ object SparkEntry {
     * across four part files, two plain + two record-per-member
     * .warc.gz (the warcFixture discipline — the gate drives the REAL
     * container + envelope parse on both paths). */
-  private val webWarcCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private def webWarcFixture(s: SparkSession, dir: String): String =
-    webWarcCache.getOrElseUpdate(dir, {
-      val out = scratchTemp("graft_warc_q263")
-      val rows = webIngestHtml(s, dir)
-        .select(col("doc_id"), col("html")).collect()
-      val nFiles = 4
-      (0 until nFiles).foreach { f =>
-        val recs = rows.zipWithIndex
-          .filter(_._2 % nFiles == f).map(_._1).toSeq.map { r =>
-            (Seq("WARC-Type" -> "response",
-              "WARC-Record-ID" -> s"<urn:uuid:w${r.getLong(0)}>",
-              "WARC-Date" -> "2026-08-16T00:00:00Z",
-              "WARC-Target-URI" ->
-                s"http://example.com/doc/${r.getLong(0)}",
-              "Content-Type" -> "application/http; msgtype=response"),
-              graft.sources.Warc.httpBytes(r.getString(1)
-                .getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-          }
-        // parts 0-1 plain .warc, parts 2-3 .warc.gz in the
-        // record-per-member convention — the gate drives BOTH the
-        // plain and the multi-member-gzip streaming parse paths
-        if (f < 2)
-          java.nio.file.Files.write(out.resolve(f"part$f%02d.warc"),
-            graft.sources.Warc.warcBytes(recs))
-        else
-          java.nio.file.Files.write(out.resolve(f"part$f%02d.warc.gz"),
-            recs.map(r => gzipMember(
-              graft.sources.Warc.warcBytes(Seq(r))))
-              .foldLeft(Array.emptyByteArray)(_ ++ _))
-      }
-      out.toString
-    })
+    fixtureDir("warc_q263", dir) { out =>
+      writeWarcParts(out, webIngestHtml(s, dir)
+        .select(col("doc_id"), col("html")).collect().toSeq, "w")
+    }.toString
 
   /** DuckDB construction of the SAME pages — CTE chain ending in
     * `h(doc_id, html)` (feeds [[sqlExtractCtesFor]]) plus
@@ -1422,6 +1385,43 @@ object SparkEntry {
        |    '</p><p>$webFooterText</p>' ||
        |    '<div>© 2026 example site</div></body></html>' AS html
        |  FROM wm)""".stripMargin
+  }
+
+  /** The q169/q217 fixture: lineitem's price and quantity appended
+    * to a fresh KLL digest in two cycles (split by orderkey parity),
+    * p50/p90/p99 merged at read, each estimate (`value_est`) next to
+    * the exact interpolated percentile (`exact_value`, rounded to 4)
+    * and its measured rank error (`rank_err`, unrounded). */
+  private def kllVsExact(s: SparkSession, dir: String,
+                         tag: String): DataFrame = {
+    val li = t(s, dir, "lineitem")
+    val path = scratchTemp(s"graft_${tag}_kll").toString + "/digest"
+    val cols = Seq("l_extendedprice", "l_quantity")
+    graft.operators.Profile.appendKllDigest(
+      li.filter(col("l_orderkey") % 2 === 0), cols, path)
+    graft.operators.Profile.appendKllDigest(
+      li.filter(col("l_orderkey") % 2 === 1), cols, path)
+    val est = graft.operators.Profile.kllQuantiles(
+      s, path, Seq(0.5, 0.9, 0.99))
+    val longVals = li
+      .select(explode(array(cols.map(c =>
+        struct(lit(c).as("col_name"),
+          col(c).cast("double").as("v"))): _*)).as("x"))
+      .select(col("x.col_name"), col("x.v"))
+    val qsArr = array(lit(0.5), lit(0.9), lit(0.99))
+    val exacts = longVals.groupBy(col("col_name"))
+      .agg(percentile(col("v"), qsArr).as("__ex"))
+      .select(col("col_name"),
+        posexplode(col("__ex")).as(Seq("__i", "__e")))
+      .select(col("col_name"),
+        element_at(qsArr, col("__i") + 1).as("q"),
+        round(col("__e"), 4).as("exact_value"))
+    val ranks = est.join(longVals, Seq("col_name"))
+      .groupBy(col("col_name"), col("q"), col("value_est"))
+      .agg(abs(sum(when(col("v") <= col("value_est"), 1.0)
+          .otherwise(0.0)) / count(lit(1)) - col("q"))
+        .as("rank_err"))
+    ranks.join(exacts, Seq("col_name", "q"))
   }
 
   private case class Q(name: String,
@@ -3288,16 +3288,7 @@ object SparkEntry {
     Q("q143_stream_screen_bloom_indexed", (s, dir) => {
       val seen = events(s, dir).filter(col("event_id") % 3 === 0)
         .select(col("event_id"))
-      // fixed scratch location, cleared per invocation (the q160
-      // no-leak discipline)
-      val q143Root = new java.io.File(
-        System.getProperty("java.io.tmpdir"), "graft_q143_digest")
-      def rmQ143(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rmQ143)
-        f.delete(): Unit
-      }
-      if (q143Root.exists()) rmQ143(q143Root)
-      val digest = q143Root.toString + "/bloom"
+      val digest = scratchTemp("graft_q143_digest").toString + "/bloom"
       val firstHalf = seen.filter(col("event_id") % 2 === 0)
       val secondHalf = seen.filter(col("event_id") % 2 =!= 0)
       // save from one half (capacity sized for both), fold the other
@@ -5323,14 +5314,7 @@ object SparkEntry {
     // the oracle proves it end-to-end rather than trusting the spec.
     Q("q163_countmin_digest", (s, dir) => {
       val ev = events(s, dir)
-      val root = new java.io.File(
-        System.getProperty("java.io.tmpdir"), "graft_q163_cms")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete(): Unit
-      }
-      if (root.exists()) rm(root)
-      val path = root.toString + "/digest"
+      val path = scratchTemp("graft_q163_cms").toString + "/digest"
       graft.operators.CountMin.append(
         ev.filter(col("event_id") % 2 === 0), "user_id", path,
         depth = 4, width = 64, portable = true)
@@ -5566,53 +5550,12 @@ object SparkEntry {
     // exact percentile and the measured rank error, so the gate
     // sees sketch quality numerically (spec floor: rank error 5%;
     // k=200 is ~1.65% at 99% confidence).
-    Q("q169_kll_digest", (s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val root = new java.io.File(
-        System.getProperty("java.io.tmpdir"), "graft_q169_kll")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete(): Unit
-      }
-      if (root.exists()) rm(root)
-      val path = root.toString + "/digest"
-      val cols = Seq("l_extendedprice", "l_quantity")
-      graft.operators.Profile.appendKllDigest(
-        li.filter(col("l_orderkey") % 2 === 0), cols, path)
-      graft.operators.Profile.appendKllDigest(
-        li.filter(col("l_orderkey") % 2 === 1), cols, path)
-      val est = graft.operators.Profile.kllQuantiles(
-        s, path, Seq(0.5, 0.9, 0.99))
-      // r19 (guide §2.5): spread the projected input so the exact-
-      // percentile count-map build and the rank-error count run at
-      // session parallelism instead of inside the single-partition
-      // scan task; both are partitioning-exact (integer counts; the
-      // 0.0/1.0 indicator sums are exactly representable doubles)
-      val longVals = graft.operators.Partitioning.spread(
-          li.select(cols.map(col): _*))
-        .select(explode(array(cols.map(c =>
-          struct(lit(c).as("col_name"),
-            col(c).cast("double").as("v"))): _*)).as("x"))
-        .select(col("x.col_name"), col("x.v"))
-      val qsArr = array(lit(0.5), lit(0.9), lit(0.99))
-      val exacts = longVals.groupBy(col("col_name"))
-        .agg(percentile(col("v"), qsArr).as("__ex"))
-        .select(col("col_name"),
-          posexplode(col("__ex")).as(Seq("__i", "__e")))
-        .select(col("col_name"),
-          element_at(qsArr, col("__i") + 1).as("q"),
-          round(col("__e"), 4).as("exact_value"))
-      val ranks = est.join(longVals, Seq("col_name"))
-        .groupBy(col("col_name"), col("q"), col("value_est"))
-        .agg(round(abs(sum(when(col("v") <= col("value_est"), 1.0)
-            .otherwise(0.0)) / count(lit(1)) - col("q")), 4)
-          .as("rank_err"))
-      ranks.join(exacts, Seq("col_name", "q"))
+    Q("q169_kll_digest", (s, dir) =>
+      kllVsExact(s, dir, "q169")
         .select(col("col_name"), col("q"),
           round(col("value_est"), 4).as("value_est"),
-          col("exact_value"), col("rank_err"))
-        .orderBy(col("col_name"), col("q"))
-    },
+          col("exact_value"), round(col("rank_err"), 4).as("rank_err"))
+        .orderBy(col("col_name"), col("q")),
       None), // KLL compaction is randomized; the emitted rank_err
              // column is the gate signal (spec floor 5%)
 
@@ -6442,14 +6385,7 @@ object SparkEntry {
     // measured error) promoted to the correctness harness.
     Q("q192_hll_digest_bounded", (s, dir) => {
       val docs = t(s, dir, "documents")
-      val root = new java.io.File(
-        System.getProperty("java.io.tmpdir"), "graft_q192_hll")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete(): Unit
-      }
-      if (root.exists()) rm(root)
-      val path = root.toString + "/digest"
+      val path = scratchTemp("graft_q192_hll").toString + "/digest"
       val cols = Seq("doc_id", "lang", "source")
       graft.operators.Profile.appendHllDigest(
         docs.filter(col("doc_id") % 2 === 0), cols, path)
@@ -6475,13 +6411,7 @@ object SparkEntry {
 
     Q("q193_hll_overlap_bounded", (s, dir) => {
       val docs = t(s, dir, "documents")
-      val root = new java.io.File(
-        System.getProperty("java.io.tmpdir"), "graft_q193_hll")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete(): Unit
-      }
-      if (root.exists()) rm(root)
+      val root = scratchTemp("graft_q193_hll").toString
       val n = docs.count()
       val aSet = docs.filter(col("doc_id") < lit(2 * n / 3))
       val bSet = docs.filter(col("doc_id") >= lit(n / 3))
@@ -7132,8 +7062,8 @@ object SparkEntry {
     // name prefix keeps every true pair in-block (the transposition
     // only touches chars 17–18) while bounding blocks to the handful
     // of customers sharing a nation AND a custkey-div-100 prefix —
-    // candidates are corpus-linear (ScaleSmoke `lnk` measures both
-    // keys' growth). The standard blocking-recall trade applies and
+    // candidates are corpus-linear (BENCH_NOTES "r12: fuzzy-linkage
+    // blocking growth" measures both keys' growth). The standard blocking-recall trade applies and
     // is visible in the fixture: cross-prefix near-names (custkey
     // ...099 vs ...100 differ inside the 16-char prefix yet score
     // jw >= 0.97) were candidates under nation-only blocking and are
@@ -7336,45 +7266,11 @@ object SparkEntry {
     // percentiles ARE SQL-expressible — so a degraded digest now
     // fails the HASH gate, not just KllSpec's floor. Same two-cycle
     // append fixture as q169, fresh digest dir.
-    Q("q217_kll_bounded", (s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val path = scratchTemp("graft_q217_kll").toString + "/digest"
-      val cols = Seq("l_extendedprice", "l_quantity")
-      graft.operators.Profile.appendKllDigest(
-        li.filter(col("l_orderkey") % 2 === 0), cols, path)
-      graft.operators.Profile.appendKllDigest(
-        li.filter(col("l_orderkey") % 2 === 1), cols, path)
-      val est = graft.operators.Profile.kllQuantiles(
-        s, path, Seq(0.5, 0.9, 0.99))
-      // r19 (guide §2.5): spread the projected input so the exact-
-      // percentile count-map build and the rank-error count run at
-      // session parallelism instead of inside the single-partition
-      // scan task; both are partitioning-exact (integer counts; the
-      // 0.0/1.0 indicator sums are exactly representable doubles)
-      val longVals = graft.operators.Partitioning.spread(
-          li.select(cols.map(col): _*))
-        .select(explode(array(cols.map(c =>
-          struct(lit(c).as("col_name"),
-            col(c).cast("double").as("v"))): _*)).as("x"))
-        .select(col("x.col_name"), col("x.v"))
-      val qsArr = array(lit(0.5), lit(0.9), lit(0.99))
-      val exacts = longVals.groupBy(col("col_name"))
-        .agg(percentile(col("v"), qsArr).as("__ex"))
-        .select(col("col_name"),
-          posexplode(col("__ex")).as(Seq("__i", "__e")))
-        .select(col("col_name"),
-          element_at(qsArr, col("__i") + 1).as("q"),
-          round(col("__e"), 4).as("exact_value"))
-      val ranks = est.join(longVals, Seq("col_name"))
-        .groupBy(col("col_name"), col("q"), col("value_est"))
-        .agg(abs(sum(when(col("v") <= col("value_est"), 1.0)
-            .otherwise(0.0)) / count(lit(1)) - col("q"))
-          .as("__err"))
-      ranks.join(exacts, Seq("col_name", "q"))
+    Q("q217_kll_bounded", (s, dir) =>
+      kllVsExact(s, dir, "q217")
         .select(col("col_name"), col("q"), col("exact_value"),
-          (col("__err") <= 0.05).as("within_bound"))
-        .orderBy(col("col_name"), col("q"))
-    },
+          (col("rank_err") <= 0.05).as("within_bound"))
+        .orderBy(col("col_name"), col("q")),
       Some("""WITH e AS (SELECT 'l_extendedprice' AS col_name,
              |   quantile_cont(CAST(l_extendedprice AS DOUBLE),
              |     [0.5, 0.9, 0.99]) AS exl

@@ -686,27 +686,6 @@ class DDF(val df: DataFrame) {
     wrap(graft.operators.Dedup.embeddingPairsAgainst(df, corpus.df,
       idCol, vecCol, dim, threshold = threshold))
 
-  /** [[graft.operators.Dedup.signatureDedup]] — component-closure
-    * dedup over a 64-bit fingerprint column (text simhash, image
-    * aHash/dHash) */
-  def dedupSignature(idCol: String, sigCol: String,
-                     maxDistance: Int = 3, keepCol: String = "",
-                     maxBucketSize: Int = 1000, maxIter: Int = 50): DDF =
-    wrap(graft.operators.Dedup.signatureDedup(df, idCol, sigCol,
-      maxDistance, maxBucketSize, maxIter, keepCol = keepCol))
-
-  /** [[graft.operators.Dedup.signaturePairsAgainst]] — hamming
-    * near-dup pairs of this frame (the NEW batch) against `corpus`
-    * on a 64-bit fingerprint column. `maxBucketSize` tunes the
-    * hot-bucket refusal that governs recall on degenerate buckets
-    * (e.g. the all-zero signature of blank media — review r13). */
-  def dedupSignaturePairsAgainst(corpus: DDF, idCol: String,
-                                 sigCol: String,
-                                 maxDistance: Int = 3,
-                                 maxBucketSize: Int = 1000): DDF =
-    wrap(graft.operators.Dedup.signaturePairsAgainst(df, corpus.df,
-      idCol, sigCol, maxDistance, maxBucketSize))
-
   /** [[graft.streaming.Admission.admitBatch]] — run one full
     * admission cycle with this frame as the arriving batch: id screen
     * → near-dup screen against the persisted index at `indexPath` →
@@ -722,16 +701,6 @@ class DDF(val df: DataFrame) {
       idCol, textCol, numHashes = numHashes, bands = bands,
       threshold = threshold)
 
-  /** [[graft.streaming.Admission.admitBatchEmbedding]] — the
-    * embedding-space admission cycle, same contract as
-    * [[admitInto]]. */
-  def admitIntoEmbedding(corpusPath: String, indexPath: String,
-                         idCol: String, vecCol: String, dim: Int,
-                         threshold: Double = 0.95)
-  : graft.streaming.Admission.AdmitStats =
-    graft.streaming.Admission.admitBatchEmbedding(df, corpusPath,
-      indexPath, idCol, vecCol, dim, threshold = threshold)
-
   /** [[graft.streaming.Admission.admitBatchSubstring]] — the
     * substring-coverage admission cycle against a persisted gram
     * index, same contract as [[admitInto]]; `compactFileThreshold`
@@ -746,18 +715,6 @@ class DDF(val df: DataFrame) {
       indexPath, idCol, textCol, k, maxDupCoverage = maxDupCoverage,
       compactFileThreshold = compactFileThreshold,
       compactPartitions = compactPartitions)
-
-  /** [[graft.streaming.Admission.admitBatchSignature]] — the
-    * signature-space admission cycle (64-bit fingerprints: text
-    * simhash, image aHash/dHash), same contract as [[admitInto]]. */
-  def admitIntoSignature(corpusPath: String, indexPath: String,
-                         idCol: String, sigCol: String,
-                         maxDistance: Int = 3,
-                         maxBucketSize: Int = 1000)
-  : graft.streaming.Admission.AdmitStats =
-    graft.streaming.Admission.admitBatchSignature(df, corpusPath,
-      indexPath, idCol, sigCol, maxDistance = maxDistance,
-      maxBucketSize = maxBucketSize)
 
   /** [[graft.operators.Dedup.decontaminate]] — drop docs overlapping
     * an eval suite */
@@ -875,28 +832,6 @@ class DDF(val df: DataFrame) {
     * [[dropCommonLines]] / [[gopherRepetition]]). */
   def extractMain(htmlCol: String, outCol: String = "text"): DDF =
     wrap(graft.operators.Extract.extract(df, htmlCol, outCol))
-
-  /** [[graft.operators.Unigram.train]] — fit a unigram-LM piece
-    * table (Kudo 2018; the SentencePiece model) from `textCol` */
-  def unigramTrain(textCol: String, vocabSize: Int,
-                   maxPieceLen: Int = 6, seedSize: Int = 8192,
-                   emIters: Int = 2): DDF =
-    wrap(graft.operators.Unigram.train(df, textCol, vocabSize,
-      maxPieceLen, seedSize, emIters))
-
-  /** [[graft.operators.Unigram.encode]] — Viterbi max-likelihood
-    * subword tokens from a (piece, log_prob) vocabulary frame */
-  def unigramEncode(textCol: String, vocab: DDF,
-                    outCol: String = "ug_tokens"): DDF =
-    wrap(graft.operators.Unigram.encode(df, textCol, vocab.df,
-      out = outCol))
-
-  /** [[graft.operators.Unigram.tokenCount]] — unigram-LM piece count
-    * per row (the budgeting signal) */
-  def unigramTokenCount(textCol: String, vocab: DDF,
-                        outCol: String = "ug_count"): DDF =
-    wrap(graft.operators.Unigram.tokenCount(df, textCol, vocab.df,
-      out = outCol))
 
   /** [[graft.operators.SubstringDedup.duplicateSpans]] — maximal
     * duplicated ≥k-token spans (Lee et al. ExactSubstr) */
@@ -1076,25 +1011,6 @@ class DDF(val df: DataFrame) {
     wrap(graft.operators.SemDedup.semDedup(df, idCol, vecCol, centers,
       minCosine, maxClusterSize, keep))
 
-  /** [[graft.operators.Dsir.importanceWeights]] over a ratio table
-    * fit with [[graft.operators.Dsir.logRatioTable]] — DSIR (Xie et
-    * al. 2023): hashed-n-gram importance weights of THIS DDF's rows
-    * (the raw pool) against a target corpus; adds `log_weight`. */
-  def dsirWeights(textCol: String, target: DDF, numBuckets: Int = 8192,
-                  alpha: Double = 1.0, hash: String = "md5"): DDF = {
-    val ratios = graft.operators.Dsir.logRatioTable(target.df, df,
-      textCol, numBuckets, alpha, hash)
-    wrap(graft.operators.Dsir.importanceWeights(df, textCol, ratios,
-      numBuckets, hash))
-  }
-
-  /** [[graft.operators.Dsir.resampleGumbel]] — deterministic
-    * Gumbel-top-n importance resampling by a weight column. */
-  def dsirSelect(idCol: String, weightCol: String, n: Int,
-                 seed: Long = 42L): DDF =
-    wrap(graft.operators.Dsir.resampleGumbel(df, idCol, weightCol,
-      n, seed))
-
   /** [[graft.operators.Raking.rakeSelect]] — IPF raking (Deming &
     * Stephan 1940): budgeted md5-deterministic sample whose row AND
     * column marginals simultaneously match the targets. */
@@ -1105,16 +1021,6 @@ class DDF(val df: DataFrame) {
     wrap(graft.operators.Raking.rakeSelect(df, idCol, rowCol, colCol,
       rowTargets, colTargets, totalN, iters, seed))
 
-  /** [[graft.operators.SemDedup.fitCenters]] — provision SemDeDup
-    * centers by the paper's k ∝ n rule from a bounded-sample Lloyd
-    * fit (r13). Returns the center literals [[semDedup]] takes. */
-  def semDedupFitCenters(vecCol: String,
-                         targetClusterSize: Long = 5000L,
-                         maxCenters: Int = 4096,
-                         seed: Long = 42L): Seq[Seq[Double]] =
-    graft.operators.SemDedup.fitCenters(df, vecCol, targetClusterSize,
-      maxCenters, seed)
-
   /** [[graft.operators.Raking.rakeSelectN]] — k-marginal raked
     * selection (r13): marginals of EVERY stratification column hit
     * their targets simultaneously. */
@@ -1123,15 +1029,6 @@ class DDF(val df: DataFrame) {
                   iters: Int = 5, seed: Long = 42L): DDF =
     wrap(graft.operators.Raking.rakeSelectN(df, idCol, cols, targets,
       totalN, iters, seed))
-
-  /** [[graft.operators.Raking.rakeSelectByN]] — raked selection with
-    * each cell's quota filled by a caller PRIORITY column (e.g. DSIR
-    * weights) instead of the md5 draw (r13). */
-  def rakeSelectBy(idCol: String, cols: Seq[String],
-                   targets: Seq[Map[String, Double]], totalN: Long,
-                   priorityCol: String, iters: Int = 5): DDF =
-    wrap(graft.operators.Raking.rakeSelectByN(df, idCol, cols, targets,
-      totalN, priorityCol, iters))
 
   /** [[graft.operators.AbTest.benford]] — first-significant-digit
     * census vs Benford's law (fabricated-data screen) */

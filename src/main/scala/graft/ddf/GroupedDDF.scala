@@ -43,17 +43,6 @@ class GroupedDDF(df: DataFrame, keys: Seq[String]) {
     }
     new DDF(p.agg(exprs.head, exprs.tail: _*))
   }
-
-  /** cube / rollup — absent in the reference (SURVEY.md §2.4), free in
-    * Spark; exposed as engine extensions. */
-  def cubeAgg(specs: (String, String, String)*): DDF = {
-    val exprs = specs.map { case (a, f, c) => GroupedDDF.aggExpr(f, c).as(a) }
-    new DDF(df.cube(keys.map(col): _*).agg(exprs.head, exprs.tail: _*))
-  }
-  def rollupAgg(specs: (String, String, String)*): DDF = {
-    val exprs = specs.map { case (a, f, c) => GroupedDDF.aggExpr(f, c).as(a) }
-    new DDF(df.rollup(keys.map(col): _*).agg(exprs.head, exprs.tail: _*))
-  }
 }
 
 object GroupedDDF {

@@ -35,26 +35,6 @@ object VectorFunctions {
         (x.cast("double") - y.cast("double"))),
       lit(0.0), (acc, v) => acc + v))
 
-  /** random-hyperplane (sign) LSH bits for cosine similarity: bit_i =
-    * sign(v · r_i) with r_i a deterministic pseudo-random hyperplane
-    * derived from (seed, i, dim-index) — same family as
-    * BucketedRandomProjectionLSH but inlined as column math. */
-  def hyperplaneSignature(v: Column, nBits: Int, dim: Int,
-                          seed: Long = 42L): Column = {
-    val rnd = new scala.util.Random(seed)
-    val planes = Array.fill(nBits, dim)(rnd.nextGaussian())
-    val bits = (0 until nBits).map { i =>
-      val proj = (0 until dim).map { j =>
-        v.getItem(j).cast("double") * lit(planes(i)(j))
-      }.reduce(_ + _)
-      when(proj >= 0, lit(1L << (i % 62))).otherwise(lit(0L))
-    }
-    // pack into ceil(nBits/62) longs to stay in integer domain
-    bits.grouped(62).zipWithIndex.map { case (g, _) =>
-      g.reduce((x, y) => x.bitwiseOR(y))
-    }.reduce((x, y) => xxhash64(x, y))
-  }
-
   /** multi-table hyperplane-LSH codes (native, single pass): see
     * [[graft.expressions.VectorExpressions.HyperplaneCodes]]. Returns
     * array<long> — one packed (tableId, signBits) code per table. */

@@ -74,7 +74,8 @@ object Dedup {
       // themselves, so the join distribution IS the raw key — a
       // corpus BUCKETED on the key joins with zero corpus-side
       // exchange and an IN-list probe prunes buckets (measured in
-      // ScaleSmoke `bkt`). The right mode for narrow non-null keys
+      // BENCH_NOTES "r8: Bucketed-corpus id screen measured"). The
+      // right mode for narrow non-null keys
       // (the admission id screen: one long); the hashed default
       // remains right for wide text keys (8-byte shuffle rows) and
       // when null key tuples must collide (plain SQL equality never

@@ -70,7 +70,8 @@ object Dsir {
     *    (q221/q222/q226) covers the shipped arithmetic.
     *  - `"xxhash64"`: one 8-byte non-cryptographic hash per gram —
     *    the at-scale choice (no hex string materialized per gram;
-    *    ScaleSmoke's dsir section A/Bs the scan cost). Same model
+    *    BENCH_NOTES "DSIR hash-family A/B" prices the scan cost).
+    *    Same model
     *    quality (any uniform hash family serves the hashing trick —
     *    Xie 2023 §2); DsirSpec pins selection-set equality of the
     *    two families on a collision-divergent fixture.

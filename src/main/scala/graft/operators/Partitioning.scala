@@ -18,7 +18,8 @@ private[graft] object Partitioning {
     // deciding from df.rdd.getNumPartitions is a trap under AQE: for
     // any plan containing an exchange, Dataset.rdd FINALIZES the
     // adaptive plan, which materializes every query stage — i.e. the
-    // "check" runs real jobs (r11 ProbeAdmit caught the admission
+    // "check" runs real jobs (BENCH_NOTES "r11: admission fixed-
+    // overhead diet" caught the admission
     // screen scanning the corpus for a throwaway broadcast during
     // planning). Requirement-driven exchanges are only INSERTED during
     // plan preparation (EnsureRequirements), so queryExecution

@@ -341,7 +341,8 @@ object Repetition {
     * Shuffle rows stay corpus-linear (Σ_n grams + units ≈ 9.2 ×
     * tokens — the same volume the three stages shuffled COMBINED,
     * now carried once), and the two saved corpus scans + tokenizes
-    * are the measured win (ScaleSmoke `rep`, BENCH_NOTES r16).
+    * are the measured win (BENCH_NOTES "r16 — repetition suite fused
+    * to one corpus scan").
     *
     * Whitespace-delimited languages only (r17, see
     * [[graft.functions.TextFunctions.tokens]]): a spaceless (CJK)
@@ -423,7 +424,8 @@ object Repetition {
     // group losing all its rows correctly reads 0.0 through the
     // spine join. (First fused cut skipped this and re-shuffled
     // every unique 5-10-gram — measured 1.6x the whole suite's wall
-    // at ScaleSmoke scale.)
+    // on the replicated sf0.1 corpus of BENCH_NOTES "r16 — repetition
+    // suite fused to one corpus scan".)
     val perBand = counted
       .filter(col("__band") <= 1 ||
         col("__band").isInCollection(topNs) || col("__k") > 1)

@@ -442,7 +442,8 @@ object SemDedup {
   /** Provision centers by the paper's k ∝ n rule (Abbas 2023 §3:
     * cluster count scales with the corpus so per-cluster population
     * — and therefore the n_c² verify work — stays FLAT as the corpus
-    * grows; ScaleSmoke's `sem` section measures exactly this:
+    * grows; BENCH_NOTES "r12: SemDeDup center provisioning + DSIR
+    * growth" measures exactly this:
     * fixed-k walls grow ~quadratically, scaled-k stays ~linear).
     *
     * k = clamp(⌈n / targetClusterSize⌉, 1, maxCenters); the fit is
@@ -463,8 +464,8 @@ object SemDedup {
     * At 100 TB pass `fitFraction ≈ fitCap / n` so the sample is
     * uniform rather than a prefix (the quantizer-fit discipline).
     *
-    * Fit-cost sizing at 10⁸-doc scale (r15, measured in ScaleSmoke
-    * `semf` — the curve is in BENCH_NOTES): Lloyd is
+    * Fit-cost sizing at 10⁸-doc scale (r15, BENCH_NOTES "r15:
+    * admission diet, q249 memo, fit wall"): Lloyd is
     * O(k · sample · dim · rounds), ~linear in k at fixed sample
     * (measured 29.5 s at k = 16384 over a 20k-row dim-64 sample on
     * 32 threads; extrapolated ~10 min single-node at the k = 65536 /
@@ -642,18 +643,6 @@ object SemDedup {
           "silently wrong; rebuild the index or load the matching " +
           "centers")
     }
-  }
-
-  /** Fold newly admitted rows into an assignment index: assign the
-    * batch (one codegen pass — batch-bounded, the corpus is never
-    * re-assigned) and append under the validated stamps. */
-  def assignmentIndexUpdate(index: DataFrame, admitted: DataFrame,
-                            idCol: String, vecCol: String,
-                            centers: Seq[Seq[Double]],
-                            nProbe: Int = 0, nCells: Int = 0): DataFrame = {
-    validateAssignmentIndex(index, centers)
-    index.unionByName(assignmentIndex(admitted, idCol, vecCol, centers,
-      nProbe, nCells))
   }
 
   private def requireScreenParams(centers: Seq[Seq[Double]],

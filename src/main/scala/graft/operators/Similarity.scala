@@ -48,7 +48,8 @@ object Similarity {
     * nProbe nearest centroids per query. Recall < 1 by design; tested
     * against bruteForceTopK in the spec.
     *
-    * Measured operating curve (ScaleSmoke `ivf`, BENCH_NOTES r10, on
+    * Measured operating curve (BENCH_NOTES "r10: IVF probe-vs-recall
+    * curve measured", on
     * the RANDOM testdata embeddings — the worst case for IVF, since
     * unclustered data spreads each query's true neighbors across
     * cells): at nc=8, recall@10 ≈ 0.32/0.65/0.92 at np=1/3/6 and

@@ -65,10 +65,6 @@ object ZOrder {
     interleaveExpr(scaleToBitsExpr(x, xLo, xHi, bits),
       scaleToBitsExpr(y, yLo, yHi, bits), bits)
 
-  /** normalized `bits`-bit rank of `c` within [lo, hi], clamped. */
-  def scaleToBits(c: Column, lo: Long, hi: Long, bits: Int): Column =
-    Bridge.column(scaleToBitsExpr(Bridge.expression(c), lo, hi, bits))
-
   /** Morton interleave of two pre-scaled `bits`-bit values: bit i of
     * `xs` lands at position 2i, bit i of `ys` at 2i+1. */
   def interleave(xs: Column, ys: Column, bits: Int): Column =

@@ -59,17 +59,20 @@ import graft.operators.Dedup
   * folds IN PLACE ([[Dedup.minhashIndexUpdatePartitioned]]), writing
   * only the layout partitions the batch touches: the last
   * corpus-proportional WRITE becomes batch-bounded too (measured in
-  * ScaleSmoke `upd`; crash contract on [[admitCore]]).
+  * BENCH_NOTES "r8: Partitioned index partial rewrite"; crash
+  * contract on [[admitCore]]).
   *
   * Cost model at scale — what IS corpus-proportional: each cycle
   * READS the corpus twice (the id-screen semi join and the near-dup
   * jaccard/cosine verification join; neither shuffles it, both scan
-  * it). At gate scale that is noise (ScaleSmoke `adm` measures flat
-  * cycles); at 100 TB it is the dominant term, and the mitigations
+  * it). At gate scale that is noise (BENCH_NOTES "Full admission
+  * cycle scaling" measures flat cycles); at 100 TB it is the
+  * dominant term, and the mitigations
   * are storage-layout ones: bucket the corpus by `idCol` — the id
   * screen joins on the raw id (hashKeys = false), so a bucketed
   * corpus joins with ZERO corpus-side exchange and an IN-list id
-  * probe prunes buckets (both measured: ScaleSmoke `bkt`,
+  * probe prunes buckets (both measured: BENCH_NOTES "r8:
+  * Bucketed-corpus id screen measured",
   * SelectedBucketsCount 17/64 for a 20-id probe, corpus never
   * shuffled) — or keep a distilled ids-only keys table beside the
   * index and screen ids against that instead of the corpus. The keys-table variant is deliberately NOT built
@@ -160,7 +163,8 @@ object Admission {
     // direct-key id screen (hashKeys = false): the join key is the id
     // column itself, so a corpus BUCKETED by idCol — the cost-model
     // mitigation for the per-cycle corpus scans — joins with zero
-    // corpus-side exchange (ScaleSmoke `bkt`). Ids are non-null by
+    // corpus-side exchange (BENCH_NOTES "r8: Bucketed-corpus id
+    // screen measured"). Ids are non-null by
     // the id-namespace contract; a null id would bypass this screen.
     val fresh = Dedup.exactAgainst(batch.dropDuplicates(idCol), corpus,
       Seq(idCol), hashKeys = false).cache()

@@ -1,9 +1,10 @@
 package org.apache.spark
 
 /** Access shim for `private[spark]` members graft's diagnostics need.
-  * `SparkContext.listenerBus` is spark-private; ProbeVariance must
-  * drain it deterministically before reading listener-accumulated
-  * metrics (a fixed sleep attributes a stage to the wrong run on a
+  * `SparkContext.listenerBus` is spark-private; `tools.ProbeCatalog`
+  * and `tools.ProbeStages` (its only users) must drain it
+  * deterministically before reading listener-accumulated metrics
+  * (a fixed sleep attributes a stage to the wrong run on a
   * loaded host — exactly the variance the tool exists to diagnose).
   * Kept to the one member, diagnostics-only; operator code never
   * touches spark internals. */

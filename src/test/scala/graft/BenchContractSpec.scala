@@ -62,4 +62,46 @@ class BenchContractSpec extends SparkTestBase {
     assert(Bench.rerunSelection(best, Map.empty, 2, Set.empty) ==
       Seq("a", "d"))
   }
+
+  // the last stdout line: a short, parseable summary of the full line
+
+  private def parseJson(line: String) =
+    new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+
+  test("summaryLine carries the full line's totals and parses") {
+    val full = """{"metric":"total","value":270.31999999999994,""" +
+      """"unit":"sec","queries":{"q1":270.31999999999994},"sf":"x",""" +
+      """"queries_best":{"q1":198.2},"value_best":198.2,"failed":[]}"""
+    val f = parseJson(full)
+    val line = Bench.summaryLine(f.get("value").asDouble,
+      f.get("value_best").asDouble, 0, "/data/tpch/sf0.1", 8,
+      contended = false)
+    val j = parseJson(line)
+    assert(j.get("metric").asText == "total")
+    assert(j.get("unit").asText == "sec")
+    assert(j.get("value").asDouble == f.get("value").asDouble)
+    assert(j.get("value_best").asDouble == f.get("value_best").asDouble)
+    // same text, not just the same double: a reader may grep either
+    assert(line.contains("\"value\":270.31999999999994,"))
+    assert(line.contains("\"value_best\":198.2,"))
+    assert(j.get("failed").asInt == 0)
+    assert(j.get("sf").asText == "/data/tpch/sf0.1")
+    assert(j.get("cpus").asInt == 8)
+    assert(!j.get("contended").asBoolean)
+  }
+
+  test("summaryLine stays within 500 bytes when all 272 queries fail") {
+    val sf = ("/very/long/\"quoted\\path/é中\t" * 40) + "sf0.1"
+    val line = Bench.summaryLine(-1.0, -1.0, 272, sf, Int.MaxValue,
+      contended = true)
+    assert(line.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      .length <= 500, line)
+    assert(!line.contains("\n"))
+    val j = parseJson(line)
+    assert(j.get("value").asDouble == -1.0)
+    assert(j.get("value_best").asDouble == -1.0)
+    assert(j.get("failed").asInt == 272)
+    assert(j.get("sf").asText == sf.takeRight(48))
+    assert(j.get("contended").asBoolean)
+  }
 }

@@ -75,7 +75,8 @@ class SimilaritySpec extends SparkTestBase {
   }
 
   test("IVF ANN: measured probe-recall curve holds; full probe == exact") {
-    // Operating points measured in ScaleSmoke `ivf` (BENCH_NOTES r10):
+    // Operating points from BENCH_NOTES "r10: IVF probe-vs-recall
+    // curve measured":
     // on THIS fixture — random unclustered embeddings, IVF's worst
     // case — recall@10 at nc=8 lands ~0.65 at np=3, ~0.92 at np=6,
     // and exactly 1.0 at np=8 (probing every cell IS the exhaustive
