@@ -202,7 +202,7 @@ object SparkEntry {
 
   /** sequential SQL replay of both EMBEDDING admission cycles with
     * exact cosine — shared verbatim by q124 (plain index) and q216
-    * (partitioned index, r12): same answer through both fold paths. */
+    * (partitioned index, r12): same answer through both layouts. */
   private lazy val admissionEmbedOracleSql =
     """WITH base AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 2000),
       |b1 AS (SELECT vec_id + 30000 AS vec_id,
@@ -3337,10 +3337,9 @@ object SparkEntry {
       Some(admissionOracleSql)),
 
     // q122 with the index persisted PARTITIONED (r8,
-    // Dedup.indexWritePartitioned): admitBatch detects the layout and
-    // folds each cycle IN PLACE, rewriting only the layout partitions
-    // the batch touches — the last corpus-proportional write in the
-    // loop made batch-bounded. Same oracle VERBATIM, the fifth
+    // Dedup.indexWritePartitioned): admitBatch adopts the layout and
+    // each cycle commits a batch-sized delta beside it (its
+    // compactions rewrite the layout whole). Same oracle VERBATIM, the fifth
     // same-oracle/different-path proof of the admission family: the
     // storage layout decides the write cost, never the answer.
     Q("q129_admission_partitioned", (s, dir) => {
@@ -3443,11 +3442,9 @@ object SparkEntry {
     // The embedding admission loop against a PARTITIONED persisted
     // index (r12, the q129-vs-q122 pattern in cosine space):
     // identical fixture and cycles as q124, with the index persisted
-    // via Dedup.indexWritePartitioned so both cycles take the
-    // embeddingIndexUpdatePartitioned dirty-partition fold —
-    // previously spec-only (DedupSpec pins update == rebuild); now
-    // the whole partitioned path is oracle-proven against q124's SQL
-    // VERBATIM. Same answer, batch-bounded index writes.
+    // via Dedup.indexWritePartitioned, so both cycles screen and
+    // commit against the partitioned base — oracle-proven against
+    // q124's SQL VERBATIM. Same answer, batch-bounded index writes.
     Q("q216_admission_embed_partitioned", (s, dir) => {
       val base = t(s, dir, "embeddings")
         .filter(col("vec_id") < 2000).select(col("vec_id"), col("embedding"))

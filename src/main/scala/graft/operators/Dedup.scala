@@ -174,13 +174,22 @@ object Dedup {
       keep: Column => Column): DataFrame = {
     def side(s: String) =
       items.select(col("id").as(s"id_$s"), col(payload).as(s"${payload}_$s"))
-    materializeAndRelease(cand
+    materializeAndRelease(measured(cand
       .join(side("a"), Seq("id_a"))
-      .join(side("b"), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        measure(col(s"${payload}_a"), col(s"${payload}_b")).as(out))
-      .filter(keep(col(out))), items)
+      .join(side("b"), Seq("id_b")), Seq("id_a", "id_b"),
+      measure(col(s"${payload}_a"), col(s"${payload}_b")), out)(keep), items)
   }
+
+  /** the shared verify tail: (`ids`..., `m` AS `out`) for the pairs
+    * passing `keep`, with `m` evaluated ONCE per pair. A projected
+    * measure under a filter gets the filter pushed into the join
+    * condition below, which then evaluates the measure a second time;
+    * a generator's output cannot be pushed, so the filter stays above
+    * the one evaluation. */
+  private def measured(pairs: DataFrame, ids: Seq[String], m: Column,
+                       out: String)(keep: Column => Column): DataFrame =
+    pairs.select(ids.map(col) :+ explode(array(m)).as(out): _*)
+      .filter(keep(col(out)))
 
   /** candidate near-dup pairs by MinHash LSH, verified by exact
     * Jaccard on word `shingleLen`-grams. Returns (id_a, id_b, jaccard)
@@ -267,20 +276,21 @@ object Dedup {
     * raw (`idCol`, `source`) columns: they pass through the
     * verification join, and `payloadOf(source)` is derived above it,
     * so only candidate-matched corpus rows are shingled or hashed. */
-  private final case class Lsh(keys: Seq[String], payload: String,
-                               out: String,
-                               measure: (Column, Column) => Column,
-                               params: Seq[(String, Any)],
-                               items: DataFrame => DataFrame,
-                               foldItems: DataFrame => DataFrame,
-                               idCol: String, source: String,
-                               payloadOf: Column => Column,
-                               keyed: DataFrame => DataFrame)
+  private[graft] final case class Lsh(keys: Seq[String], payload: String,
+                                      out: String,
+                                      measure: (Column, Column) => Column,
+                                      params: Seq[(String, Any)],
+                                      items: DataFrame => DataFrame,
+                                      foldItems: DataFrame => DataFrame,
+                                      idCol: String, source: String,
+                                      payloadOf: Column => Column,
+                                      keyed: DataFrame => DataFrame)
 
   /** MinHash over word shingles, verified by Jaccard. The folds band
     * the batch unspread ([[shingledFor]]). */
-  private def minhashLsh(idCol: String, textCol: String, numHashes: Int,
-                         bands: Int, shingleLen: Int, seed: Long): Lsh =
+  private[graft] def minhashLsh(idCol: String, textCol: String,
+                                numHashes: Int, bands: Int, shingleLen: Int,
+                                seed: Long): Lsh =
     Lsh(Seq("band", "bucket"), "sh", "jaccard", jaccard,
       Seq("__fmt" -> MinhashIndexFormat, "__numHashes" -> numHashes,
         "__bands" -> bands, "__shingleLen" -> shingleLen, "__seed" -> seed),
@@ -293,9 +303,9 @@ object Dedup {
   /** hyperplane LSH over an embedding column, verified by cosine.
     * (table, code) is one long (table id in the high bits), so the
     * bucket key shuffles 8 bytes per (doc, table). */
-  private def embeddingLsh(idCol: String, vecCol: String, dim: Int,
-                           nTables: Int, bitsPerTable: Int,
-                           seed: Long): Lsh = {
+  private[graft] def embeddingLsh(idCol: String, vecCol: String, dim: Int,
+                                  nTables: Int, bitsPerTable: Int,
+                                  seed: Long): Lsh = {
     val codes = embCodes(_: DataFrame, idCol, vecCol, dim, nTables,
       bitsPerTable, seed)
     Lsh(Seq("code"), "v", "cosine", VectorFunctions.cosine,
@@ -307,8 +317,8 @@ object Dedup {
   }
 
   /** the persisted stamp: `params` plus the skew cap */
-  private def withCap(params: Seq[(String, Any)],
-                      maxBucketSize: Int): Seq[(String, Any)] =
+  private[graft] def withCap(params: Seq[(String, Any)],
+                             maxBucketSize: Int): Seq[(String, Any)] =
     params :+ ("__maxBucketSize" -> maxBucketSize)
 
   /** Stamp the param columns into every index row: constant per index,
@@ -371,26 +381,37 @@ object Dedup {
     * candidate-matched rows only, never for the whole corpus scan.
     * No corpus-side emptiness filter is needed: index ids only ever
     * come from non-empty shingle sets ([[rawIndex]] and the folds
-    * band filtered items). */
-  private def lshScreen(f: Lsh, newDf: DataFrame, corpus: DataFrame,
-                        corpusIndex: DataFrame, threshold: Double,
-                        broadcastNew: Boolean): DataFrame = {
+    * band filtered items).
+    *
+    * `mergeCap` set: `corpusIndex` is an admission state's base ∪
+    * delta rows ([[lshDelta]]), not a merged index. Only the buckets
+    * the batch touches are kept (a semi join on the broadcast batch
+    * keys), and that batch-sized slice is merged by [[mergeIndex]]
+    * under the cap before the ids explode: `n` sums before the cap
+    * applies, so a dead bucket stays dead and the candidates equal a
+    * screen over the compacted index. */
+  private[graft] def lshScreen(f: Lsh, newDf: DataFrame, corpus: DataFrame,
+                               corpusIndex: DataFrame, threshold: Double,
+                               broadcastNew: Boolean,
+                               mergeCap: Option[Int] = None): DataFrame = {
     val items = f.items(newDf).cache()
     val newKeys = f.keyed(items)
       .select(col("id").as("id_new") +: f.keys.map(col): _*)
-    val cand = corpusIndex
-      .join(if (broadcastNew) broadcast(newKeys) else newKeys, f.keys)
+    def bk(d: DataFrame) = if (broadcastNew) broadcast(d) else d
+    val buckets = mergeCap.fold(corpusIndex)(cap => mergeIndex(
+      corpusIndex.join(bk(newKeys.select(f.keys.map(col): _*)), f.keys,
+        "left_semi"), f.keys, cap))
+    val cand = buckets.join(bk(newKeys), f.keys)
       .select(col("id_new"), explode(col("ids")).as("id_corpus"))
       .distinct()
     val pNew = s"${f.payload}_new"
-    val verified = cand
+    val verified = measured(cand
       .join(items.select(col("id").as("id_new"), col(f.payload).as(pNew)),
         Seq("id_new"))
       .join(corpus.select(col(f.idCol).as("id_corpus"),
-        col(f.source).as("src_cor")), Seq("id_corpus"))
-      .select(col("id_new"), col("id_corpus"),
-        f.measure(col(pNew), f.payloadOf(col("src_cor"))).as(f.out))
-      .filter(col(f.out) >= threshold)
+        col(f.source).as("src_cor")), Seq("id_corpus")),
+      Seq("id_new", "id_corpus"),
+      f.measure(col(pNew), f.payloadOf(col("src_cor"))), f.out)(_ >= threshold)
     materializeAndRelease(verified, items)
   }
 
@@ -518,47 +539,64 @@ object Dedup {
                                   asked: Seq[(String, Any)],
                                   acceptUnvalidated: Boolean): DataFrame = {
     val paramCols = index.columns.filter(_.startsWith("__")).toSeq
-    if (paramCols.isEmpty) {
-      require(acceptUnvalidated,
-        s"$what: index carries no embedded __param columns, so its " +
-          "hash family and build params cannot be validated — if it " +
-          "was persisted by an older graft version, a screen against " +
-          "it would silently return ~zero candidates. Rebuild it with " +
-          "the current library, or pass acceptUnvalidated = true to " +
-          "run a hand-built index on your own contract.")
-      index
-    } else {
-      val files = bareScanFiles(index)
-      val built = knownStamp(files).getOrElse {
-        // no .limit(3) guard here: a limit over a shuffle runs the
-        // incremental try-1-then-2-then-4-partitions probe — FOUR jobs
-        // per validation at gate scale. The distinct
-        // of constant-per-build columns is bounded by the number of
-        // builds ever unioned into the file set (1 for any graft-
-        // written index), so a plain collect is one job and bytes.
-        val tuples = index.select(paramCols.map(col): _*).distinct()
-          .collect()
-        require(tuples.length <= 1,
-          s"$what: index carries ${tuples.length}+ distinct build-param " +
-            s"tuples ${tuples.map(_.toString).mkString(", ")} over " +
-            s"(${paramCols.mkString(", ")}) — it was assembled from " +
-            "differently-parameterized builds (a union of indexes?) and " +
-            "would screen with mixed-recall buckets. Rebuild from one " +
-            "parameter set.")
-        val fresh = tuples.headOption.map(r =>
-          paramCols.zipWithIndex.map { case (c, i) => c -> r.get(i) }.toMap)
-        files.foreach(rememberStamp(_, fresh))
-        fresh
-      }
-      built.foreach(requireAsked(_, what, asked))
+    if (paramCols.isEmpty && acceptUnvalidated) index
+    else {
+      validatedStamp(index, what, asked)
       index.drop(paramCols: _*)
     }
   }
 
+  /** [[validateIndexParams]]'s check alone: the index's one stamp (by
+    * column; None for a zero-row index), validated against `asked`.
+    * An index holding admission delta rows ([[lshDelta]]) fails here:
+    * only its admission state merges them exactly. */
+  private[graft] def validatedStamp(index: DataFrame, what: String,
+                                    asked: Seq[(String, Any)])
+  : Option[Map[String, Any]] = {
+    val paramCols = index.columns.filter(_.startsWith("__")).toSeq
+    require(paramCols.nonEmpty,
+      s"$what: index carries no embedded __param columns, so its " +
+        "hash family and build params cannot be validated — if it " +
+        "was persisted by an older graft version, a screen against " +
+        "it would silently return ~zero candidates. Rebuild it with " +
+        "the current library, or pass acceptUnvalidated = true to " +
+        "run a hand-built index on your own contract.")
+    val files = bareScanFiles(index)
+    val built = knownStamp(files).getOrElse {
+      // no .limit(3) guard here: a limit over a shuffle runs the
+      // incremental try-1-then-2-then-4-partitions probe — FOUR jobs
+      // per validation at gate scale. The distinct
+      // of constant-per-build columns is bounded by the number of
+      // builds ever unioned into the file set (1 for any graft-
+      // written index), so a plain collect is one job and bytes.
+      val tuples = index.select(paramCols.map(col): _*).distinct()
+        .collect()
+      val capAt = paramCols.indexOf("__maxBucketSize")
+      require(capAt < 0 || !tuples.exists(_.get(capAt) == DeltaCap),
+        s"$what: index holds admission delta rows (uncapped batch " +
+          s"buckets, __maxBucketSize = $DeltaCap) that only their " +
+          "admission state merges exactly — screen through the " +
+          "admission cycle, or rebuild the index.")
+      require(tuples.length <= 1,
+        s"$what: index carries ${tuples.length}+ distinct build-param " +
+          s"tuples ${tuples.map(_.toString).mkString(", ")} over " +
+          s"(${paramCols.mkString(", ")}) — it was assembled from " +
+          "differently-parameterized builds (a union of indexes?) and " +
+          "would screen with mixed-recall buckets. Rebuild from one " +
+          "parameter set.")
+      val fresh = tuples.headOption.map(r =>
+        paramCols.zipWithIndex.map { case (c, i) => c -> r.get(i) }.toMap)
+      files.foreach(rememberStamp(_, fresh))
+      fresh
+    }
+    built.foreach(requireAsked(_, what, asked))
+    built
+  }
+
   /** each param in `asked` must be present in the validated stamp
     * `built` and equal to it */
-  private def requireAsked(built: Map[String, Any], what: String,
-                           asked: Seq[(String, Any)]): Unit =
+  private[graft] def requireAsked(built: Map[String, Any], what: String,
+                                  asked: Seq[(String, Any)]): Unit =
     asked.foreach { case (k, v) =>
       require(built.contains(k),
         s"$what: index lacks the $k param column — it was " +
@@ -644,6 +682,31 @@ object Dedup {
           .otherwise(slice(col("ids"), 1, 0)).as("ids") :+
         col("n"): _*)
 
+  /** the `__maxBucketSize` stamp of admission delta rows: they are
+    * uncapped, so any read that validates them fails instead of
+    * screening buckets the cap has killed */
+  private[graft] val DeltaCap = -1
+
+  /** an admission commit's index delta: the batch's [[batchRows]],
+    * uncapped, under the index's `stamp` with the cap replaced by
+    * [[DeltaCap]] */
+  private[graft] def lshDelta(f: Lsh, batch: DataFrame,
+                              stamp: Seq[(String, Any)]): DataFrame =
+    this.stamp(batchRows(f, batch), stamp.map {
+      case ("__maxBucketSize", _) => "__maxBucketSize" -> DeltaCap
+      case kv => kv
+    })
+
+  /** compaction: base ∪ delta rows folded into one stamped index by
+    * [[mergeIndex]] under the cap — bucket for bucket a rebuild over
+    * the same documents, dead buckets included */
+  private[graft] def lshCompact(rows: DataFrame, stamp: Seq[(String, Any)])
+  : DataFrame = {
+    val keys = bucketKeysOf(rows)
+    val cap = stamp.collectFirst { case ("__maxBucketSize", c: Int) => c }.get
+    this.stamp(mergeIndex(rows, keys, cap), stamp)
+  }
+
   // ---- partitioned index persistence (partial rewrites) ----------------
 
   /** deterministic layout partition of a bucket key: hash-uniform, so
@@ -669,7 +732,9 @@ object Dedup {
     * index — the "partition the persisted index" mitigation the
     * admission loop's cost model names, made real. Works for both
     * index families (minhash (band, bucket) and embedding code keys
-    * are detected from the schema).
+    * are detected from the schema). An admission state adopts this
+    * layout as it is: its deltas go to `part=-1` and its compactions
+    * rewrite the layout whole ([[graft.streaming.Admission]]).
     *
     * Sizing `numParts`: batch buckets hash uniformly, so an update
     * rewrites ≈ numParts · (1 − (1 − 1/numParts)^B) partitions for B
@@ -710,23 +775,23 @@ object Dedup {
     * they are derived from the very files being replaced.
     *
     * Stamp contract: when the index frame's file set is already in
-    * the validation memo ([[validatedIndexes]] — the admission cycle's
-    * screen validated this very frame), the fold takes the index's
-    * stamp from the memo and checks its own params and `__numParts`
-    * against it without a job. Otherwise (a standalone call) it reads
+    * the validation memo ([[validatedIndexes]] — a screen over this
+    * very frame validated it), the fold takes the index's stamp from
+    * the memo and checks its own params and `__numParts` against it
+    * without a job. Otherwise (a standalone call) it reads
     * one head row for the stamp and validates the dirty partitions it
     * merges. After the overwrite, if the stamp it wrote equals the
     * memo stamp it validated, it registers the index's new file set
     * (the frame's files outside the dirty partitions plus a listing of
-    * the dirty partition directories only), so the next cycle's
-    * screen over the same files is a memo hit. That relies on the
-    * same single-writer contract as `preRead`; a foreign rewrite
+    * the dirty partition directories only), so the next screen over
+    * the same files is a memo hit. That relies on the same
+    * single-writer contract as `preRead`; a foreign rewrite
     * writes new file names, so the memo misses and the next read
     * validates in full.
     *
-    * Durability contract vs [[graft.streaming.Admission]]'s staged
-    * swap: the swap is one atomic rename (a crash leaves old or new,
-    * never a mix); dynamic partition overwrite commits per partition,
+    * Durability contract vs a staged swap: the swap is one atomic
+    * rename (a crash leaves old or new, never a mix); dynamic
+    * partition overwrite commits per partition,
     * so a crash mid-write can leave SOME partitions updated — with
     * batch ids present in their buckets — and others not. Safe to
     * re-run (the merge is idempotent per partition only if the batch
@@ -743,13 +808,13 @@ object Dedup {
   : PartialUpdateStats = {
     val (keys, asked) = (f.keys, withCap(f.params, maxBucketSize))
     // preRead: a caller that already holds a DataFrame over `path`
-    // (the admission loop reads the index once per cycle for its
-    // screens) passes it here to skip a second read — above
+    // (a screen-then-fold loop that read the index once for its
+    // screen) passes it here to skip a second read — above
     // spark.sql.sources.parallelPartitionDiscovery.threshold (32)
     // dirs, EVERY fresh read of the partitioned layout runs a
     // numParts-task listing job (the fold's single biggest job). Only
     // valid while no writer has touched `path` since the frame was
-    // created — the admission cycle's single-writer contract.
+    // created — a single-writer contract.
     val index = preRead.getOrElse(spark.read.parquet(path))
     require(index.columns.contains("part"),
       s"$what: index at $path is not partitioned — persist it with " +

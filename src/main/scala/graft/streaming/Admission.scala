@@ -1,8 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Observation, Row}
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructType}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.json4s._
+import org.json4s.jackson.JsonMethods
 
 import graft.operators.Dedup
 
@@ -11,10 +16,10 @@ import graft.operators.Dedup
   * minhashPairsAgainstIndex / minhashIndexUpdate) exists to serve,
   * closed end to end: each arriving batch of documents is screened
   * against the persisted corpus, the survivors are appended to the
-  * corpus, and the persisted MinHash index is folded forward so the
-  * NEXT batch screens against them too — the corpus is never
-  * re-banded, ever (cost measured flat in BENCH_NOTES §index-
-  * maintenance while rebuild cost rides corpus size).
+  * corpus, and the persisted index grows by them so the NEXT batch
+  * screens against them too — the corpus is never re-banded, ever
+  * (cost measured flat in BENCH_NOTES §index-maintenance while
+  * rebuild cost rides corpus size).
   *
   * Reference scope: the reference library has no streaming surface at
   * all (SURVEY §2 row "Streams"); this is a DRIVER-EXT capability a
@@ -22,81 +27,104 @@ import graft.operators.Dedup
   * Streaming's foreachBatch + the batch screen operators.
   *
   * Per batch, in order:
+  *   0. (MinHash and embedding spaces) recovery: finish the last
+  *      commit's file moves if a crash interrupted them, and delete
+  *      whatever an uncommitted cycle staged — before anything reads.
   *   1. one row per id within the batch, then the EXACT ID screen
   *      against the corpus ([[Dedup.exactAgainst]]). This is also
   *      what makes a foreachBatch REPLAY a no-op: foreachBatch is
-  *      at-least-once, and rows already appended by a half-finished
-  *      run carry ids the corpus now contains, so they drop here.
-  *   2. near-dup screen against the PERSISTED index
-  *      ([[Dedup.minhashPairsAgainstIndex]] — batch-bounded banding,
-  *      one corpus scan for jaccard verification).
+  *      at-least-once, and rows a committed cycle appended carry ids
+  *      the corpus now contains, so they drop here.
+  *   2. near-dup screen against the persisted index
+  *      ([[Dedup.minhashPairsAgainstIndex]] semantics — batch-bounded
+  *      banding, one corpus scan for jaccard verification).
   *   3. optional within-batch near-dedup among the survivors
   *      ([[Dedup.minhashDedup]], batch-bounded). Corpus-screen FIRST:
   *      if batch doc B's only near-dup partner A was itself dropped
   *      by the corpus screen, B is still admitted — within-first
   *      would have dropped B in favor of A and then lost A too.
-  *   4. append the admitted rows to the corpus, then fold them into
-  *      the index ([[Dedup.minhashIndexUpdate]]) via a staged
-  *      write-and-swap (parquet has no transactional overwrite).
+  *   4. write the admitted rows and fold them into the index.
   *
-  * Crash-safety contract (single writer assumed): the admitted set is
-  * localCheckpoint-ed BEFORE either write, so step 4's two writes
-  * never recompute against files they are mutating. A crash BETWEEN
-  * the corpus append and the index swap leaves rows the index does
-  * not cover: replaying the batch is safe (step 1 drops the appended
-  * rows — no duplicates, ever) but those rows stay invisible to
-  * FUTURE near-dup screens until an index rebuild
-  * ([[Dedup.minhashIndex]], cost measured in BENCH_NOTES). At real
-  * deployment scale the two writes belong in one transactional-table
-  * commit (Iceberg/Delta); with raw parquet the append-then-swap
-  * order above is the one whose failure mode degrades recall rather
-  * than corrupting the corpus.
+  * MinHash and embedding state: ONE ATOMIC COMMIT PER CYCLE. The
+  * index is a base plus deltas; `indexPath/_graft_state/vN.json` (the
+  * manifest) names the base and delta files relative to `indexPath`,
+  * and holds the corpus and index schemas and the index's validated
+  * stamp. A cycle writes its admitted rows (the corpus delta) to a
+  * hidden staging directory, writes the admitted rows' uncapped
+  * bucket rows (the index delta, [[Dedup.lshDelta]]) beside the base,
+  * and commits by renaming a temp file to `vN+1.json`; only then are
+  * the corpus delta's files moved into `corpusPath`. Reads name their
+  * files from the manifest with its schemas: no schema-inference job,
+  * no listing job, no stamp scan. The screen merges the batch-touched
+  * buckets of base ∪ deltas under the cap before it explodes ids, so
+  * it answers exactly as a screen over the compacted index (pinned in
+  * DedupSpec). A compaction folds the deltas into a new base (same
+  * layout, flat or [[Dedup.indexWritePartitioned]]) as its own commit,
+  * when the next read would otherwise name more files than
+  * `spark.sql.sources.parallelPartitionDiscovery.threshold` (above it
+  * the listing itself is a Spark job) — or, for a base already past
+  * that, once the deltas outnumber the base files.
   *
-  * At 100 TB: the batch (not the corpus) bounds every screening
-  * SHUFFLE; the index rewrite is the only corpus-proportional write
-  * and is ids-only — and if the index was persisted with
-  * [[Dedup.indexWritePartitioned]], the cycle detects the layout and
-  * folds IN PLACE ([[Dedup.minhashIndexUpdatePartitioned]]), writing
-  * only the layout partitions the batch touches: the last
-  * corpus-proportional WRITE becomes batch-bounded too (measured in
-  * BENCH_NOTES "r8: Partitioned index partial rewrite"; crash
-  * contract on [[admitCore]]).
+  * The first cycle on a state without a manifest ADOPTS it: one
+  * listing and one stamp validation of the index, as every cycle paid
+  * before manifests. Either index layout is adopted in place and
+  * keeps its layout. Once adopted, the state belongs to the admission
+  * faces: the standalone folds (`minhashIndexUpdate*`) do not know
+  * the deltas, and replacing the index means deleting its
+  * `_graft_state` too.
   *
-  * Cost model at scale — what IS corpus-proportional: each cycle
-  * READS the corpus twice (the id-screen semi join and the near-dup
+  * Crash-safety contract (single writer assumed): a crash before the
+  * rename leaves the previous version committed; the next cycle's
+  * recovery deletes the staged files, and a replay of the batch
+  * starts from scratch. A crash after the rename leaves the new
+  * version committed; recovery completes its file moves before the id
+  * screen runs, so a replay finds the batch's ids in the corpus and
+  * is a no-op, and near-dups of the batch still drop. Pinned by the
+  * fault-injection test in AdmissionSpec. The rename is atomic on the
+  * local file system and on HDFS; an object store needs a
+  * put-if-absent manifest write instead (S3 conditional writes, GCS
+  * generation preconditions), which this class does not do.
+  *
+  * Plain-read contract. A plain `spark.read.parquet(corpusPath)`
+  * returns exactly the committed corpus, never a duplicate: staged
+  * files are hidden until their commit moves them in. Between a
+  * rename and its moves (and after a crash there, until the next
+  * cycle) it returns the previous version. A plain
+  * `spark.read.parquet(indexPath)` is never silently stale. Without
+  * deltas it is the exact index. While deltas exist (they are moved
+  * in before the rename and deleted last by a compaction) their
+  * `__maxBucketSize = -1` stamp makes a screen or a full-swap fold
+  * over the plain read fail validation — the uncapped rows only merge
+  * exactly through the state.
+  *
+  * Cost model at scale. Per cycle the index WRITE is batch-sized (one
+  * delta file); the index READ scans base ∪ deltas, as the screen
+  * always scanned the whole index, and merges only the buckets the
+  * batch touches. What IS corpus-proportional: each cycle READS the
+  * corpus twice (the id-screen semi join and the near-dup
   * jaccard/cosine verification join; neither shuffles it, both scan
   * it). At gate scale that is noise (BENCH_NOTES "Full admission
-  * cycle scaling" measures flat cycles); at 100 TB it is the
-  * dominant term, and the mitigations
-  * are storage-layout ones: bucket the corpus by `idCol` — the id
-  * screen joins on the raw id (hashKeys = false), so a bucketed
-  * corpus joins with ZERO corpus-side exchange and an IN-list id
-  * probe prunes buckets (both measured: BENCH_NOTES "r8:
-  * Bucketed-corpus id screen measured",
-  * SelectedBucketsCount 17/64 for a 20-id probe, corpus never
-  * shuffled) — or keep a distilled ids-only keys table beside the
-  * index and screen ids against that instead of the corpus. The keys-table variant is deliberately NOT built
-  * in: screening ids against the corpus itself is what makes a
-  * replayed half-finished batch exactly idempotent, and a separate
-  * keys artifact re-opens that window (keys-before-corpus crash =
-  * lost doc; corpus-before-keys crash = duplicate on replay). Choose
-  * it only on a transactional table format where corpus + keys +
-  * index commit atomically.
+  * cycle scaling" measures flat cycles); at 100 TB it is the dominant
+  * term, and the mitigations are storage-layout ones: bucket the
+  * corpus by `idCol` — the id screen joins on the raw id (hashKeys =
+  * false), so a bucketed corpus joins with ZERO corpus-side exchange
+  * and an IN-list id probe prunes buckets (both measured: BENCH_NOTES
+  * "r8: Bucketed-corpus id screen measured", SelectedBucketsCount
+  * 17/64 for a 20-id probe, corpus never shuffled) — or keep a
+  * distilled ids-only keys table beside the index and screen ids
+  * against that instead of the corpus; the one-commit manifest is
+  * what makes such a keys delta safe to add. The
+  * verification join carries the raw text/vector column and derives
+  * the payload above the join, so only candidate rows are shingled.
   *
-  * Per-cycle fixed work: the corpus is read twice but shingled only
-  * for candidate pairs — the verification join carries the raw
-  * text/vector column and derives the payload above the join. The
-  * index's param stamp is validated once per WRITTEN file set, not
-  * per read: the partitioned fold registers the files it wrote with
-  * the stamp it validated, so the next cycle's screen validation is a
-  * memo hit (a foreign rewrite writes new file names and re-validates
-  * in full).
+  * The semantic, signature and substring spaces keep their folds:
+  * the corpus append, then the index swap (or the substring append),
+  * with the older contract on [[foldCycle]].
   *
   * [[admitBatchEmbedding]] / [[admitStreamEmbedding]] are the
   * embedding-space siblings: identical skeleton and contracts, with
   * the SemDeDup-style cosine screen over a persisted
-  * [[Dedup.embeddingIndex]] and [[Dedup.embeddingIndexUpdate]] as the
-  * fold. */
+  * [[Dedup.embeddingIndex]]. */
 object Admission {
 
   /** per-batch admission telemetry: rows in the arriving batch, rows
@@ -111,54 +139,15 @@ object Admission {
                         admitted: Long)
 
   /** The shared cycle skeleton: id screen → near screen → optional
-    * within-batch dedup → localCheckpoint → corpus append + index
-    * fold. `screen` returns the matched-id column for the near
-    * screen; `within` dedups the surviving batch against itself;
-    * `fold` merges the admitted rows into the index (full-swap
-    * durable write); `foldInPlace` is the partitioned alternative,
-    * used automatically when `indexPath` holds an
-    * [[Dedup.indexWritePartitioned]] layout (detected by its `part`
-    * column) — only the layout partitions the batch touches are
-    * rewritten, so the per-cycle index write is batch-bounded instead
-    * of corpus-proportional.
-    *
-    * Crash contract of the in-place fold (vs the swap's atomic
-    * rename): dynamic partition overwrite commits per partition, so a
-    * crash mid-fold leaves SOME partitions with the batch folded in
-    * and others without. The corpus append happened FIRST, so every
-    * id such a partition references exists — the damage is bounded to
-    * recall (batch docs invisible to SOME future band/code probes
-    * until an index rebuild), the same degrade-recall-never-corrupt
-    * class as the swap's append-then-crash window; a replay is still
-    * a no-op (the id screen) and does NOT repair the partial fold.
-    *
-    * `refuseInPlace` is the layout refusal BEFORE any write, for the
-    * spaces without an in-place fold (semantic and signature):
-    * admitCore dispatches to foldInPlace only AFTER the corpus
-    * append, so an error raised there would leave the corpus mutated
-    * with the index unfolded. The layout is knowable from the schema
-    * of the cycle's own index read, so the unsupported case refuses
-    * write-free — before any count, screen or write, and without a
-    * separate listing/footer read of the index path. */
-  private def admitCore(batch: DataFrame, corpusPath: String,
-                        indexPath: String, idCol: String, batchId: Long,
-                        within: Boolean, collectStats: Boolean,
-                        screen: (DataFrame, DataFrame, DataFrame) => DataFrame,
+    * within-batch dedup → localCheckpoint → `commit`. `screen` returns
+    * the matched-id column (`id_new`) of the near screen; `within`
+    * dedups the surviving batch against itself; `commit` gets the
+    * settled admitted rows and their count. */
+  private def admitCore(batch: DataFrame, corpus: DataFrame, idCol: String,
+                        batchId: Long, within: Boolean, collectStats: Boolean,
+                        screen: (DataFrame, DataFrame) => DataFrame,
                         dedupWithin: DataFrame => DataFrame,
-                        fold: (DataFrame, DataFrame) => DataFrame,
-                        foldInPlace: (String, DataFrame, DataFrame) => Unit,
-                        forceInPlace: Boolean = false,
-                        refuseInPlace: Option[(String, String)] = None)
-  : AdmitStats = {
-    val spark = batch.sparkSession
-    val corpus = spark.read.parquet(corpusPath)
-    val index = spark.read.parquet(indexPath)
-    refuseInPlace.foreach { case (what, why) =>
-      require(!index.columns.contains("part"),
-        s"$what does not support the partitioned in-place layout — " +
-          s"persist it swap-written ($why, the swap rewrite is cheap " +
-          "by construction)")
-    }
+                        commit: (DataFrame, Long) => Unit): AdmitStats = {
     val batchRows = if (collectStats) batch.count() else -1L
     // direct-key id screen (hashKeys = false): the join key is the id
     // column itself, so a corpus BUCKETED by idCol — the cost-model
@@ -179,7 +168,7 @@ object Admission {
     // with collectStats = false). One batch-bounded count job buys
     // corpus-scan-once; afterIdScreen is therefore always real now.
     val nFresh = fresh.count()
-    val matched = screen(fresh, corpus, index)
+    val matched = screen(fresh, corpus)
       .select(col("id_new").as(idCol)).distinct()
     val screened = fresh.join(matched, Seq(idCol), "left_anti")
     val surviving = if (within) dedupWithin(screened) else screened
@@ -191,31 +180,84 @@ object Admission {
     val admitted = surviving
       .observe(admittedObs, count(lit(1)).as("rows")).localCheckpoint()
     val nAdmitted = admittedObs.get("rows").asInstanceOf[Long]
-    if (nAdmitted > 0) {
-      admitted.write.mode("append").parquet(corpusPath)
-      // the cycle's own index frame rides along: no writer touched
-      // indexPath since it was read (single-writer contract, and the
-      // corpus append above writes corpusPath, not the index), so the
-      // fold can reuse its file listing instead of re-listing — above
-      // the parallel-discovery threshold a fresh read of a partitioned
-      // layout costs a numParts-task job (r12 ProbeQ129)
-      if (forceInPlace || index.columns.contains("part"))
-        foldInPlace(indexPath, admitted, index)
-      else swapWrite(fold(index, admitted), indexPath)
-    }
+    commit(admitted, nAdmitted)
     fresh.unpersist()
     AdmitStats(batchId, batchRows, nFresh, nAdmitted)
   }
 
+  /** The MinHash/embedding cycle over manifest state (contracts in the
+    * object scaladoc): recover or adopt, compact when due, screen
+    * against base ∪ deltas, then one commit of the corpus and index
+    * deltas. A cycle that admits nothing commits only an adoption. */
+  private def lshCycle(batch: DataFrame, corpusPath: String,
+                       indexPath: String, idCol: String, batchId: Long,
+                       within: Boolean, collectStats: Boolean,
+                       f: Dedup.Lsh, what: String, maxBucketSize: Int,
+                       threshold: Double,
+                       dedupWithin: DataFrame => DataFrame): AdmitStats = {
+    val st = new State(batch.sparkSession, corpusPath, indexPath)
+    val opened = st.open(what, Dedup.withCap(f.params, maxBucketSize))
+    val m = if (st.compactionDue(opened)) st.compact(opened) else opened
+    val rows = st.indexRows(m)
+    admitCore(batch, st.corpus(m), idCol, batchId, within, collectStats,
+      screen = (fresh, corpus) => Dedup.lshScreen(f, fresh, corpus, rows,
+        threshold, broadcastNew = true, mergeCap = Some(maxBucketSize)),
+      dedupWithin = dedupWithin,
+      commit = (admitted, n) =>
+        if (n > 0) st.commitDelta(m, f, admitted)
+        else if (m.version == 0) st.commit(m.copy(version = 1)))
+  }
+
+  /** The cycle of the spaces that keep their folds (semantic,
+    * signature, substring): corpus append, then `fold` of the index.
+    *
+    * Crash contract: a crash BETWEEN the corpus append and the fold
+    * leaves rows the index does not cover: replaying the batch is
+    * safe (step 1 drops the appended rows — no duplicates, ever) but
+    * those rows stay invisible to FUTURE near-dup screens until an
+    * index rebuild. The append-then-fold order is the one whose
+    * failure mode degrades recall rather than corrupting the corpus.
+    *
+    * `refusePartitioned` is the layout refusal BEFORE any write, for
+    * the spaces without a partitioned layout: the layout is knowable
+    * from the schema of the cycle's own index read, so the
+    * unsupported case refuses write-free — before any count, screen
+    * or write. */
+  private def foldCycle(batch: DataFrame, corpusPath: String,
+                        indexPath: String, idCol: String, batchId: Long,
+                        within: Boolean, collectStats: Boolean,
+                        screen: (DataFrame, DataFrame, DataFrame) => DataFrame,
+                        dedupWithin: DataFrame => DataFrame,
+                        fold: (DataFrame, DataFrame) => Unit,
+                        refusePartitioned: Option[(String, String)] = None)
+  : AdmitStats = {
+    val spark = batch.sparkSession
+    val corpus = spark.read.parquet(corpusPath)
+    val index = spark.read.parquet(indexPath)
+    refusePartitioned.foreach { case (what, why) =>
+      require(!index.columns.contains("part"),
+        s"$what does not support the partitioned in-place layout — " +
+          s"persist it swap-written ($why, the swap rewrite is cheap " +
+          "by construction)")
+    }
+    admitCore(batch, corpus, idCol, batchId, within, collectStats,
+      screen = screen(_, _, index), dedupWithin = dedupWithin,
+      commit = (admitted, n) => if (n > 0) {
+        admitted.write.mode("append").parquet(corpusPath)
+        fold(index, admitted)
+      })
+  }
+
   /** One admission cycle against the durable state at
     * (`corpusPath`, `indexPath`). `indexPath` must hold a
-    * [[Dedup.minhashIndex]]-built index — either swap-written whole
-    * or persisted partitioned via [[Dedup.indexWritePartitioned]]
-    * (auto-detected; the fold then rewrites only dirty layout
-    * partitions); its embedded format version and build params are
-    * validated against this call's (mismatch throws rather than
-    * silently losing recall). Callable directly at batch cadence or
-    * per micro-batch via [[admitStream]]. */
+    * [[Dedup.minhashIndex]]-built index — either written whole or
+    * persisted partitioned via [[Dedup.indexWritePartitioned]] — or
+    * the manifest state an earlier cycle left there; its embedded
+    * format version and build params (skew cap included) are
+    * validated against this call's once, at adoption (mismatch throws
+    * before any write rather than silently losing recall). Each cycle
+    * commits once (object scaladoc). Callable directly at batch
+    * cadence or per micro-batch via [[admitStream]]. */
   def admitBatch(batch: DataFrame, corpusPath: String, indexPath: String,
                  idCol: String, textCol: String,
                  numHashes: Int = 64, bands: Int = 16,
@@ -224,31 +266,20 @@ object Admission {
                  dedupWithinBatch: Boolean = true,
                  batchId: Long = -1L,
                  collectStats: Boolean = true): AdmitStats =
-    admitCore(batch, corpusPath, indexPath, idCol, batchId,
+    lshCycle(batch, corpusPath, indexPath, idCol, batchId,
       dedupWithinBatch, collectStats,
-      screen = (fresh, corpus, index) =>
-        Dedup.minhashPairsAgainstIndex(fresh, corpus, index,
-          idCol, textCol, numHashes = numHashes, bands = bands,
-          shingleLen = shingleLen, threshold = threshold, seed = seed),
+      Dedup.minhashLsh(idCol, textCol, numHashes, bands, shingleLen, seed),
+      "admitBatch", maxBucketSize, threshold,
       dedupWithin = screened =>
         Dedup.minhashDedup(screened, idCol, textCol,
           numHashes = numHashes, bands = bands, shingleLen = shingleLen,
-          threshold = threshold),
-      fold = (index, admitted) =>
-        Dedup.minhashIndexUpdate(index, admitted, idCol, textCol,
-          numHashes = numHashes, bands = bands, shingleLen = shingleLen,
-          seed = seed, maxBucketSize = maxBucketSize),
-      foldInPlace = (path, admitted, idx) =>
-        Dedup.minhashIndexUpdatePartitioned(admitted.sparkSession, path,
-          admitted, idCol, textCol, numHashes = numHashes, bands = bands,
-          shingleLen = shingleLen, seed = seed,
-          maxBucketSize = maxBucketSize, preRead = Some(idx)))
+          threshold = threshold))
 
-  /** [[admitBatch]]'s embedding sibling: same skeleton, with the
-    * semantic screen ([[Dedup.embeddingPairsAgainstIndex]] over a
-    * persisted [[Dedup.embeddingIndex]]), within-batch near-dedup via
-    * embedding pairs + connected components (min-id representative),
-    * and [[Dedup.embeddingIndexUpdate]] as the fold. */
+  /** [[admitBatch]]'s embedding sibling: same skeleton and commit,
+    * with the semantic screen ([[Dedup.embeddingPairsAgainstIndex]]
+    * semantics over a persisted [[Dedup.embeddingIndex]]) and
+    * within-batch near-dedup via embedding pairs + connected
+    * components (min-id representative). */
   def admitBatchEmbedding(batch: DataFrame, corpusPath: String,
                           indexPath: String, idCol: String, vecCol: String,
                           dim: Int, nTables: Int = 8,
@@ -258,12 +289,10 @@ object Admission {
                           dedupWithinBatch: Boolean = true,
                           batchId: Long = -1L,
                           collectStats: Boolean = true): AdmitStats =
-    admitCore(batch, corpusPath, indexPath, idCol, batchId,
+    lshCycle(batch, corpusPath, indexPath, idCol, batchId,
       dedupWithinBatch, collectStats,
-      screen = (fresh, corpus, index) =>
-        Dedup.embeddingPairsAgainstIndex(fresh, corpus, index,
-          idCol, vecCol, dim, threshold = threshold, nTables = nTables,
-          bitsPerTable = bitsPerTable, seed = seed),
+      Dedup.embeddingLsh(idCol, vecCol, dim, nTables, bitsPerTable, seed),
+      "admitBatchEmbedding", maxBucketSize, threshold,
       dedupWithin = screened => {
         val pairs = Dedup.embeddingPairs(screened, idCol, vecCol, dim,
             threshold = threshold, nTables = nTables,
@@ -274,16 +303,7 @@ object Admission {
           .filter(col("id") =!= col("rep"))
           .withColumnRenamed("id", idCol).select(col(idCol))
         screened.join(drop, Seq(idCol), "left_anti")
-      },
-      fold = (index, admitted) =>
-        Dedup.embeddingIndexUpdate(index, admitted, idCol, vecCol, dim,
-          nTables = nTables, bitsPerTable = bitsPerTable, seed = seed,
-          maxBucketSize = maxBucketSize),
-      foldInPlace = (path, admitted, idx) =>
-        Dedup.embeddingIndexUpdatePartitioned(admitted.sparkSession, path,
-          admitted, idCol, vecCol, dim, nTables = nTables,
-          bitsPerTable = bitsPerTable, seed = seed,
-          maxBucketSize = maxBucketSize, preRead = Some(idx)))
+      })
 
   /** [[admitBatch]]'s SEMANTIC sibling (r13): the near screen is
     * cluster-blocked cosine against a persisted
@@ -309,9 +329,9 @@ object Admission {
                          dedupWithinBatch: Boolean = true,
                          batchId: Long = -1L,
                          collectStats: Boolean = true): AdmitStats = {
-    admitCore(batch, corpusPath, indexPath, idCol, batchId,
+    foldCycle(batch, corpusPath, indexPath, idCol, batchId,
       dedupWithinBatch, collectStats,
-      refuseInPlace = Some(("the SemDedup assignment index",
+      refusePartitioned = Some(("the SemDedup assignment index",
         "ids-only")),
       screen = (fresh, corpus, index) =>
         graft.operators.SemDedup.screenPairsIndexed(fresh, corpus,
@@ -323,11 +343,9 @@ object Admission {
       // this exact index frame this cycle (single-writer contract —
       // nothing can have changed between the two calls), so the
       // fold is the plain assign-the-batch append
-      fold = (index, admitted) => index.unionByName(
+      fold = (index, admitted) => swapWrite(index.unionByName(
         graft.operators.SemDedup.assignmentIndex(admitted, idCol,
-          vecCol, centers)),
-      foldInPlace = (_, _, _) => sys.error(
-        "unreachable: the partitioned layout is refused at entry"))
+          vecCol, centers)), indexPath))
   }
 
   /** [[admitBatch]]'s SIGNATURE sibling (r13) — the sixth admission
@@ -357,9 +375,9 @@ object Admission {
                           dedupWithinBatch: Boolean = true,
                           batchId: Long = -1L,
                           collectStats: Boolean = true): AdmitStats = {
-    admitCore(batch, corpusPath, indexPath, idCol, batchId,
+    foldCycle(batch, corpusPath, indexPath, idCol, batchId,
       dedupWithinBatch, collectStats,
-      refuseInPlace = Some(("the signature index", "narrow rows")),
+      refusePartitioned = Some(("the signature index", "narrow rows")),
       screen = (fresh, _, index) =>
         Dedup.signaturePairsAgainstIndex(fresh, index, idCol, sigCol,
             maxDistance, maxBucketSize)
@@ -367,11 +385,9 @@ object Admission {
       dedupWithin = screened =>
         Dedup.signatureDedup(screened, idCol, sigCol, maxDistance,
           maxBucketSize),
-      fold = (index, admitted) =>
+      fold = (index, admitted) => swapWrite(
         Dedup.signatureIndexUpdate(index, admitted, idCol, sigCol,
-          maxDistance),
-      foldInPlace = (_, _, _) => sys.error(
-        "unreachable: the partitioned layout is refused at entry"))
+          maxDistance), indexPath))
   }
 
   /** [[admitBatch]]'s substring sibling: the near screen is
@@ -427,7 +443,7 @@ object Admission {
         .filter(col("__cov") > col("__n") * maxDupCoverage)
         .select(col(idCol))
     }
-    admitCore(batch, corpusPath, indexPath, idCol, batchId,
+    foldCycle(batch, corpusPath, indexPath, idCol, batchId,
       dedupWithinBatch, collectStats,
       screen = (fresh, _, index) =>
         overCovered(fresh,
@@ -440,19 +456,16 @@ object Admission {
             SubstringDedup.duplicateSpans(screened, idCol, textCol, k,
               keepFirst = true, hashKeys = hashKeys)),
           Seq(idCol), "left_anti"),
-      fold = (_, _) => throw new IllegalStateException(
-        "unreachable: the substring loop always folds in place"),
-      foldInPlace = (path, admitted, _) => {
+      fold = (_, admitted) => {
         val spark = admitted.sparkSession
         SubstringDedup.gramIndexAppendInPlace(spark,
-          path, admitted, idCol, textCol, k, hashKeys)
+          indexPath, admitted, idCol, textCol, k, hashKeys)
         if (compactFileThreshold > 0 &&
-            SubstringDedup.gramIndexFileCount(spark, path)
+            SubstringDedup.gramIndexFileCount(spark, indexPath)
               > compactFileThreshold)
-          SubstringDedup.gramIndexCompact(spark, path, compactPartitions)
-        ()
-      },
-      forceInPlace = true)
+          SubstringDedup.gramIndexCompact(spark, indexPath,
+            compactPartitions)
+      })
   }
 
   /** Continuous admission: drains `stream` (Trigger.AvailableNow) and
@@ -576,16 +589,28 @@ object Admission {
     * its own files; a year of hourly batches is ~10k tiny files whose
     * listing/open overhead eventually dominates scans). Rewrites the
     * corpus into `partitions` files via the same staged swap the
-    * index writes use; row-preserving (returns the row count of the
-    * compacted corpus); run it between admission cycles under the
-    * same single-writer contract. At 100 TB compact incrementally —
+    * index writes use; row-preserving (returns the row count its own
+    * write observed); run it between admission cycles under the same
+    * single-writer contract. On manifest state (MinHash/embedding
+    * admission) it is safe because the manifest never names corpus
+    * files: cycles read the corpus directory, so the next cycle reads
+    * the compacted files, and its recovery touches only the hidden
+    * staging directory. It refuses while that directory holds a
+    * commit's unfinished moves (a crash after a rename) — the next
+    * admission cycle finishes them. At 100 TB compact incrementally —
     * per date/prefix partition — rather than rewriting the world. */
   def compactCorpus(spark: org.apache.spark.sql.SparkSession,
                     corpusPath: String, partitions: Int): Long = {
     require(partitions > 0, s"partitions must be positive, got $partitions")
-    swapWrite(spark.read.parquet(corpusPath).repartition(partitions),
-      corpusPath)
-    spark.read.parquet(corpusPath).count()
+    val staging = new Path(corpusPath, Staging)
+    require(!staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .exists(staging),
+      s"compactCorpus: $staging holds an interrupted admission commit — " +
+        "run the next admission cycle first, its recovery finishes it")
+    val rows = Observation()
+    swapWrite(spark.read.parquet(corpusPath).repartition(partitions)
+      .observe(rows, count(lit(1)).as("rows")), corpusPath)
+    rows.get("rows").asInstanceOf[Long]
   }
 
   /** [[swapWrite]] opened to the operator package so index-family
@@ -617,5 +642,281 @@ object Admission {
         s"swapWrite: could not move staging into place at $dest " +
           s"(previous index preserved at $old)")
     fs.delete(old, true)
+  }
+
+
+  /** The index of the MinHash/embedding state at (`corpusPath`,
+    * `indexPath`) as one merged, stamped frame — what a compaction
+    * would write. Recovers (or adopts) the state first, like a cycle;
+    * commits nothing. */
+  private[graft] def mergedIndex(spark: SparkSession, corpusPath: String,
+                                 indexPath: String): DataFrame = {
+    val st = new State(spark, corpusPath, indexPath)
+    val m = st.open("mergedIndex", Nil)
+    Dedup.lshCompact(st.indexRows(m), m.stamp)
+  }
+
+  // ---- manifest state (MinHash and embedding spaces) -------------------
+
+  /** manifests, relative to `indexPath` */
+  private val StateDir = "_graft_state"
+  /** each root's hidden staging directory: uncommitted files */
+  private val Staging = "_graft_staging"
+  /** the partitioned layout's delta directory (`part` -1 is never a
+    * layout partition) */
+  private val PartDeltas = "part=-1"
+  private val ManifestName = """v(\d+)\.json""".r
+
+  /** Called with the name of each commit step boundary as it passes:
+    * "corpus-staged", "index-staged", "before-rename", "after-rename".
+    * A no-op; tests throw from it to crash a commit at that step. */
+  @volatile private[graft] var stepHook: String => Unit = _ => ()
+
+  /** A commit's file operation, `from` relative to its root: a move
+    * to `to`, or a delete when `to` is empty. Replaying one is
+    * idempotent. */
+  private final case class FileOp(corpusSide: Boolean, from: String,
+                                  to: Option[String])
+
+  /** One committed version of the state. `base` and `deltas` are index
+    * files relative to `indexPath`; `stamp` is the index's validated
+    * stamp, typed by `indexSchema`; `pending` are the moves and deletes
+    * that follow the version's rename. */
+  private final case class Manifest(version: Long, corpusSchema: StructType,
+                                    indexSchema: StructType,
+                                    stamp: Seq[(String, Any)],
+                                    partitioned: Boolean, base: Seq[String],
+                                    deltas: Seq[String],
+                                    pending: Seq[FileOp]) {
+    def json: String = {
+      def value(v: Any): JValue = v match {
+        case i: Int => JInt(i)
+        case l: Long => JInt(l)
+        case d: Double => JDouble(d)
+        case b: Boolean => JBool(b)
+        case other => JString(other.toString)
+      }
+      def strings(xs: Seq[String]) = JArray(xs.map(JString(_)).toList)
+      JsonMethods.compact(JObject(
+        "version" -> JInt(version),
+        "corpusSchema" -> JString(corpusSchema.json),
+        "indexSchema" -> JString(indexSchema.json),
+        "stamp" -> JObject(stamp.map { case (k, v) => k -> value(v) }.toList),
+        "partitioned" -> JBool(partitioned),
+        "base" -> strings(base), "deltas" -> strings(deltas),
+        "pending" -> JArray(pending.map(op => JArray(List(
+          JString(if (op.corpusSide) "corpus" else "index"),
+          JString(op.from), op.to.fold[JValue](JNull)(JString(_))))).toList)))
+    }
+  }
+
+  private object Manifest {
+    def parse(text: String): Manifest = {
+      val j = JsonMethods.parse(text)
+      def strings(k: String) = (j \ k).values.asInstanceOf[List[String]]
+      val indexSchema =
+        DataType.fromJson((j \ "indexSchema").values.toString)
+          .asInstanceOf[StructType]
+      val stamp = j \ "stamp" match { case JObject(fs) => fs; case _ => Nil }
+      Manifest((j \ "version").values.asInstanceOf[BigInt].toLong,
+        DataType.fromJson((j \ "corpusSchema").values.toString)
+          .asInstanceOf[StructType],
+        indexSchema,
+        stamp.map { case (k, v) => k -> ((v, indexSchema(k).dataType) match {
+          case (JInt(n), IntegerType) => n.toInt
+          case (JInt(n), LongType) => n.toLong
+          case (other, _) => other.values
+        }) },
+        (j \ "partitioned").values == true, strings("base"), strings("deltas"),
+        (j \ "pending").values.asInstanceOf[List[List[String]]]
+          .map(op => FileOp(op.head == "corpus", op(1), Option(op(2)))))
+    }
+  }
+
+  /** The file side of a MinHash/embedding admission state: manifests,
+    * recovery, reads, commits and compaction. Holds no state between
+    * cycles — every cycle reads the newest manifest afresh. */
+  private final class State(spark: SparkSession, corpusPath: String,
+                            indexPath: String) {
+    private val conf = spark.sparkContext.hadoopConfiguration
+    private val (cRoot, iRoot) = (new Path(corpusPath), new Path(indexPath))
+    private val (cFs, iFs) = (cRoot.getFileSystem(conf), iRoot.getFileSystem(conf))
+    private val stateDir = new Path(iRoot, StateDir)
+
+    /** the newest manifest after recovery, or the state adopted (as
+      * version 0) when there is none; its stamp checked against
+      * `asked` */
+    def open(what: String, asked: Seq[(String, Any)]): Manifest = {
+      val latest = newest()
+      recover(latest)
+      latest match {
+        case Some(m) => Dedup.requireAsked(m.stamp.toMap, what, asked); m
+        case None => adopt(what, asked)
+      }
+    }
+
+    /** the newest committed manifest; superseded manifests and
+      * uncommitted temp files are deleted */
+    private def newest(): Option[Manifest] = {
+      val names = if (iFs.exists(stateDir))
+        iFs.listStatus(stateDir).map(_.getPath.getName).toSeq else Nil
+      val last = names.collect { case ManifestName(v) => v.toLong }.maxOption
+      names.filterNot(n => last.exists(v => n == s"v$v.json"))
+        .foreach(n => iFs.delete(new Path(stateDir, n), false))
+      last.map { v =>
+        val in = iFs.open(new Path(stateDir, s"v$v.json"))
+        try Manifest.parse(new String(in.readAllBytes(), UTF_8))
+        finally in.close()
+      }
+    }
+
+    /** Redo and garbage collection, before anything reads: a staging
+      * directory survives only an interrupted cycle. The committed
+      * version's moves and deletes are replayed, then every staged
+      * file and every visible delta file no manifest names is
+      * deleted. */
+    private def recover(m: Option[Manifest]): Unit = {
+      val stages = Seq(cFs -> new Path(cRoot, Staging),
+        iFs -> new Path(iRoot, Staging))
+      if (stages.exists { case (fs, p) => fs.exists(p) }) {
+        m.foreach(m => applyOps(m.pending))
+        val named = m.toSeq.flatMap(m => m.base ++ m.deltas).toSet
+        for ((dir, prefix) <- Seq(iRoot -> "", new Path(iRoot, PartDeltas) ->
+               s"$PartDeltas/") if iFs.exists(dir);
+             st <- iFs.listStatus(dir)
+             if st.isFile && st.getPath.getName.startsWith("delta-") &&
+               !named(prefix + st.getPath.getName))
+          iFs.delete(st.getPath, false)
+        stages.foreach { case (fs, p) => fs.delete(p, true) }
+      }
+    }
+
+    /** No manifest yet: one listing and one stamp validation of the
+      * index, and the corpus schema, as every cycle paid before. */
+    private def adopt(what: String, asked: Seq[(String, Any)]): Manifest = {
+      val index = spark.read.parquet(indexPath)
+      val stamp = Dedup.validatedStamp(index, what, asked)
+        .getOrElse(asked.toMap)
+      val schema = StructType(index.schema.filterNot(_.name == "part"))
+      val root = iFs.makeQualified(iRoot).toUri
+      Manifest(0, spark.read.parquet(corpusPath).schema, schema,
+        schema.fieldNames.toSeq.flatMap(k => stamp.get(k).map(k -> _)),
+        index.columns.contains("part"),
+        index.inputFiles.toSeq
+          .map(f => root.relativize(new java.net.URI(f)).getPath).sorted,
+        Nil, Nil)
+    }
+
+    def corpus(m: Manifest): DataFrame =
+      spark.read.schema(m.corpusSchema).parquet(corpusPath)
+
+    /** base ∪ delta rows, stamp columns included */
+    def indexRows(m: Manifest): DataFrame = {
+      val files = (m.base ++ m.deltas).map(new Path(iRoot, _).toString)
+      if (files.isEmpty)
+        spark.createDataFrame(java.util.List.of[Row](), m.indexSchema)
+      else spark.read.schema(m.indexSchema).parquet(files: _*)
+    }
+
+    /** due when the next read would list more files than Spark lists
+      * without a job — or, for a base already past that, once the
+      * deltas outnumber the base files */
+    def compactionDue(m: Manifest): Boolean = {
+      val limit = spark.conf
+        .get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt
+      m.deltas.nonEmpty &&
+        m.deltas.size >= math.max(limit - m.base.size, m.base.size)
+    }
+
+    /** Fold the deltas into a new base in the state's layout, as its
+      * own commit. The new base moves in, then the old base and the
+      * deltas are deleted, deltas last: a plain read sees deltas (and
+      * fails validation) until the base it sees is the new one. */
+    def compact(m: Manifest): Manifest = {
+      val v = m.version + 1
+      val stage = s"$Staging/v$v"
+      val merged = Dedup.lshCompact(indexRows(m), m.stamp)
+      val out = new Path(iRoot, stage)
+      if (m.partitioned)
+        Dedup.indexWritePartitioned(merged, out.toString,
+          m.stamp.collectFirst { case ("__numParts", n: Int) => n }
+            .getOrElse(m.base.map(_.takeWhile(_ != '/')).distinct.size))
+      else merged.write.parquet(out.toString)
+      val base = dataFiles(iFs, out)
+      val next = m.copy(version = v, base = base, deltas = Nil,
+        pending = base.map(f => FileOp(false, s"$stage/$f", Some(f))) ++
+          (m.base ++ m.deltas).map(FileOp(false, _, None)))
+      commit(next)
+      next.copy(pending = Nil)
+    }
+
+    /** One cycle's commit: the admitted rows staged hidden under the
+      * corpus, their uncapped bucket rows moved in beside the index
+      * base (visible, but failing any plain read's validation), then
+      * the manifest rename, then the corpus files' moves. */
+    def commitDelta(m: Manifest, f: Dedup.Lsh, admitted: DataFrame): Unit = {
+      val v = m.version + 1
+      val stage = s"$Staging/v$v"
+      admitted.write.parquet(new Path(cRoot, stage).toString)
+      val moves = dataFiles(cFs, new Path(cRoot, stage))
+        .map(n => FileOp(true, s"$stage/$n", Some(n)))
+      stepHook("corpus-staged")
+      val out = new Path(iRoot, stage)
+      Dedup.lshDelta(f, admitted, m.stamp).coalesce(1)
+        .write.parquet(out.toString)
+      val dir = if (m.partitioned) s"$PartDeltas/" else ""
+      val deltas = dataFiles(iFs, out).map { n =>
+        val to = s"${dir}delta-v$v-$n"
+        move(iFs, new Path(out, n), new Path(iRoot, to))
+        to
+      }
+      stepHook("index-staged")
+      commit(m.copy(version = v, deltas = m.deltas ++ deltas, pending = moves))
+    }
+
+    /** write `next` to a temp file and rename it to its version's
+      * manifest — the commit point — then apply its file operations,
+      * drop both staging directories and the superseded manifest */
+    def commit(next: Manifest): Unit = {
+      val tmp = new Path(stateDir, s".v${next.version}.json.tmp")
+      val out = iFs.create(tmp, true)
+      try out.write(next.json.getBytes(UTF_8)) finally out.close()
+      stepHook("before-rename")
+      val dest = new Path(stateDir, s"v${next.version}.json")
+      if (iFs.exists(dest) || !iFs.rename(tmp, dest))
+        throw new IllegalStateException(s"admission commit: $dest exists " +
+          "or could not be created — another writer committed this version")
+      stepHook("after-rename")
+      applyOps(next.pending)
+      cFs.delete(new Path(cRoot, Staging), true)
+      iFs.delete(new Path(iRoot, Staging), true)
+      iFs.delete(new Path(stateDir, s"v${next.version - 1}.json"), false)
+    }
+
+    private def applyOps(ops: Seq[FileOp]): Unit = ops.foreach { op =>
+      val (fs, root) = if (op.corpusSide) (cFs, cRoot) else (iFs, iRoot)
+      val from = new Path(root, op.from)
+      op.to match {
+        case Some(to) => if (fs.exists(from)) move(fs, from, new Path(root, to))
+        case None => fs.delete(from, false)
+      }
+    }
+
+    private def move(fs: FileSystem, from: Path, to: Path): Unit = {
+      fs.mkdirs(to.getParent)
+      if (!fs.rename(from, to))
+        throw new IllegalStateException(s"admission commit: could not " +
+          s"move $from to $to")
+    }
+
+    /** the visible data files under `dir`, relative to it */
+    private def dataFiles(fs: FileSystem, dir: Path): Seq[String] =
+      fs.listStatus(dir).toSeq.flatMap { st =>
+        val n = st.getPath.getName
+        if (n.startsWith("_") || n.startsWith(".")) Nil
+        else if (st.isDirectory)
+          dataFiles(fs, st.getPath).map(f => s"$n/$f")
+        else Seq(n)
+      }.sorted
   }
 }

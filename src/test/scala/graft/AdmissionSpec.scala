@@ -38,6 +38,13 @@ class AdmissionSpec extends SparkTestBase {
   private def corpusIds(c: String): Seq[Long] =
     spark.read.parquet(c).select($"doc_id").as[Long].collect().sorted.toSeq
 
+  /** (band, bucket) -> (sorted ids, n) of a MinHash index frame */
+  private def buckets(df: DataFrame) = df
+    .drop(df.columns.filter(_.startsWith("__")): _*)
+    .collect()
+    .map(r => ((r.get(0), r.get(1)),
+      (r.getSeq[Long](2).sorted, r.getLong(3)))).toMap
+
   test("two admission cycles: screens, appends, and index fold") {
     val (c, i) = setup()
     val batch1 = Seq(
@@ -68,12 +75,12 @@ class AdmissionSpec extends SparkTestBase {
       .forall(spark.read.parquet(i).columns.contains))
   }
 
-  test("partitioned index: same admissions, in-place fold == swap fold") {
+  test("partitioned index: same admissions, same merged index as flat") {
     // run the EXACT two-cycle scenario above against a PARTITIONED
-    // index persist: admitCore must detect the layout, fold each
-    // cycle in place, and land the identical corpus, stats, and
-    // bucket table (read back from disk, compared bucket-for-bucket
-    // against the swap-path index)
+    // index persist: both layouts must land the identical corpus and
+    // stats, and their merged indexes (base + deltas, read through the
+    // state) must equal each other and a rebuild over the final
+    // corpus, bucket for bucket
     val (cSwap, iSwap) = setup()
     val corpusDir = Files.createTempDirectory("graft_adm_cp").toString
     val indexDir = Files.createTempDirectory("graft_adm_ip").toString + "/idx"
@@ -97,16 +104,11 @@ class AdmissionSpec extends SparkTestBase {
         == Admission.AdmitStats(2L, 2L, 2L, 1L))
       assert(corpusIds(c) == ((0L until 40L) ++ Seq(100L, 101L, 103L, 201L)))
     }
-    def buckets(path: String) = {
-      val df = spark.read.parquet(path)
-      df.drop("part")
-        .drop(df.columns.filter(_.startsWith("__")): _*)
-        .collect()
-        .map(r => ((r.get(0), r.get(1)),
-          (r.getSeq[Long](2).sorted, r.getLong(3)))).toMap
-    }
-    assert(buckets(indexDir) == buckets(iSwap))
-    // and the in-place path really kept the partitioned layout
+    val merged = buckets(Admission.mergedIndex(spark, corpusDir, indexDir))
+    assert(merged == buckets(Admission.mergedIndex(spark, cSwap, iSwap)))
+    assert(merged == buckets(Dedup.minhashIndex(spark.read.parquet(corpusDir),
+      "doc_id", "text", numHashes = 64, bands = 32)))
+    // and the partitioned state really kept its layout
     assert(spark.read.parquet(indexDir).columns.contains("part"))
   }
 
@@ -193,13 +195,14 @@ class AdmissionSpec extends SparkTestBase {
     assert(corpusIds(c) == ((0L until 40L) :+ 100L))
   }
 
-  test("partitioned cycle after a fold: <= 7 SQL executions, no stamp re-validation") {
+  test("steady-state cycle: <= 5 SQL executions, no inference, listing or stamp job") {
     // the benchmark/catalog admission shape: partitioned MinHash index,
     // bands 32, threshold 0.6, no within-batch pass, no batch count.
-    // Cycle 1's fold registers the files it wrote with the stamp it
-    // validated, so cycle 2's screen and fold validate without a job:
-    // id screen, screen checkpoint, admitted checkpoint, corpus
-    // append, dirty collect, merge checkpoint, index write.
+    // Cycle 1 adopts the state: the plain reads' schema inference and
+    // listing, and the one stamp validation. Cycle 2 reads through its
+    // manifest: id screen, screen checkpoint, admitted checkpoint,
+    // corpus delta write, index delta write — and nothing outside
+    // those executions.
     val corpusDir = Files.createTempDirectory("graft_adm_cx").toString
     val indexDir = Files.createTempDirectory("graft_adm_ix").toString + "/idx"
     corpusDf.write.mode("overwrite").parquet(corpusDir)
@@ -211,24 +214,34 @@ class AdmissionSpec extends SparkTestBase {
       Admission.admitBatch(b, corpusDir, indexDir, "doc_id", "text",
         numHashes = 64, bands = 32, threshold = 0.6,
         dedupWithinBatch = false, batchId = id, collectStats = false)
-    val s1 = cycle(Seq(100L -> freshText("n100"), 101L -> freshText("n101"),
-      102L -> freshText("c0")).toDF("doc_id", "text"), 1L)
+    var s1: Admission.AdmitStats = null
+    val adoption = jobsOutsideSqlDuring {
+      s1 = cycle(Seq(100L -> freshText("n100"), 101L -> freshText("n101"),
+        102L -> freshText("c0")).toDF("doc_id", "text"), 1L)
+    }
     assert(s1.admitted == 2L)
+    // the detector sees the adoption's inference jobs
+    assert(adoption.exists(_.startsWith("parquet at")), adoption.toString)
     var s2: Admission.AdmitStats = null
-    val execs = sqlExecutionsDuring {
-      s2 = cycle(Seq(200L -> (freshText("n100") + " k"),
-        201L -> freshText("n201"), 0L -> freshText("c0"))
-        .toDF("doc_id", "text"), 2L)
+    var execs: Seq[String] = Nil
+    val outside = jobsOutsideSqlDuring {
+      execs = sqlExecutionsDuring {
+        s2 = cycle(Seq(200L -> (freshText("n100") + " k"),
+          201L -> freshText("n201"), 0L -> freshText("c0"))
+          .toDF("doc_id", "text"), 2L)
+      }
     }
     assert(s2 == Admission.AdmitStats(2L, -1L, 2L, 1L))
     assert(corpusIds(corpusDir) ==
       ((0L until 40L) ++ Seq(100L, 101L, 201L)))
     def heads = execs.map(_.linesIterator.slice(1, 4).mkString(" | "))
       .mkString("\n  ")
-    assert(execs.size <= 7,
+    assert(execs.size <= 5,
       s"cycle 2 started ${execs.size} SQL executions:\n  $heads")
     assert(stampScans(execs).isEmpty,
       s"cycle 2 re-read the index stamp:\n  $heads")
+    assert(outside.isEmpty,
+      s"cycle 2 ran jobs outside SQL executions: ${outside.mkString(", ")}")
   }
 
   test("compactCorpus collapses per-batch append files, row-preserving") {
@@ -243,6 +256,159 @@ class AdmissionSpec extends SparkTestBase {
     assert(n == before.size)
     assert(partFiles <= 2)
     assert(corpusIds(c) == before)
+    // the next cycle reads the compacted corpus, not a stale listing:
+    // an id replay, a near-dup of a pre-compaction admission and a
+    // fresh doc
+    val s = admit(Seq(100L -> freshText("n100"),
+        200L -> (freshText("n101") + " k"), 201L -> freshText("n201"))
+      .toDF("doc_id", "text"), c, i)
+    assert(s.afterIdScreen == 2L && s.admitted == 1L)
+    assert(corpusIds(c) == before :+ 201L)
+    // a commit interrupted after its rename leaves moves to finish:
+    // compaction refuses until a cycle's recovery has done them
+    Admission.stepHook = step =>
+      if (step == "after-rename") throw new RuntimeException("crash")
+    try intercept[RuntimeException](
+      admit(Seq(300L -> freshText("n300")).toDF("doc_id", "text"), c, i))
+    finally Admission.stepHook = _ => ()
+    intercept[IllegalArgumentException](Admission.compactCorpus(spark, c, 2))
+    assert(admit(Seq(300L -> freshText("n300")).toDF("doc_id", "text"), c, i)
+      .admitted == 0L)
+    assert(Admission.compactCorpus(spark, c, 2) == before.size + 2)
+    assert(corpusIds(c) == before ++ Seq(201L, 300L))
+  }
+
+  /** a fresh corpus + MinHash index, flat or partitioned in 2 parts */
+  private def world(partitioned: Boolean): (String, String) = {
+    val c = Files.createTempDirectory("graft_adm_w_c").toString
+    val i = Files.createTempDirectory("graft_adm_w_i").toString + "/idx"
+    corpusDf.write.mode("overwrite").parquet(c)
+    val idx = Dedup.minhashIndex(corpusDf, "doc_id", "text",
+      numHashes = 64, bands = 32)
+    if (partitioned) Dedup.indexWritePartitioned(idx, i, numParts = 2)
+    else idx.write.mode("overwrite").parquet(i)
+    (c, i)
+  }
+
+  private def rowsOf(c: String): Seq[(Long, String)] =
+    spark.read.parquet(c).select($"doc_id", $"text").as[(Long, String)]
+      .collect().sorted.toSeq
+
+  /** the index files a plain read of `i` sees */
+  private def visibleIndexFiles(i: String): Seq[String] = {
+    val root = new java.io.File(i)
+    root.listFiles().toSeq.flatMap(f =>
+      if (f.isDirectory && !f.getName.startsWith("_"))
+        f.listFiles().toSeq.map(g => s"${f.getName}/${g.getName}")
+      else Seq(f.getName))
+      .filterNot(n => n.split('/').last.matches("[_.].*"))
+  }
+
+  test("a commit crashed at any step replays to the uninterrupted state") {
+    // cycle 2 crashes at each step boundary of its commit, is replayed
+    // and followed by cycle 3; the result must be the uninterrupted
+    // run's: plain corpus read row for row, merged index bucket for
+    // bucket, cycle 3's near-dup of a cycle-2 admission dropped, and
+    // nothing staged left behind
+    val b1 = Seq(100L -> freshText("n100"), 101L -> freshText("n101"),
+      102L -> freshText("c0")).toDF("doc_id", "text")
+    val b2 = Seq(200L -> freshText("n200"), 201L -> freshText("n201"),
+      202L -> (freshText("n100") + " k")).toDF("doc_id", "text")
+    val b3 = Seq(300L -> (freshText("n200") + " k"),
+      301L -> freshText("n301")).toDF("doc_id", "text")
+    def run(c: String, i: String, b: DataFrame, id: Long) =
+      Admission.admitBatch(b, c, i, "doc_id", "text", numHashes = 64,
+        bands = 32, threshold = 0.6, dedupWithinBatch = false,
+        batchId = id)
+    val reference = Seq(true, false).map { p =>
+      val (c, i) = world(p)
+      Seq(b1, b2, b3).zipWithIndex.foreach { case (b, n) => run(c, i, b, n) }
+      p -> (rowsOf(c), buckets(Admission.mergedIndex(spark, c, i)),
+        visibleIndexFiles(i).size)
+    }.toMap
+    val steps = Seq("corpus-staged", "index-staged", "before-rename",
+      "after-rename")
+    for ((step, partitioned) <- steps.zip(Seq(true, false, false, true))) {
+      val (c, i) = world(partitioned)
+      assert(run(c, i, b1, 0).admitted == 2L)
+      val cycle1 = rowsOf(c)
+      Admission.stepHook = s =>
+        if (s == step) throw new RuntimeException(s"crash at $s")
+      val e = try intercept[RuntimeException](run(c, i, b2, 1))
+        finally Admission.stepHook = _ => ()
+      assert(e.getMessage == s"crash at $step")
+      // plain reads after the crash: the previous corpus version, and
+      // an index read that fails validation rather than answer stale
+      assert(rowsOf(c) == cycle1, step)
+      val plain = intercept[IllegalArgumentException](
+        Dedup.minhashPairsAgainstIndex(b3, spark.read.parquet(c),
+          spark.read.parquet(i), "doc_id", "text", numHashes = 64,
+          bands = 32, threshold = 0.6))
+      assert(plain.getMessage.contains("admission delta rows"))
+      val replay = run(c, i, b2, 1)
+      assert(replay.admitted == (if (step == "after-rename") 0L else 2L),
+        s"$step: $replay")
+      assert(run(c, i, b3, 2).admitted == 1L, step)
+      val (refRows, refIndex, refFiles) = reference(partitioned)
+      val rows = rowsOf(c)
+      assert(rows == refRows, step)
+      assert(rows.map(_._1).distinct.size == rows.size, step)
+      assert(buckets(Admission.mergedIndex(spark, c, i)) == refIndex, step)
+      for (root <- Seq(c, i))
+        assert(!new java.io.File(root, "_graft_staging").exists(), step)
+      assert(new java.io.File(i, "_graft_state").list().toSeq
+        .filterNot(_.endsWith(".crc")) == Seq("v3.json"), step)
+      assert(visibleIndexFiles(i).size == refFiles, step)
+    }
+  }
+
+  test("compaction near the listing threshold: answers unchanged, plain reads exact") {
+    // the deltas fold into the base once a read would name more files
+    // than the listing threshold, set here to the base's file count
+    // plus `room`: the partitioned base (2 files, room 2) compacts at
+    // cycles 3 and 5, the flat one (room 4) at cycle 5
+    val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    val batches = (1 to 4).map { n =>
+      Seq((1000L + n) -> freshText(s"t$n"),
+        (2000L + n) -> (freshText(s"t${n - 1}") + " k"))
+        .toDF("doc_id", "text")
+    }
+    def cycles(c: String, i: String): Seq[Admission.AdmitStats] =
+      (batches :+ batches.last).zipWithIndex.map { case (b, n) =>
+        Admission.admitBatch(b, c, i, "doc_id", "text", numHashes = 64,
+          bands = 32, threshold = 0.6, dedupWithinBatch = false,
+          batchId = n)
+      }
+    def deltas(i: String) =
+      visibleIndexFiles(i).count(_.split('/').last.startsWith("delta-"))
+    for ((partitioned, room) <- Seq((true, 2), (false, 4))) {
+      val (rc, ri) = world(partitioned)
+      val expected = cycles(rc, ri)
+      val (c, i) = world(partitioned)
+      val baseFiles = visibleIndexFiles(i).size
+      assert(baseFiles <= room, s"base of $baseFiles files")
+      spark.conf.set(key, (baseFiles + room).toString)
+      val got = try cycles(c, i) finally spark.conf.unset(key)
+      assert(got == expected)
+      assert(expected.map(_.admitted) == Seq(2L, 1L, 1L, 1L, 0L))
+      assert(rowsOf(c) == rowsOf(rc))
+      val rebuilt = buckets(Dedup.minhashIndex(spark.read.parquet(c),
+        "doc_id", "text", numHashes = 64, bands = 32))
+      assert(buckets(Admission.mergedIndex(spark, c, i)) == rebuilt)
+      assert(buckets(Admission.mergedIndex(spark, rc, ri)) == rebuilt)
+      // the last (replayed) cycle compacted and admitted nothing: the
+      // state is one base again, in its layout, and a plain read is
+      // the exact index; the uncompacted state's plain read refuses
+      assert(deltas(i) == 0 && deltas(ri) == 4, s"partitioned=$partitioned")
+      assert(spark.read.parquet(i).columns.contains("part") == partitioned)
+      assert(buckets(spark.read.parquet(i).drop("part")) == rebuilt)
+      def screen(idx: String) = Dedup.minhashPairsAgainstIndex(
+        batches.head, spark.read.parquet(c), spark.read.parquet(idx),
+        "doc_id", "text", numHashes = 64, bands = 32, threshold = 0.6)
+        .count()
+      assert(screen(i) == 2L) // both docs of batch 1 match themselves
+      intercept[IllegalArgumentException](screen(ri))
+    }
   }
 
   test("embedding admission loop: screens, appends, and index fold") {

@@ -586,6 +586,76 @@ class DedupSpec extends SparkTestBase {
     }
   }
 
+  test("fold sequences: merged, compacted and rebuilt screens agree, both families") {
+    // an admission state's index is a base plus uncapped delta rows;
+    // over random batch sequences and adversarial caps (1 keeps only
+    // singleton buckets alive) the merged screen, the screen over the
+    // compacted index and the screen over a rebuild must agree, and
+    // the compaction must BE the rebuild, dead buckets included
+    import org.apache.spark.sql.DataFrame
+    val rnd = new scala.util.Random(20261019)
+    def split(df: DataFrame, id: String, k: Int): Seq[DataFrame] = {
+      val part = df.select(col(id)).as[Long].collect()
+        .map(i => i -> rnd.nextInt(k + 1)).toMap
+      (0 to k).map(p => df.filter(col(id).isin(
+        part.collect { case (i, q) if q == p => i }.toSeq: _*)))
+    }
+    def buckets(df: DataFrame) = df
+      .drop(df.columns.filter(_.startsWith("__")): _*)
+      .collect().map(r => r.toSeq.dropRight(2) ->
+        (r.getSeq[Long](r.length - 2).sorted, r.getLong(r.length - 1)))
+      .toMap
+    def pairs(df: DataFrame) = df.select($"id_new", $"id_corpus").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val mhProbe = corpus.filter($"doc_id" % 37 === 0)
+      .select(($"doc_id" + 50000).as("doc_id"), concat($"text", lit(" qq")))
+      .toDF("doc_id", "text")
+    for ((cap, k) <- Seq((1, 1), (2, 3), (3, 2), (1000, 4))) {
+      val f = Dedup.minhashLsh("doc_id", "text", 64, 32, 3, 42L)
+      val parts = split(corpus, "doc_id", k)
+      val stampCols = Dedup.withCap(f.params, cap)
+      val rows = parts.tail.foldLeft(Dedup.minhashIndex(parts.head, "doc_id",
+          "text", numHashes = 64, bands = 32, maxBucketSize = cap)) {
+        (acc, b) => acc.unionByName(Dedup.lshDelta(f, b, stampCols))
+      }.localCheckpoint()
+      val compacted = Dedup.lshCompact(rows, stampCols)
+      val rebuilt = Dedup.minhashIndex(corpus, "doc_id", "text",
+        numHashes = 64, bands = 32, maxBucketSize = cap)
+      assert(buckets(compacted) == buckets(rebuilt), s"cap=$cap k=$k")
+      def screen(idx: DataFrame) = pairs(Dedup.minhashPairsAgainstIndex(
+        mhProbe, corpus, idx, "doc_id", "text", numHashes = 64, bands = 32,
+        threshold = 0.6))
+      val merged = pairs(Dedup.lshScreen(f, mhProbe, corpus, rows, 0.6,
+        broadcastNew = true, mergeCap = Some(cap)))
+      assert(merged == screen(compacted) && merged == screen(rebuilt),
+        s"cap=$cap k=$k")
+      if (cap == 1000) assert(merged.nonEmpty)
+      // base + deltas read plainly fail validation, never answer
+      val e = intercept[IllegalArgumentException](screen(rows))
+      assert(e.getMessage.contains("admission delta rows"), e.getMessage)
+    }
+    for ((cap, k) <- Seq((1, 2), (2, 3), (10000, 1))) {
+      val f = Dedup.embeddingLsh("vec_id", "embedding", 64, 8, 16, 42L)
+      val parts = split(embCorpus, "vec_id", k)
+      val stampCols = Dedup.withCap(f.params, cap)
+      val rows = parts.tail.foldLeft(Dedup.embeddingIndex(parts.head,
+          "vec_id", "embedding", dim = 64, maxBucketSize = cap)) {
+        (acc, b) => acc.unionByName(Dedup.lshDelta(f, b, stampCols))
+      }.localCheckpoint()
+      val compacted = Dedup.lshCompact(rows, stampCols)
+      val rebuilt = Dedup.embeddingIndex(embCorpus, "vec_id", "embedding",
+        dim = 64, maxBucketSize = cap)
+      assert(buckets(compacted) == buckets(rebuilt), s"cap=$cap k=$k")
+      def screen(idx: DataFrame) = pairs(Dedup.embeddingPairsAgainstIndex(
+        embBatch, embCorpus, idx, "vec_id", "embedding", dim = 64))
+      val merged = pairs(Dedup.lshScreen(f, embBatch, embCorpus, rows, 0.95,
+        broadcastNew = true, mergeCap = Some(cap)))
+      assert(merged == screen(compacted) && merged == screen(rebuilt),
+        s"cap=$cap k=$k")
+      if (cap == 10000) assert(merged == cosTruth(0.95))
+    }
+  }
+
   test("exactAgainst escape hatch: broadcastBatch=false shuffles both joins") {
     val hist = Seq((1L, "a"), (2L, "b")).toDF("id", "k")
     val batch = Seq((10L, "a"), (11L, "c")).toDF("id", "k")

@@ -70,6 +70,27 @@ abstract class SparkTestBase extends AnyFunSuite {
     seen.asScala.toSeq
   }
 
+  /** The first stage names of the jobs `body` starts OUTSIDE any SQL
+    * execution — parquet schema inference ("parquet at …") and
+    * parallel file listing run as such bare jobs; an operator's own
+    * queries never do. */
+  def jobsOutsideSqlDuring(body: => Unit): Seq[String] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties)
+            .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+            .isEmpty)
+          seen.add(j.stageInfos.headOption.fold("?")(_.name))
+    }
+    spark.sparkContext.addSparkListener(l)
+    try { body; Thread.sleep(1000) /* listener bus is async */ }
+    finally spark.sparkContext.removeSparkListener(l)
+    import scala.jdk.CollectionConverters._
+    seen.asScala.toSeq
+  }
+
   /** the executions among `plans` that scan an LSH index's stamp:
     * the every-tuple validation aggregates on the `__` param columns
     * (in no fixed order), the fold's standalone stamp read is a
