@@ -259,11 +259,20 @@ object GramExpressions {
     * (ascending), every length-n code-point substring's md5 bucket,
     * positions ascending — exactly `concat(transform(sequence(1,
     * len-(n-1)), i => bucketOf(substr(t, i, n), m)) for n in ..)`
-    * with the when(length >= n) empty guard. Substrings use
-    * UTF8String.substringSQL — the Substring expression's own kernel
-    * — so code-point semantics are Spark's to the byte. Null → null
-    * (the column spec maps null text to an empty array via its outer
-    * bound(lower(text)); callers keep that coalesce). */
+    * with the when(length >= n) empty guard. One walk per row, linear
+    * in the text: the bytes are fetched once and one pass records
+    * each code point's starting byte offset, stepping with
+    * UTF8String.numBytesForFirstByte — the stepping numChars and
+    * substring use — so the code-point count and each gram's byte
+    * range [off(i), off(i+n)) are exactly what substr(t, i+1, n)
+    * copies; each gram streams that range into the thread's digest
+    * without building a string. The last offset is clamped to the
+    * text's length: on a truncated multi-byte tail substring's copy
+    * runs past the value's last byte, this kernel hashes only the
+    * value's own bytes (lower() re-encodes malformed input, so the
+    * operator path never sees one). Null → null (the column spec maps
+    * null text to an empty array via its outer bound(lower(text));
+    * callers keep that coalesce). */
   case class CharGramBuckets(child: Expression, nMin: Int, nMax: Int,
                              m: Int)
       extends UnaryExpression {
@@ -274,22 +283,33 @@ object GramExpressions {
     override def dataType: DataType =
       ArrayType(LongType, containsNull = false)
     def compute(v: UTF8String): ArrayData = {
-      val len = v.numChars()
+      val bytes = v.getBytes
+      val numBytes = bytes.length
+      // off(k) = byte offset of code point k; off(len) = end
+      val off = new Array[Int](numBytes + 1)
+      var len = 0
+      var p = 0
+      while (p < numBytes) {
+        off(len) = p
+        len += 1
+        p += UTF8String.numBytesForFirstByte(bytes(p))
+      }
+      off(len) = math.min(p, numBytes)
       var total = 0
       var n = nMin
       while (n <= nMax) { if (len >= n) total += len - n + 1; n += 1 }
       val out = new Array[Long](total)
+      val d = md.get()
+      d.reset()
       var o = 0
       n = nMin
       while (n <= nMax) {
-        if (len >= n) {
-          var i = 1
-          val hi = len - n + 1
-          while (i <= hi) {
-            out(o) = md5Bucket(v.substringSQL(i, n), m)
-            o += 1
-            i += 1
-          }
+        var i = 0
+        while (i + n <= len) {
+          d.update(bytes, off(i), off(i + n) - off(i))
+          out(o) = prefix60(d.digest()) % m
+          o += 1
+          i += 1
         }
         n += 1
       }

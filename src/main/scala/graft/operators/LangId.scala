@@ -38,12 +38,18 @@ import graft.functions.TextFunctions
   * shuffles and zero joins — the model collects to the driver
   * (bounded: langs × m ≤ [[LangId.MaxServedCells]] cells), becomes
   * per-language literal arrays, and every document scores in one
-  * whole-stage-codegen projection over the scan: score(l) =
-  * Σ_grams log_prob[l][bucket(gram)], argmax with ties to the
+  * projection over the scan: score(l) = Σ_grams
+  * log_prob[l][bucket(gram)], argmax with ties to the
   * lexicographically largest language (array_max over (score, lang)
   * structs — deterministic, SQL-replayable). Prediction is the
   * per-doc argmax of a shared gram multiset, so no per-language
-  * length normalization is needed.
+  * length normalization is needed. That projection is NOT
+  * whole-stage-codegen'd: [[TextFunctions.bound]] is a `transform`
+  * HOF, a CodegenFallback, so the executed plan shows the scoring
+  * `Project` without the `*` prefix and Spark evaluates it row by
+  * row through `eval`. The per-row work inside it is the native
+  * CharGramBuckets walk (linear in the text) plus one BucketScore
+  * pass per language.
   */
 object LangId {
 
@@ -95,12 +101,12 @@ object LangId {
     pmod(graft.expressions.TextExpressions.md5Prefix(g, 15),
       lit(m.toLong))
 
-  /** r19: one native kernel pass (CharGramBuckets — substringSQL +
-    * streaming digest per gram instead of the interpreted charGrams
-    * transform + md5 chain). Null text maps to an EMPTY bucket array
-    * via the coalesce, exactly like charGrams' bound(lower(null))
-    * path; value-identity vs [[bucketArrHof]] is pinned in
-    * GramExpressionsSpec. */
+  /** r19: one native kernel pass (CharGramBuckets — one code-point
+    * offset walk + a streaming digest per gram instead of the
+    * interpreted charGrams transform + md5 chain). Null text maps to
+    * an EMPTY bucket array via the coalesce, exactly like charGrams'
+    * bound(lower(null)) path; value-identity vs [[bucketArrHof]] is
+    * pinned in GramExpressionsSpec. */
   private[graft] def bucketArr(text: Column, m: Int, nMin: Int,
                                nMax: Int): Column =
     coalesce(
@@ -246,8 +252,9 @@ object LangId {
   /** Adds `out` (predicted language; null for null/empty text) and
     * `marginOut` (best minus second-best log-score, rounded to 6 —
     * the CCNet-style confidence knob; null with `out`) to every row.
-    * The model collects once (bounded by [[MaxServedCells]]) and
-    * every row scores in ONE shuffle-free codegen projection. `m`,
+    * The model collects once per call (bounded by
+    * [[MaxServedCells]]) and every row scores in ONE shuffle-free
+    * projection, evaluated interpreted (see the object doc). `m`,
     * `nMin`, `nMax` must match training — bucket ids past m are
     * refused as the train/serve mismatch they are. */
   def classify(df: DataFrame, textCol: String, model: DataFrame,
@@ -269,9 +276,9 @@ object LangId {
     * array<struct<line, lang, margin>> over the `\r?\n` lines of
     * `textCol` (lang/margin null for blank lines). Still ZERO
     * shuffles and zero joins — the per-line argmax runs inside one
-    * codegen projection's line transform; null text behaves like
-    * empty text (one blank entry with null lang/margin — split's
-    * one-empty-line contract). */
+    * projection's line transform (interpreted, like classify's);
+    * null text behaves like empty text (one blank entry with null
+    * lang/margin — split's one-empty-line contract). */
   def lineLangs(df: DataFrame, textCol: String, model: DataFrame,
                 m: Int = 4096, nMin: Int = 2, nMax: Int = 3,
                 out: String = "line_langs"): DataFrame = {
@@ -290,8 +297,8 @@ object LangId {
     * is `lang`, re-joined with '\n' IN PLACE (the CCNet per-language
     * corpus split: strip the other-language boilerplate, keep the
     * target-language content). Blank lines carry no evidence and are
-    * dropped; null text → ''. Zero shuffles — one line transform in
-    * one codegen projection. */
+    * dropped; null text → ''. Zero shuffles — one line filter in one
+    * projection (interpreted, like classify's). */
   def keepLinesInLang(df: DataFrame, textCol: String,
                       model: DataFrame, lang: String,
                       m: Int = 4096, nMin: Int = 2,

@@ -1,8 +1,11 @@
 package graft.tools
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.execution.{ExternalRDDScanExec, RDDScanExec,
-  SparkPlan}
+import org.apache.spark.sql.catalyst.expressions.{Expression,
+  LambdaFunction, LeafExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.execution.{ExternalRDDScanExec, FilterExec,
+  ProjectExec, RDDScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
   QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{Exchange,
@@ -21,7 +24,10 @@ import org.apache.spark.storage.StorageLevel
   * plan leaf. Intentional exceptions are
   * allow-listed with the reason inline. Run:
   * `sbt "runMain graft.tools.PlanLint"`. Exit code 1 on unexpected
-  * findings (used as a local gate before benching). */
+  * findings (used as a local gate before benching). A report-only
+  * section (`FALLBACK` lines, never counted as findings) lists each
+  * query's Project/Filter operators that whole-stage codegen leaves
+  * out, with the CodegenFallback classes that keep them out. */
 object PlanLint {
 
   /** shuffle-exchange ceiling: the deepest legitimate plan in the
@@ -71,6 +77,34 @@ object PlanLint {
         !r.isCheckpointed)
       .groupBy(_.id).collect { case (id, rs) if rs.size > 1 =>
         s"repeatedRddScan(rdd=$id x${rs.size})" }.toSeq
+  }
+
+  /** Project/Filter operators holding a CodegenFallback expression,
+    * as `Project(ArrayTransform,...)`: CollapseCodegenStages keeps
+    * such an operator out of whole-stage codegen (a leaf fallback
+    * reads no input row and does not count), so it evaluates its
+    * expressions interpreted, row by row — the HOFs (`transform`,
+    * `filter`, …) are the usual cause; their LambdaFunction children
+    * are fallbacks too but add nothing to the HOF's name, so they are
+    * not listed. Descends into AQE plans like [[repeatedRddScans]];
+    * cached relations are leaves. */
+  private[graft] def codegenFallbacks(p: SparkPlan): Seq[String] = {
+    def report(op: String, es: Seq[Expression]): Seq[String] = {
+      val fs = es.flatMap(_.collect {
+        case f: CodegenFallback if !f.isInstanceOf[LeafExpression] &&
+            !f.isInstanceOf[LambdaFunction] =>
+          f.getClass.getSimpleName
+      }).distinct.sorted
+      if (fs.isEmpty) Nil else Seq(s"$op(${fs.mkString(",")})")
+    }
+    def walk(n: SparkPlan): Seq[String] = n match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec => walk(q.plan)
+      case pr: ProjectExec => report("Project", pr.projectList) ++ walk(pr.child)
+      case f: FilterExec => report("Filter", Seq(f.condition)) ++ walk(f.child)
+      case _ => n.children.flatMap(walk)
+    }
+    walk(p).distinct
   }
 
   // queries where a "red flag" node is the intended plan shape
@@ -258,6 +292,9 @@ object PlanLint {
             s"exchanges=$nExchanges" -> (nExchanges > maxExchanges)
           ).collect { case (f, true) => f } ++ smallJoins ++
             repeatedRddScans(physical)
+          val fallbacks = codegenFallbacks(physical)
+          if (fallbacks.nonEmpty)
+            println(s"[plan-lint] FALLBACK $name: ${fallbacks.mkString(", ")}")
           if (flags.nonEmpty) {
             allow.get(name) match {
               case Some(reason) =>

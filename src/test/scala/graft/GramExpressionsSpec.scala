@@ -73,6 +73,99 @@ class GramExpressionsSpec extends SparkTestBase {
     }
   }
 
+  /** `len` code points drawn (seeded) from 1-, 2-, 3- and 4-byte
+    * characters, all caseless or already lower, so lower() keeps the
+    * byte layout */
+  private def mixedDoc(len: Int, seed: Long): String = {
+    val cps = Array(0x61, 0x20, 0x7a, 0xe9, 0x3b1, 0x65e5, 0x30c6,
+      0x1f389, 0x10348)
+    val rnd = new scala.util.Random(seed)
+    val sb = new java.lang.StringBuilder
+    (0 until len).foreach(_ =>
+      sb.appendCodePoint(cps(rnd.nextInt(cps.length))))
+    sb.toString
+  }
+
+  test("CharGramBuckets == HOF spec on long mixed-width and short texts") {
+    val long = Seq(mixedDoc(20000, 1L), mixedDoc(21003, 2L))
+    val short = Seq("", "a", "é", "日", "🎉", "ab", "é🎉", "日本", "a🎉b")
+    val in = (long ++ short).toDF("text").repartition(3)
+    for ((nMin, nMax) <- Seq((2, 3), (1, 1), (2, 4), (3, 5))) {
+      val bad = in.select(
+          graft.operators.LangId.bucketArr(col("text"), 512, nMin, nMax)
+            .as("native"),
+          graft.operators.LangId.bucketArrHof(col("text"), 512, nMin, nMax)
+            .as("spec"))
+        .filter(col("native") =!= col("spec") ||
+          col("native").isNull =!= col("spec").isNull)
+        .count()
+      assert(bad == 0L, s"n=[$nMin,$nMax]: kernel diverged from spec")
+    }
+  }
+
+  /** md5Prefix(g, 15) mod m over raw bytes */
+  private def md5Bucket(g: Array[Byte], m: Int): Long = {
+    val hex = java.security.MessageDigest.getInstance("MD5").digest(g)
+      .map(b => f"${b & 0xff}%02x").mkString
+    java.lang.Long.parseLong(hex.take(15), 16) % m
+  }
+
+  /** the per-gram substringSQL walk CharGramBuckets used to run, with
+    * each gram's copy cut at the value's last byte: substring copies
+    * a truncated tail's claimed width, past the value (pinned below) */
+  private def substringWalk(v: org.apache.spark.unsafe.types.UTF8String,
+                            nMin: Int, nMax: Int, m: Int): Seq[Long] = {
+    val len = v.numChars()
+    (nMin to nMax).flatMap { n =>
+      (1 to len - n + 1).map { i =>
+        val start = if (i == 1) 0 else v.substringSQL(1, i - 1).numBytes
+        md5Bucket(v.substringSQL(i, n).getBytes.take(v.numBytes - start),
+          m)
+      }
+    }
+  }
+
+  test("CharGramBuckets.compute == substringSQL walk on malformed UTF-8") {
+    import org.apache.spark.unsafe.types.UTF8String
+    def bytes(xs: Int*): Array[Byte] = xs.map(_.toByte).toArray
+    val ab = "ab日".getBytes("UTF-8").map(_ & 0xff)
+    val cases = Seq(
+      "truncated 3-byte tail" -> bytes(ab ++ Seq(0xe3, 0x81): _*),
+      "truncated 4-byte tail" -> bytes(0x61, 0x62, 0x63, 0xf0, 0x9f),
+      "stray continuation bytes" ->
+        bytes(0x61, 0x80, 0x62, 0xbf, 0xbf, 0x63, 0x9f, 0x64),
+      "lone lead byte" -> bytes(0x61, 0xe3, 0x62, 0x63, 0x64, 0x65),
+      "lone lead byte at the end" -> bytes(0x61, 0x62, 0x63, 0xe3),
+      "invalid leads" -> bytes(0xc0, 0x61, 0xf8, 0x62, 0xff, 0xfe, 0x63))
+    for ((what, raw) <- cases; (nMin, nMax) <- Seq((1, 1), (2, 3), (2, 4));
+         m <- Seq(2, 512)) {
+      // spare bytes keep substring's overrun (below) inside the buffer
+      val v = UTF8String.fromBytes(raw ++ new Array[Byte](4), 0, raw.length)
+      val got = GramExpressions.CharGramBuckets(
+          org.apache.spark.sql.catalyst.expressions.Literal(v), nMin, nMax,
+          m).compute(v).toLongArray().toSeq
+      assert(got == substringWalk(v, nMin, nMax, m),
+        s"$what n=[$nMin,$nMax] m=$m")
+    }
+    // why the walk above cuts its copy: substring steps over a
+    // truncated tail's claimed width and copies bytes past the value
+    val buf = bytes(0x61, 0xe3, 0x81, 0x5a)
+    val v = UTF8String.fromBytes(buf, 0, 3)
+    assert(v.numChars() == 2 && v.substringSQL(2, 1).numBytes == 3)
+  }
+
+  test("CharGramBuckets buckets a 200k-code-point document in linear time") {
+    import org.apache.spark.unsafe.types.UTF8String
+    val v = UTF8String.fromString(mixedDoc(200000, 3L))
+    val k = GramExpressions.CharGramBuckets(
+      org.apache.spark.sql.catalyst.expressions.Literal(v), 2, 3, 512)
+    val t0 = System.nanoTime()
+    val out = k.compute(v)
+    val s = (System.nanoTime() - t0) / 1e9
+    assert(out.numElements() == 2 * 200000 - 3)
+    assert(s < 10.0, f"200k code points took $s%.1f s")
+  }
+
   test("NgramCtxBuckets == transform/concat_ws/element_at spec") {
     def bucketOf(g: org.apache.spark.sql.Column, m: Int) =
       pmod(conv(substring(md5(g), 1, 15), 16, 10).cast("long"),
