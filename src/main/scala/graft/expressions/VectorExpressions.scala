@@ -2,8 +2,11 @@ package graft.expressions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpectsInputTypes, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, CodegenFallback, ExprCode}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpectsInputTypes, RowOrdering, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, CodegenFallback, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -279,6 +282,130 @@ object VectorExpressions {
     override protected def withNewChildInternal(c: Expression) = copy(child = c)
   }
 
+  /** LSH band keys of a MinHash signature: `bands` bands of
+    * `rowsPerBand` consecutive slots, band b → (b, bucket) with bucket
+    * = the seed-42 xxhash64 of slots [b·r, b·r + r), the seed folded
+    * through each non-null slot in order. Bit-identical to the
+    * column-math `transform(sequence(0, bands - 1), b -> struct(b,
+    * xxhash64(slice(sig, b * r + 1, r))))` (spec in the test
+    * sources): a band past the signature's end hashes an empty slice,
+    * and a null signature gives every band the seed itself, as
+    * `xxhash64` of a null slice does. One loop per row inside
+    * whole-stage codegen (compute-reference pattern), so the banding
+    * `Generate` is no longer an interpreted lambda per band.
+    * `MinhashIndexFormat` 2 index buckets depend on these values. */
+  case class MinhashBands(child: Expression, bands: Int, rowsPerBand: Int)
+      extends UnaryExpression {
+    require(bands >= 1 && rowsPerBand >= 0,
+      s"need bands >= 1 and rowsPerBand >= 0, got $bands, $rowsPerBand")
+    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+      case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
+      case other => TypeCheckResult.TypeCheckFailure(
+        s"MinhashBands needs an array<bigint> signature, got ${other.catalogString}")
+    }
+    override def nullable: Boolean = false
+    override def dataType: DataType = ArrayType(StructType(Seq(
+      StructField("band", IntegerType, nullable = false),
+      StructField("bucket", LongType, nullable = false))), containsNull = false)
+    def compute(sig: ArrayData): ArrayData = {
+      val n = if (sig == null) 0L else sig.numElements().toLong
+      val out = new Array[Any](bands)
+      var b = 0
+      while (b < bands) {
+        var h = 42L
+        var i = b.toLong * rowsPerBand
+        val until = math.min(i + rowsPerBand, n)
+        while (i < until) {
+          if (!sig.isNullAt(i.toInt)) h = XXH64.hashLong(sig.getLong(i.toInt), h)
+          i += 1
+        }
+        out(b) = InternalRow(b, h)
+        b += 1
+      }
+      new GenericArrayData(out)
+    }
+    override def eval(input: InternalRow): Any =
+      compute(child.eval(input).asInstanceOf[ArrayData])
+    override protected def doGenCode(ctx: CodegenContext,
+                                     ev: ExprCode): ExprCode = {
+      val ref = ctx.addReferenceObj("minhashBands", this,
+        classOf[MinhashBands].getName)
+      val c = child.genCode(ctx)
+      ev.copy(code = code"""
+        |${c.code}
+        |ArrayData ${ev.value} = $ref.compute(${c.isNull} ? null : ${c.value});
+        """.stripMargin, isNull = FalseLiteral)
+    }
+    override protected def withNewChildInternal(c: Expression) = copy(child = c)
+  }
+
+  /** Every unordered pair of a bucket's ids as (a, b) structs, a the
+    * lesser under the element type's SQL ordering: for i < j in array
+    * order, (least(ids[i], ids[j]), greatest(ids[i], ids[j])), ties
+    * and nulls resolved as `least`/`greatest` resolve them (a null
+    * side yields the other twice; equal elements keep ids[i]).
+    * Bit-identical to the column-math `flatten(transform(sequence(1,
+    * size(ids) - 1), i -> transform(slice(ids, i + 1, size(ids) - i),
+    * y -> struct(least(element_at(ids, i), y), greatest(...)))))`
+    * (spec in the test sources) for any orderable id type and every
+    * array of 2 or more ids; callers pass only buckets sized [2, cap].
+    * A shorter array yields no pairs, where that spec raised an index
+    * error. Inside whole-stage codegen via the compute-reference
+    * pattern, so the pair-expansion `Generate` joins its stage. */
+  case class IdPairs(child: Expression) extends UnaryExpression {
+    @transient private lazy val elemType: DataType =
+      child.dataType.asInstanceOf[ArrayType].elementType
+    @transient private lazy val ordering: Ordering[Any] =
+      TypeUtils.getInterpretedOrdering(elemType)
+    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+      case ArrayType(et, _)
+          if RowOrdering.isOrderable(et) =>
+        TypeCheckResult.TypeCheckSuccess
+      case other => TypeCheckResult.TypeCheckFailure(
+        s"IdPairs needs an array of orderable ids, got ${other.catalogString}")
+    }
+    override def dataType: DataType = {
+      val ArrayType(et, containsNull) = child.dataType
+      ArrayType(StructType(Seq(StructField("a", et, containsNull),
+        StructField("b", et, containsNull))), containsNull = false)
+    }
+    def compute(ids: ArrayData): ArrayData = {
+      val n = ids.numElements()
+      if (n < 2) return new GenericArrayData(Array.empty[Any])
+      val total = n.toLong * (n - 1) / 2
+      require(total <= Int.MaxValue - 16,
+        s"a bucket of $n ids expands to $total pairs, over the array limit")
+      val out = new Array[Any](total.toInt)
+      val et = elemType
+      val ord = ordering
+      var o = 0
+      var i = 0
+      while (i < n - 1) {
+        val x = if (ids.isNullAt(i)) null else ids.get(i, et)
+        var j = i + 1
+        while (j < n) {
+          val y = if (ids.isNullAt(j)) null else ids.get(j, et)
+          out(o) =
+            if (x == null) InternalRow(y, y)
+            else if (y == null) InternalRow(x, x)
+            else InternalRow(if (ord.lt(y, x)) y else x,
+              if (ord.gt(y, x)) y else x)
+          o += 1
+          j += 1
+        }
+        i += 1
+      }
+      new GenericArrayData(out)
+    }
+    override def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[ArrayData])
+    override protected def doGenCode(ctx: CodegenContext,
+                                     ev: ExprCode): ExprCode = {
+      val ref = ctx.addReferenceObj("idPairs", this, classOf[IdPairs].getName)
+      nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.compute($a);")
+    }
+    override protected def withNewChildInternal(c: Expression) = copy(child = c)
+  }
+
   /** Multi-table hyperplane-LSH codes for a dense numeric vector:
     * `nTables` independent tables of `bitsPerTable` random Gaussian
     * hyperplanes each (deterministic from `seed`). Returns
@@ -500,6 +627,9 @@ object VectorExpressions {
   def minhashSignature(shingles: Column, coeffs: Seq[(Long, Long)],
                        prime: Long): Column =
     column(MinHashSignature(expression(shingles), coeffs, prime))
+  def minhashBands(signature: Column, bands: Int, rowsPerBand: Int): Column =
+    column(MinhashBands(expression(signature), bands, rowsPerBand))
+  def idPairs(ids: Column): Column = column(IdPairs(expression(ids)))
   def hyperplaneCodes(vec: Column, nTables: Int, bitsPerTable: Int,
                       dim: Int, seed: Long): Column =
     column(HyperplaneCodes(expression(vec), nTables, bitsPerTable, dim, seed))

@@ -418,12 +418,13 @@ object TextFunctions {
 
   /** LSH band keys: signature sliced into `bands` bands of `rowsPerBand`,
     * each band hashed to one bucket key; docs sharing any band key are
-    * candidate pairs. */
+    * candidate pairs. Native
+    * ([[graft.expressions.VectorExpressions.MinhashBands]]; the
+    * `transform`/`slice`/`xxhash64` formulation it is bit-identical to
+    * is the spec in the test sources). */
   def minhashBands(signature: Column, bands: Int, rowsPerBand: Int): Column =
-    transform(sequence(lit(0), lit(bands - 1)),
-      b => struct(b.as("band"),
-        xxhash64(slice(signature, b * lit(rowsPerBand) + 1,
-          lit(rowsPerBand))).as("bucket")))
+    graft.expressions.VectorExpressions.minhashBands(signature, bands,
+      rowsPerBand)
 
   // ===== SimHash =========================================================
 

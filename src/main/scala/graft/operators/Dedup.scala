@@ -122,16 +122,14 @@ object Dedup {
 
   /** expand a bucket's collected id array into ordered unique pairs:
     * one hash aggregation + in-row expansion instead of a bucket
-    * self-join (no join-row blowup on skewed buckets). Callers filter
-    * bucket size into [2, cap] BEFORE this. (Shared with SemDedup,
-    * whose clusters play the bucket role.) */
+    * self-join (no join-row blowup on skewed buckets). The expansion
+    * is the native [[graft.expressions.VectorExpressions.IdPairs]], so
+    * the `Generate` runs inside whole-stage codegen for any orderable
+    * id type. Callers filter bucket size into [2, cap] BEFORE this.
+    * (Shared with SemDedup, whose clusters play the bucket role.) */
   private[operators] def pairsFromBuckets(buckets: DataFrame): DataFrame =
     buckets
-      .select(explode(expr(
-        """flatten(transform(sequence(1, size(ids) - 1), i ->
-          |  transform(slice(ids, i + 1, size(ids) - i), y ->
-          |    struct(least(element_at(ids, i), y) AS a,
-          |           greatest(element_at(ids, i), y) AS b))))""".stripMargin))
+      .select(explode(graft.expressions.VectorExpressions.idPairs(col("ids")))
         .as("p"))
       .select(col("p.a").as("id_a"), col("p.b").as("id_b"))
       .distinct()
@@ -214,9 +212,10 @@ object Dedup {
                    numHashes: Int = 64, bands: Int = 16,
                    shingleLen: Int = 3, threshold: Double = 0.8,
                    seed: Long = 42L,
-                   maxBucketSize: Int = 1000): DataFrame =
-    lshPairs(minhashLsh(idCol, textCol, numHashes, bands, shingleLen, seed),
-      df, maxBucketSize, threshold)
+                   maxBucketSize: Int = 1000): DataFrame = {
+    val f = minhashLsh(idCol, textCol, numHashes, bands, shingleLen, seed)
+    lshPairs(f, materialized(f, df), maxBucketSize, threshold)
+  }
 
   private def shingledFor(d: DataFrame, idCol: String, textCol: String,
                           shingleLen: Int): DataFrame =
@@ -266,38 +265,38 @@ object Dedup {
   private[graft] val EmbeddingIndexFormat = 1
 
   /** One LSH family as the shared pair, index and screen cores see
-    * it: `items` turns a frame into the (id, `payload`, ...) rows a
-    * candidate verifies on, `keyed` turns items into (id, keys...)
-    * bucket rows, and `measure` (emitted as `out`, kept when
-    * ≥ threshold) is the exact verification. `params` are the build
-    * params (format version first — the clearest failure) stamped
-    * into, and validated against, the persisted index. `foldItems` is
-    * the batch side of an index fold. A screen's corpus side is the
-    * raw (`idCol`, `source`) columns: they pass through the
-    * verification join, and `payloadOf(source)` is derived above it,
-    * so only candidate-matched corpus rows are shingled or hashed. */
+    * it: `items` turns a frame carrying the raw (`idCol`, `source`)
+    * columns into the (id, `payload`) rows that are bucketed — the
+    * rows whose payload passes `valid` — `keyed` turns items into
+    * (id, keys...) bucket rows, and `measure` (emitted as `out`, kept
+    * when ≥ threshold) is the exact verification. `params` are the
+    * build params (format version first — the clearest failure)
+    * stamped into, and validated against, the persisted index.
+    * Verification sides other than a screen's batch are the raw
+    * (`idCol`, `source`) columns: they pass through the id joins, and
+    * `payloadOf(source)` is derived above them, so only candidate
+    * rows are shingled or hashed for verification. */
   private[graft] final case class Lsh(keys: Seq[String], payload: String,
                                       out: String,
                                       measure: (Column, Column) => Column,
                                       params: Seq[(String, Any)],
                                       items: DataFrame => DataFrame,
-                                      foldItems: DataFrame => DataFrame,
                                       idCol: String, source: String,
                                       payloadOf: Column => Column,
+                                      valid: Column => Column,
                                       keyed: DataFrame => DataFrame)
 
-  /** MinHash over word shingles, verified by Jaccard. The folds band
-    * the batch unspread ([[shingledFor]]). */
+  /** MinHash over word shingles, verified by Jaccard; only non-empty
+    * shingle sets are banded ([[shingledFor]]). */
   private[graft] def minhashLsh(idCol: String, textCol: String,
                                 numHashes: Int, bands: Int, shingleLen: Int,
                                 seed: Long): Lsh =
     Lsh(Seq("band", "bucket"), "sh", "jaccard", jaccard,
       Seq("__fmt" -> MinhashIndexFormat, "__numHashes" -> numHashes,
         "__bands" -> bands, "__shingleLen" -> shingleLen, "__seed" -> seed),
-      items = shingledSpread(_, idCol, textCol, shingleLen),
-      foldItems = shingledFor(_, idCol, textCol, shingleLen),
+      items = shingledFor(_, idCol, textCol, shingleLen),
       idCol = idCol, source = textCol,
-      payloadOf = wordShingles(_, shingleLen),
+      payloadOf = wordShingles(_, shingleLen), valid = size(_) > 0,
       keyed = bandedFor(_, numHashes, bands, seed))
 
   /** hyperplane LSH over an embedding column, verified by cosine.
@@ -305,16 +304,27 @@ object Dedup {
     * bucket key shuffles 8 bytes per (doc, table). */
   private[graft] def embeddingLsh(idCol: String, vecCol: String, dim: Int,
                                   nTables: Int, bitsPerTable: Int,
-                                  seed: Long): Lsh = {
-    val codes = embCodes(_: DataFrame, idCol, vecCol, dim, nTables,
-      bitsPerTable, seed)
+                                  seed: Long): Lsh =
     Lsh(Seq("code"), "v", "cosine", VectorFunctions.cosine,
       Seq("__fmt" -> EmbeddingIndexFormat, "__nTables" -> nTables,
         "__bitsPerTable" -> bitsPerTable, "__dim" -> dim, "__seed" -> seed),
-      items = codes, foldItems = codes,
+      items = _.select(col(idCol).as("id"), col(vecCol).as("v")),
       idCol = idCol, source = vecCol, payloadOf = identity,
-      keyed = _.select(col("id"), explode(col("codes")).as("code")))
-  }
+      valid = _ => lit(true),
+      keyed = _.select(col("id"), explode(VectorFunctions.hyperplaneCodes(
+        col("v"), nTables, bitsPerTable, dim, seed)).as("code")))
+
+  /** the family's items with the parallelism guard applied to the raw
+    * (`idCol`, `source`) projection, so the shingling or hashing runs
+    * at session parallelism (see [[shingledSpread]]) */
+  private def spreadItems(f: Lsh, d: DataFrame): DataFrame =
+    f.items(Partitioning.spread(d.select(col(f.idCol), col(f.source))))
+
+  /** the raw (`idCol`, `source`) rows of `df`, spread and evaluated
+    * ONCE into a local checkpoint: the input of [[lshPairs]] */
+  private def materialized(f: Lsh, df: DataFrame): DataFrame =
+    Partitioning.spread(df.select(col(f.idCol), col(f.source)))
+      .localCheckpoint()
 
   /** the persisted stamp: `params` plus the skew cap */
   private[graft] def withCap(params: Seq[(String, Any)],
@@ -345,12 +355,12 @@ object Dedup {
         size(col("ids")).cast("long").as("n"): _*)
 
   /** the unstamped corpus index. The corpus often arrives as a small
-    * single-file scan (1-3 partitions); the family's spread `items`
-    * keep the banding/hashing from serializing on a handful of tasks,
-    * and the groupBy shuffles anyway. */
+    * single-file scan (1-3 partitions); [[spreadItems]] keeps the
+    * banding/hashing from serializing on a handful of tasks, and the
+    * groupBy shuffles anyway. */
   private def rawIndex(f: Lsh, corpus: DataFrame,
                        maxBucketSize: Int): DataFrame =
-    capBuckets(collectBuckets(f.keyed(f.items(corpus)), f.keys),
+    capBuckets(collectBuckets(f.keyed(spreadItems(f, corpus)), f.keys),
       maxBucketSize)
 
   private def lshIndex(f: Lsh, corpus: DataFrame,
@@ -361,17 +371,32 @@ object Dedup {
     * (keys, [id], 1) — the add side of a fold, aggregated only by the
     * fold's one [[mergeIndex]] */
   private def batchRows(f: Lsh, batch: DataFrame): DataFrame =
-    f.keyed(f.foldItems(batch))
+    f.keyed(f.items(batch))
       .select(f.keys.map(col) :+ array(col("id")).as("ids") :+
         lit(1L).as("n"): _*)
 
-  /** candidate pairs within `df`, verified by the family's measure */
-  private def lshPairs(f: Lsh, df: DataFrame, maxBucketSize: Int,
+  /** candidate pairs within `in`, verified by the family's measure.
+    * `in` is already materialized ([[materialized]], or the dedup
+    * tail's checkpoint) with the raw (`idCol`, `source`) columns: it
+    * is banded as it stands — no second spread, no cache — and each
+    * candidate's two raw rows join back from it by id, with the
+    * payloads derived above those joins, for candidate rows only.
+    * `valid` on both payloads keeps exactly the row combinations the
+    * banded items hold: a duplicate id's row with an empty shingle
+    * set verifies against nothing, as when the items were joined. */
+  private def lshPairs(f: Lsh, in: DataFrame, maxBucketSize: Int,
                        threshold: Double): DataFrame = {
-    // reused for bucketing and for the verification joins
-    val items = f.items(df).cache()
-    verifyPairs(bucketPairs(f.keyed(items), f.keys, maxBucketSize), items,
-      f.payload, f.out, f.measure)(_ >= threshold)
+    def side(s: String) =
+      in.select(col(f.idCol).as(s"id_$s"), col(f.source).as(s"src_$s"))
+    val joined = bucketPairs(f.keyed(f.items(in)), f.keys, maxBucketSize)
+      .join(side("a"), Seq("id_a"))
+      .join(side("b"), Seq("id_b"))
+      .select(col("id_a"), col("id_b"),
+        f.payloadOf(col("src_a")).as("p_a"), f.payloadOf(col("src_b")).as("p_b"))
+    val (pa, pb) = (col("p_a"), col("p_b"))
+    materializeAndRelease(measured(joined, Seq("id_a", "id_b"),
+      when(f.valid(pa) && f.valid(pb), f.measure(pa, pb)), f.out)(
+      _ >= threshold))
   }
 
   /** (new, corpus) pairs: the batch's bucket rows (batch-sized, so
@@ -394,7 +419,7 @@ object Dedup {
                                corpusIndex: DataFrame, threshold: Double,
                                broadcastNew: Boolean,
                                mergeCap: Option[Int] = None): DataFrame = {
-    val items = f.items(newDf).cache()
+    val items = spreadItems(f, newDf).cache()
     val newKeys = f.keyed(items)
       .select(col("id").as("id_new") +: f.keys.map(col): _*)
     def bk(d: DataFrame) = if (broadcastNew) broadcast(d) else d
@@ -1053,19 +1078,25 @@ object Dedup {
     *
     * Materialize-once contract: the input feeds both the pair search
     * and the final anti-join, so the call runs ONE job that
-    * evaluates `df` once into a local checkpoint (memory and disk)
-    * before the pair search; the result reads that checkpoint, never
-    * the upstream. The call is therefore eager (the pair search and
-    * the component labeling run their own jobs after it); the
-    * checkpoint blocks are released when the result is dropped (the
-    * ContextCleaner drops them once it is garbage-collected). */
+    * evaluates `df` once — spread to session parallelism when it is
+    * a narrow exchange-free scan ([[Partitioning.spread]]) — into a
+    * local checkpoint (memory and disk). The pair search bands that
+    * checkpoint as it stands (no second spread, no cache), and
+    * verifies each candidate pair over the checkpoint's raw
+    * (`idCol`, `textCol`) rows joined back by id, shingling only
+    * those; the result reads the checkpoint, never the upstream. The
+    * call is therefore eager (the pair search and the component
+    * labeling run their own jobs after it); the checkpoint blocks are
+    * released when the result is dropped (the ContextCleaner drops
+    * them once it is garbage-collected). */
   def minhashDedup(df: DataFrame, idCol: String, textCol: String,
                    numHashes: Int = 64, bands: Int = 16,
                    shingleLen: Int = 3, threshold: Double = 0.8,
                    maxIter: Int = 50, keepCol: String = ""): DataFrame =
     keepOnePerComponent(df, idCol, maxIter, keepCol)(in =>
-      minhashPairs(in, idCol, textCol, numHashes, bands, shingleLen,
-        threshold))
+      // minhashPairs' default skew cap, over the checkpoint itself
+      lshPairs(minhashLsh(idCol, textCol, numHashes, bands, shingleLen,
+        42L), in, maxBucketSize = 1000, threshold))
 
   /** [[minhashDedup]]'s contract over ANY 64-bit fingerprint column
     * (text simhash, image aHash/dHash): near-dup groups = connected
@@ -1073,7 +1104,8 @@ object Dedup {
     * (or the best `keepCol` row, ties to lower id) — so transitive
     * chains (a~b, b~c without a~c) collapse to ONE survivor, the
     * same closure the pairwise min-id rule cannot give. Same
-    * materialize-once contract as [[minhashDedup]]. */
+    * materialize-once contract as [[minhashDedup]]: the spread
+    * checkpoint feeds [[signaturePairs]] and the anti-join. */
   def signatureDedup(df: DataFrame, idCol: String, sigCol: String,
                      maxDistance: Int = 3, maxBucketSize: Int = 1000,
                      maxIter: Int = 50, keepCol: String = ""): DataFrame =
@@ -1081,14 +1113,14 @@ object Dedup {
       signaturePairs(in, idCol, sigCol, maxDistance, maxBucketSize))
 
   /** the tail [[minhashDedup]] and [[signatureDedup]] share: the input
-    * materialized once (see the materialize-once contract), its
-    * near-dup pairs → [[connectedComponentMinLabel]] → every
-    * component member but the kept one (min id, or the best `keepCol`
-    * row, ties to the lower id) left-anti-joined away */
+    * spread and materialized once (see the materialize-once
+    * contract), its near-dup pairs → [[connectedComponentMinLabel]]
+    * → every component member but the kept one (min id, or the best
+    * `keepCol` row, ties to the lower id) left-anti-joined away */
   private def keepOnePerComponent(df: DataFrame, idCol: String,
                                   maxIter: Int, keepCol: String)(
       pairsOf: DataFrame => DataFrame): DataFrame = {
-    val in = df.localCheckpoint()
+    val in = Partitioning.spread(df).localCheckpoint()
     val reps = connectedComponentMinLabel(
       pairsOf(in).select(col("id_a"), col("id_b")), maxIter)
     val toDrop =
@@ -1805,17 +1837,10 @@ object Dedup {
                      dim: Int, threshold: Double = 0.95,
                      nTables: Int = 8, bitsPerTable: Int = 16,
                      seed: Long = 42L,
-                     maxBucketSize: Int = 10000): DataFrame =
-    lshPairs(embeddingLsh(idCol, vecCol, dim, nTables, bitsPerTable, seed),
-      df, maxBucketSize, threshold)
-
-  private def embCodes(d: DataFrame, idCol: String, vecCol: String,
-                       dim: Int, nTables: Int, bitsPerTable: Int,
-                       seed: Long): DataFrame =
-    Partitioning.spread(d.select(col(idCol).as("id"), col(vecCol).as("v")))
-      .withColumn("codes",
-        VectorFunctions.hyperplaneCodes(col("v"), nTables, bitsPerTable,
-          dim, seed))
+                     maxBucketSize: Int = 10000): DataFrame = {
+    val f = embeddingLsh(idCol, vecCol, dim, nTables, bitsPerTable, seed)
+    lshPairs(f, materialized(f, df), maxBucketSize, threshold)
+  }
 
   /** Persistable hyperplane-LSH index over the corpus's embedding
     * column for incremental cosine screening: (code, ids, n) buckets

@@ -280,13 +280,20 @@ object Repetition {
     * when the result is dropped (the ContextCleaner drops them once
     * the result is garbage-collected).
     *
-    * Shape at 100 TB: one explode → (trimmed-line, doc) distinct →
-    * line doc-frequency partial-agg (the only corpus-wide shuffle,
-    * keyed on line content); the common set is boilerplate-sized —
-    * orders of magnitude smaller than the line table — and AQE
-    * broadcasts the anti-join when it fits. Reassembly is one
-    * per-doc groupBy (sort_array over the doc's own lines, no
-    * corpus-wide window). */
+    * Ids must be unique and non-null: the census counts each row as
+    * one document, and the join back matches rows by id (the same
+    * contract the join back always needed). Rows sharing an id would
+    * each count their lines, where a count of distinct ids would not.
+    *
+    * Shape at 100 TB: the line doc-frequency census is ONE
+    * aggregation (partial-agg, then the only corpus-wide shuffle,
+    * keyed on line content) over each row's `array_distinct` of
+    * trimmed non-blank lines, so a line counts once per document with
+    * no (line, doc) distinct of its own; the common set is
+    * boilerplate-sized — orders of magnitude smaller than the line
+    * table — and AQE broadcasts the anti-join when it fits.
+    * Reassembly is one per-doc groupBy (sort_array over the doc's own
+    * lines, no corpus-wide window). */
   def dropCommonLines(df: DataFrame, idCol: String, textCol: String,
                       maxDocs: Long): DataFrame = {
     require(maxDocs >= 1, s"maxDocs must be >= 1, got $maxDocs")
@@ -296,8 +303,12 @@ object Repetition {
         posexplode(split(coalesce(col(textCol), lit("")), "\r?\n"))
           .as(Seq("__pos", "__line")))
       .withColumn("__key", trim(col("__line")))
-    val common = lines.filter(length(col("__key")) > 0)
-      .select(col("__key"), id).distinct()
+    // each line's trimmed key without a per-line lambda: trim strips
+    // only spaces, so splitting the trimmed text on newlines together
+    // with the spaces around them yields exactly the trimmed lines
+    val keys = split(trim(coalesce(col(textCol), lit(""))), " *\r?\n *")
+    val common = in
+      .select(explode(array_distinct(array_remove(keys, ""))).as("__key"))
       .groupBy(col("__key")).agg(count(lit(1)).as("__df"))
       .filter(col("__df") > maxDocs)
       .select(col("__key"))

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
 
@@ -699,6 +700,122 @@ class DedupSpec extends SparkTestBase {
         numHashes = 64, bands = 32, threshold = 0.6, keepCol = keep).count()
       assert(kept < n)
       assert(evals.value == n, s"keepCol='$keep'")
+    }
+  }
+
+  test("minhashPairs evaluates its input once") {
+    val n = corpus.count()
+    val evals = spark.sparkContext.longAccumulator("upstream rows")
+    val counted = udf { (_: Long) => evals.add(1); true }.asNondeterministic()
+    val pairs = Dedup.minhashPairs(corpus.filter(counted($"doc_id")),
+      "doc_id", "text", numHashes = 64, bands = 32, threshold = 0.6)
+    assert(pairs.count() >= 30)
+    assert(evals.value == n)
+  }
+
+  test("the dedup tail's pair search caches nothing and stays under its job pin") {
+    val small = corpus.filter($"doc_id" < 60 || $"doc_id" >= 10000)
+      .localCheckpoint()
+    var kept = 0L
+    var jobs = 0
+    val plans = sqlExecutionsDuring {
+      jobs = jobsDuring {
+        kept = Dedup.minhashDedup(small, "doc_id", "text", numHashes = 64,
+          bands = 32, threshold = 0.6).count()
+      }
+    }
+    assert(kept > 0 && kept < small.count())
+    // 14 while the pair search cached its items (an in-memory
+    // relation built by jobs of its own) and spread the checkpoint again
+    assert(jobs <= 12, s"$jobs jobs")
+    assert(plans.nonEmpty)
+    plans.foreach(p => assert(!p.contains("InMemoryRelation") &&
+      !p.contains("InMemoryTableScan"), p))
+    val pairPlans = sqlExecutionsDuring {
+      Dedup.minhashPairs(small, "doc_id", "text", numHashes = 64, bands = 32,
+        threshold = 0.6)
+      val rnd = new scala.util.Random(4)
+      val vecs = (0 until 60).map(i => (i.toLong, Seq.fill(8)(rnd.nextGaussian())))
+      Dedup.embeddingPairs(vecs.toDF("id", "v"), "id", "v", dim = 8,
+        threshold = 0.5)
+    }
+    pairPlans.foreach(p => assert(!p.contains("InMemoryRelation") &&
+      !p.contains("InMemoryTableScan"), p))
+  }
+
+  /** the pair search as it ran over cached (id, payload) items: the
+    * items banded, expanded by the column-math spec, and each side's
+    * items joined back for the measure */
+  private def itemsJoinedPairs(items: DataFrame, keyed: DataFrame,
+                               keys: Seq[String], cap: Int, payload: String,
+                               out: String, threshold: Double,
+                               measure: (Column, Column) => Column): DataFrame = {
+    def side(s: String) =
+      items.select($"id".as(s"id_$s"), col(payload).as(s"p_$s"))
+    keyed.groupBy(keys.map(col): _*).agg(collect_list($"id").as("ids"))
+      .filter(size($"ids").between(2, cap))
+      .select(explode(LshKernelsSpec.idPairsHof).as("p"))
+      .select($"p.a".as("id_a"), $"p.b".as("id_b")).distinct()
+      .join(side("a"), Seq("id_a")).join(side("b"), Seq("id_b"))
+      .select($"id_a", $"id_b", measure($"p_a", $"p_b").as(out))
+      .filter(col(out) >= threshold)
+  }
+
+  private def rows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  test("minhashPairs over the raw rows == the items-joined search, " +
+    "randomized frames with empty, short and null texts and duplicate ids") {
+    import graft.functions.TextFunctions
+    val vocab = (0 until 14).map(i => s"t$i")
+    for (seed <- 1 to 3) {
+      val rnd = new scala.util.Random(seed)
+      val bases = Seq.fill(40)(Seq.fill(4 + rnd.nextInt(10))(vocab(rnd.nextInt(14))))
+      val docs = bases.zipWithIndex.flatMap { case (ws, i) =>
+        val near = ws.updated(rnd.nextInt(ws.size), vocab(rnd.nextInt(14)))
+        Seq((i.toLong, ws.mkString(" ")), (i + 100L, near.mkString(" ")))
+      } ++ Seq((200L, ""), (201L, "t1 t2"), (202L, null), (203L, "   "),
+        // duplicate ids: a second row with an empty, a null and a
+        // near-dup text
+        (3L, ""), (5L, null), (7L, bases(8).mkString(" ")), (201L, "t1"))
+      val df = docs.toDF("id", "text").repartition(3)
+      for ((k, bands, thr) <- Seq((64, 16, 0.5), (32, 16, 0.0), (64, 32, 0.8))) {
+        val items = df.select($"id", TextFunctions.wordShingles($"text", 3).as("sh"))
+          .filter(size($"sh") > 0)
+        val keyed = items.select($"id", explode(LshKernelsSpec.minhashBandsHof(
+            TextFunctions.minhashSignature($"sh", k, 42L), bands, k / bands)).as("bb"))
+          .select($"id", $"bb.band".as("band"), $"bb.bucket".as("bucket"))
+        val want = rows(itemsJoinedPairs(items, keyed, Seq("band", "bucket"),
+          1000, "sh", "jaccard", thr, TextFunctions.jaccard))
+        val got = rows(Dedup.minhashPairs(df, "id", "text", numHashes = k,
+          bands = bands, threshold = thr))
+        assert(got == want, s"seed=$seed k=$k bands=$bands thr=$thr")
+        assert(want.nonEmpty)
+      }
+    }
+  }
+
+  test("embeddingPairs over the raw rows == the items-joined search, " +
+    "duplicate ids and null vectors") {
+    import graft.functions.VectorFunctions
+    val rnd = new scala.util.Random(21)
+    val dim = 8
+    def vec() = Seq.fill(dim)(rnd.nextGaussian())
+    val base = Seq.fill(40)(vec())
+    val docs = base.zipWithIndex.flatMap { case (v, i) =>
+      Seq((i.toLong, v), (i + 100L, v.map(_ + 0.05 * rnd.nextGaussian())))
+    } ++ Seq((3L, vec()), (200L, null), (5L, null), (201L, Seq.fill(dim)(0.0)))
+    val df = docs.toDF("id", "v").repartition(3)
+    for (thr <- Seq(0.0, 0.9)) {
+      val items = df.select($"id", $"v")
+      val keyed = items.select($"id", explode(VectorFunctions.hyperplaneCodes(
+        $"v", 4, 6, dim, 42L)).as("code"))
+      val want = rows(itemsJoinedPairs(items, keyed, Seq("code"), 10000, "v",
+        "cosine", thr, VectorFunctions.cosine))
+      val got = rows(Dedup.embeddingPairs(df, "id", "v", dim, threshold = thr,
+        nTables = 4, bitsPerTable = 6))
+      assert(got == want, s"thr=$thr")
+      assert(want.nonEmpty)
     }
   }
 

@@ -265,6 +265,40 @@ class RepetitionSpec extends SparkTestBase {
     assert(evals.value == 40L)
   }
 
+  test("dropCommonLines == a per-line reference on randomized texts: " +
+    "spaces, tabs and carriage returns around the lines, blanks, nulls") {
+    // the reference: split on \r?\n, key = the line with leading and
+    // trailing spaces (only) removed, doc frequency over distinct keys
+    // per document, blank keys never common
+    def key(l: String) = l.dropWhile(_ == ' ').reverse.dropWhile(_ == ' ').reverse
+    val parts = Seq("nav", "foot er", " nav", "nav  ", "", "  ", "\t", "nav\t",
+      "x\r", "a \r", " \r", "body", "menu", "\r")
+    for (seed <- 1 to 4) {
+      val rnd = new scala.util.Random(seed)
+      val docs = (1L to 40L).map { id =>
+        val text =
+          if (rnd.nextInt(10) == 0) null
+          else Seq.fill(rnd.nextInt(7))(
+              Seq.fill(1 + rnd.nextInt(2))(parts(rnd.nextInt(parts.size))).mkString)
+            .mkString(if (rnd.nextBoolean()) "\n" else "\r\n")
+        (id, text)
+      }
+      val lines = docs.map { case (id, t) =>
+        id -> Option(t).getOrElse("").split("\r?\n", -1).toSeq }
+      val df = lines.flatMap { case (_, ls) => ls.map(key).filter(_.nonEmpty).distinct }
+        .groupBy(identity).map { case (k, v) => k -> v.size }
+      for (maxDocs <- Seq(1L, 3L, 8L)) {
+        val want = lines.map { case (id, ls) =>
+          id -> ls.filter(l => df.getOrElse(key(l), 0) <= maxDocs).mkString("\n")
+        }.toMap
+        val got = Repetition.dropCommonLines(docs.toDF("doc_id", "text"),
+            "doc_id", "text", maxDocs)
+          .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+        assert(got == want, s"seed=$seed maxDocs=$maxDocs")
+      }
+    }
+  }
+
   test("gopherRepetitionFlags: published thresholds gate the " +
     "conjunction; clean docs pass, repetitive docs fail") {
     // doc 1 must be LONG to pass: with all-distinct words the top

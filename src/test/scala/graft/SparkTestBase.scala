@@ -48,6 +48,24 @@ abstract class SparkTestBase extends AnyFunSuite {
     n.get
   }
 
+  /** Raw job counter — unlike countJobs it does NOT disable AQE or
+    * broadcast joins: a job count under the session defaults is a
+    * property of the plan shapes the operators build, adaptive
+    * stages and broadcast exchanges included. */
+  def jobsDuring(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener,
+      SparkListenerJobStart}
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    try { body; Thread.sleep(500) /* listener bus is async */ }
+    finally spark.sparkContext.removeSparkListener(l)
+    n.get
+  }
+
   /** Physical plan descriptions of the SQL executions `body` starts,
     * in start order. Unlike countJobs it leaves AQE and broadcast
     * joins as configured: an execution count is a property of the
