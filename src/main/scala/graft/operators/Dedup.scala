@@ -62,7 +62,9 @@ object Dedup {
     * actually hit — a set bounded by the BATCH size; the batch then
     * anti-joins that tiny hit set. The corpus is never shuffled and
     * never scanned twice. `broadcastBatch = false` flips to a
-    * shuffled semi join for a backfill-sized "batch". */
+    * shuffled semi join for a backfill-sized "batch". `hashKeys =
+    * false` takes no distinct on either side: each is only a semi or
+    * anti join's build side, where duplicate keys change nothing. */
   def exactAgainst(newDf: DataFrame, corpus: DataFrame,
                    cols: Seq[String],
                    broadcastBatch: Boolean = true,
@@ -70,23 +72,18 @@ object Dedup {
     if (hashKeys)
       exactAgainstHashed(newDf, corpus, cols, broadcastBatch)
     else {
-      // direct-key mode: plain equi-joins on the key columns
-      // themselves, so the join distribution IS the raw key — a
-      // corpus BUCKETED on the key joins with zero corpus-side
-      // exchange and an IN-list probe prunes buckets (measured in
-      // BENCH_NOTES "r8: Bucketed-corpus id screen measured"). The
-      // right mode for narrow non-null keys
-      // (the admission id screen: one long); the hashed default
-      // remains right for wide text keys (8-byte shuffle rows) and
-      // when null key tuples must collide (plain SQL equality never
-      // matches null — a null-keyed batch row always survives here).
-      val batchKeys = newDf.select(cols.map(newDf(_)): _*).distinct()
-      val bk = if (broadcastBatch) broadcast(batchKeys) else batchKeys
+      // direct-key mode: the join distribution IS the raw key, so a
+      // corpus BUCKETED on it joins with zero corpus-side exchange and
+      // an IN-list probe prunes buckets (BENCH_NOTES "r8: Bucketed-corpus
+      // id screen measured"). Right for narrow non-null keys (the
+      // admission id screen); the hashed default stays right for wide
+      // text keys and null key tuples (SQL equality never matches null,
+      // so a null-keyed batch row always survives here).
+      def bc(d: DataFrame) = if (broadcastBatch) broadcast(d) else d
+      // hit is batch-bounded under this mode's unique-key contract
       val hit = corpus.select(cols.map(corpus(_)): _*)
-        .join(bk, cols, "left_semi").distinct()
-      // hit is batch-key-bounded, exactly like the hashed path
-      val h = if (broadcastBatch) broadcast(hit) else hit
-      newDf.join(h, cols, "left_anti")
+        .join(bc(newDf.select(cols.map(newDf(_)): _*)), cols, "left_semi")
+      newDf.join(bc(hit), cols, "left_anti")
     }
 
   private def exactAgainstHashed(newDf: DataFrame, corpus: DataFrame,
@@ -266,18 +263,17 @@ object Dedup {
 
   /** One LSH family as the shared pair, index and screen cores see
     * it: `items` turns a frame carrying the raw (`idCol`, `source`)
-    * columns into the (id, `payload`) rows that are bucketed — the
+    * columns into the (id, payload) rows that are bucketed — the
     * rows whose payload passes `valid` — `keyed` turns items into
     * (id, keys...) bucket rows, and `measure` (emitted as `out`, kept
     * when ≥ threshold) is the exact verification. `params` are the
     * build params (format version first — the clearest failure)
     * stamped into, and validated against, the persisted index.
-    * Verification sides other than a screen's batch are the raw
-    * (`idCol`, `source`) columns: they pass through the id joins, and
-    * `payloadOf(source)` is derived above them, so only candidate
-    * rows are shingled or hashed for verification. */
-  private[graft] final case class Lsh(keys: Seq[String], payload: String,
-                                      out: String,
+    * Verification sides are the raw (`idCol`, `source`) columns: they
+    * pass through the id joins, and `payloadOf(source)` is derived
+    * above them, so only candidate rows are shingled or hashed for
+    * verification. */
+  private[graft] final case class Lsh(keys: Seq[String], out: String,
                                       measure: (Column, Column) => Column,
                                       params: Seq[(String, Any)],
                                       items: DataFrame => DataFrame,
@@ -291,7 +287,7 @@ object Dedup {
   private[graft] def minhashLsh(idCol: String, textCol: String,
                                 numHashes: Int, bands: Int, shingleLen: Int,
                                 seed: Long): Lsh =
-    Lsh(Seq("band", "bucket"), "sh", "jaccard", jaccard,
+    Lsh(Seq("band", "bucket"), "jaccard", jaccard,
       Seq("__fmt" -> MinhashIndexFormat, "__numHashes" -> numHashes,
         "__bands" -> bands, "__shingleLen" -> shingleLen, "__seed" -> seed),
       items = shingledFor(_, idCol, textCol, shingleLen),
@@ -305,7 +301,7 @@ object Dedup {
   private[graft] def embeddingLsh(idCol: String, vecCol: String, dim: Int,
                                   nTables: Int, bitsPerTable: Int,
                                   seed: Long): Lsh =
-    Lsh(Seq("code"), "v", "cosine", VectorFunctions.cosine,
+    Lsh(Seq("code"), "cosine", VectorFunctions.cosine,
       Seq("__fmt" -> EmbeddingIndexFormat, "__nTables" -> nTables,
         "__bitsPerTable" -> bitsPerTable, "__dim" -> dim, "__seed" -> seed),
       items = _.select(col(idCol).as("id"), col(vecCol).as("v")),
@@ -321,7 +317,8 @@ object Dedup {
     f.items(Partitioning.spread(d.select(col(f.idCol), col(f.source))))
 
   /** the raw (`idCol`, `source`) rows of `df`, spread and evaluated
-    * ONCE into a local checkpoint: the input of [[lshPairs]] */
+    * ONCE into a local checkpoint: the input of [[lshPairs]] and of
+    * the screen faces' [[lshScreen]] */
   private def materialized(f: Lsh, df: DataFrame): DataFrame =
     Partitioning.spread(df.select(col(f.idCol), col(f.source)))
       .localCheckpoint()
@@ -399,14 +396,15 @@ object Dedup {
       _ >= threshold))
   }
 
-  /** (new, corpus) pairs: the batch's bucket rows (batch-sized, so
-    * broadcast unless `broadcastNew = false`) join the corpus index,
-    * and the RAW corpus rows join the candidates by id — the corpus
-    * payload (shingles) is derived above that join, for
-    * candidate-matched rows only, never for the whole corpus scan.
-    * No corpus-side emptiness filter is needed: index ids only ever
-    * come from non-empty shingle sets ([[rawIndex]] and the folds
-    * band filtered items).
+  /** (new, corpus) pairs, lazily, over `in`: the batch's raw
+    * (`idCol`, `source`) rows, already materialized ([[materialized]],
+    * or the admission cycle's checkpoint) and banded as they stand —
+    * no cache, no second spread. The bucket rows (batch-sized, so
+    * broadcast unless `broadcastNew = false`) join the corpus index;
+    * each candidate's raw batch and corpus rows join back by id and
+    * both payloads are derived above those joins. `valid` on the batch
+    * payload keeps the rows the banded items hold; index ids only come
+    * from valid payloads ([[rawIndex]], the folds band filtered items).
     *
     * `mergeCap` set: `corpusIndex` is an admission state's base ∪
     * delta rows ([[lshDelta]]), not a merged index. Only the buckets
@@ -415,39 +413,41 @@ object Dedup {
     * under the cap before the ids explode: `n` sums before the cap
     * applies, so a dead bucket stays dead and the candidates equal a
     * screen over the compacted index. */
-  private[graft] def lshScreen(f: Lsh, newDf: DataFrame, corpus: DataFrame,
+  private[graft] def lshScreen(f: Lsh, in: DataFrame, corpus: DataFrame,
                                corpusIndex: DataFrame, threshold: Double,
                                broadcastNew: Boolean,
                                mergeCap: Option[Int] = None): DataFrame = {
-    val items = spreadItems(f, newDf).cache()
-    val newKeys = f.keyed(items)
+    val newKeys = f.keyed(f.items(in))
       .select(col("id").as("id_new") +: f.keys.map(col): _*)
     def bk(d: DataFrame) = if (broadcastNew) broadcast(d) else d
     val buckets = mergeCap.fold(corpusIndex)(cap => mergeIndex(
       corpusIndex.join(bk(newKeys.select(f.keys.map(col): _*)), f.keys,
         "left_semi"), f.keys, cap))
-    val cand = buckets.join(bk(newKeys), f.keys)
+    val joined = buckets.join(bk(newKeys), f.keys)
       .select(col("id_new"), explode(col("ids")).as("id_corpus"))
       .distinct()
-    val pNew = s"${f.payload}_new"
-    val verified = measured(cand
-      .join(items.select(col("id").as("id_new"), col(f.payload).as(pNew)),
+      .join(in.select(col(f.idCol).as("id_new"), col(f.source).as("src_new")),
         Seq("id_new"))
       .join(corpus.select(col(f.idCol).as("id_corpus"),
-        col(f.source).as("src_cor")), Seq("id_corpus")),
-      Seq("id_new", "id_corpus"),
-      f.measure(col(pNew), f.payloadOf(col("src_cor"))), f.out)(_ >= threshold)
-    materializeAndRelease(verified, items)
+        col(f.source).as("src_cor")), Seq("id_corpus"))
+      .select(col("id_new"), col("id_corpus"),
+        f.payloadOf(col("src_new")).as("p_new"),
+        f.payloadOf(col("src_cor")).as("p_cor"))
+    measured(joined, Seq("id_new", "id_corpus"), when(f.valid(col("p_new")),
+      f.measure(col("p_new"), col("p_cor"))), f.out)(_ >= threshold)
   }
 
-  /** [[lshScreen]] against a PREBUILT index, its stamp validated first */
+  /** [[lshScreen]] against a PREBUILT index, its stamp validated
+    * first; the batch is evaluated once, the pairs settled */
   private def lshScreenIndex(f: Lsh, what: String, newDf: DataFrame,
                              corpus: DataFrame, corpusIndex: DataFrame,
                              threshold: Double, broadcastNew: Boolean,
-                             acceptUnvalidated: Boolean): DataFrame =
-    lshScreen(f, newDf, corpus,
-      validateIndexParams(corpusIndex, what, f.params, acceptUnvalidated),
-      threshold, broadcastNew)
+                             acceptUnvalidated: Boolean): DataFrame = {
+    val index = validateIndexParams(corpusIndex, what, f.params,
+      acceptUnvalidated)
+    materializeAndRelease(lshScreen(f, materialized(f, newDf), corpus, index,
+      threshold, broadcastNew))
+  }
 
   /** full-swap fold of a batch into a persisted index. The update ALSO
     * asks the skew cap: [[mergeIndex]] re-applies the caller's cap to
@@ -1060,8 +1060,8 @@ object Dedup {
     // the inline index is built with these very params, so skip the
     // validation head read (it would trigger an extra banding job)
     val f = minhashLsh(idCol, textCol, numHashes, bands, shingleLen, seed)
-    lshScreen(f, newDf, corpus, rawIndex(f, corpus, maxBucketSize),
-      threshold, broadcastNew)
+    materializeAndRelease(lshScreen(f, materialized(f, newDf), corpus,
+      rawIndex(f, corpus, maxBucketSize), threshold, broadcastNew))
   }
 
   /** full MinHash dedup: pairs → connected components (min-id label
@@ -1921,8 +1921,8 @@ object Dedup {
     // inline index is built with these very params: skip the
     // validation head read (it would trigger an extra hashing job)
     val f = embeddingLsh(idCol, vecCol, dim, nTables, bitsPerTable, seed)
-    lshScreen(f, newDf, corpus, rawIndex(f, corpus, maxBucketSize),
-      threshold, broadcastNew)
+    materializeAndRelease(lshScreen(f, materialized(f, newDf), corpus,
+      rawIndex(f, corpus, maxBucketSize), threshold, broadcastNew))
   }
 
   /** Exact edit-distance similarity join (record linkage / fuzzy-key

@@ -30,20 +30,25 @@ import graft.operators.Dedup
   *   0. (MinHash and embedding spaces) recovery: finish the last
   *      commit's file moves if a crash interrupted them, and delete
   *      whatever an uncommitted cycle staged — before anything reads.
-  *   1. one row per id within the batch, then the EXACT ID screen
-  *      against the corpus ([[Dedup.exactAgainst]]). This is also
+  *   1. the EXACT ID screen against the corpus
+  *      ([[Dedup.exactAgainst]]), then one row per id, settled into a
+  *      local checkpoint whose job observes its row count. This is also
   *      what makes a foreachBatch REPLAY a no-op: foreachBatch is
   *      at-least-once, and rows a committed cycle appended carry ids
   *      the corpus now contains, so they drop here.
   *   2. near-dup screen against the persisted index
   *      ([[Dedup.minhashPairsAgainstIndex]] semantics — batch-bounded
-  *      banding, one corpus scan for jaccard verification).
+  *      banding, one corpus scan for jaccard verification), lazily
+  *      over the step-1 checkpoint as it stands: nothing is cached.
   *   3. optional within-batch near-dedup among the survivors
   *      ([[Dedup.minhashDedup]], batch-bounded). Corpus-screen FIRST:
   *      if batch doc B's only near-dup partner A was itself dropped
   *      by the corpus screen, B is still admitted — within-first
   *      would have dropped B in favor of A and then lost A too.
-  *   4. write the admitted rows and fold them into the index.
+  *   4. settle the admitted rows as in step 1 (steps 2–3 run in that
+  *      execution), write them and fold them into the index. A
+  *      steady-state MinHash cycle without the within-batch pass or
+  *      `collectStats` is 4 SQL executions (pinned in AdmissionSpec).
   *
   * MinHash and embedding state: ONE ATOMIC COMMIT PER CYCLE. The
   * index is a base plus deltas; `indexPath/_graft_state/vN.json` (the
@@ -116,6 +121,8 @@ import graft.operators.Dedup
   * what makes such a keys delta safe to add. The
   * verification join carries the raw text/vector column and derives
   * the payload above the join, so only candidate rows are shingled.
+  * The batch is read once per cycle, into the step-1 checkpoint that
+  * every later branch reads; no in-memory cache is built per cycle.
   *
   * The semantic, signature and substring spaces keep their folds:
   * the corpus append, then the index swap (or the substring append),
@@ -132,15 +139,16 @@ object Admission {
     * (== rows appended to the corpus and folded into the index).
     * `batchRows` is -1 when the cycle ran with `collectStats = false`
     * (it costs one extra Spark job); `afterIdScreen` and `admitted`
-    * are always real — the former's count is the cycle's cache-
-    * materialization barrier (see admitCore), the latter gates the
-    * writes. */
+    * are always real — each is observed by the job of the local
+    * checkpoint the cycle settles anyway (the id-screened batch, the
+    * admitted set; see admitCore), and the latter gates the writes. */
   case class AdmitStats(batchId: Long, batchRows: Long, afterIdScreen: Long,
                         admitted: Long)
 
-  /** The shared cycle skeleton: id screen → near screen → optional
-    * within-batch dedup → localCheckpoint → `commit`. `screen` returns
-    * the matched-id column (`id_new`) of the near screen; `within`
+  /** The shared cycle skeleton: id screen → localCheckpoint → near
+    * screen → optional within-batch dedup → localCheckpoint →
+    * `commit`. `screen` returns the matched-id column (`id_new`) of
+    * the near screen over the settled id-screened batch; `within`
     * dedups the surviving batch against itself; `commit` gets the
     * settled admitted rows and their count. */
   private def admitCore(batch: DataFrame, corpus: DataFrame, idCol: String,
@@ -149,40 +157,32 @@ object Admission {
                         dedupWithin: DataFrame => DataFrame,
                         commit: (DataFrame, Long) => Unit): AdmitStats = {
     val batchRows = if (collectStats) batch.count() else -1L
-    // direct-key id screen (hashKeys = false): the join key is the id
-    // column itself, so a corpus BUCKETED by idCol — the cost-model
-    // mitigation for the per-cycle corpus scans — joins with zero
-    // corpus-side exchange (BENCH_NOTES "r8: Bucketed-corpus id
-    // screen measured"). Ids are non-null by
-    // the id-namespace contract; a null id would bypass this screen.
-    val fresh = Dedup.exactAgainst(batch.dropDuplicates(idCol), corpus,
-      Seq(idCol), hashKeys = false).cache()
-    // materialize the cache BEFORE the screen fans out over it —
-    // unconditionally, not just under collectStats. `fresh` feeds
-    // three plan branches (the near screen's banding, its
-    // verification join, and the final left_anti), and an UNFILLED
-    // cache makes each branch recompute the id screen, re-scanning
-    // the CORPUS once per branch — at 100 TB that triples the
-    // cycle's dominant cost (r15 ProbeQ123c: streaming
-    // numInputRows showed the batch source read twice per cycle
-    // with collectStats = false). One batch-bounded count job buys
-    // corpus-scan-once; afterIdScreen is therefore always real now.
-    val nFresh = fresh.count()
-    val matched = screen(fresh, corpus)
-      .select(col("id_new").as(idCol)).distinct()
-    val screened = fresh.join(matched, Seq(idCol), "left_anti")
-    val surviving = if (within) dedupWithin(screened) else screened
-    // eager lineage cut: the writes below mutate this plan's inputs,
-    // so the admitted set must be physically settled first. The row
-    // count rides the checkpoint's own job as an observed metric
-    // instead of a second action over the checkpoint.
-    val admittedObs = Observation()
-    val admitted = surviving
-      .observe(admittedObs, count(lit(1)).as("rows")).localCheckpoint()
-    val nAdmitted = admittedObs.get("rows").asInstanceOf[Long]
+    // direct-key id screen (hashKeys = false): a corpus BUCKETED by
+    // idCol joins with zero corpus-side exchange. Ids are non-null by
+    // the id-namespace contract. One row per id is kept after the
+    // screen, which drops every row of an id alike. `fresh` is settled
+    // once, the only read of the batch source: the near screen's
+    // banding, its verification join and the final left_anti read it.
+    val (fresh, nFresh) = settled(Dedup.exactAgainst(batch, corpus,
+      Seq(idCol), hashKeys = false).dropDuplicates(idCol))
+    // the screen stays lazy, planned inside the admitted set's
+    // execution; its matched ids are batch-bounded
+    val matched = screen(fresh, corpus).select(col("id_new").as(idCol))
+    val screened = fresh.join(broadcast(matched), Seq(idCol), "left_anti")
+    // the writes below mutate this plan's inputs, so the admitted set
+    // is settled first
+    val (admitted, nAdmitted) =
+      settled(if (within) dedupWithin(screened) else screened)
     commit(admitted, nAdmitted)
-    fresh.unpersist()
     AdmitStats(batchId, batchRows, nFresh, nAdmitted)
+  }
+
+  /** `df` evaluated once into a local checkpoint, with its row count
+    * observed by the checkpoint's own job */
+  private def settled(df: DataFrame): (DataFrame, Long) = {
+    val rows = Observation()
+    val out = df.observe(rows, count(lit(1)).as("rows")).localCheckpoint()
+    (out, rows.get("rows").asInstanceOf[Long])
   }
 
   /** The MinHash/embedding cycle over manifest state (contracts in the

@@ -188,21 +188,20 @@ class AdmissionSpec extends SparkTestBase {
     val s = Admission.admitBatch(batch, c, i, "doc_id", "text",
       numHashes = 64, bands = 32, threshold = 0.6, collectStats = false)
     // batchRows is the only skipped count; afterIdScreen is always
-    // real since r15 — its count doubles as the cache-materialization
-    // barrier that keeps the corpus scanned once per cycle
+    // real — the id-screened batch's checkpoint observes it
     assert(s.batchRows == -1L && s.afterIdScreen == 1L)
     assert(s.admitted == 1L)
     assert(corpusIds(c) == ((0L until 40L) :+ 100L))
   }
 
-  test("steady-state cycle: <= 5 SQL executions, no inference, listing or stamp job") {
+  test("steady-state cycle: <= 4 SQL executions and <= 14 jobs, no cache or stamp job") {
     // the benchmark/catalog admission shape: partitioned MinHash index,
     // bands 32, threshold 0.6, no within-batch pass, no batch count.
     // Cycle 1 adopts the state: the plain reads' schema inference and
     // listing, and the one stamp validation. Cycle 2 reads through its
-    // manifest: id screen, screen checkpoint, admitted checkpoint,
-    // corpus delta write, index delta write — and nothing outside
-    // those executions.
+    // manifest: the id-screened batch's checkpoint, the admitted
+    // checkpoint (the near screen planned inside it), corpus delta
+    // write, index delta write — and nothing outside those executions.
     val corpusDir = Files.createTempDirectory("graft_adm_cx").toString
     val indexDir = Files.createTempDirectory("graft_adm_ix").toString + "/idx"
     corpusDf.write.mode("overwrite").parquet(corpusDir)
@@ -224,11 +223,14 @@ class AdmissionSpec extends SparkTestBase {
     assert(adoption.exists(_.startsWith("parquet at")), adoption.toString)
     var s2: Admission.AdmitStats = null
     var execs: Seq[String] = Nil
+    var jobs = 0
     val outside = jobsOutsideSqlDuring {
       execs = sqlExecutionsDuring {
-        s2 = cycle(Seq(200L -> (freshText("n100") + " k"),
-          201L -> freshText("n201"), 0L -> freshText("c0"))
-          .toDF("doc_id", "text"), 2L)
+        jobs = jobsDuring {
+          s2 = cycle(Seq(200L -> (freshText("n100") + " k"),
+            201L -> freshText("n201"), 0L -> freshText("c0"))
+            .toDF("doc_id", "text"), 2L)
+        }
       }
     }
     assert(s2 == Admission.AdmitStats(2L, -1L, 2L, 1L))
@@ -236,8 +238,11 @@ class AdmissionSpec extends SparkTestBase {
       ((0L until 40L) ++ Seq(100L, 101L, 201L)))
     def heads = execs.map(_.linesIterator.slice(1, 4).mkString(" | "))
       .mkString("\n  ")
-    assert(execs.size <= 5,
+    assert(execs.size <= 4,
       s"cycle 2 started ${execs.size} SQL executions:\n  $heads")
+    assert(jobs <= 14, s"cycle 2 ran $jobs jobs:\n  $heads")
+    execs.foreach(p => assert(!p.contains("InMemoryRelation") &&
+      !p.contains("InMemoryTableScan"), p))
     assert(stampScans(execs).isEmpty,
       s"cycle 2 re-read the index stamp:\n  $heads")
     assert(outside.isEmpty,

@@ -507,7 +507,7 @@ class DedupSpec extends SparkTestBase {
     val n = try {
       val c = Dedup.minhashPairsAgainstIndex(batch, hist, idx, "doc_id",
         "text", numHashes = 64, bands = 32, threshold = 0.6).count()
-      Thread.sleep(1000) // listener bus is async
+      drainListenerBus()
       c
     } finally spark.listenerManager.unregister(l)
     assert(n >= 2) // planted copies 10003 (of doc 3), 20007 (of doc 7)
@@ -816,6 +816,161 @@ class DedupSpec extends SparkTestBase {
         nTables = 4, bitsPerTable = 6))
       assert(got == want, s"thr=$thr")
       assert(want.nonEmpty)
+    }
+  }
+
+  /** the screen as it ran over cached (id, payload) batch items: the
+    * items banded into (id_new, keys...) rows, joined into the index,
+    * and each candidate's batch item and raw corpus row joined back
+    * for the measure */
+  private def itemsJoinedScreen(items: DataFrame, keyed: DataFrame,
+                                index: DataFrame, corpus: DataFrame,
+                                keys: Seq[String], payload: String,
+                                payloadOf: Column => Column, out: String,
+                                threshold: Double,
+                                measure: (Column, Column) => Column): DataFrame =
+    index.join(keyed.select($"id".as("id_new") +: keys.map(col): _*), keys)
+      .select($"id_new", explode($"ids").as("id_corpus")).distinct()
+      .join(items.select($"id".as("id_new"), col(payload).as("p_new")),
+        Seq("id_new"))
+      .join(corpus.select($"id".as("id_corpus"), $"src".as("src_cor")),
+        Seq("id_corpus"))
+      .select($"id_new", $"id_corpus",
+        measure($"p_new", payloadOf($"src_cor")).as(out))
+      .filter(col(out) >= threshold)
+
+  /** a randomized (corpus, batch) of texts: the batch holds one-word
+    * edits of corpus docs under new ids, fresh docs, ids already in
+    * the corpus, duplicate batch ids and empty, blank and null texts */
+  private def screenWorld(seed: Int): (DataFrame, DataFrame) = {
+    val vocab = (0 until 16).map(i => s"t$i")
+    val rnd = new scala.util.Random(seed)
+    def doc() = Seq.fill(4 + rnd.nextInt(10))(vocab(rnd.nextInt(16)))
+    val bases = Seq.fill(40)(doc())
+    val hist = bases.zipWithIndex.map { case (ws, i) => (i.toLong, ws.mkString(" ")) } ++
+      Seq((40L, ""), (41L, null), (42L, "t1 t2"))
+    val near = bases.zipWithIndex.filter(_._2 % 2 == 0).map { case (ws, i) =>
+      (i + 100L, ws.updated(rnd.nextInt(ws.size), vocab(rnd.nextInt(16))).mkString(" "))
+    }
+    val batch = near ++ Seq.fill(6)(doc()).zipWithIndex.map { case (ws, i) =>
+      (i + 200L, ws.mkString(" ")) } ++
+      Seq((3L, bases(3).mkString(" ")), (5L, doc().mkString(" ")),
+        (300L, ""), (301L, null), (302L, "   "), (303L, "t1 t2"),
+        // duplicate batch ids: an empty, a null and a near-dup second row
+        (100L, ""), (102L, null), (104L, bases(6).mkString(" ")),
+        (300L, bases(8).mkString(" ")))
+    (hist.toDF("id", "src").repartition(2), batch.toDF("id", "src").repartition(3))
+  }
+
+  test("minhash screen faces == the items-joined screen, randomized " +
+    "batches with empty and null texts, duplicate and corpus ids") {
+    import graft.functions.TextFunctions
+    for (seed <- 1 to 3; (k, bands, thr) <- Seq((64, 16, 0.0), (64, 32, 0.5),
+        (32, 16, 0.9))) {
+      val (hist, batch) = screenWorld(seed)
+      val index = Dedup.minhashIndex(hist, "id", "src", numHashes = k,
+        bands = bands)
+      val items = batch.select($"id", TextFunctions.wordShingles($"src", 3).as("sh"))
+        .filter(size($"sh") > 0)
+      val keyed = items.select($"id", explode(TextFunctions.minhashBands(
+          TextFunctions.minhashSignature($"sh", k, 42L), bands, k / bands)).as("bb"))
+        .select($"id", $"bb.band".as("band"), $"bb.bucket".as("bucket"))
+      val want = rows(itemsJoinedScreen(items, keyed, index, hist,
+        Seq("band", "bucket"), "sh", TextFunctions.wordShingles(_, 3),
+        "jaccard", thr, TextFunctions.jaccard))
+      val ctx = s"seed=$seed k=$k bands=$bands thr=$thr"
+      assert(want.nonEmpty, ctx)
+      assert(rows(Dedup.minhashPairsAgainst(batch, hist, "id", "src",
+        numHashes = k, bands = bands, threshold = thr)) == want, ctx)
+      assert(rows(Dedup.minhashPairsAgainstIndex(batch, hist, index, "id",
+        "src", numHashes = k, bands = bands, threshold = thr,
+        broadcastNew = seed % 2 == 0)) == want, ctx)
+    }
+  }
+
+  test("embedding screen faces == the items-joined screen, randomized " +
+    "batches with null and zero vectors, duplicate and corpus ids") {
+    import graft.functions.VectorFunctions
+    val dim = 8
+    for (seed <- Seq(21, 22); thr <- Seq(0.0, 0.5, 0.9)) {
+      val rnd = new scala.util.Random(seed)
+      def vec() = Seq.fill(dim)(rnd.nextGaussian())
+      val base = Seq.fill(40)(vec())
+      val hist = (base.zipWithIndex.map { case (v, i) => (i.toLong, v) } ++
+        Seq((40L, null), (41L, Seq.fill(dim)(0.0)))).toDF("id", "src")
+      val batch = (base.zipWithIndex.filter(_._2 % 2 == 0).map { case (v, i) =>
+          (i + 100L, v.map(_ + 0.05 * rnd.nextGaussian())) } ++
+        Seq((3L, base(3)), (5L, vec()), (300L, null), (301L, Seq.fill(dim)(0.0)),
+          (100L, null), (102L, base(9)), (200L, vec())))
+        .toDF("id", "src").repartition(3)
+      val index = Dedup.embeddingIndex(hist, "id", "src", dim, nTables = 4,
+        bitsPerTable = 6)
+      val items = batch.select($"id", $"src".as("v"))
+      val keyed = items.select($"id", explode(VectorFunctions.hyperplaneCodes(
+        $"v", 4, 6, dim, 42L)).as("code"))
+      val want = rows(itemsJoinedScreen(items, keyed, index, hist, Seq("code"),
+        "v", identity, "cosine", thr, VectorFunctions.cosine))
+      val ctx = s"seed=$seed thr=$thr"
+      assert(want.nonEmpty, ctx)
+      assert(rows(Dedup.embeddingPairsAgainst(batch, hist, "id", "src", dim,
+        threshold = thr, nTables = 4, bitsPerTable = 6)) == want, ctx)
+      assert(rows(Dedup.embeddingPairsAgainstIndex(batch, hist, index, "id",
+        "src", dim, threshold = thr, nTables = 4, bitsPerTable = 6,
+        broadcastNew = thr > 0.4)) == want, ctx)
+    }
+  }
+
+  test("screen faces evaluate their input once and cache nothing") {
+    val (hist, batch) = screenWorld(7)
+    val rnd = new scala.util.Random(8)
+    val vecs = (0 until 40).map(i => (i.toLong, Seq.fill(8)(rnd.nextGaussian())))
+    val vHist = vecs.toDF("id", "src")
+    val vBatch = vecs.take(10).map { case (i, v) => (i + 100L, v) }.toDF("id", "src")
+    val mIndex = Dedup.minhashIndex(hist, "id", "src", numHashes = 64, bands = 32)
+    val eIndex = Dedup.embeddingIndex(vHist, "id", "src", dim = 8)
+    val faces = Seq[(String, DataFrame, DataFrame => DataFrame)](
+      ("minhashPairsAgainst", batch, b => Dedup.minhashPairsAgainst(b, hist,
+        "id", "src", numHashes = 64, bands = 32, threshold = 0.5)),
+      ("minhashPairsAgainstIndex", batch, b => Dedup.minhashPairsAgainstIndex(
+        b, hist, mIndex, "id", "src", numHashes = 64, bands = 32,
+        threshold = 0.5)),
+      ("embeddingPairsAgainst", vBatch, b => Dedup.embeddingPairsAgainst(b,
+        vHist, "id", "src", dim = 8, threshold = 0.5)),
+      ("embeddingPairsAgainstIndex", vBatch, b => Dedup.embeddingPairsAgainstIndex(
+        b, vHist, eIndex, "id", "src", dim = 8, threshold = 0.5)))
+    for ((name, in, face) <- faces) {
+      val evals = spark.sparkContext.longAccumulator("upstream rows")
+      // nondeterministic: keeps the counter out of inferred join
+      // filters, so it counts upstream evaluations only
+      val counted = udf { (_: Long) => evals.add(1); true }.asNondeterministic()
+      var found = 0L
+      val plans = sqlExecutionsDuring {
+        found = face(in.filter(counted($"id"))).count()
+      }
+      assert(found > 0, name)
+      assert(evals.value == in.count(), name)
+      plans.foreach(p => assert(!p.contains("InMemoryRelation") &&
+        !p.contains("InMemoryTableScan"), s"$name:\n$p"))
+    }
+  }
+
+  test("direct-key exactAgainst == the distinct-keyed screen, " +
+    "duplicate keys on both sides") {
+    val rnd = new scala.util.Random(31)
+    def keyRows(n: Int, base: Long) = Seq.fill(n)((
+      if (rnd.nextInt(9) == 0) null else java.lang.Long.valueOf(base + rnd.nextInt(30)),
+      s"k${rnd.nextInt(3)}", rnd.nextInt(1000)))
+    val corpus = keyRows(80, 0L).toDF("a", "b", "v").repartition(3)
+    val batch = keyRows(40, 15L).toDF("a", "b", "v").repartition(2)
+    for (cols <- Seq(Seq("a"), Seq("a", "b")); bc <- Seq(true, false)) {
+      def maybe(d: DataFrame) = if (bc) broadcast(d) else d
+      val bk = maybe(batch.select(cols.map(col): _*).distinct())
+      val hit = maybe(corpus.select(cols.map(col): _*)
+        .join(bk, cols, "left_semi").distinct())
+      val want = rows(batch.join(hit, cols, "left_anti"))
+      assert(want.nonEmpty && want.size < batch.count(), s"$cols $bc")
+      assert(rows(Dedup.exactAgainst(batch, corpus, cols, broadcastBatch = bc,
+        hashKeys = false)) == want, s"cols=$cols broadcast=$bc")
     }
   }
 

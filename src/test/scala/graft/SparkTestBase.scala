@@ -19,6 +19,11 @@ object SparkTestBase {
 abstract class SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.spark
 
+  /** wait until the async listener bus has delivered every event
+    * posted so far, so a listener removed next has seen them all */
+  def drainListenerBus(): Unit =
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+
   /** Count Spark jobs launched by `body`, with AQE and broadcast
     * joins disabled for determinism (AQE materializes query stages
     * as extra jobs; broadcast exchanges submit their own). Restores
@@ -39,7 +44,7 @@ abstract class SparkTestBase extends AnyFunSuite {
         n.incrementAndGet()
     }
     sc.addSparkListener(l)
-    try { body; Thread.sleep(500) /* listener bus is async */ }
+    try { body; drainListenerBus() }
     finally {
       sc.removeSparkListener(l)
       conf.set("spark.sql.adaptive.enabled", aqe)
@@ -61,7 +66,7 @@ abstract class SparkTestBase extends AnyFunSuite {
         n.incrementAndGet()
     }
     spark.sparkContext.addSparkListener(l)
-    try { body; Thread.sleep(500) /* listener bus is async */ }
+    try { body; drainListenerBus() }
     finally spark.sparkContext.removeSparkListener(l)
     n.get
   }
@@ -82,7 +87,7 @@ abstract class SparkTestBase extends AnyFunSuite {
       }
     }
     spark.sparkContext.addSparkListener(l)
-    try { body; Thread.sleep(1000) /* listener bus is async */ }
+    try { body; drainListenerBus() }
     finally spark.sparkContext.removeSparkListener(l)
     import scala.jdk.CollectionConverters._
     seen.asScala.toSeq
@@ -103,7 +108,7 @@ abstract class SparkTestBase extends AnyFunSuite {
           seen.add(j.stageInfos.headOption.fold("?")(_.name))
     }
     spark.sparkContext.addSparkListener(l)
-    try { body; Thread.sleep(1000) /* listener bus is async */ }
+    try { body; drainListenerBus() }
     finally spark.sparkContext.removeSparkListener(l)
     import scala.jdk.CollectionConverters._
     seen.asScala.toSeq
