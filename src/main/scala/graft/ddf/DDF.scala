@@ -703,18 +703,14 @@ class DDF(val df: DataFrame) {
 
   /** [[graft.streaming.Admission.admitBatchSubstring]] — the
     * substring-coverage admission cycle against a persisted gram
-    * index, same contract as [[admitInto]]; `compactFileThreshold`
-    * > 0 turns on the index auto-compaction policy. */
+    * index, same contract (one commit, compaction under the
+    * listing-threshold policy) as [[admitInto]]. */
   def admitIntoSubstring(corpusPath: String, indexPath: String,
                          idCol: String, textCol: String, k: Int,
-                         maxDupCoverage: Double = 0.5,
-                         compactFileThreshold: Int = 0,
-                         compactPartitions: Int = 32)
+                         maxDupCoverage: Double = 0.5)
   : graft.streaming.Admission.AdmitStats =
     graft.streaming.Admission.admitBatchSubstring(df, corpusPath,
-      indexPath, idCol, textCol, k, maxDupCoverage = maxDupCoverage,
-      compactFileThreshold = compactFileThreshold,
-      compactPartitions = compactPartitions)
+      indexPath, idCol, textCol, k, maxDupCoverage = maxDupCoverage)
 
   /** [[graft.operators.Dedup.decontaminate]] — drop docs overlapping
     * an eval suite */

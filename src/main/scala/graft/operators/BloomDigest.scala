@@ -150,9 +150,34 @@ object BloomDigest {
                           path: String, fpp: Double, capacity: Long,
                           inserted: Long, bytes: Array[Byte]): Unit = {
     import spark.implicits._
-    graft.streaming.Admission.swapWriteIndex(
-      Seq((Format, fpp, capacity, inserted, bytes))
-        .toDF("__fmt", "fpp", "capacity", "inserted", "bytes"), path)
+    stagedOverwrite(Seq((Format, fpp, capacity, inserted, bytes))
+      .toDF("__fmt", "fpp", "capacity", "inserted", "bytes"), path)
+  }
+
+  /** Overwrite `dest` via staging + rename — parquet's substitute for
+    * a transactional overwrite, since Spark refuses (correctly) to
+    * overwrite a path its own plan is reading. Crash windows: before
+    * the first rename, `dest` is untouched; between the two renames,
+    * `dest` is briefly absent and the previous digest survives at
+    * `dest__old` for manual restore. Single writer assumed. */
+  private def stagedOverwrite(df: DataFrame, dest: String): Unit = {
+    import org.apache.hadoop.fs.Path
+    val destPath = new Path(dest)
+    val fs = destPath.getFileSystem(
+      df.sparkSession.sparkContext.hadoopConfiguration)
+    val staging = new Path(dest + "__staging")
+    val old = new Path(dest + "__old")
+    fs.delete(staging, true)
+    df.write.mode("overwrite").parquet(staging.toString)
+    fs.delete(old, true)
+    if (fs.exists(destPath) && !fs.rename(destPath, old))
+      throw new IllegalStateException(
+        s"stagedOverwrite: could not move previous $dest aside")
+    if (!fs.rename(staging, destPath))
+      throw new IllegalStateException(
+        s"stagedOverwrite: could not move staging into place at $dest " +
+          s"(previous digest preserved at $old)")
+    fs.delete(old, true)
   }
 
   private def readDigest(spark: org.apache.spark.sql.SparkSession,

@@ -493,53 +493,6 @@ object Dedup {
     lshIndex(minhashLsh(idCol, textCol, numHashes, bands, shingleLen, seed),
       corpus, maxBucketSize)
 
-  /** Process-wide memo of validated index stamps, keyed on the index's
-    * input file set alone. A stamp is the index's ONE distinct `__`
-    * param tuple by column, or None for an index with zero rows; a
-    * stored stamp has passed the
-    * every-distinct-tuple scan (≤ 1 tuple), so any asked param list is
-    * then checked against it with no job ([[validateIndexParams]]).
-    * Only BARE file scans are keyed — any transformation over the scan
-    * (a test's `withColumn("__seed", …)`, a union, a filter) gets None
-    * and always re-validates, so a mutated plan can never ride a
-    * stored stamp. A rewritten index produces new part-file names
-    * (parquet writers never reuse names), so the key misses and a
-    * foreign rewrite re-validates in full. The one writer that adds
-    * entries without a scan is the partitioned fold
-    * ([[partitionedUpdateCore]]): when it wrote exactly the stamp it
-    * validated, it registers the index's new file set, so the next
-    * cycle's screen over the same files validates without a job — one
-    * validation per WRITTEN file set, not one per read. Bounded;
-    * failures are never stored (a multi-tuple index throws). */
-  private val validatedIndexes = new java.util.concurrent
-    .ConcurrentHashMap[Seq[String], Option[Map[String, Any]]]()
-
-  private def rememberStamp(files: Seq[String],
-                            stamp: Option[Map[String, Any]]): Unit =
-    if (validatedIndexes.size < 4096) validatedIndexes.put(files, stamp)
-
-  /** the memo's stamp when `files` (a bare scan's) were validated */
-  private def knownStamp(files: Option[Seq[String]])
-  : Option[Option[Map[String, Any]]] =
-    files.flatMap(fs => Option(validatedIndexes.get(fs)))
-
-  /** input-file key when (and only when) the plan is a bare scan,
-    * possibly under subquery aliases */
-  private def bareScanFiles(index: DataFrame): Option[Seq[String]] = {
-    import org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias
-    def strip(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-    : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = p match {
-      case s: SubqueryAlias => strip(s.child)
-      case other => other
-    }
-    strip(index.queryExecution.analyzed) match {
-      case _: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        val files = index.inputFiles
-        if (files.nonEmpty) Some(files.sorted.toSeq) else None
-      case _ => None
-    }
-  }
-
   /** Validate an index's embedded `__`-prefixed param columns and
     * strip them. Enforced, in order:
     *  - an index with NO param columns is rejected unless the caller
@@ -557,9 +510,8 @@ object Dedup {
     *    params added by a future format) only need to be constant.
     * An EMPTY index (zero rows) passes vacuously: there is nothing to
     * validate and every screen over it returns zero candidates.
-    * The distinct scan runs once per bare-scan file set: its stamp is
-    * memoized ([[validatedIndexes]]) and later calls check their own
-    * `asked` list against it without a job. */
+    * Every call runs the distinct scan; an admission state validates
+    * once, at adoption, and reads its manifest's stamp after that. */
   private[operators] def validateIndexParams(index: DataFrame, what: String,
                                   asked: Seq[(String, Any)],
                                   acceptUnvalidated: Boolean): DataFrame = {
@@ -586,34 +538,28 @@ object Dedup {
         "it would silently return ~zero candidates. Rebuild it with " +
         "the current library, or pass acceptUnvalidated = true to " +
         "run a hand-built index on your own contract.")
-    val files = bareScanFiles(index)
-    val built = knownStamp(files).getOrElse {
-      // no .limit(3) guard here: a limit over a shuffle runs the
-      // incremental try-1-then-2-then-4-partitions probe — FOUR jobs
-      // per validation at gate scale. The distinct
-      // of constant-per-build columns is bounded by the number of
-      // builds ever unioned into the file set (1 for any graft-
-      // written index), so a plain collect is one job and bytes.
-      val tuples = index.select(paramCols.map(col): _*).distinct()
-        .collect()
-      val capAt = paramCols.indexOf("__maxBucketSize")
-      require(capAt < 0 || !tuples.exists(_.get(capAt) == DeltaCap),
-        s"$what: index holds admission delta rows (uncapped batch " +
-          s"buckets, __maxBucketSize = $DeltaCap) that only their " +
-          "admission state merges exactly — screen through the " +
-          "admission cycle, or rebuild the index.")
-      require(tuples.length <= 1,
-        s"$what: index carries ${tuples.length}+ distinct build-param " +
-          s"tuples ${tuples.map(_.toString).mkString(", ")} over " +
-          s"(${paramCols.mkString(", ")}) — it was assembled from " +
-          "differently-parameterized builds (a union of indexes?) and " +
-          "would screen with mixed-recall buckets. Rebuild from one " +
-          "parameter set.")
-      val fresh = tuples.headOption.map(r =>
-        paramCols.zipWithIndex.map { case (c, i) => c -> r.get(i) }.toMap)
-      files.foreach(rememberStamp(_, fresh))
-      fresh
-    }
+    // no .limit(3) guard here: a limit over a shuffle runs the
+    // incremental try-1-then-2-then-4-partitions probe — FOUR jobs
+    // per validation at gate scale. The distinct of constant-per-build
+    // columns is bounded by the number of builds ever unioned into
+    // the file set (1 for any graft-written index), so a plain collect
+    // is one job and bytes.
+    val tuples = index.select(paramCols.map(col): _*).distinct().collect()
+    val capAt = paramCols.indexOf("__maxBucketSize")
+    require(capAt < 0 || !tuples.exists(_.get(capAt) == DeltaCap),
+      s"$what: index holds admission delta rows (uncapped batch " +
+        s"buckets, __maxBucketSize = $DeltaCap) that only their " +
+        "admission state merges exactly — screen through the " +
+        "admission cycle, or rebuild the index.")
+    require(tuples.length <= 1,
+      s"$what: index carries ${tuples.length}+ distinct build-param " +
+        s"tuples ${tuples.map(_.toString).mkString(", ")} over " +
+        s"(${paramCols.mkString(", ")}) — it was assembled from " +
+        "differently-parameterized builds (a union of indexes?) and " +
+        "would screen with mixed-recall buckets. Rebuild from one " +
+        "parameter set.")
+    val built = tuples.headOption.map(r =>
+      paramCols.zipWithIndex.map { case (c, i) => c -> r.get(i) }.toMap)
     built.foreach(requireAsked(_, what, asked))
     built
   }
@@ -676,8 +622,9 @@ object Dedup {
     * Cost: band the BATCH, then one shuffle of (old index ∪ batch
     * buckets) keyed on (band, bucket) — the index is orders of
     * magnitude smaller than the corpus (ids only, text never read).
-    * At 100 TB, partition the persisted index by `band` so only
-    * touched partitions rewrite. Batch ids must be disjoint from
+    * The returned frame is the whole merged index; at ingestion
+    * cadence the admission cycle writes a batch-sized delta instead
+    * ([[graft.streaming.Admission]]). Batch ids must be disjoint from
     * corpus ids (the same id-namespace contract as the screens). */
   def minhashIndexUpdate(index: DataFrame, newBatch: DataFrame,
                          idCol: String, textCol: String,
@@ -695,8 +642,7 @@ object Dedup {
     * aggregation: member lists concatenate, TRUE counts add, and the
     * cap re-applies on the summed count — so a bucket that a full
     * rebuild would kill dies here too, no matter which side(s) its
-    * members came from. `by` is the bucket key, led by the layout
-    * `part` for the partitioned fold. */
+    * members came from. `by` is the bucket key. */
   private def mergeIndex(rows: DataFrame, by: Seq[String],
                          maxBucketSize: Int): DataFrame =
     rows.groupBy(by.map(col): _*)
@@ -732,7 +678,7 @@ object Dedup {
     this.stamp(mergeIndex(rows, keys, cap), stamp)
   }
 
-  // ---- partitioned index persistence (partial rewrites) ----------------
+  // ---- partitioned index persistence ----------------------------------
 
   /** deterministic layout partition of a bucket key: hash-uniform, so
     * the per-partition slice of the index is ~indexBytes/numParts */
@@ -743,38 +689,19 @@ object Dedup {
     if (index.columns.contains("band")) Seq("band", "bucket")
     else Seq("code")
 
-  /** Result of a [[minhashIndexUpdatePartitioned]] /
-    * [[embeddingIndexUpdatePartitioned]] cycle: how many layout
-    * partitions the batch touched (and were rewritten) out of the
-    * index's total — rewritten bytes ≈ dirty/total of the index plus
-    * the batch's own buckets, vs a full-swap rewrite of all of it. */
-  case class PartialUpdateStats(dirtyPartitions: Int, totalPartitions: Int)
-
   /** Persist a graft-built index PARTITIONED by a hash of its bucket
-    * key (`part = xxhash64(key) mod numParts`), so that index
-    * maintenance can rewrite ONLY the partitions a batch touches
-    * ([[minhashIndexUpdatePartitioned]]) instead of swapping the whole
-    * index — the "partition the persisted index" mitigation the
-    * admission loop's cost model names, made real. Works for both
-    * index families (minhash (band, bucket) and embedding code keys
-    * are detected from the schema). An admission state adopts this
-    * layout as it is: its deltas go to `part=-1` and its compactions
-    * rewrite the layout whole ([[graft.streaming.Admission]]).
+    * key (`part = xxhash64(key) mod numParts`), so that a scan keyed
+    * on buckets reads ~indexBytes/numParts per layout partition.
+    * Works for both index families (minhash (band, bucket) and
+    * embedding code keys are detected from the schema). An admission
+    * state adopts this layout as it is: its deltas go to `part=-1` and
+    * its compactions rewrite the layout whole, under the same
+    * `numParts` ([[graft.streaming.Admission]]). Pick numParts so
+    * indexBytes/numParts is one comfortable file (e.g. 128 MB).
     *
-    * Sizing `numParts`: batch buckets hash uniformly, so an update
-    * rewrites ≈ numParts · (1 − (1 − 1/numParts)^B) partitions for B
-    * batch bucket keys — about min(B, numParts) · indexBytes/numParts
-    * bytes. Pick numParts so indexBytes/numParts is one comfortable
-    * file (e.g. 128 MB): the rewrite cost is then bounded by the
-    * BATCH's bucket count times the file size, independent of corpus
-    * size, where the full swap is corpus-proportional every cycle.
-    * For a backfill-sized batch (B >> numParts) every partition is
-    * dirty and this degrades gracefully to the full rewrite.
-    *
-    * `numParts` is stamped as `__numParts` and validated on update,
-    * like every other layout-critical param. One file per partition
-    * per write (the repartition below), so a maintained index stays
-    * at ≤ numParts files plus per-update rewrites. */
+    * `numParts` is stamped as `__numParts`, which the admission state
+    * reads back to keep the layout. One file per partition per write
+    * (the repartition below). */
   def indexWritePartitioned(index: DataFrame, path: String,
                             numParts: Int = 256): Unit = {
     require(index.columns.contains("__fmt"),
@@ -789,248 +716,6 @@ object Dedup {
       .repartition(col("part"))
       .write.mode("overwrite").partitionBy("part").parquet(path)
   }
-
-  /** Shared core of the two partitioned in-place updates: read the
-    * partitioned index at `path`, validate params, find the layout
-    * partitions the batch's buckets land in, merge ONLY those
-    * partitions' rows (the read is partition-pruned — untouched
-    * partitions are never scanned), and dynamically overwrite just
-    * the dirty partitions. The merged rows are localCheckpoint-ed
-    * first: they must be materialized before the overwrite because
-    * they are derived from the very files being replaced.
-    *
-    * Stamp contract: when the index frame's file set is already in
-    * the validation memo ([[validatedIndexes]] — a screen over this
-    * very frame validated it), the fold takes the index's stamp from
-    * the memo and checks its own params and `__numParts` against it
-    * without a job. Otherwise (a standalone call) it reads
-    * one head row for the stamp and validates the dirty partitions it
-    * merges. After the overwrite, if the stamp it wrote equals the
-    * memo stamp it validated, it registers the index's new file set
-    * (the frame's files outside the dirty partitions plus a listing of
-    * the dirty partition directories only), so the next screen over
-    * the same files is a memo hit. That relies on the same
-    * single-writer contract as `preRead`; a foreign rewrite
-    * writes new file names, so the memo misses and the next read
-    * validates in full.
-    *
-    * Durability contract vs a staged swap: the swap is one atomic
-    * rename (a crash leaves old or new, never a mix); dynamic
-    * partition overwrite commits per partition,
-    * so a crash mid-write can leave SOME partitions updated — with
-    * batch ids present in their buckets — and others not. Safe to
-    * re-run (the merge is idempotent per partition only if the batch
-    * was not yet folded — after a suspect crash, rebuild or restore
-    * the index rather than re-applying the batch; on a transactional
-    * table format, the real deployment surface at 100 TB, the commit
-    * is atomic and this caveat disappears). */
-  private def partitionedUpdateCore(spark: org.apache.spark.sql.SparkSession,
-                                    path: String, what: String, f: Lsh,
-                                    newBatch: DataFrame,
-                                    maxBucketSize: Int, numParts: Int,
-                                    acceptUnvalidated: Boolean,
-                                    preRead: Option[DataFrame])
-  : PartialUpdateStats = {
-    val (keys, asked) = (f.keys, withCap(f.params, maxBucketSize))
-    // preRead: a caller that already holds a DataFrame over `path`
-    // (a screen-then-fold loop that read the index once for its
-    // screen) passes it here to skip a second read — above
-    // spark.sql.sources.parallelPartitionDiscovery.threshold (32)
-    // dirs, EVERY fresh read of the partitioned layout runs a
-    // numParts-task listing job (the fold's single biggest job). Only
-    // valid while no writer has touched `path` since the frame was
-    // created — a single-writer contract.
-    val index = preRead.getOrElse(spark.read.parquet(path))
-    require(index.columns.contains("part"),
-      s"$what: index at $path is not partitioned — persist it with " +
-        "indexWritePartitioned (or use the full-swap update)")
-    val allParamCols = index.columns.filter(_.startsWith("__")).toSeq
-    val files = bareScanFiles(index)
-    // the whole file set's stamp, when the memo already holds it
-    val known = knownStamp(files)
-    // numParts = 0 means "the index's own layout": read the embedded
-    // __numParts from the stamp — the memo's, or else one head row of
-    // the constant RLE columns (a limit over a bare scan is one 1-task
-    // job, not the limit-over-shuffle probe trap). The stamp is also
-    // read for an EXPLICIT numParts and asserts agreement — with param
-    // validation pruned to dirty partitions (below), an all-new dirty
-    // set would otherwise let a wrong explicit numParts slip through
-    // and hash buckets into the wrong layout partitions.
-    val headParams: Option[Map[String, Any]] = known match {
-      case Some(memo) => memo
-      case None if allParamCols.nonEmpty =>
-        val head = index.select(allParamCols.map(col): _*).limit(1).collect()
-        head.headOption.map(r =>
-          allParamCols.zipWithIndex.map { case (c, i) => c -> r.get(i) }
-            .toMap)
-      case None => None
-    }
-    val embedded: Option[Int] =
-      headParams.flatMap(_.get("__numParts").collect { case i: Int => i })
-    val np = (numParts, embedded) match {
-      case (0, Some(e)) => e
-      case (0, None) =>
-        throw new IllegalArgumentException(
-          s"$what: index at $path lacks __numParts (or has zero " +
-            "rows), so its layout cannot be read back — pass numParts " +
-            "explicitly (it must match the value the index was " +
-            "created with)")
-      case (a, Some(e)) =>
-        require(a == e,
-          s"$what: index at $path was laid out with __numParts = $e " +
-            s"but numParts = $a was passed — an update under the " +
-            "wrong layout hashes buckets into the wrong partitions. " +
-            s"Pass numParts = $e (or 0 to read the layout from the " +
-            "index).")
-        a
-      case (a, None) => a // unstamped legacy layout: caller's contract
-    }
-    val written = asked :+ ("__numParts" -> np)
-    // The dirty-pruned validation below is VACUOUS when every dirty
-    // partition is new (zero existing param tuples in the pruned
-    // scan) — a wrong-param caller would then merge unvalidated and
-    // restamp those partitions with its own params, corrupting the
-    // index into a mixed-param state. The stamp read above (uniform
-    // across partitions by every writer's contract) is therefore
-    // checked against the caller's params here, at zero extra jobs.
-    // Hand-assembled MIXED stamps remain the full-index validation's
-    // to catch (the screen's, or the memo stamp's that it left; a
-    // standalone fold's pruned check below still catches them among
-    // the partitions actually read).
-    headParams.foreach { built =>
-      written.foreach { case (k, v) =>
-        require(!built.contains(k) || built(k) == v,
-          s"$what: index at $path was built with $k = ${built(k)} " +
-            s"but this update was called with $k = $v — folding " +
-            "under mismatched params would corrupt the index into a " +
-            "mixed-param state. Rebuild the index or match the " +
-            "params.")
-      }
-    }
-    // batch band rows: CACHE, populated by the dirty-scan collect below
-    // and reused by the merge, so banding and the dirty scan run as
-    // one job. Safe where a checkpoint was required for `merged`: nb
-    // derives from the BATCH, not from the index files the overwrite
-    // below replaces.
-    val nb = batchRows(f, newBatch).withColumn("part", partOf(keys, np))
-      .cache()
-    val dirty = nb.select(col("part")).distinct()
-      .collect().map(_.getInt(0)).sorted
-    if (dirty.isEmpty) { // empty batch
-      nb.unpersist()
-      return PartialUpdateStats(0, np)
-    }
-    val pruned = index.filter(col("part").isin(dirty.map(Int.box): _*))
-    val old = known match {
-      // the whole file set passed the every-tuple scan: its one stamp
-      // answers for the dirty partitions too
-      case Some(memo) =>
-        memo.foreach(requireAsked(_, what, written))
-        pruned.drop(allParamCols: _*)
-      // validate build params against the DIRTY partitions only — the
-      // same partition-pruned scan the merge reads — instead of the
-      // whole index: a full-index validation would be the fold's one
-      // corpus-proportional READ. Sound because every partitioned-index
-      // writer (indexWritePartitioned and this fold's stamp) stamps
-      // params uniformly across partitions — the screen side validates
-      // the full index, so a hand-assembled mixed-param union is caught
-      // there. Dirty partitions that do not exist yet (all-new buckets)
-      // validate vacuously here — the caller-param guard for that case
-      // is the stamp check above.
-      case None =>
-        validateIndexParams(pruned, what, written, acceptUnvalidated)
-    }
-    requireCounts(old, what)
-    val cols = keys.map(col) :+ col("ids") :+ col("n")
-    // one exchange: the union clusters on the layout partition, which
-    // also satisfies the (part, keys...) aggregation and lands each
-    // layout partition's rows in one task (one file per directory)
-    val merged = stamp(mergeIndex(
-        old.select(cols :+ partOf(keys, np).as("part"): _*)
-          .unionByName(nb).repartition(col("part")),
-        "part" +: keys, maxBucketSize), asked)
-      .withColumn("__numParts", lit(np))
-      .localCheckpoint()
-    nb.unpersist()
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try
-      merged.write.mode("overwrite").partitionBy("part").parquet(path)
-    finally prev match {
-      case Some(v) =>
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None =>
-        spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-    for (memo <- known; built <- memo; before <- files
-         if built == written.toMap)
-      rememberStamp(rewrittenFiles(spark, path, before, dirty), memo)
-    PartialUpdateStats(dirty.length, np)
-  }
-
-  /** the partitioned index's file set after a fold rewrote the `dirty`
-    * layout partitions: the `before` files outside them, plus a listing
-    * of the dirty directories alone (never a listing of the whole
-    * index — above 32 partitions that is a listing job). Hidden and
-    * metadata files are skipped as the parquet file index skips them;
-    * any difference from what a later read lists only makes the memo
-    * miss. */
-  private def rewrittenFiles(spark: org.apache.spark.sql.SparkSession,
-                             path: String, before: Seq[String],
-                             dirty: Seq[Int]): Seq[String] = {
-    import org.apache.hadoop.fs.Path
-    val dirs = dirty.map(p => s"part=$p").toSet
-    val kept = before.filterNot(f =>
-      dirs(new Path(new java.net.URI(f)).getParent.getName))
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val fresh = dirs.toSeq.flatMap { d =>
-      fs.listStatus(fs.makeQualified(new Path(root, d))).toSeq
-        .filter(st => st.isFile && {
-          val n = st.getPath.getName
-          !n.startsWith("_") && !n.startsWith(".") && !n.endsWith("._COPYING_")
-        })
-        .map(_.getPath.toUri.toString)
-    }
-    (kept ++ fresh).sorted
-  }
-
-  /** [[minhashIndexUpdate]] against a partitioned on-disk index
-    * ([[indexWritePartitioned]]), IN PLACE: bands the batch, rewrites
-    * only the layout partitions its buckets touch, and leaves every
-    * other partition's files untouched — bucket-for-bucket equivalent
-    * to the full-swap update (spec-pinned), at a write cost bounded
-    * by the batch's bucket count instead of the corpus (sizing math
-    * and the crash contract on [[indexWritePartitioned]] /
-    * [[partitionedUpdateCore]]). `numParts = 0` (the default) reads
-    * the layout from the index's embedded `__numParts`; a nonzero
-    * value additionally asserts the layout and throws on mismatch. */
-  def minhashIndexUpdatePartitioned(spark: org.apache.spark.sql.SparkSession,
-                                    path: String, newBatch: DataFrame,
-                                    idCol: String, textCol: String,
-                                    numHashes: Int = 64, bands: Int = 16,
-                                    shingleLen: Int = 3, seed: Long = 42L,
-                                    maxBucketSize: Int = 1000,
-                                    numParts: Int = 0,
-                                    acceptUnvalidated: Boolean = false,
-                                    preRead: Option[DataFrame] = None)
-  : PartialUpdateStats =
-    partitionedUpdateCore(spark, path, "minhashIndexUpdatePartitioned",
-      minhashLsh(idCol, textCol, numHashes, bands, shingleLen, seed),
-      newBatch, maxBucketSize, numParts, acceptUnvalidated, preRead)
-
-  /** [[minhashIndexUpdatePartitioned]]'s embedding sibling. */
-  def embeddingIndexUpdatePartitioned(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String, newBatch: DataFrame,
-      idCol: String, vecCol: String, dim: Int,
-      nTables: Int = 8, bitsPerTable: Int = 16, seed: Long = 42L,
-      maxBucketSize: Int = 10000, numParts: Int = 0,
-      acceptUnvalidated: Boolean = false,
-      preRead: Option[DataFrame] = None): PartialUpdateStats =
-    partitionedUpdateCore(spark, path, "embeddingIndexUpdatePartitioned",
-      embeddingLsh(idCol, vecCol, dim, nTables, bitsPerTable, seed),
-      newBatch, maxBucketSize, numParts, acceptUnvalidated, preRead)
 
   /** Incremental near-dup matching: (new, corpus) pairs by MinHash
     * LSH between a NEW batch and an EXISTING corpus, verified by
@@ -1379,6 +1064,10 @@ object Dedup {
     * index discipline): v1 = (chunk, key, id, sig) rows. */
   private[graft] val SignatureIndexFormat = 1
 
+  /** the stamp a signature index built with `maxDistance` carries */
+  private[graft] def signatureAsked(maxDistance: Int): Seq[(String, Any)] =
+    Seq("__fmt" -> SignatureIndexFormat, "__max_distance" -> maxDistance)
+
   /** Build the persistable signature-screen index — the SIXTH
     * incremental screen space (exact / jaccard / cosine / substring /
     * semantic / signature): every (id, 64-bit signature) row exploded
@@ -1416,8 +1105,7 @@ object Dedup {
                            maxDistance: Int = 3,
                            acceptUnvalidated: Boolean = false): DataFrame = {
     val idx = validateIndexParams(index, "signatureIndexUpdate",
-      Seq("__fmt" -> SignatureIndexFormat, "__max_distance" -> maxDistance),
-      acceptUnvalidated)
+      signatureAsked(maxDistance), acceptUnvalidated)
     idx.select(col("chunk"), col("key"), col("id"), col("sig"))
       .unionByName(signatureIndex(newDf, idCol, sigCol, maxDistance)
         .select(col("chunk"), col("key"), col("id"), col("sig")))
@@ -1447,8 +1135,7 @@ object Dedup {
                                  acceptUnvalidated: Boolean = false)
   : DataFrame = {
     val idx = validateIndexParams(index, "signaturePairsAgainstIndex",
-      Seq("__fmt" -> SignatureIndexFormat, "__max_distance" -> maxDistance),
-      acceptUnvalidated)
+      signatureAsked(maxDistance), acceptUnvalidated)
       .select(col("chunk"), col("key"), col("id"), col("sig"))
     signatureScreenCore(newDf, idx, idCol, sigCol, maxDistance,
       maxBucketSize)
@@ -1468,8 +1155,10 @@ object Dedup {
         .select(col("chunk"), col("key"), col("id"), col("sig")),
       idCol, sigCol, maxDistance, maxBucketSize)
 
-  /** shared screen core over a stripped (chunk, key, id, sig) index */
-  private def signatureScreenCore(newDf: DataFrame, idx: DataFrame,
+  /** shared screen core over a stripped (chunk, key, id, sig) index;
+    * the admission cycle calls it over its state's rows, whose stamp
+    * the manifest holds */
+  private[graft] def signatureScreenCore(newDf: DataFrame, idx: DataFrame,
                                   idCol: String, sigCol: String,
                                   maxDistance: Int,
                                   maxBucketSize: Int): DataFrame = {

@@ -627,22 +627,36 @@ object SemDedup {
       s"assignment index stamps not constant (${stamps.length} " +
         "distinct tuples) — the file mixes builds under different " +
         "centers or formats; rebuild with SemDedup.assignmentIndex")
-    stamps.headOption.foreach { h =>
-      require(h.getInt(0) == AssignIndexFormat,
-        s"assignment index format ${h.getInt(0)} does not match this " +
-          s"library's v$AssignIndexFormat — rebuild (an incompatible " +
-          "layout would screen WRONG, not just miss)")
-      require(h.getInt(1) == centers.length &&
-        h.getInt(2) == centers.head.length &&
-        h.getString(3) == centersDigest(centers),
-        s"assignment index was built under a DIFFERENT center table " +
-          s"(k=${h.getInt(1)}, dim=${h.getInt(2)}, digest=" +
-          s"${h.getString(3).take(8)}…) than the caller's " +
-          s"(k=${centers.length}, dim=${centers.head.length}, digest=" +
-          s"${centersDigest(centers).take(8)}…) — screening would be " +
-          "silently wrong; rebuild the index or load the matching " +
-          "centers")
-    }
+    stamps.headOption.foreach(h => requireCentersStamp(Map(
+      "__fmt" -> h.getInt(0), "__k" -> h.getInt(1), "__dim" -> h.getInt(2),
+      "__digest" -> h.getString(3)), centers))
+  }
+
+  /** the stamp an assignment index built under `centers` carries */
+  private[graft] def centersStamp(centers: Seq[Seq[Double]])
+  : Seq[(String, Any)] = {
+    requireCenters(centers)
+    Seq("__fmt" -> AssignIndexFormat, "__k" -> centers.length,
+      "__dim" -> centers.head.length, "__digest" -> centersDigest(centers))
+  }
+
+  /** an assignment index's stamp must be this library's format, built
+    * under `centers` */
+  private[graft] def requireCentersStamp(stamp: Map[String, Any],
+                                         centers: Seq[Seq[Double]]): Unit = {
+    val want = centersStamp(centers).toMap
+    require(stamp.get("__fmt") == want.get("__fmt"),
+      s"assignment index format ${stamp.getOrElse("__fmt", "(none)")} " +
+        s"does not match this library's v$AssignIndexFormat — rebuild (an " +
+        "incompatible layout would screen WRONG, not just miss)")
+    def shown(m: Map[String, Any]) = s"k=${m.getOrElse("__k", "?")}, " +
+      s"dim=${m.getOrElse("__dim", "?")}, digest=" +
+      s"${m.getOrElse("__digest", "?").toString.take(8)}…"
+    require(Seq("__k", "__dim", "__digest").forall(k => stamp.get(k) == want.get(k)),
+      s"assignment index was built under a DIFFERENT center table " +
+        s"(${shown(stamp)}) than the caller's (${shown(want)}) — screening " +
+        "would be silently wrong; rebuild the index or load the " +
+        "matching centers")
   }
 
   private def requireScreenParams(centers: Seq[Seq[Double]],
@@ -659,14 +673,16 @@ object SemDedup {
     * [[screenPairsIndexed]] (review r13: keeping the two faces on
     * one core means a threshold/cap/join fix cannot silently miss
     * one of them): `ca` supplies the corpus-side (id_corpus,
-    * cluster) — from a live [[assign]] or a persisted index — and
-    * `vecs` the (id_corpus, __vc) vectors. Count-first cap on the
-    * corpus clusters, batch assigned + broadcast, cosine verified. */
-  private def screenCore(ca: DataFrame, vecs: DataFrame,
-                         batch: DataFrame, idCol: String,
-                         vecCol: String, centers: Seq[Seq[Double]],
-                         minCosine: Double, maxClusterSize: Int,
-                         nProbe: Int, nCells: Int): DataFrame = {
+    * cluster) — from a live [[assign]], a persisted index or an
+    * admission state's rows — and `vecs` the (id_corpus, __vc)
+    * vectors. Count-first cap on the corpus clusters, batch assigned +
+    * broadcast, cosine verified. Lazy: no job runs here. */
+  private[graft] def screenCore(ca: DataFrame, vecs: DataFrame,
+                                batch: DataFrame, idCol: String,
+                                vecCol: String, centers: Seq[Seq[Double]],
+                                minCosine: Double, maxClusterSize: Int,
+                                nProbe: Int, nCells: Int): DataFrame = {
+    requireScreenParams(centers, minCosine, maxClusterSize)
     val ok = ca.groupBy(col("cluster")).agg(count(lit(1)).as("__n"))
       .filter(col("__n") <= maxClusterSize).select(col("cluster"))
     val ba = assignWithVec(batch.select(col(idCol).as("id_new"),
@@ -697,12 +713,13 @@ object SemDedup {
                          minCosine: Double,
                          maxClusterSize: Int = 10000,
                          nProbe: Int = 0, nCells: Int = 0): DataFrame = {
-    requireScreenParams(centers, minCosine, maxClusterSize)
-    validateAssignmentIndex(index, centers)
-    screenCore(index.select(col("id").as("id_corpus"), col("cluster")),
+    val pairs = screenCore(
+      index.select(col("id").as("id_corpus"), col("cluster")),
       corpus.select(col(idCol).as("id_corpus"), col(vecCol).as("__vc")),
       batch, idCol, vecCol, centers, minCosine, maxClusterSize,
       nProbe, nCells)
+    validateAssignmentIndex(index, centers)
+    pairs
   }
 
   /** Incremental SCREEN face (the q115/q118 discipline in cluster
@@ -728,7 +745,6 @@ object SemDedup {
                   minCosine: Double,
                   maxClusterSize: Int = 10000,
                   nProbe: Int = 0, nCells: Int = 0): DataFrame = {
-    requireScreenParams(centers, minCosine, maxClusterSize)
     // assign + CACHE the corpus once: the cluster-count cap and the
     // candidate join both read the cached assignment — without it
     // the corpus would scan (and argmin) twice per screen (review

@@ -114,7 +114,7 @@ object SubstringDedup {
     * recall). Bump on any change to tokens()/gram hashing. */
   val GramIndexFormat: Int = 1
 
-  private def gramAsked(k: Int, hashKeys: Boolean): Seq[(String, Any)] =
+  private[graft] def gramAsked(k: Int, hashKeys: Boolean): Seq[(String, Any)] =
     Seq("__fmt" -> GramIndexFormat, "__k" -> k, "__hashKeys" -> hashKeys)
 
   private def stampGramParams(idx: DataFrame, k: Int,
@@ -128,9 +128,10 @@ object SubstringDedup {
     * distinct k-gram keys (8-byte hashes by default), built with one
     * partial-agg distinct, ids and text never stored. Build params
     * ride embedded `__` columns and are validated on every use
-    * (Dedup's format-versioning machinery, session-memoized). At
-    * scale, persist partitioned/bucketed by the gram key so the
-    * screen join co-locates. */
+    * (Dedup's format-versioning machinery; an admission state
+    * validates once, at adoption). At scale, persist
+    * partitioned/bucketed by the gram key so the screen join
+    * co-locates. */
   def gramIndex(corpus: DataFrame, idCol: String, textCol: String,
                 k: Int, hashKeys: Boolean = true): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
@@ -143,8 +144,9 @@ object SubstringDedup {
     * re-reading the corpus. Update ≡ rebuild EXACTLY (distinct-union
     * is the whole merge — no counts, no caps), spec-pinned. The
     * returned frame is the FULL merged index — writing it back is an
-    * index-proportional rewrite; at ingestion cadence use
-    * [[gramIndexAppendInPlace]], whose write is batch-bounded. */
+    * index-proportional rewrite; at ingestion cadence the substring
+    * admission cycle writes only [[gramDelta]]
+    * ([[graft.streaming.Admission.admitBatchSubstring]]). */
   def gramIndexUpdate(index: DataFrame, newBatch: DataFrame,
                       idCol: String, textCol: String, k: Int,
                       hashKeys: Boolean = true,
@@ -159,46 +161,23 @@ object SubstringDedup {
       k, hashKeys)
   }
 
-  /** BATCH-BOUNDED index maintenance — the LSM-style alternative to
-    * rewriting the merged index: only the batch's grams NOT already
-    * present (one anti join, batch side broadcast-small by the
-    * ingestion contract) are APPENDED as new parquet files at
-    * `indexPath`; existing files are never touched. Because the
-    * appended set is disjoint from the stored set, the on-disk
-    * DISTINCT-gram content after append is IDENTICAL to
-    * [[gramIndexUpdate]]-then-rewrite and to a full rebuild
-    * (spec-pinned, old files byte-identical by listing). The trade is
-    * file count: every batch adds files, so pair with a periodic
-    * compaction (read → distinct → swap — the
-    * [[graft.streaming.Admission.compactCorpus]] pattern) at whatever
-    * cadence keeps the file listing healthy. Crash contract: parquet
-    * append commits per file; a crash mid-append leaves a valid index
-    * missing some of the batch's grams — recall degrades for exactly
-    * those runs until the batch replays, nothing corrupts. */
-  def gramIndexAppendInPlace(spark: org.apache.spark.sql.SparkSession,
-                             indexPath: String, newBatch: DataFrame,
-                             idCol: String, textCol: String, k: Int,
-                             hashKeys: Boolean = true,
-                             acceptUnvalidated: Boolean = false): Long = {
-    val idx = Dedup.validateIndexParams(spark.read.parquet(indexPath),
-      "gramIndexAppendInPlace", gramAsked(k, hashKeys), acceptUnvalidated)
-    // the exactAgainst double-broadcast shape: the batch's distinct
-    // grams broadcast into ONE index semi-join scan (the index never
-    // shuffles), the small hit set broadcasts back into the anti join
-    val batchGrams = grams(newBatch, idCol, textCol, k, hashKeys)
+  /** An admission commit's index delta: the batch's grams that
+    * `index` (an admission state's rows) lacks, stamped. One anti
+    * join in the exactAgainst double-broadcast shape: the batch's
+    * distinct grams broadcast into ONE index semi-join scan (the index
+    * never shuffles), the small hit set broadcasts back into the anti
+    * join. The delta is disjoint from the index, so base ∪ deltas has
+    * the distinct-gram content of [[gramIndexUpdate]] and of a
+    * rebuild. */
+  private[graft] def gramDelta(batch: DataFrame, index: DataFrame,
+                               idCol: String, textCol: String, k: Int,
+                               hashKeys: Boolean): DataFrame = {
+    val batchGrams = grams(batch, idCol, textCol, k, hashKeys)
       .select(col("g")).distinct()
-    val hits = idx.select(col("g"))
-      .join(broadcast(batchGrams), Seq("g"), "left_semi").distinct()
-    val fresh = batchGrams
-      .join(broadcast(hits), Seq("g"), "left_anti")
-      // settle BEFORE the append: the write must not recompute a plan
-      // that scans the files it is adding to
-      .localCheckpoint()
-    val n = fresh.count()
-    if (n > 0)
-      stampGramParams(fresh, k, hashKeys)
-        .write.mode("append").parquet(indexPath)
-    n
+    val hits = index.select(col("g"))
+      .join(broadcast(batchGrams), Seq("g"), "left_semi")
+    stampGramParams(batchGrams.join(broadcast(hits), Seq("g"), "left_anti"),
+      k, hashKeys)
   }
 
   /** [[duplicateSpans]] against a persisted corpus [[gramIndex]]:
@@ -213,11 +192,18 @@ object SubstringDedup {
   def duplicateSpansAgainst(newBatch: DataFrame, corpusIndex: DataFrame,
                             idCol: String, textCol: String, k: Int,
                             hashKeys: Boolean = true,
-                            acceptUnvalidated: Boolean = false): DataFrame = {
-    val idx = Dedup.validateIndexParams(corpusIndex, "duplicateSpansAgainst",
-      gramAsked(k, hashKeys), acceptUnvalidated)
+                            acceptUnvalidated: Boolean = false): DataFrame =
+    spansAgainst(newBatch, Dedup.validateIndexParams(corpusIndex,
+      "duplicateSpansAgainst", gramAsked(k, hashKeys), acceptUnvalidated),
+      idCol, textCol, k, hashKeys)
+
+  /** [[duplicateSpansAgainst]]'s core over an index whose stamp is
+    * already checked (the admission cycle's state rows) */
+  private[graft] def spansAgainst(newBatch: DataFrame, index: DataFrame,
+                                  idCol: String, textCol: String, k: Int,
+                                  hashKeys: Boolean): DataFrame = {
     val covered = grams(newBatch, idCol, textCol, k, hashKeys)
-      .join(idx.select(col("g")), Seq("g"), "left_semi")
+      .join(index.select(col("g")), Seq("g"), "left_semi")
     mergeSpans(covered.select(col(idCol), col("s")), idCol, k)
   }
 
@@ -249,42 +235,6 @@ object SubstringDedup {
     cutSpans(docs,
       duplicateSpans(docs, idCol, textCol, k, keepFirst, hashKeys),
       idCol, textCol, outCol)
-
-  /** Compact an append-mode gram index
-    * ([[gramIndexAppendInPlace]]'s file-count counterpart, the
-    * [[graft.streaming.Admission.compactCorpus]] pattern): the
-    * content is already distinct (appends are disjoint by
-    * construction), so compaction only reshapes the file listing —
-    * read, repartition on the gram key (co-locating the key range a
-    * screen probes), write aside, swap. Validates the index params
-    * first so a foreign table cannot be silently rewritten; returns
-    * the gram count. Run at whatever cadence keeps listings healthy
-    * — between compactions, appends stay batch-bounded. */
-  /** number of parquet data files currently backing the index — the
-    * health metric the auto-compaction policy gates on (each
-    * [[gramIndexAppendInPlace]] adds files; listing/open overhead
-    * grows with the count, content does not). */
-  def gramIndexFileCount(spark: org.apache.spark.sql.SparkSession,
-                         indexPath: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) 0
-    else fs.listStatus(p).count(s =>
-      s.isFile && s.getPath.getName.startsWith("part-"))
-  }
-
-  def gramIndexCompact(spark: org.apache.spark.sql.SparkSession,
-                       indexPath: String, partitions: Int,
-                       acceptUnvalidated: Boolean = false): Long = {
-    require(partitions > 0, s"partitions must be positive, got $partitions")
-    val idx = spark.read.parquet(indexPath)
-    // validation only — the rewrite keeps the param columns intact
-    Dedup.validateIndexParams(idx, "gramIndexCompact",
-      Seq("__fmt" -> GramIndexFormat), acceptUnvalidated)
-    graft.streaming.Admission.swapWriteIndex(
-      idx.repartition(partitions, col("g")), indexPath)
-    spark.read.parquet(indexPath).count()
-  }
 
   /** [[duplicateSpansAgainst]] applied: SCRUB corpus-known runs out
     * of a batch instead of rejecting whole documents — every ≥k-token

@@ -12,71 +12,87 @@ import org.json4s.jackson.JsonMethods
 import graft.operators.Dedup
 
 /** The streaming ADMISSION LOOP — the production shape that the
-  * incremental-screen family (Dedup.exactAgainst /
-  * minhashPairsAgainstIndex / minhashIndexUpdate) exists to serve,
-  * closed end to end: each arriving batch of documents is screened
-  * against the persisted corpus, the survivors are appended to the
-  * corpus, and the persisted index grows by them so the NEXT batch
-  * screens against them too — the corpus is never re-banded, ever
-  * (cost measured flat in BENCH_NOTES §index-maintenance while
-  * rebuild cost rides corpus size).
+  * incremental-screen family (Dedup.exactAgainst and the
+  * index-backed near-dup screens) exists to serve, closed end to end:
+  * each arriving batch of documents is screened against the persisted
+  * corpus, the survivors are appended to the corpus, and the persisted
+  * index grows by them so the NEXT batch screens against them too —
+  * the corpus is never re-banded, ever (cost measured flat in
+  * BENCH_NOTES §index-maintenance while rebuild cost rides corpus
+  * size).
   *
   * Reference scope: the reference library has no streaming surface at
   * all (SURVEY §2 row "Streams"); this is a DRIVER-EXT capability a
   * training-data pipeline needs at 100 TB, built on Structured
   * Streaming's foreachBatch + the batch screen operators.
   *
-  * Per batch, in order:
-  *   0. (MinHash and embedding spaces) recovery: finish the last
-  *      commit's file moves if a crash interrupted them, and delete
-  *      whatever an uncommitted cycle staged — before anything reads.
+  * Five admission spaces share one cycle: MinHash ([[admitBatch]]),
+  * embedding, semantic, signature and substring. Per batch, in order:
+  *   0. recovery: finish the last commit's file moves if a crash
+  *      interrupted them, and delete whatever an uncommitted cycle
+  *      staged — before anything reads.
   *   1. the EXACT ID screen against the corpus
   *      ([[Dedup.exactAgainst]]), then one row per id, settled into a
   *      local checkpoint whose job observes its row count. This is also
   *      what makes a foreachBatch REPLAY a no-op: foreachBatch is
   *      at-least-once, and rows a committed cycle appended carry ids
   *      the corpus now contains, so they drop here.
-  *   2. near-dup screen against the persisted index
-  *      ([[Dedup.minhashPairsAgainstIndex]] semantics — batch-bounded
-  *      banding, one corpus scan for jaccard verification), lazily
-  *      over the step-1 checkpoint as it stands: nothing is cached.
+  *   2. the space's near-dup screen against the persisted index
+  *      (MinHash: [[Dedup.minhashPairsAgainstIndex]] semantics —
+  *      batch-bounded banding, one corpus scan for jaccard
+  *      verification), lazily over the step-1 checkpoint as it
+  *      stands: nothing is cached.
   *   3. optional within-batch near-dedup among the survivors
   *      ([[Dedup.minhashDedup]], batch-bounded). Corpus-screen FIRST:
   *      if batch doc B's only near-dup partner A was itself dropped
   *      by the corpus screen, B is still admitted — within-first
   *      would have dropped B in favor of A and then lost A too.
   *   4. settle the admitted rows as in step 1 (steps 2–3 run in that
-  *      execution), write them and fold them into the index. A
+  *      execution), write them and their index delta, and commit. A
   *      steady-state MinHash cycle without the within-batch pass or
-  *      `collectStats` is 4 SQL executions (pinned in AdmissionSpec).
+  *      `collectStats` is 4 SQL executions (pinned in AdmissionSpec,
+  *      as are the other spaces' cycles).
   *
-  * MinHash and embedding state: ONE ATOMIC COMMIT PER CYCLE. The
-  * index is a base plus deltas; `indexPath/_graft_state/vN.json` (the
-  * manifest) names the base and delta files relative to `indexPath`,
-  * and holds the corpus and index schemas and the index's validated
-  * stamp. A cycle writes its admitted rows (the corpus delta) to a
-  * hidden staging directory, writes the admitted rows' uncapped
-  * bucket rows (the index delta, [[Dedup.lshDelta]]) beside the base,
-  * and commits by renaming a temp file to `vN+1.json`; only then are
-  * the corpus delta's files moved into `corpusPath`. Reads name their
-  * files from the manifest with its schemas: no schema-inference job,
-  * no listing job, no stamp scan. The screen merges the batch-touched
-  * buckets of base ∪ deltas under the cap before it explodes ids, so
-  * it answers exactly as a screen over the compacted index (pinned in
-  * DedupSpec). A compaction folds the deltas into a new base (same
-  * layout, flat or [[Dedup.indexWritePartitioned]]) as its own commit,
-  * when the next read would otherwise name more files than
+  * ONE ATOMIC COMMIT PER CYCLE. The index is a base plus deltas;
+  * `indexPath/_graft_state/vN.json` (the manifest) names the base and
+  * delta files relative to `indexPath`, and holds the corpus and index
+  * schemas and the index's validated stamp. A cycle writes its
+  * admitted rows (the corpus delta) and the index delta to hidden
+  * staging directories and commits by renaming a temp file to
+  * `vN+1.json`; only then are the staged files moved into
+  * `corpusPath` and `indexPath`. Reads name their files from the
+  * manifest with its schemas: no schema-inference job, no listing
+  * job, no stamp scan. The index delta is the admitted batch's own
+  * index rows:
+  *   - MinHash and embedding: its uncapped bucket rows
+  *     ([[Dedup.lshDelta]]). The screen merges the batch-touched
+  *     buckets of base ∪ deltas under the cap before it explodes ids,
+  *     so it answers exactly as a screen over the compacted index
+  *     (pinned in DedupSpec).
+  *   - semantic: the batch's [[graft.operators.SemDedup
+  *     .assignmentIndex]] rows; signature: its [[Dedup.signatureIndex]]
+  *     rows (ids disjoint from the base's: the id screen ran first);
+  *     substring: the batch grams the state lacks. Each index is a
+  *     set of rows, so base ∪ deltas IS the index.
+  * A compaction folds the deltas into a new base (same layout, flat or
+  * [[Dedup.indexWritePartitioned]]; the three set-of-rows spaces
+  * simply rewrite) as its own commit, when the next read would
+  * otherwise name more files than
   * `spark.sql.sources.parallelPartitionDiscovery.threshold` (above it
   * the listing itself is a Spark job) — or, for a base already past
   * that, once the deltas outnumber the base files.
   *
   * The first cycle on a state without a manifest ADOPTS it: one
   * listing and one stamp validation of the index, as every cycle paid
-  * before manifests. Either index layout is adopted in place and
-  * keeps its layout. Once adopted, the state belongs to the admission
-  * faces: the standalone folds (`minhashIndexUpdate*`) do not know
-  * the deltas, and replacing the index means deleting its
-  * `_graft_state` too.
+  * before manifests. A flat index is adopted in place; a partitioned
+  * one only in the layout [[Dedup.indexWritePartitioned]] writes
+  * (MinHash and embedding indexes, stamped `__numParts`), which
+  * its compactions keep — any other partitioned layout is refused
+  * before any write. Once adopted, the state belongs to the admission
+  * faces: the standalone folds (`minhashIndexUpdate`,
+  * `signatureIndexUpdate`, `gramIndexUpdate`, …) do not know the
+  * deltas, and replacing the index means deleting its `_graft_state`
+  * too.
   *
   * Crash-safety contract (single writer assumed): a crash before the
   * rename leaves the previous version committed; the next cycle's
@@ -84,54 +100,48 @@ import graft.operators.Dedup
   * starts from scratch. A crash after the rename leaves the new
   * version committed; recovery completes its file moves before the id
   * screen runs, so a replay finds the batch's ids in the corpus and
-  * is a no-op, and near-dups of the batch still drop. Pinned by the
-  * fault-injection test in AdmissionSpec. The rename is atomic on the
-  * local file system and on HDFS; an object store needs a
-  * put-if-absent manifest write instead (S3 conditional writes, GCS
-  * generation preconditions), which this class does not do.
+  * is a no-op, and near-dups of the batch still drop. Pinned for
+  * every space, and for [[compactCorpus]], by the fault-injection test
+  * in AdmissionSpec. The rename is atomic on the local file system
+  * and on HDFS; an object store needs a put-if-absent manifest write
+  * instead (S3 conditional writes, GCS generation preconditions),
+  * which this class does not do.
   *
   * Plain-read contract. A plain `spark.read.parquet(corpusPath)`
   * returns exactly the committed corpus, never a duplicate: staged
   * files are hidden until their commit moves them in. Between a
   * rename and its moves (and after a crash there, until the next
   * cycle) it returns the previous version. A plain
-  * `spark.read.parquet(indexPath)` is never silently stale. Without
-  * deltas it is the exact index. While deltas exist (they are moved
-  * in before the rename and deleted last by a compaction) their
-  * `__maxBucketSize = -1` stamp makes a screen or a full-swap fold
-  * over the plain read fail validation — the uncapped rows only merge
-  * exactly through the state.
+  * `spark.read.parquet(indexPath)` is never silently stale: for the
+  * semantic, signature and substring spaces it is the exact index of
+  * the same version (a compaction deletes the old files before it
+  * moves the new base in, so no row is seen twice). For MinHash and
+  * embedding it is the exact index without deltas; while deltas exist
+  * (a compaction deletes them last) their `__maxBucketSize = -1`
+  * stamp makes a screen or a fold over the plain read fail validation
+  * — the uncapped rows only merge exactly through the state.
   *
   * Cost model at scale. Per cycle the index WRITE is batch-sized (one
   * delta file); the index READ scans base ∪ deltas, as the screen
-  * always scanned the whole index, and merges only the buckets the
-  * batch touches. What IS corpus-proportional: each cycle READS the
-  * corpus twice (the id-screen semi join and the near-dup
-  * jaccard/cosine verification join; neither shuffles it, both scan
-  * it). At gate scale that is noise (BENCH_NOTES "Full admission
-  * cycle scaling" measures flat cycles); at 100 TB it is the dominant
-  * term, and the mitigations are storage-layout ones: bucket the
-  * corpus by `idCol` — the id screen joins on the raw id (hashKeys =
-  * false), so a bucketed corpus joins with ZERO corpus-side exchange
-  * and an IN-list id probe prunes buckets (both measured: BENCH_NOTES
-  * "r8: Bucketed-corpus id screen measured", SelectedBucketsCount
-  * 17/64 for a 20-id probe, corpus never shuffled) — or keep a
-  * distilled ids-only keys table beside the index and screen ids
-  * against that instead of the corpus; the one-commit manifest is
-  * what makes such a keys delta safe to add. The
-  * verification join carries the raw text/vector column and derives
-  * the payload above the join, so only candidate rows are shingled.
-  * The batch is read once per cycle, into the step-1 checkpoint that
-  * every later branch reads; no in-memory cache is built per cycle.
-  *
-  * The semantic, signature and substring spaces keep their folds:
-  * the corpus append, then the index swap (or the substring append),
-  * with the older contract on [[foldCycle]].
-  *
-  * [[admitBatchEmbedding]] / [[admitStreamEmbedding]] are the
-  * embedding-space siblings: identical skeleton and contracts, with
-  * the SemDeDup-style cosine screen over a persisted
-  * [[Dedup.embeddingIndex]]. */
+  * always scanned the whole index. What IS corpus-proportional: each
+  * MinHash/embedding cycle READS the corpus twice (the id-screen semi
+  * join and the near-dup jaccard/cosine verification join; neither
+  * shuffles it, both scan it). At gate scale that is noise
+  * (BENCH_NOTES "Full admission cycle scaling" measures flat cycles);
+  * at 100 TB it is the dominant term, and the mitigations are
+  * storage-layout ones: bucket the corpus by `idCol` — the id screen
+  * joins on the raw id (hashKeys = false), so a bucketed corpus joins
+  * with ZERO corpus-side exchange and an IN-list id probe prunes
+  * buckets (both measured: BENCH_NOTES "r8: Bucketed-corpus id screen
+  * measured", SelectedBucketsCount 17/64 for a 20-id probe, corpus
+  * never shuffled) — or keep a distilled ids-only keys table beside
+  * the index and screen ids against that instead of the corpus; the
+  * one-commit manifest is what makes such a keys delta safe to add.
+  * The verification join carries the raw text/vector column and
+  * derives the payload above the join, so only candidate rows are
+  * shingled. The batch is read once per cycle, into the step-1
+  * checkpoint that every later branch reads; no in-memory cache is
+  * built per cycle. */
 object Admission {
 
   /** per-batch admission telemetry: rows in the arriving batch, rows
@@ -141,21 +151,67 @@ object Admission {
     * (it costs one extra Spark job); `afterIdScreen` and `admitted`
     * are always real — each is observed by the job of the local
     * checkpoint the cycle settles anyway (the id-screened batch, the
-    * admitted set; see admitCore), and the latter gates the writes. */
+    * admitted set; see `cycle`), and the latter gates the writes. */
   case class AdmitStats(batchId: Long, batchRows: Long, afterIdScreen: Long,
                         admitted: Long)
 
-  /** The shared cycle skeleton: id screen → localCheckpoint → near
-    * screen → optional within-batch dedup → localCheckpoint →
-    * `commit`. `screen` returns the matched-id column (`id_new`) of
-    * the near screen over the settled id-screened batch; `within`
-    * dedups the surviving batch against itself; `commit` gets the
-    * settled admitted rows and their count. */
-  private def admitCore(batch: DataFrame, corpus: DataFrame, idCol: String,
-                        batchId: Long, within: Boolean, collectStats: Boolean,
-                        screen: (DataFrame, DataFrame) => DataFrame,
-                        dedupWithin: DataFrame => DataFrame,
-                        commit: (DataFrame, Long) => Unit): AdmitStats = {
+  /** What an admission space adds to the shared cycle. `stamp`
+    * validates an index stamp against the call (the one distinct
+    * param tuple at adoption, None for a zero-row index, or the
+    * manifest's) and returns the stamp to record. `delta` gives the
+    * admitted batch's stamped index rows, given the state's index rows
+    * and stamp. `merge` folds base ∪ delta rows into one index; with
+    * `deltasMarked` the deltas fail a plain read's validation, so a
+    * compaction deletes them last — otherwise base ∪ deltas is the
+    * index and a compaction deletes the old files first. */
+  private final case class Space(
+      stamp: StampCheck,
+      delta: (DataFrame, DataFrame, Seq[(String, Any)]) => DataFrame,
+      merge: (DataFrame, Seq[(String, Any)]) => DataFrame,
+      deltasMarked: Boolean = false)
+
+  /** an index's stamp (None for a zero-row index) checked against a
+    * call; returns the stamp to record */
+  private type StampCheck = Option[Map[String, Any]] => Map[String, Any]
+
+  /** a stamp check: `asked` stands in for a zero-row index's stamp */
+  private def checked(asked: Seq[(String, Any)])(check: Map[String, Any] => Unit)
+  : StampCheck = found => {
+    val s = found.getOrElse(asked.toMap)
+    check(s)
+    s
+  }
+
+  /** the stamp check of a space that asks for `asked` by equality */
+  private def asking(what: String, asked: Seq[(String, Any)]): StampCheck =
+    checked(asked)(Dedup.requireAsked(_, what, asked))
+
+  /** a space whose index is a set of rows: the delta holds rows the
+    * state lacks, and a compaction is a plain rewrite co-located on
+    * `keys` */
+  private def setSpace(stamp: StampCheck, keys: String*)
+                      (delta: (DataFrame, DataFrame) => DataFrame): Space =
+    Space(stamp, (admitted, rows, _) => delta(admitted, rows),
+      (rows, _) => rows.repartition(keys.map(col): _*))
+
+  /** One cycle over the manifest state (contracts in the object
+    * scaladoc): recover or adopt, compact when due, then id screen →
+    * localCheckpoint → near screen → optional within-batch dedup →
+    * localCheckpoint → one commit of the corpus and index deltas. A
+    * cycle that admits nothing commits only an adoption. `screen`
+    * returns the matched-id column (`id_new`) of the near screen over
+    * the settled id-screened batch, the corpus and the state's index
+    * rows (stamp columns included); `dedupWithin` dedups the surviving
+    * batch against itself. */
+  private def cycle(batch: DataFrame, corpusPath: String, indexPath: String,
+                    idCol: String, batchId: Long, within: Boolean,
+                    collectStats: Boolean, what: String, space: Space,
+                    screen: (DataFrame, DataFrame, DataFrame) => DataFrame,
+                    dedupWithin: DataFrame => DataFrame): AdmitStats = {
+    val st = new State(batch.sparkSession, corpusPath, indexPath)
+    val opened = st.open(what, space)
+    val m = if (st.compactionDue(opened)) st.compact(opened, space) else opened
+    val (corpus, rows) = (st.corpus(m), st.indexRows(m))
     val batchRows = if (collectStats) batch.count() else -1L
     // direct-key id screen (hashKeys = false): a corpus BUCKETED by
     // idCol joins with zero corpus-side exchange. Ids are non-null by
@@ -167,13 +223,15 @@ object Admission {
       Seq(idCol), hashKeys = false).dropDuplicates(idCol))
     // the screen stays lazy, planned inside the admitted set's
     // execution; its matched ids are batch-bounded
-    val matched = screen(fresh, corpus).select(col("id_new").as(idCol))
+    val matched = screen(fresh, corpus, rows).select(col("id_new").as(idCol))
     val screened = fresh.join(broadcast(matched), Seq(idCol), "left_anti")
     // the writes below mutate this plan's inputs, so the admitted set
     // is settled first
     val (admitted, nAdmitted) =
       settled(if (within) dedupWithin(screened) else screened)
-    commit(admitted, nAdmitted)
+    if (nAdmitted > 0)
+      st.commitDelta(m, admitted, space.delta(admitted, rows, m.stamp))
+    else if (m.version == 0) st.commit(m.copy(version = 1))
     AdmitStats(batchId, batchRows, nFresh, nAdmitted)
   }
 
@@ -185,68 +243,24 @@ object Admission {
     (out, rows.get("rows").asInstanceOf[Long])
   }
 
-  /** The MinHash/embedding cycle over manifest state (contracts in the
-    * object scaladoc): recover or adopt, compact when due, screen
-    * against base ∪ deltas, then one commit of the corpus and index
-    * deltas. A cycle that admits nothing commits only an adoption. */
+  /** [[cycle]] for the MinHash and embedding spaces: the stamp asks
+    * for the build params and the cap, the delta is the batch's
+    * uncapped bucket rows, and the screen merges the touched buckets
+    * under the cap */
   private def lshCycle(batch: DataFrame, corpusPath: String,
                        indexPath: String, idCol: String, batchId: Long,
                        within: Boolean, collectStats: Boolean,
                        f: Dedup.Lsh, what: String, maxBucketSize: Int,
                        threshold: Double,
-                       dedupWithin: DataFrame => DataFrame): AdmitStats = {
-    val st = new State(batch.sparkSession, corpusPath, indexPath)
-    val opened = st.open(what, Dedup.withCap(f.params, maxBucketSize))
-    val m = if (st.compactionDue(opened)) st.compact(opened) else opened
-    val rows = st.indexRows(m)
-    admitCore(batch, st.corpus(m), idCol, batchId, within, collectStats,
-      screen = (fresh, corpus) => Dedup.lshScreen(f, fresh, corpus, rows,
-        threshold, broadcastNew = true, mergeCap = Some(maxBucketSize)),
-      dedupWithin = dedupWithin,
-      commit = (admitted, n) =>
-        if (n > 0) st.commitDelta(m, f, admitted)
-        else if (m.version == 0) st.commit(m.copy(version = 1)))
-  }
-
-  /** The cycle of the spaces that keep their folds (semantic,
-    * signature, substring): corpus append, then `fold` of the index.
-    *
-    * Crash contract: a crash BETWEEN the corpus append and the fold
-    * leaves rows the index does not cover: replaying the batch is
-    * safe (step 1 drops the appended rows — no duplicates, ever) but
-    * those rows stay invisible to FUTURE near-dup screens until an
-    * index rebuild. The append-then-fold order is the one whose
-    * failure mode degrades recall rather than corrupting the corpus.
-    *
-    * `refusePartitioned` is the layout refusal BEFORE any write, for
-    * the spaces without a partitioned layout: the layout is knowable
-    * from the schema of the cycle's own index read, so the
-    * unsupported case refuses write-free — before any count, screen
-    * or write. */
-  private def foldCycle(batch: DataFrame, corpusPath: String,
-                        indexPath: String, idCol: String, batchId: Long,
-                        within: Boolean, collectStats: Boolean,
-                        screen: (DataFrame, DataFrame, DataFrame) => DataFrame,
-                        dedupWithin: DataFrame => DataFrame,
-                        fold: (DataFrame, DataFrame) => Unit,
-                        refusePartitioned: Option[(String, String)] = None)
-  : AdmitStats = {
-    val spark = batch.sparkSession
-    val corpus = spark.read.parquet(corpusPath)
-    val index = spark.read.parquet(indexPath)
-    refusePartitioned.foreach { case (what, why) =>
-      require(!index.columns.contains("part"),
-        s"$what does not support the partitioned in-place layout — " +
-          s"persist it swap-written ($why, the swap rewrite is cheap " +
-          "by construction)")
-    }
-    admitCore(batch, corpus, idCol, batchId, within, collectStats,
-      screen = screen(_, _, index), dedupWithin = dedupWithin,
-      commit = (admitted, n) => if (n > 0) {
-        admitted.write.mode("append").parquet(corpusPath)
-        fold(index, admitted)
-      })
-  }
+                       dedupWithin: DataFrame => DataFrame): AdmitStats =
+    cycle(batch, corpusPath, indexPath, idCol, batchId, within,
+      collectStats, what,
+      Space(asking(what, Dedup.withCap(f.params, maxBucketSize)),
+        (admitted, _, stamp) => Dedup.lshDelta(f, admitted, stamp),
+        Dedup.lshCompact, deltasMarked = true),
+      screen = (fresh, corpus, rows) => Dedup.lshScreen(f, fresh, corpus,
+        rows, threshold, broadcastNew = true, mergeCap = Some(maxBucketSize)),
+      dedupWithin)
 
   /** One admission cycle against the durable state at
     * (`corpusPath`, `indexPath`). `indexPath` must hold a
@@ -313,14 +327,11 @@ object Admission {
     * (id, cluster) under the __fmt + (k, dim, centers-digest) stamp
     * discipline; a cycle whose `centers` differ from the index's is
     * REFUSED before any screen work (screening under mismatched
-    * centers is silently wrong). The fold assigns only the admitted
-    * batch (one codegen pass — the standing corpus is never
-    * re-assigned) and swap-writes; the partitioned in-place layout is
-    * deliberately unsupported for this index (it is the cheapest
-    * corpus artifact in the family — one int per row — so the swap
-    * rewrite is not the cost center the minhash/embedding folds had
-    * to avoid). Within-batch stage: [[graft.operators.SemDedup
-    * .semDedup]] with the min_id keep rule. */
+    * centers is silently wrong). The index delta assigns only the
+    * admitted batch (one codegen pass — the standing corpus is never
+    * re-assigned). A partitioned index is refused at adoption. Within-
+    * batch stage: [[graft.operators.SemDedup.semDedup]] with the
+    * min_id keep rule. */
   def admitBatchSemantic(batch: DataFrame, corpusPath: String,
                          indexPath: String, idCol: String,
                          vecCol: String, centers: Seq[Seq[Double]],
@@ -329,23 +340,19 @@ object Admission {
                          dedupWithinBatch: Boolean = true,
                          batchId: Long = -1L,
                          collectStats: Boolean = true): AdmitStats = {
-    foldCycle(batch, corpusPath, indexPath, idCol, batchId,
-      dedupWithinBatch, collectStats,
-      refusePartitioned = Some(("the SemDedup assignment index",
-        "ids-only")),
-      screen = (fresh, corpus, index) =>
-        graft.operators.SemDedup.screenPairsIndexed(fresh, corpus,
-          index, idCol, vecCol, centers, minCosine, maxClusterSize),
-      dedupWithin = screened =>
-        graft.operators.SemDedup.semDedup(screened, idCol, vecCol,
-          centers, minCosine, maxClusterSize, keep = "min_id"),
-      // fold WITHOUT re-validating: the screen already validated
-      // this exact index frame this cycle (single-writer contract —
-      // nothing can have changed between the two calls), so the
-      // fold is the plain assign-the-batch append
-      fold = (index, admitted) => swapWrite(index.unionByName(
-        graft.operators.SemDedup.assignmentIndex(admitted, idCol,
-          vecCol, centers)), indexPath))
+    import graft.operators.SemDedup
+    cycle(batch, corpusPath, indexPath, idCol, batchId, dedupWithinBatch,
+      collectStats, "admitBatchSemantic",
+      setSpace(checked(SemDedup.centersStamp(centers))(
+          SemDedup.requireCentersStamp(_, centers)), "cluster")(
+        (admitted, _) => SemDedup.assignmentIndex(admitted, idCol, vecCol,
+          centers)),
+      screen = (fresh, corpus, rows) => SemDedup.screenCore(
+        rows.select(col("id").as("id_corpus"), col("cluster")),
+        corpus.select(col(idCol).as("id_corpus"), col(vecCol).as("__vc")),
+        fresh, idCol, vecCol, centers, minCosine, maxClusterSize, 0, 0),
+      dedupWithin = screened => SemDedup.semDedup(screened, idCol, vecCol,
+        centers, minCosine, maxClusterSize, keep = "min_id"))
   }
 
   /** [[admitBatch]]'s SIGNATURE sibling (r13) — the sixth admission
@@ -361,34 +368,26 @@ object Admission {
     * admission time. Within-batch stage: [[graft.operators.Dedup
     * .signatureDedup]] (connected-component closure, min id per
     * component — transitive chains collapse to one survivor). The
-    * fold is
-    * [[graft.operators.Dedup.signatureIndexUpdate]] (distinct-union,
-    * ≡ rebuild); its validation is a session-memo hit (the screen
-    * validated the same files this cycle). The partitioned in-place
-    * layout is unsupported (the index is (chunk, key, id, sig) rows
-    * — the swap rewrite is not the cost center), refused at entry
-    * before any write. */
+    * index delta is the admitted batch's own signature index. A
+    * partitioned index is refused at adoption. */
   def admitBatchSignature(batch: DataFrame, corpusPath: String,
                           indexPath: String, idCol: String,
                           sigCol: String, maxDistance: Int = 3,
                           maxBucketSize: Int = 1000,
                           dedupWithinBatch: Boolean = true,
                           batchId: Long = -1L,
-                          collectStats: Boolean = true): AdmitStats = {
-    foldCycle(batch, corpusPath, indexPath, idCol, batchId,
-      dedupWithinBatch, collectStats,
-      refusePartitioned = Some(("the signature index", "narrow rows")),
-      screen = (fresh, _, index) =>
-        Dedup.signaturePairsAgainstIndex(fresh, index, idCol, sigCol,
-            maxDistance, maxBucketSize)
-          .withColumnRenamed("id_b", "id_new"),
-      dedupWithin = screened =>
-        Dedup.signatureDedup(screened, idCol, sigCol, maxDistance,
-          maxBucketSize),
-      fold = (index, admitted) => swapWrite(
-        Dedup.signatureIndexUpdate(index, admitted, idCol, sigCol,
-          maxDistance), indexPath))
-  }
+                          collectStats: Boolean = true): AdmitStats =
+    cycle(batch, corpusPath, indexPath, idCol, batchId, dedupWithinBatch,
+      collectStats, "admitBatchSignature",
+      setSpace(asking("admitBatchSignature",
+        Dedup.signatureAsked(maxDistance)), "chunk", "key")((admitted, _) =>
+        Dedup.signatureIndex(admitted, idCol, sigCol, maxDistance)),
+      screen = (fresh, _, rows) => Dedup.signatureScreenCore(fresh,
+          rows.select(col("chunk"), col("key"), col("id"), col("sig")),
+          idCol, sigCol, maxDistance, maxBucketSize)
+        .withColumnRenamed("id_b", "id_new"),
+      dedupWithin = screened => Dedup.signatureDedup(screened, idCol,
+        sigCol, maxDistance, maxBucketSize))
 
   /** [[admitBatch]]'s substring sibling: the near screen is
     * SPAN-COVERAGE against a persisted
@@ -400,38 +399,21 @@ object Admission {
     * screen (the exact id screen still applies). Optional
     * within-batch stage applies the same coverage rule symmetrically
     * with the keep-first exemption (one copy of a duplicated run
-    * survives its own batch). The fold is BATCH-BOUNDED
-    * ([[graft.operators.SubstringDedup.gramIndexAppendInPlace]] —
-    * only grams the index lacks append as new files, existing files
-    * untouched), so its crash contract is the APPEND path's: a crash
-    * mid-fold leaves a valid, readable index that may lack some of
-    * the batch's grams (re-admitting the batch repairs it; the
-    * distinct-gram content is append-idempotent).
-    *
-    * AUTO-COMPACTION (`compactFileThreshold` > 0): after the fold,
-    * when the index's parquet file count exceeds the threshold, the
-    * cycle runs [[graft.operators.SubstringDedup.gramIndexCompact]]
-    * (staged swap into `compactPartitions` files, repartitioned on
-    * the gram key). Trickle admission otherwise grows file count
-    * without bound — a year of hourly batches is ~10k tiny files
-    * whose listing overhead eventually dominates every screen.
-    * Compaction only reshapes the listing (content is distinct and
-    * append-disjoint), so K trickle cycles + compaction ≡ one
-    * rebuild, spec-pinned in AdmissionSpec. Default 0 keeps the
-    * caller-managed cadence. */
+    * survives its own batch). The index delta is BATCH-BOUNDED: only
+    * the admitted batch's grams the state lacks
+    * ([[graft.operators.SubstringDedup.gramDelta]]). Trickle
+    * admission's file count is bounded by the compaction policy of
+    * the object scaladoc; a compaction only reshapes the listing, so
+    * K trickle cycles ≡ one rebuild (spec-pinned in AdmissionSpec). */
   def admitBatchSubstring(batch: DataFrame, corpusPath: String,
                           indexPath: String, idCol: String, textCol: String,
                           k: Int, maxDupCoverage: Double = 0.5,
                           hashKeys: Boolean = true,
                           dedupWithinBatch: Boolean = false,
                           batchId: Long = -1L,
-                          collectStats: Boolean = true,
-                          compactFileThreshold: Int = 0,
-                          compactPartitions: Int = 32): AdmitStats = {
+                          collectStats: Boolean = true): AdmitStats = {
     require(maxDupCoverage >= 0.0 && maxDupCoverage < 1.0,
       s"maxDupCoverage must be in [0,1), got $maxDupCoverage")
-    require(compactFileThreshold >= 0,
-      s"compactFileThreshold must be >= 0, got $compactFileThreshold")
     import graft.operators.SubstringDedup
     import graft.functions.{TextFunctions => TF}
     def overCovered(docs: DataFrame, spans: DataFrame): DataFrame = {
@@ -443,29 +425,19 @@ object Admission {
         .filter(col("__cov") > col("__n") * maxDupCoverage)
         .select(col(idCol))
     }
-    foldCycle(batch, corpusPath, indexPath, idCol, batchId,
-      dedupWithinBatch, collectStats,
-      screen = (fresh, _, index) =>
-        overCovered(fresh,
-          SubstringDedup.duplicateSpansAgainst(fresh, index, idCol,
-            textCol, k, hashKeys))
-          .select(col(idCol).as("id_new")),
-      dedupWithin = screened =>
-        screened.join(
-          overCovered(screened,
-            SubstringDedup.duplicateSpans(screened, idCol, textCol, k,
-              keepFirst = true, hashKeys = hashKeys)),
-          Seq(idCol), "left_anti"),
-      fold = (_, admitted) => {
-        val spark = admitted.sparkSession
-        SubstringDedup.gramIndexAppendInPlace(spark,
-          indexPath, admitted, idCol, textCol, k, hashKeys)
-        if (compactFileThreshold > 0 &&
-            SubstringDedup.gramIndexFileCount(spark, indexPath)
-              > compactFileThreshold)
-          SubstringDedup.gramIndexCompact(spark, indexPath,
-            compactPartitions)
-      })
+    cycle(batch, corpusPath, indexPath, idCol, batchId, dedupWithinBatch,
+      collectStats, "admitBatchSubstring",
+      setSpace(asking("admitBatchSubstring",
+        SubstringDedup.gramAsked(k, hashKeys)), "g")((admitted, rows) => SubstringDedup.gramDelta(admitted, rows,
+        idCol, textCol, k, hashKeys)),
+      screen = (fresh, _, rows) => overCovered(fresh,
+          SubstringDedup.spansAgainst(fresh, rows, idCol, textCol, k,
+            hashKeys))
+        .select(col(idCol).as("id_new")),
+      dedupWithin = screened => screened.join(
+        overCovered(screened, SubstringDedup.duplicateSpans(screened, idCol,
+          textCol, k, keepFirst = true, hashKeys = hashKeys)),
+        Seq(idCol), "left_anti"))
   }
 
   /** Continuous admission: drains `stream` (Trigger.AvailableNow) and
@@ -487,51 +459,15 @@ object Admission {
         numHashes, bands, shingleLen, seed, maxBucketSize, threshold,
         dedupWithinBatch, batchId = id, collectStats = collectStats))
 
-  /** [[admitStream]]'s signature sibling: [[admitBatchSignature]]
-    * per micro-batch (fingerprints computed upstream in the stream —
-    * e.g. a decode+hash stage over incoming media). */
-  def admitStreamSignature(stream: DataFrame, corpusPath: String,
-                           indexPath: String, checkpoint: String,
-                           idCol: String, sigCol: String,
-                           maxDistance: Int = 3,
-                           maxBucketSize: Int = 1000,
-                           dedupWithinBatch: Boolean = true,
-                           collectStats: Boolean = true): Seq[AdmitStats] =
-    streamCore(stream, checkpoint, (b, id) =>
-      admitBatchSignature(b, corpusPath, indexPath, idCol, sigCol,
-        maxDistance, maxBucketSize, dedupWithinBatch, batchId = id,
-        collectStats = collectStats))
-
-  /** [[admitStream]]'s substring sibling: [[admitBatchSubstring]] per
-    * micro-batch through foreachBatch + checkpoint, same replay
-    * contract (the id screen makes an at-least-once replay a no-op). */
-  def admitStreamSubstring(stream: DataFrame, corpusPath: String,
-                           indexPath: String, checkpoint: String,
-                           idCol: String, textCol: String, k: Int,
-                           maxDupCoverage: Double = 0.5,
-                           hashKeys: Boolean = true,
-                           dedupWithinBatch: Boolean = false,
-                           collectStats: Boolean = true,
-                           compactFileThreshold: Int = 0,
-                           compactPartitions: Int = 32): Seq[AdmitStats] =
-    streamCore(stream, checkpoint, (b, id) =>
-      admitBatchSubstring(b, corpusPath, indexPath, idCol, textCol, k,
-        maxDupCoverage, hashKeys, dedupWithinBatch, batchId = id,
-        collectStats = collectStats,
-        compactFileThreshold = compactFileThreshold,
-        compactPartitions = compactPartitions))
-
-  /** [[admitStream]]'s SEMANTIC sibling (r15 — closes the six-space
-    * symmetry: every batch admission face now has its streaming
-    * twin): [[admitBatchSemantic]] per micro-batch through
-    * foreachBatch + checkpoint, same replay contract (the id screen
-    * makes an at-least-once replay a no-op). `centers` are
-    * driver-state by nature (they ride the assignment's literal /
-    * routed argmin), so they are fixed for the life of the query —
-    * re-fitting centers mid-stream would silently re-cluster the
-    * corpus; stop the query, re-fit, rebuild the assignment index,
-    * restart (the [[graft.operators.SemDedup.fitCenters]] one-time
-    * discipline). */
+  /** [[admitStream]]'s SEMANTIC sibling (r15):
+    * [[admitBatchSemantic]] per micro-batch through foreachBatch +
+    * checkpoint, same replay contract (the id screen makes an
+    * at-least-once replay a no-op). `centers` are driver-state by
+    * nature (they ride the assignment's literal / routed argmin), so
+    * they are fixed for the life of the query — re-fitting centers
+    * mid-stream would silently re-cluster the corpus; stop the query,
+    * re-fit, rebuild the assignment index, restart (the
+    * [[graft.operators.SemDedup.fitCenters]] one-time discipline). */
   def admitStreamSemantic(stream: DataFrame, corpusPath: String,
                           indexPath: String, checkpoint: String,
                           idCol: String, vecCol: String,
@@ -561,7 +497,7 @@ object Admission {
         nTables, bitsPerTable, seed, maxBucketSize, threshold,
         dedupWithinBatch, batchId = id, collectStats = collectStats))
 
-  /** foreachBatch driver loop shared by the two admitStream faces.
+  /** foreachBatch driver loop shared by the admitStream faces.
     * The per-batch stats accumulate in a DRIVER-side buffer, which is
     * correct only under the AvailableNow drain-and-stop trigger used
     * here (bounded batches, then the query terminates and the buffer
@@ -584,79 +520,39 @@ object Admission {
     acc.toSeq
   }
 
-  /** Compact the corpus after many per-batch appends — the classic
+  /** Compact the corpus of the admission state at (`corpusPath`,
+    * `indexPath`) after many per-batch appends — the classic
     * small-files ingestion pathology (every admission cycle appends
     * its own files; a year of hourly batches is ~10k tiny files whose
     * listing/open overhead eventually dominates scans). Rewrites the
-    * corpus into `partitions` files via the same staged swap the
-    * index writes use; row-preserving (returns the row count its own
-    * write observed); run it between admission cycles under the same
-    * single-writer contract. On manifest state (MinHash/embedding
-    * admission) it is safe because the manifest never names corpus
-    * files: cycles read the corpus directory, so the next cycle reads
-    * the compacted files, and its recovery touches only the hidden
-    * staging directory. It refuses while that directory holds a
-    * commit's unfinished moves (a crash after a rename) — the next
-    * admission cycle finishes them. At 100 TB compact incrementally —
+    * corpus into `partitions` files as one manifest commit: the new
+    * files are staged, and after the rename the old files are deleted
+    * before the new ones move in, so a plain read never sees a row
+    * twice; recovery replays an interrupted compaction like any other
+    * commit. Row-preserving (returns the row count its own write
+    * observed); run it between admission cycles under the same
+    * single-writer contract. Refuses a state that has no manifest yet
+    * (no admission cycle has run). At 100 TB compact incrementally —
     * per date/prefix partition — rather than rewriting the world. */
-  def compactCorpus(spark: org.apache.spark.sql.SparkSession,
-                    corpusPath: String, partitions: Int): Long = {
+  def compactCorpus(spark: SparkSession, corpusPath: String,
+                    indexPath: String, partitions: Int): Long = {
     require(partitions > 0, s"partitions must be positive, got $partitions")
-    val staging = new Path(corpusPath, Staging)
-    require(!staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(staging),
-      s"compactCorpus: $staging holds an interrupted admission commit — " +
-        "run the next admission cycle first, its recovery finishes it")
-    val rows = Observation()
-    swapWrite(spark.read.parquet(corpusPath).repartition(partitions)
-      .observe(rows, count(lit(1)).as("rows")), corpusPath)
-    rows.get("rows").asInstanceOf[Long]
+    val st = new State(spark, corpusPath, indexPath)
+    st.compactCorpus(st.committed("compactCorpus"), partitions)
   }
-
-  /** [[swapWrite]] opened to the operator package so index-family
-    * compactions (e.g. SubstringDedup.gramIndexCompact) share the
-    * exact staging+rename discipline instead of reimplementing it. */
-  private[graft] def swapWriteIndex(df: DataFrame, dest: String): Unit =
-    swapWrite(df, dest)
-
-  /** Overwrite `dest` via staging + rename — parquet's substitute for
-    * a transactional overwrite, since Spark refuses (correctly) to
-    * overwrite a path its own plan is reading. Crash windows: before
-    * the first rename, `dest` is untouched; between the two renames,
-    * `dest` is briefly absent and the previous index survives at
-    * `dest__old` for manual restore. Single writer assumed. */
-  private def swapWrite(df: DataFrame, dest: String): Unit = {
-    val destPath = new Path(dest)
-    val fs = destPath.getFileSystem(
-      df.sparkSession.sparkContext.hadoopConfiguration)
-    val staging = new Path(dest + "__staging")
-    val old = new Path(dest + "__old")
-    fs.delete(staging, true)
-    df.write.mode("overwrite").parquet(staging.toString)
-    fs.delete(old, true)
-    if (fs.exists(destPath) && !fs.rename(destPath, old))
-      throw new IllegalStateException(
-        s"swapWrite: could not move previous $dest aside")
-    if (!fs.rename(staging, destPath))
-      throw new IllegalStateException(
-        s"swapWrite: could not move staging into place at $dest " +
-          s"(previous index preserved at $old)")
-    fs.delete(old, true)
-  }
-
 
   /** The index of the MinHash/embedding state at (`corpusPath`,
     * `indexPath`) as one merged, stamped frame — what a compaction
-    * would write. Recovers (or adopts) the state first, like a cycle;
-    * commits nothing. */
+    * would write. Recovers the state first, like a cycle; commits
+    * nothing. */
   private[graft] def mergedIndex(spark: SparkSession, corpusPath: String,
                                  indexPath: String): DataFrame = {
     val st = new State(spark, corpusPath, indexPath)
-    val m = st.open("mergedIndex", Nil)
+    val m = st.committed("mergedIndex")
     Dedup.lshCompact(st.indexRows(m), m.stamp)
   }
 
-  // ---- manifest state (MinHash and embedding spaces) -------------------
+  // ---- manifest state ---------------------------------------------------
 
   /** manifests, relative to `indexPath` */
   private val StateDir = "_graft_state"
@@ -733,9 +629,9 @@ object Admission {
     }
   }
 
-  /** The file side of a MinHash/embedding admission state: manifests,
-    * recovery, reads, commits and compaction. Holds no state between
-    * cycles — every cycle reads the newest manifest afresh. */
+  /** The file side of an admission state: manifests, recovery, reads,
+    * commits and compaction. Holds no state between cycles — every
+    * cycle reads the newest manifest afresh. */
   private final class State(spark: SparkSession, corpusPath: String,
                             indexPath: String) {
     private val conf = spark.sparkContext.hadoopConfiguration
@@ -743,16 +639,25 @@ object Admission {
     private val (cFs, iFs) = (cRoot.getFileSystem(conf), iRoot.getFileSystem(conf))
     private val stateDir = new Path(iRoot, StateDir)
 
-    /** the newest manifest after recovery, or the state adopted (as
-      * version 0) when there is none; its stamp checked against
-      * `asked` */
-    def open(what: String, asked: Seq[(String, Any)]): Manifest = {
+    /** the newest manifest after recovery, its stamp checked by
+      * `space`, or the state adopted (as version 0) when there is
+      * none */
+    def open(what: String, space: Space): Manifest =
+      recovered() match {
+        case Some(m) => space.stamp(Some(m.stamp.toMap)); m
+        case None => adopt(what, space)
+      }
+
+    /** the newest manifest after recovery; refused when there is none */
+    def committed(what: String): Manifest = recovered().getOrElse(
+      throw new IllegalArgumentException(s"$what: $indexPath holds no " +
+        "admission state yet — run an admission cycle first, it adopts " +
+        "the index"))
+
+    private def recovered(): Option[Manifest] = {
       val latest = newest()
       recover(latest)
-      latest match {
-        case Some(m) => Dedup.requireAsked(m.stamp.toMap, what, asked); m
-        case None => adopt(what, asked)
-      }
+      latest
     }
 
     /** the newest committed manifest; superseded manifests and
@@ -771,37 +676,37 @@ object Admission {
     }
 
     /** Redo and garbage collection, before anything reads: a staging
-      * directory survives only an interrupted cycle. The committed
+      * directory survives only an interrupted commit. The committed
       * version's moves and deletes are replayed, then every staged
-      * file and every visible delta file no manifest names is
-      * deleted. */
+      * file is deleted. */
     private def recover(m: Option[Manifest]): Unit = {
       val stages = Seq(cFs -> new Path(cRoot, Staging),
         iFs -> new Path(iRoot, Staging))
       if (stages.exists { case (fs, p) => fs.exists(p) }) {
         m.foreach(m => applyOps(m.pending))
-        val named = m.toSeq.flatMap(m => m.base ++ m.deltas).toSet
-        for ((dir, prefix) <- Seq(iRoot -> "", new Path(iRoot, PartDeltas) ->
-               s"$PartDeltas/") if iFs.exists(dir);
-             st <- iFs.listStatus(dir)
-             if st.isFile && st.getPath.getName.startsWith("delta-") &&
-               !named(prefix + st.getPath.getName))
-          iFs.delete(st.getPath, false)
         stages.foreach { case (fs, p) => fs.delete(p, true) }
       }
     }
 
     /** No manifest yet: one listing and one stamp validation of the
-      * index, and the corpus schema, as every cycle paid before. */
-    private def adopt(what: String, asked: Seq[(String, Any)]): Manifest = {
+      * index, and the corpus schema, as every cycle paid before. A
+      * partitioned layout without `__numParts` is refused: a
+      * compaction could not lay it out again as it is. */
+    private def adopt(what: String, space: Space): Manifest = {
       val index = spark.read.parquet(indexPath)
-      val stamp = Dedup.validatedStamp(index, what, asked)
-        .getOrElse(asked.toMap)
+      val stamp = space.stamp(Dedup.validatedStamp(index, what, Nil))
+      val partitioned = index.columns.contains("part")
+      require(!partitioned || stamp.contains("__numParts"),
+        s"$what: the index at $indexPath is partitioned but carries no " +
+          "__numParts stamp, so its layout cannot be kept — only the " +
+          "layout Dedup.indexWritePartitioned writes (MinHash and " +
+          "embedding indexes) is adopted partitioned. Rewrite the index " +
+          "flat or with indexWritePartitioned.")
       val schema = StructType(index.schema.filterNot(_.name == "part"))
       val root = iFs.makeQualified(iRoot).toUri
       Manifest(0, spark.read.parquet(corpusPath).schema, schema,
         schema.fieldNames.toSeq.flatMap(k => stamp.get(k).map(k -> _)),
-        index.columns.contains("part"),
+        partitioned,
         index.inputFiles.toSeq
           .map(f => root.relativize(new java.net.URI(f)).getPath).sorted,
         Nil, Nil)
@@ -829,49 +734,65 @@ object Admission {
     }
 
     /** Fold the deltas into a new base in the state's layout, as its
-      * own commit. The new base moves in, then the old base and the
-      * deltas are deleted, deltas last: a plain read sees deltas (and
-      * fails validation) until the base it sees is the new one. */
-    def compact(m: Manifest): Manifest = {
+      * own commit. Marked deltas are deleted last: a plain read sees
+      * them (and fails validation) until the base it sees is the new
+      * one. Otherwise the old files go first, so a plain read never
+      * sees a row twice. */
+    def compact(m: Manifest, space: Space): Manifest = {
       val v = m.version + 1
-      val stage = s"$Staging/v$v"
-      val merged = Dedup.lshCompact(indexRows(m), m.stamp)
-      val out = new Path(iRoot, stage)
-      if (m.partitioned)
-        Dedup.indexWritePartitioned(merged, out.toString,
-          m.stamp.collectFirst { case ("__numParts", n: Int) => n }
-            .getOrElse(m.base.map(_.takeWhile(_ != '/')).distinct.size))
-      else merged.write.parquet(out.toString)
-      val base = dataFiles(iFs, out)
-      val next = m.copy(version = v, base = base, deltas = Nil,
-        pending = base.map(f => FileOp(false, s"$stage/$f", Some(f))) ++
-          (m.base ++ m.deltas).map(FileOp(false, _, None)))
+      val merged = space.merge(indexRows(m), m.stamp)
+      val moves = staged(corpusSide = false, v, identity) { out =>
+        if (m.partitioned) Dedup.indexWritePartitioned(merged, out,
+          m.stamp.collectFirst { case ("__numParts", n: Int) => n }.get)
+        else merged.write.parquet(out)
+      }
+      val old = (m.base ++ m.deltas).map(FileOp(false, _, None))
+      val next = m.copy(version = v, base = moves.flatMap(_.to), deltas = Nil,
+        pending = if (space.deltasMarked) moves ++ old else old ++ moves)
       commit(next)
       next.copy(pending = Nil)
     }
 
-    /** One cycle's commit: the admitted rows staged hidden under the
-      * corpus, their uncapped bucket rows moved in beside the index
-      * base (visible, but failing any plain read's validation), then
-      * the manifest rename, then the corpus files' moves. */
-    def commitDelta(m: Manifest, f: Dedup.Lsh, admitted: DataFrame): Unit = {
+    /** One cycle's commit: the admitted rows and the index `delta`
+      * staged hidden, then the manifest rename, then their moves into
+      * the corpus and beside the index base. */
+    def commitDelta(m: Manifest, admitted: DataFrame, delta: DataFrame): Unit = {
       val v = m.version + 1
-      val stage = s"$Staging/v$v"
-      admitted.write.parquet(new Path(cRoot, stage).toString)
-      val moves = dataFiles(cFs, new Path(cRoot, stage))
-        .map(n => FileOp(true, s"$stage/$n", Some(n)))
+      val corpusMoves = staged(corpusSide = true, v, identity)(
+        admitted.write.parquet(_))
       stepHook("corpus-staged")
-      val out = new Path(iRoot, stage)
-      Dedup.lshDelta(f, admitted, m.stamp).coalesce(1)
-        .write.parquet(out.toString)
       val dir = if (m.partitioned) s"$PartDeltas/" else ""
-      val deltas = dataFiles(iFs, out).map { n =>
-        val to = s"${dir}delta-v$v-$n"
-        move(iFs, new Path(out, n), new Path(iRoot, to))
-        to
-      }
+      val indexMoves = staged(corpusSide = false, v,
+        n => s"${dir}delta-v$v-$n")(delta.coalesce(1).write.parquet(_))
       stepHook("index-staged")
-      commit(m.copy(version = v, deltas = m.deltas ++ deltas, pending = moves))
+      commit(m.copy(version = v, deltas = m.deltas ++ indexMoves.flatMap(_.to),
+        pending = corpusMoves ++ indexMoves))
+    }
+
+    /** The corpus rewritten into `partitions` files as one commit: the
+      * old files are deleted before the new ones move in. */
+    def compactCorpus(m: Manifest, partitions: Int): Long = {
+      val v = m.version + 1
+      val old = dataFiles(cFs, cRoot).map(FileOp(true, _, None))
+      val rows = Observation()
+      val moves = staged(corpusSide = true, v, identity)(
+        corpus(m).repartition(partitions)
+          .observe(rows, count(lit(1)).as("rows")).write.parquet(_))
+      stepHook("corpus-staged")
+      commit(m.copy(version = v, pending = old ++ moves))
+      rows.get("rows").asInstanceOf[Long]
+    }
+
+    /** `write` into one side's hidden staging directory for version
+      * `v`; returns the moves that bring its files in, each to
+      * `to(file)` */
+    private def staged(corpusSide: Boolean, v: Long, to: String => String)
+                      (write: String => Unit): Seq[FileOp] = {
+      val (fs, root) = if (corpusSide) (cFs, cRoot) else (iFs, iRoot)
+      val dir = s"$Staging/v$v"
+      write(new Path(root, dir).toString)
+      dataFiles(fs, new Path(root, dir))
+        .map(f => FileOp(corpusSide, s"$dir/$f", Some(to(f))))
     }
 
     /** write `next` to a temp file and rename it to its version's
@@ -897,16 +818,15 @@ object Admission {
       val (fs, root) = if (op.corpusSide) (cFs, cRoot) else (iFs, iRoot)
       val from = new Path(root, op.from)
       op.to match {
-        case Some(to) => if (fs.exists(from)) move(fs, from, new Path(root, to))
+        case Some(to) => if (fs.exists(from)) {
+          val dest = new Path(root, to)
+          fs.mkdirs(dest.getParent)
+          if (!fs.rename(from, dest))
+            throw new IllegalStateException(s"admission commit: could not " +
+              s"move $from to $dest")
+        }
         case None => fs.delete(from, false)
       }
-    }
-
-    private def move(fs: FileSystem, from: Path, to: Path): Unit = {
-      fs.mkdirs(to.getParent)
-      if (!fs.rename(from, to))
-        throw new IllegalStateException(s"admission commit: could not " +
-          s"move $from to $to")
     }
 
     /** the visible data files under `dir`, relative to it */

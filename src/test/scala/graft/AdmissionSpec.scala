@@ -169,16 +169,21 @@ class AdmissionSpec extends SparkTestBase {
     val i = Files.createTempDirectory("graft_adm_fls_i").toString + "/idx"
     corpusDf.write.mode("overwrite").parquet(c)
     SubstringDedup.gramIndex(corpusDf, "doc_id", "text", k = 4)
-      .write.mode("overwrite").parquet(i)
-    val s = graft.ddf.DDF(
-      Seq(100L -> freshText("n100"),
-          101L -> (freshText("c3") + " t0 t1")) // 8/10 covered -> out
-        .toDF("doc_id", "text"))
-      .admitIntoSubstring(c, i, "doc_id", "text", k = 4,
-        compactFileThreshold = 1, compactPartitions = 2)
+      .coalesce(1).write.mode("overwrite").parquet(i)
+    def admitVia(rows: (Long, String)*) = graft.ddf.DDF(rows.toDF("doc_id", "text"))
+      .admitIntoSubstring(c, i, "doc_id", "text", k = 4)
+    val s = admitVia(100L -> freshText("n100"),
+      101L -> (freshText("c3") + " t0 t1")) // 8/10 covered -> out
     assert(s.admitted == 1L)
     assert(corpusIds(c) == ((0L until 40L) :+ 100L))
-    assert(SubstringDedup.gramIndexFileCount(spark, i) <= 2)
+    // the compaction knob is the listing threshold: at the base's one
+    // file plus one, the next cycle folds the delta into the base
+    assert(visibleIndexFiles(i).size == 2)
+    spark.conf.set(ListingThreshold, "2")
+    val s2 = try admitVia(200L -> (freshText("n100") + " zz"))
+      finally spark.conf.unset(ListingThreshold)
+    assert(s2.admitted == 0L)
+    assert(!visibleIndexFiles(i).exists(_.startsWith("delta-")))
   }
 
   test("collectStats=false skips telemetry counts but admits identically") {
@@ -251,13 +256,15 @@ class AdmissionSpec extends SparkTestBase {
 
   test("compactCorpus collapses per-batch append files, row-preserving") {
     val (c, i) = setup()
+    // a state no cycle has adopted has no manifest to commit under
+    intercept[IllegalArgumentException](Admission.compactCorpus(spark, c, i, 2))
     admit(Seq(100L -> freshText("n100")).toDF("doc_id", "text"), c, i)
     admit(Seq(101L -> freshText("n101")).toDF("doc_id", "text"), c, i)
     val before = corpusIds(c)
     def partFiles = new java.io.File(c).listFiles()
       .count(_.getName.endsWith(".parquet"))
     assert(partFiles > 2) // initial write + two appends
-    val n = Admission.compactCorpus(spark, c, 2)
+    val n = Admission.compactCorpus(spark, c, i, 2)
     assert(n == before.size)
     assert(partFiles <= 2)
     assert(corpusIds(c) == before)
@@ -270,34 +277,159 @@ class AdmissionSpec extends SparkTestBase {
     assert(s.afterIdScreen == 2L && s.admitted == 1L)
     assert(corpusIds(c) == before :+ 201L)
     // a commit interrupted after its rename leaves moves to finish:
-    // compaction refuses until a cycle's recovery has done them
+    // the compaction's own recovery finishes them first
     Admission.stepHook = step =>
       if (step == "after-rename") throw new RuntimeException("crash")
     try intercept[RuntimeException](
       admit(Seq(300L -> freshText("n300")).toDF("doc_id", "text"), c, i))
     finally Admission.stepHook = _ => ()
-    intercept[IllegalArgumentException](Admission.compactCorpus(spark, c, 2))
+    assert(Admission.compactCorpus(spark, c, i, 2) == before.size + 2)
+    assert(corpusIds(c) == before ++ Seq(201L, 300L))
     assert(admit(Seq(300L -> freshText("n300")).toDF("doc_id", "text"), c, i)
       .admitted == 0L)
-    assert(Admission.compactCorpus(spark, c, 2) == before.size + 2)
-    assert(corpusIds(c) == before ++ Seq(201L, 300L))
   }
 
   /** a fresh corpus + MinHash index, flat or partitioned in 2 parts */
-  private def world(partitioned: Boolean): (String, String) = {
-    val c = Files.createTempDirectory("graft_adm_w_c").toString
-    val i = Files.createTempDirectory("graft_adm_w_i").toString + "/idx"
-    corpusDf.write.mode("overwrite").parquet(c)
-    val idx = Dedup.minhashIndex(corpusDf, "doc_id", "text",
-      numHashes = 64, bands = 32)
-    if (partitioned) Dedup.indexWritePartitioned(idx, i, numParts = 2)
-    else idx.write.mode("overwrite").parquet(i)
+  private def world(partitioned: Boolean): (String, String) =
+    state("w", corpusDf, Dedup.minhashIndex(corpusDf, "doc_id", "text",
+      numHashes = 64, bands = 32), partitioned)
+
+  /** a plain read's rows, sorted; the id is the first column */
+  private def rowsOf(path: String): Seq[String] =
+    spark.read.parquet(path).collect().map(_.toString).sorted.toSeq
+
+  /** a plain read of a set-of-rows index, stamp columns dropped */
+  private def indexRowsOf(df: DataFrame): Seq[String] =
+    df.drop(df.columns.filter(_.startsWith("__")): _*).collect()
+      .map(_.toString).sorted.toSeq
+
+  /** an LSH index frame as bucket key -> (sorted ids, n) */
+  private def lshBuckets(df: DataFrame) =
+    df.drop(df.columns.filter(c => c.startsWith("__") || c == "part"): _*)
+      .collect().map(r => r.toSeq.dropRight(2) ->
+        (r.getSeq[Long](r.length - 2).sorted, r.getLong(r.length - 1)))
+      .toMap
+
+  private val ListingThreshold =
+    "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
+  /** One admission space's fixture: a fresh world (corpus + index;
+    * partitioned in 2 parts when asked, for the spaces with that
+    * layout), its cycle (no within-batch pass, no batch count), and
+    * three batches admitting 2, 2 and 1 rows — b2 holds a near-dup of
+    * a b1 admission and b3 one of a b2 admission, so each drops only
+    * if the previous commit reached the index. `rebuild` builds the
+    * space's index over a corpus frame; `index` reads a state's index
+    * content (merged through the state for the MinHash and embedding
+    * spaces, a plain read for the set-of-rows spaces). */
+  private case class SpaceFixture(
+      name: String, lsh: Boolean, world: Boolean => (String, String),
+      run: (String, String, DataFrame, Long) => Admission.AdmitStats,
+      batches: Seq[DataFrame], rebuild: DataFrame => DataFrame) {
+    def index(c: String, i: String): Any =
+      if (lsh) lshBuckets(Admission.mergedIndex(spark, c, i))
+      else indexRowsOf(spark.read.parquet(i))
+  }
+
+  /** a fresh (corpus, index) pair: `corpus` written as is, its index
+    * in one file, or partitioned in 2 parts */
+  private def state(tag: String, corpus: DataFrame, index: DataFrame,
+                    partitioned: Boolean): (String, String) = {
+    val c = Files.createTempDirectory(s"graft_adm_${tag}_c").toString
+    val i = Files.createTempDirectory(s"graft_adm_${tag}_i").toString + "/idx"
+    corpus.write.mode("overwrite").parquet(c)
+    if (partitioned) Dedup.indexWritePartitioned(index, i, numParts = 2)
+    else index.coalesce(1).write.mode("overwrite").parquet(i)
     (c, i)
   }
 
-  private def rowsOf(c: String): Seq[(Long, String)] =
-    spark.read.parquet(c).select($"doc_id", $"text").as[(Long, String)]
-      .collect().sorted.toSeq
+  private lazy val vectors: Seq[Array[Float]] = {
+    val rnd = new scala.util.Random(5)
+    Seq.fill(25)(Array.fill(8)(rnd.nextFloat() * 2 - 1))
+  }
+
+  /** 20 corpus vectors; batches of fresh vectors (21–24) and scaled
+    * copies (cosine 1) */
+  private def vectorBatches: Seq[DataFrame] = {
+    val v = vectors
+    def scaled(x: Array[Float], by: Float) = x.map(_ * by)
+    Seq(Seq(100L -> v(20), 101L -> v(21), 102L -> scaled(v(0), 2f)),
+      Seq(200L -> v(22), 201L -> v(23), 202L -> scaled(v(20), 3f)),
+      Seq(300L -> scaled(v(22), 2f), 301L -> v(24)))
+      .map(_.toDF("vec_id", "v"))
+  }
+
+  private def vectorCorpus =
+    vectors.take(20).zipWithIndex.map { case (x, n) => (n.toLong, x) }
+      .toDF("vec_id", "v")
+
+  /** unit-norm centers: argmin L2 == argmax dot, so a scaled copy
+    * assigns to its source's cluster */
+  private val unitCenters =
+    (0 until 4).map(i => Seq.tabulate(8)(j => if (j == i) 1.0 else 0.0))
+
+  private lazy val spaces: Seq[SpaceFixture] = {
+    import graft.operators.{SemDedup, SubstringDedup}
+    val sigBase = 0x5555555555550000L
+    val sigCorpus = (0L until 20L).map(i => (i, sigBase | (i << 8)))
+      .toDF("id", "sig")
+    Seq(
+      SpaceFixture("minhash", lsh = true, world(_),
+        (c, i, b, n) => Admission.admitBatch(b, c, i, "doc_id", "text",
+          numHashes = 64, bands = 32, threshold = 0.6,
+          dedupWithinBatch = false, batchId = n, collectStats = false),
+        Seq(
+          Seq(100L -> freshText("n100"), 101L -> freshText("n101"),
+            102L -> freshText("c0")),
+          Seq(200L -> freshText("n200"), 201L -> freshText("n201"),
+            202L -> (freshText("n100") + " k")),
+          Seq(300L -> (freshText("n200") + " k"), 301L -> freshText("n301")))
+          .map(_.toDF("doc_id", "text")),
+        Dedup.minhashIndex(_, "doc_id", "text", numHashes = 64, bands = 32)),
+      SpaceFixture("embedding", lsh = true,
+        p => state("emb", vectorCorpus,
+          Dedup.embeddingIndex(vectorCorpus, "vec_id", "v", dim = 8), p),
+        (c, i, b, n) => Admission.admitBatchEmbedding(b, c, i, "vec_id", "v",
+          dim = 8, dedupWithinBatch = false, batchId = n,
+          collectStats = false),
+        vectorBatches, Dedup.embeddingIndex(_, "vec_id", "v", dim = 8)),
+      SpaceFixture("semantic", lsh = false,
+        p => state("sem", vectorCorpus,
+          SemDedup.assignmentIndex(vectorCorpus, "vec_id", "v", unitCenters), p),
+        (c, i, b, n) => Admission.admitBatchSemantic(b, c, i, "vec_id", "v",
+          unitCenters, minCosine = 0.95, dedupWithinBatch = false,
+          batchId = n, collectStats = false),
+        vectorBatches,
+        SemDedup.assignmentIndex(_, "vec_id", "v", unitCenters)),
+      SpaceFixture("signature", lsh = false,
+        p => state("sig", sigCorpus,
+          Dedup.signatureIndex(sigCorpus, "id", "sig", maxDistance = 3), p),
+        (c, i, b, n) => Admission.admitBatchSignature(b, c, i, "id", "sig",
+          maxDistance = 3, dedupWithinBatch = false, batchId = n,
+          collectStats = false),
+        // fresh signatures are >= 8 bits from every other one; the
+        // near-dups flip 1 bit
+        Seq(Seq(100L -> 0L, 101L -> (0xFFL << 40), 102L -> (sigBase | (7L << 8) | 1L)),
+          Seq(200L -> (0xFFL << 32), 201L -> (0xFFL << 16), 202L -> 1L),
+          Seq(300L -> ((0xFFL << 32) | 1L), 301L -> (0xFFL << 48)))
+          .map(_.toDF("id", "sig")),
+        Dedup.signatureIndex(_, "id", "sig", maxDistance = 3)),
+      SpaceFixture("substring", lsh = false,
+        p => state("sub", corpusDf,
+          SubstringDedup.gramIndex(corpusDf, "doc_id", "text", k = 4), p),
+        (c, i, b, n) => Admission.admitBatchSubstring(b, c, i, "doc_id",
+          "text", k = 4, maxDupCoverage = 0.5, batchId = n,
+          collectStats = false),
+        // the near-dups are 8 covered tokens of 9 or 10
+        Seq(
+          Seq(100L -> freshText("n100"), 101L -> freshText("n101"),
+            102L -> (freshText("c3") + " t0 t1")),
+          Seq(200L -> freshText("n200"), 201L -> freshText("n201"),
+            202L -> (freshText("n100") + " zz")),
+          Seq(300L -> (freshText("n200") + " zz"), 301L -> freshText("n301")))
+          .map(_.toDF("doc_id", "text")),
+        SubstringDedup.gramIndex(_, "doc_id", "text", k = 4)))
+  }
 
   /** the index files a plain read of `i` sees */
   private def visibleIndexFiles(i: String): Seq[String] = {
@@ -310,60 +442,78 @@ class AdmissionSpec extends SparkTestBase {
   }
 
   test("a commit crashed at any step replays to the uninterrupted state") {
-    // cycle 2 crashes at each step boundary of its commit, is replayed
-    // and followed by cycle 3; the result must be the uninterrupted
-    // run's: plain corpus read row for row, merged index bucket for
-    // bucket, cycle 3's near-dup of a cycle-2 admission dropped, and
+    // in every space, cycle 2 crashes at each step boundary of its
+    // commit, is replayed and followed by cycle 3; the result must be
+    // the uninterrupted run's: plain corpus read row for row, index
+    // content, cycle 3's near-dup of a cycle-2 admission dropped, and
     // nothing staged left behind
-    val b1 = Seq(100L -> freshText("n100"), 101L -> freshText("n101"),
-      102L -> freshText("c0")).toDF("doc_id", "text")
-    val b2 = Seq(200L -> freshText("n200"), 201L -> freshText("n201"),
-      202L -> (freshText("n100") + " k")).toDF("doc_id", "text")
-    val b3 = Seq(300L -> (freshText("n200") + " k"),
-      301L -> freshText("n301")).toDF("doc_id", "text")
-    def run(c: String, i: String, b: DataFrame, id: Long) =
-      Admission.admitBatch(b, c, i, "doc_id", "text", numHashes = 64,
-        bands = 32, threshold = 0.6, dedupWithinBatch = false,
-        batchId = id)
-    val reference = Seq(true, false).map { p =>
-      val (c, i) = world(p)
-      Seq(b1, b2, b3).zipWithIndex.foreach { case (b, n) => run(c, i, b, n) }
-      p -> (rowsOf(c), buckets(Admission.mergedIndex(spark, c, i)),
-        visibleIndexFiles(i).size)
-    }.toMap
     val steps = Seq("corpus-staged", "index-staged", "before-rename",
       "after-rename")
-    for ((step, partitioned) <- steps.zip(Seq(true, false, false, true))) {
-      val (c, i) = world(partitioned)
-      assert(run(c, i, b1, 0).admitted == 2L)
-      val cycle1 = rowsOf(c)
+    for (sp <- spaces) {
+      val Seq(b1, b2, b3) = sp.batches
+      val layouts = if (sp.lsh) Seq(true, false) else Seq(false)
+      val reference = layouts.map { p =>
+        val (c, i) = sp.world(p)
+        assert(Seq(b1, b2, b3).zipWithIndex.map { case (b, n) =>
+          sp.run(c, i, b, n).admitted } == Seq(2L, 2L, 1L), sp.name)
+        p -> (rowsOf(c), sp.index(c, i), visibleIndexFiles(i).size)
+      }.toMap
+      for ((step, partitioned) <- steps.zip(Seq(true, false, false, true)
+          .map(_ && sp.lsh))) {
+        val at = s"${sp.name} $step"
+        val (c, i) = sp.world(partitioned)
+        assert(sp.run(c, i, b1, 0).admitted == 2L, at)
+        val (cycle1, index1) = (rowsOf(c), if (sp.lsh) Nil else rowsOf(i))
+        Admission.stepHook = s =>
+          if (s == step) throw new RuntimeException(s"crash at $s")
+        val e = try intercept[RuntimeException](sp.run(c, i, b2, 1))
+          finally Admission.stepHook = _ => ()
+        assert(e.getMessage == s"crash at $step", at)
+        // plain reads after the crash: the previous corpus version, and
+        // the previous index — which, while MinHash/embedding deltas
+        // exist, fails validation rather than answer
+        assert(rowsOf(c) == cycle1, at)
+        if (sp.lsh) {
+          val plain = intercept[IllegalArgumentException](
+            Dedup.validatedStamp(spark.read.parquet(i), "plain", Nil))
+          assert(plain.getMessage.contains("admission delta rows"), at)
+        } else assert(rowsOf(i) == index1, at)
+        val replay = sp.run(c, i, b2, 1)
+        assert(replay.admitted == (if (step == "after-rename") 0L else 2L),
+          s"$at: $replay")
+        assert(sp.run(c, i, b3, 2).admitted == 1L, at)
+        val (refRows, refIndex, refFiles) = reference(partitioned)
+        val rows = rowsOf(c)
+        assert(rows == refRows, at)
+        val ids = spark.read.parquet(c).collect().map(_.get(0))
+        assert(ids.distinct.length == ids.length, at)
+        assert(sp.index(c, i) == refIndex, at)
+        for (root <- Seq(c, i))
+          assert(!new java.io.File(root, "_graft_staging").exists(), at)
+        assert(new java.io.File(i, "_graft_state").list().toSeq
+          .filterNot(_.endsWith(".crc")) == Seq("v3.json"), at)
+        assert(visibleIndexFiles(i).size == refFiles, at)
+      }
+    }
+    // compactCorpus is a commit too: crashed at each of its steps, the
+    // next compaction recovers, and the corpus holds the same rows,
+    // once each, in one file
+    val sp = spaces.head
+    for (step <- Seq("corpus-staged", "before-rename", "after-rename")) {
+      val (c, i) = sp.world(false)
+      sp.run(c, i, sp.batches.head, 0)
+      val before = rowsOf(c)
       Admission.stepHook = s =>
         if (s == step) throw new RuntimeException(s"crash at $s")
-      val e = try intercept[RuntimeException](run(c, i, b2, 1))
-        finally Admission.stepHook = _ => ()
-      assert(e.getMessage == s"crash at $step")
-      // plain reads after the crash: the previous corpus version, and
-      // an index read that fails validation rather than answer stale
-      assert(rowsOf(c) == cycle1, step)
-      val plain = intercept[IllegalArgumentException](
-        Dedup.minhashPairsAgainstIndex(b3, spark.read.parquet(c),
-          spark.read.parquet(i), "doc_id", "text", numHashes = 64,
-          bands = 32, threshold = 0.6))
-      assert(plain.getMessage.contains("admission delta rows"))
-      val replay = run(c, i, b2, 1)
-      assert(replay.admitted == (if (step == "after-rename") 0L else 2L),
-        s"$step: $replay")
-      assert(run(c, i, b3, 2).admitted == 1L, step)
-      val (refRows, refIndex, refFiles) = reference(partitioned)
-      val rows = rowsOf(c)
-      assert(rows == refRows, step)
-      assert(rows.map(_._1).distinct.size == rows.size, step)
-      assert(buckets(Admission.mergedIndex(spark, c, i)) == refIndex, step)
-      for (root <- Seq(c, i))
-        assert(!new java.io.File(root, "_graft_staging").exists(), step)
-      assert(new java.io.File(i, "_graft_state").list().toSeq
-        .filterNot(_.endsWith(".crc")) == Seq("v3.json"), step)
-      assert(visibleIndexFiles(i).size == refFiles, step)
+      try intercept[RuntimeException](Admission.compactCorpus(spark, c, i, 1))
+      finally Admission.stepHook = _ => ()
+      assert(rowsOf(c) == before, step)
+      assert(Admission.compactCorpus(spark, c, i, 1) == before.size, step)
+      assert(rowsOf(c) == before, step)
+      assert(new java.io.File(c).list().count(_.endsWith(".parquet")) == 1,
+        step)
+      assert(!new java.io.File(c, "_graft_staging").exists(), step)
+      assert(sp.run(c, i, sp.batches(1), 1).admitted == 2L, step)
     }
   }
 
@@ -605,102 +755,89 @@ class AdmissionSpec extends SparkTestBase {
     assert(s4.admitted == 1L)
   }
 
+  /** The fold sequence of a set-of-rows space: its batches (the last
+    * one replayed) run in two worlds, one with the listing threshold
+    * at the base's one file plus one, so every cycle that finds a
+    * delta first compacts. Both admit alike, and the merged index
+    * (base ∪ deltas, read plainly), the compacted one and a rebuild
+    * over the final corpus hold the same rows. */
+  private def foldSequence(sp: SpaceFixture): Unit = {
+    val batches = sp.batches :+ sp.batches.last
+    def cycles(c: String, i: String) = batches.zipWithIndex.map {
+      case (b, n) => sp.run(c, i, b, n)
+    }
+    def deltas(i: String) = visibleIndexFiles(i).count(_.startsWith("delta-"))
+    val (mc, mi) = sp.world(false)
+    val expected = cycles(mc, mi)
+    val (c, i) = sp.world(false)
+    assert(visibleIndexFiles(i).size == 1, sp.name)
+    spark.conf.set(ListingThreshold, "2")
+    val got = try cycles(c, i) finally spark.conf.unset(ListingThreshold)
+    assert(got == expected, sp.name)
+    assert(expected.map(_.admitted) == Seq(2L, 2L, 1L, 0L), sp.name)
+    assert(rowsOf(c) == rowsOf(mc), sp.name)
+    val rebuilt = indexRowsOf(sp.rebuild(spark.read.parquet(c)))
+    assert(indexRowsOf(spark.read.parquet(mi)) == rebuilt, sp.name)
+    assert(indexRowsOf(spark.read.parquet(i)) == rebuilt, sp.name)
+    assert(deltas(mi) == 3 && deltas(i) == 0, sp.name)
+  }
+
   test("substring auto-compaction: K trickle cycles + compact == rebuild") {
-    import graft.operators.SubstringDedup
-    // two identical worlds: one folding with auto-compaction on, one
-    // with the caller-managed default (off)
-    def world(): (String, String) = {
-      val c = Files.createTempDirectory("graft_adm_cmp_c").toString
-      val i = Files.createTempDirectory("graft_adm_cmp_i").toString + "/idx"
-      corpusDf.write.mode("overwrite").parquet(c)
-      SubstringDedup.gramIndex(corpusDf, "doc_id", "text", k = 4)
-        .write.mode("overwrite").parquet(i)
-      (c, i)
-    }
-    val (cA, iA) = world()
-    val (cB, iB) = world()
-    def batchN(n: Long) =
-      Seq((1000L + n) -> freshText(s"t$n")).toDF("doc_id", "text")
-    // threshold 1 with the seeded index already >= 1 file: every
-    // trickle cycle's append pushes the count over and compacts
-    (0L until 3L).foreach { n =>
-      Admission.admitBatchSubstring(batchN(n), cA, iA, "doc_id", "text",
-        k = 4, batchId = n, compactFileThreshold = 1,
-        compactPartitions = 2)
-      Admission.admitBatchSubstring(batchN(n), cB, iB, "doc_id", "text",
-        k = 4, batchId = n)
-    }
-    // compaction reshaped the listing down to compactPartitions while
-    // the append-only world kept growing files
-    val nA = SubstringDedup.gramIndexFileCount(spark, iA)
-    val nB = SubstringDedup.gramIndexFileCount(spark, iB)
-    assert(nA <= 2, s"auto-compacted index has $nA files")
-    assert(nB > nA, s"append-only world should have more files ($nB)")
-    // CONTENT: both worlds == a from-scratch rebuild over the final
-    // corpus (compaction only reshapes, appends are disjoint)
-    def grams(path: String): Set[Seq[Any]] =
-      spark.read.parquet(path).drop("__fmt").collect()
-        .map(_.toSeq).toSet
-    val rebuilt = SubstringDedup
-      .gramIndex(spark.read.parquet(cA), "doc_id", "text", k = 4)
-    val rebuiltSet = rebuilt.drop("__fmt").collect().map(_.toSeq).toSet
-    assert(grams(iA) == rebuiltSet, "compacted != rebuild")
-    assert(grams(iB) == rebuiltSet, "append-only != rebuild")
-    // the compacted index still validates and screens (a replayed
-    // near-copy of an admitted doc is rejected by coverage)
-    val s = Admission.admitBatchSubstring(
-      Seq(2000L -> (freshText("t1") + " zz")).toDF("doc_id", "text"),
-      cA, iA, "doc_id", "text", k = 4, batchId = 99L,
-      compactFileThreshold = 1, compactPartitions = 2)
-    assert(s.admitted == 0L, "coverage vs compacted index must reject")
+    foldSequence(spaces.find(_.name == "substring").get)
   }
 
-  test("signature streaming face drives the same hamming cycles") {
-    val corpusDir = Files.createTempDirectory("graft_adm_gsc").toString
-    val indexDir = Files.createTempDirectory("graft_adm_gsi").toString + "/idx"
-    val inDir = Files.createTempDirectory("graft_adm_gsin").toString
-    val chk = Files.createTempDirectory("graft_adm_gschk").toString
-    val base = 0x5555555555550000L
-    val corpus = (0L until 20L).map(i => (i, base | (i << 8)))
-      .toDF("id", "sig")
-    corpus.write.mode("overwrite").parquet(corpusDir)
-    graft.operators.Dedup.signatureIndex(corpus, "id", "sig",
-        maxDistance = 3)
-      .write.mode("overwrite").parquet(indexDir)
-    Seq(500L -> 0L,                       // fresh -> admitted
-        501L -> (base | (3L << 8) | 1L))  // hamming 1 of corpus 3 -> out
-      .toDF("id", "sig")
-      .coalesce(1).write.mode("append").parquet(inDir)
-    val stats = Admission.admitStreamSignature(
-      spark.readStream.schema("id LONG, sig LONG")
-        .parquet(s"$inDir/*.parquet"),
-      corpusDir, indexDir, chk, "id", "sig", maxDistance = 3)
-    assert(stats.map(_.admitted).sum == 1L)
-    val ids = spark.read.parquet(corpusDir)
-      .select($"id").as[Long].collect().sorted.toSeq
-    assert(ids == ((0L until 20L) ++ Seq(500L)))
+  test("semantic and signature fold sequences: merged, compacted and " +
+    "rebuilt indexes agree") {
+    spaces.filter(sp => sp.name == "semantic" || sp.name == "signature")
+      .foreach(foldSequence)
   }
 
-  test("substring streaming face drives the same coverage cycles") {
-    import graft.operators.SubstringDedup
-    val corpusDir = Files.createTempDirectory("graft_adm_ssc").toString
-    val indexDir = Files.createTempDirectory("graft_adm_ssi").toString + "/idx"
-    val inDir = Files.createTempDirectory("graft_adm_ssin").toString
-    val chk = Files.createTempDirectory("graft_adm_sschk").toString
-    corpusDf.write.mode("overwrite").parquet(corpusDir)
-    SubstringDedup.gramIndex(corpusDf, "doc_id", "text", k = 4)
-      .write.mode("overwrite").parquet(indexDir)
-    Seq(500L -> freshText("s500"),                      // fresh -> admitted
-        501L -> (freshText("c7") + " t0 t1"))           // 8/10 covered -> out
-      .toDF("doc_id", "text")
-      .coalesce(1).write.mode("append").parquet(inDir)
-    val stats = Admission.admitStreamSubstring(
-      spark.readStream.schema("doc_id LONG, text STRING")
-        .parquet(s"$inDir/*.parquet"),
-      corpusDir, indexDir, chk, "doc_id", "text", k = 4,
-      maxDupCoverage = 0.5)
-    assert(stats.map(_.admitted).sum == 1L)
-    assert(corpusIds(corpusDir) == ((0L until 40L) ++ Seq(500L)))
+  test("steady-state semantic, signature and substring cycles: 4 SQL " +
+    "executions, no listing, schema or stamp job") {
+    // cycle 1 adopts the state; cycle 2 reads through its manifest:
+    // the id-screened batch's checkpoint, the admitted checkpoint (the
+    // screen planned inside it), the corpus and index delta writes —
+    // and nothing outside those executions
+    val pins = Map("semantic" -> (4, 12), "signature" -> (4, 13),
+      "substring" -> (4, 16))
+    for (sp <- spaces if !sp.lsh) {
+      val (c, i) = sp.world(false)
+      val Seq(b1, b2, _) = sp.batches
+      assert(sp.run(c, i, b1, 0).admitted == 2L, sp.name)
+      var execs: Seq[String] = Nil
+      var jobs = 0
+      val outside = jobsOutsideSqlDuring {
+        execs = sqlExecutionsDuring {
+          jobs = jobsDuring(assert(sp.run(c, i, b2, 1).admitted == 2L))
+        }
+      }
+      def heads = execs.map(_.linesIterator.slice(1, 4).mkString(" | "))
+        .mkString("\n  ")
+      val (maxExecs, maxJobs) = pins(sp.name)
+      assert(execs.size <= maxExecs,
+        s"${sp.name}: cycle 2 started ${execs.size} SQL executions:\n  $heads")
+      assert(jobs <= maxJobs, s"${sp.name}: cycle 2 ran $jobs jobs:\n  $heads")
+      execs.foreach(p => assert(!p.contains("InMemoryRelation") &&
+        !p.contains("InMemoryTableScan"), p))
+      assert(stampScans(execs).isEmpty,
+        s"${sp.name}: cycle 2 re-read the index stamp:\n  $heads")
+      assert(outside.isEmpty, s"${sp.name}: cycle 2 ran jobs outside SQL " +
+        s"executions: ${outside.mkString(", ")}")
+    }
+  }
+
+  test("adoption refuses a partitioned index without __numParts, before any write") {
+    val (c, i) = world(true)
+    // the same layout with its __numParts stamp dropped
+    spark.read.parquet(i).drop("__numParts").localCheckpoint()
+      .write.mode("overwrite").partitionBy("part").parquet(i)
+    val (rows, files) = (rowsOf(c), visibleIndexFiles(i))
+    val e = intercept[IllegalArgumentException](
+      spaces.head.run(c, i, spaces.head.batches.head, 0))
+    assert(e.getMessage.contains("__numParts"), e.getMessage)
+    assert(rowsOf(c) == rows && visibleIndexFiles(i) == files)
+    for (root <- Seq(c, i); dir <- Seq("_graft_state", "_graft_staging"))
+      assert(!new java.io.File(root, dir).exists(), s"$root/$dir")
   }
 
   test("semantic streaming face drives the same assignment cycles " +

@@ -178,7 +178,6 @@ class DedupSpec extends SparkTestBase {
     "__numHashes", "__bands", "__shingleLen", "__seed", "__maxBucketSize")
   private val embeddingIndexCols = Seq("code", "ids", "n", "__fmt",
     "__nTables", "__bitsPerTable", "__dim", "__seed", "__maxBucketSize")
-  private val partitionedCols = Seq("__numParts", "part")
 
   private def assertIndexSchema(index: org.apache.spark.sql.DataFrame,
                                 cols: Seq[String], fmt: Int): Unit = {
@@ -364,126 +363,6 @@ class DedupSpec extends SparkTestBase {
     assert(e.getMessage.contains("screened with"))
   }
 
-  test("partitioned index update rewrites only dirty partitions, == rebuild") {
-    // build on the corpus minus a 3-doc batch, persist PARTITIONED,
-    // fold the batch in IN PLACE: the result read back from disk must
-    // equal a full rebuild bucket-for-bucket, the untouched layout
-    // partitions' files must be byte-identical (same names — never
-    // rewritten), and the dirty set must be batch-bounded (3 docs x
-    // 32 bands = <=96 bucket keys over 256 partitions, not all 256).
-    val batch = corpus.filter($"doc_id".isin(3L, 7L, 11L))
-    val hist = corpus.filter(!$"doc_id".isin(3L, 7L, 11L))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_mh_index_part").toString
-    Dedup.indexWritePartitioned(
-      Dedup.minhashIndex(hist, "doc_id", "text", numHashes = 64,
-        bands = 32),
-      dir, numParts = 256)
-    def files(): Map[String, Set[String]] = {
-      val root = new java.io.File(dir)
-      root.listFiles().filter(_.getName.startsWith("part="))
-        .map(d => d.getName ->
-          d.listFiles().map(f => s"${f.getName}:${f.length}").toSet)
-        .toMap
-    }
-    val before = files()
-    val stats = Dedup.minhashIndexUpdatePartitioned(spark, dir, batch,
-      "doc_id", "text", numHashes = 64, bands = 32, numParts = 256)
-    assert(stats.totalPartitions == 256)
-    assert(stats.dirtyPartitions > 0 && stats.dirtyPartitions <= 96,
-      s"dirty=${stats.dirtyPartitions} is not batch-bounded")
-    val after = files()
-    val dirtyDirs = after.keySet.filter(p =>
-      before.get(p) != after.get(p))
-    assert(dirtyDirs.size <= stats.dirtyPartitions)
-    // clean partitions: identical file names and sizes — untouched
-    val clean = before.keySet -- dirtyDirs
-    assert(clean.nonEmpty && clean.forall(p => before(p) == after(p)))
-    // equivalence: on-disk result == full rebuild, bucket for bucket
-    def key(df: org.apache.spark.sql.DataFrame) = df
-      .drop("part")
-      .drop(df.columns.filter(_.startsWith("__")): _*)
-      .collect()
-      .map(r => ((r.get(0), r.get(1)),
-        (r.getSeq[Long](2).sorted, r.getLong(3)))).toMap
-    val rebuilt = key(Dedup.minhashIndex(corpus, "doc_id", "text",
-      numHashes = 64, bands = 32))
-    assert(key(spark.read.parquet(dir)) == rebuilt)
-    assertIndexSchema(spark.read.parquet(dir),
-      minhashIndexCols ++ partitionedCols, 2)
-    // layout-param mismatch fails fast like every other param
-    val e = intercept[IllegalArgumentException] {
-      Dedup.minhashIndexUpdatePartitioned(spark, dir, batch,
-        "doc_id", "text", numHashes = 64, bands = 32, numParts = 64)
-    }
-    assert(e.getMessage.contains("__numParts"))
-    // an unpartitioned persist is told to use the right path
-    val plain = java.nio.file.Files
-      .createTempDirectory("graft_mh_index_plain").toString
-    Dedup.minhashIndex(hist, "doc_id", "text", numHashes = 64,
-      bands = 32).write.mode("overwrite").parquet(plain)
-    val e2 = intercept[IllegalArgumentException] {
-      Dedup.minhashIndexUpdatePartitioned(spark, plain, batch,
-        "doc_id", "text", numHashes = 64, bands = 32)
-    }
-    assert(e2.getMessage.contains("not partitioned"))
-    // r12 review fix: wrong params refuse BEFORE any write even when
-    // the dirty-pruned validation would be vacuous — the empty batch
-    // is the deterministic member of that class (zero dirty
-    // partitions; an all-new-dirty batch is the probabilistic one).
-    // The guard is the head-stamp check, not the pruned scan.
-    val e3 = intercept[IllegalArgumentException] {
-      Dedup.minhashIndexUpdatePartitioned(spark, dir,
-        batch.filter($"doc_id" < 0), "doc_id", "text",
-        numHashes = 32, bands = 32, numParts = 256)
-    }
-    assert(e3.getMessage.contains("mixed-param state"))
-  }
-
-  test("validation memo: a fold registers its files, a foreign stamp still fails") {
-    val batch = corpus.filter($"doc_id".isin(3L, 7L, 11L))
-    val hist = corpus.filter(!$"doc_id".isin(3L, 7L, 11L))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_mh_index_memo").toString
-    // 3 docs x 32 bands = 96 bucket keys: every one of 4 layout
-    // partitions is dirty, so the fold below rewrites all of them
-    Dedup.indexWritePartitioned(
-      Dedup.minhashIndex(hist, "doc_id", "text", numHashes = 64,
-        bands = 32),
-      dir, numParts = 4)
-    def screen(idx: org.apache.spark.sql.DataFrame) =
-      Dedup.minhashPairsAgainstIndex(batch, hist, idx, "doc_id", "text",
-        numHashes = 64, bands = 32, threshold = 0.6).count()
-    def fold(idx: org.apache.spark.sql.DataFrame) =
-      Dedup.minhashIndexUpdatePartitioned(spark, dir, batch,
-        "doc_id", "text", numHashes = 64, bands = 32, preRead = Some(idx))
-    // the cycle shape: the screen validates the frame once, the fold
-    // over the same frame reads no stamp and registers what it wrote
-    val idx = spark.read.parquet(dir)
-    assert(stampScans(sqlExecutionsDuring(screen(idx))).size == 1)
-    assert(stampScans(sqlExecutionsDuring(fold(idx))).isEmpty)
-    assert(stampScans(
-      sqlExecutionsDuring(screen(spark.read.parquet(dir)))).isEmpty,
-      "the folded file set must be a memo hit")
-    // a foreign writer restamps one layout partition with another seed
-    val foreign = spark.read.parquet(dir).filter($"part" === 0)
-      .withColumn("__seed", lit(43L)).localCheckpoint()
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try foreign.write.mode("overwrite").partitionBy("part").parquet(dir)
-    finally spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    val e1 = intercept[IllegalArgumentException](
-      screen(spark.read.parquet(dir)))
-    assert(e1.getMessage.contains("distinct build-param tuples"))
-    def listing() = new java.io.File(dir).listFiles()
-      .filter(_.isDirectory).flatMap(_.listFiles().map(_.getPath)).toSet
-    val before = listing()
-    val e2 = intercept[IllegalArgumentException](
-      fold(spark.read.parquet(dir)))
-    assert(e2.getMessage.contains("distinct build-param tuples") ||
-      e2.getMessage.contains("mixed-param state"), e2.getMessage)
-    assert(listing() == before, "a refused fold must write nothing")
-  }
-
   test("index screen shingles corpus rows only above the verify join") {
     // the corpus side of the verification join is the raw (id, text)
     // scan: shingling it there would shingle every corpus row (and,
@@ -524,47 +403,6 @@ class DedupSpec extends SparkTestBase {
         _.exists(_.isInstanceOf[WordShingles]))),
         s"corpus side shingles below the join:\n$s")
     }
-  }
-
-  test("partitioned embedding index update == rebuild from disk") {
-    val batch = embCorpus.filter($"vec_id" < 10)
-    val hist = embCorpus.filter($"vec_id" >= 10)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_emb_index_part").toString
-    Dedup.indexWritePartitioned(
-      Dedup.embeddingIndex(hist, "vec_id", "embedding", dim = 64),
-      dir, numParts = 128)
-    val stats = Dedup.embeddingIndexUpdatePartitioned(spark, dir, batch,
-      "vec_id", "embedding", dim = 64, numParts = 128)
-    // 10 vectors x 8 tables = <=80 codes over 128 partitions
-    assert(stats.dirtyPartitions > 0 && stats.dirtyPartitions <= 80)
-    def key(df: org.apache.spark.sql.DataFrame) = df
-      .drop("part")
-      .drop(df.columns.filter(_.startsWith("__")): _*)
-      .collect()
-      .map(r => (r.get(0), (r.getSeq[Long](1).sorted, r.getLong(2)))).toMap
-    val rebuilt = key(Dedup.embeddingIndex(embCorpus, "vec_id",
-      "embedding", dim = 64))
-    assert(key(spark.read.parquet(dir)) == rebuilt)
-    assertIndexSchema(spark.read.parquet(dir),
-      embeddingIndexCols ++ partitionedCols, 1)
-    // head-stamp guard, embedding face (shared core with the minhash
-    // pin): wrong params refuse before any write even when the
-    // dirty-pruned validation would be vacuous (empty batch)
-    val eGuard = intercept[IllegalArgumentException] {
-      Dedup.embeddingIndexUpdatePartitioned(spark, dir,
-        batch.filter($"vec_id" < 0), "vec_id", "embedding", dim = 64,
-        nTables = 4, numParts = 128)
-    }
-    assert(eGuard.getMessage.contains("mixed-param state"))
-    // and the screen accepts the partitioned read-back unchanged
-    val truth = cosTruth(0.95)
-    val got = Dedup.embeddingPairsAgainstIndex(embBatch, embCorpus,
-        spark.read.parquet(dir), "vec_id", "embedding", dim = 64,
-        threshold = 0.95)
-      .select($"id_new", $"id_corpus").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got == truth)
   }
 
   test("embeddingIndexUpdate == rebuild, bucket for bucket") {

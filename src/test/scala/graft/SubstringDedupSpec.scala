@@ -254,88 +254,6 @@ class SubstringDedupSpec extends SparkTestBase {
       .select($"t").head().getString(0) == "caf\u00e9") // NFC-composed
   }
 
-  test("gramIndexAppendInPlace: content == rebuild, old files untouched") {
-    val a = Seq((1L, "m n o p m n"), (2L, "n o p q")).toDF("doc_id", "text")
-    val b = Seq((3L, "p q m n"), (4L, "brand new tokens here"))
-      .toDF("doc_id", "text")
-    val k = 3
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_gram_app").toString + "/idx"
-    SubstringDedup.gramIndex(a, "doc_id", "text", k)
-      .write.mode("overwrite").parquet(dir)
-    def files: Map[String, Long] =
-      new java.io.File(dir).listFiles()
-        .filter(_.getName.endsWith(".parquet"))
-        .map(f => f.getName -> f.lastModified()).toMap
-    val before = files
-    val appended = SubstringDedup.gramIndexAppendInPlace(spark, dir, b,
-      "doc_id", "text", k)
-    assert(appended > 0)
-    // old files byte-identical by (name, mtime); new files appeared
-    val after = files
-    assert(before.forall { case (n, m) => after.get(n).contains(m) })
-    assert(after.size > before.size)
-    // on-disk content == a full rebuild's distinct-gram set
-    val rebuilt = SubstringDedup.gramIndex(a.unionByName(b),
-      "doc_id", "text", k)
-    val onDisk = spark.read.parquet(dir)
-    assert(onDisk.exceptAll(rebuilt).isEmpty &&
-      rebuilt.exceptAll(onDisk).isEmpty)
-    // replaying the SAME batch appends nothing (all grams present)
-    assert(SubstringDedup.gramIndexAppendInPlace(spark, dir, b,
-      "doc_id", "text", k) == 0L)
-    assert(files == after)
-    // the index side of the freshness anti join never shuffles: the
-    // batch grams broadcast into the index scan
-    val plan = {
-      val idx = spark.read.parquet(dir).drop("__fmt", "__k", "__hashKeys")
-      idx.join(broadcast(
-          Seq("x y z").toDF("g")), Seq("g"), "left_semi")
-        .queryExecution.executedPlan.toString
-    }
-    assert(plan.contains("BroadcastHashJoin"), plan)
-  }
-
-  test("gramIndexCompact: fewer files, identical content, params kept") {
-    val a = Seq((1L, "aa bb cc dd ee ff"), (2L, "cc dd ee ff gg"))
-      .toDF("doc_id", "text")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_gram_cmp").toString + "/idx"
-    SubstringDedup.gramIndex(a, "doc_id", "text", 3)
-      .write.mode("overwrite").parquet(dir)
-    // three appends fragment the listing
-    for (i <- 10 to 12)
-      SubstringDedup.gramIndexAppendInPlace(spark, dir,
-        Seq((i.toLong, s"x$i y$i z$i w$i")).toDF("doc_id", "text"),
-        "doc_id", "text", 3)
-    def parquetFiles = new java.io.File(dir).listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    val before = spark.read.parquet(dir).collect().toSet
-    val nFilesBefore = parquetFiles
-    val n = SubstringDedup.gramIndexCompact(spark, dir, partitions = 1)
-    assert(parquetFiles == 1 && parquetFiles < nFilesBefore)
-    val after = spark.read.parquet(dir)
-    assert(after.collect().toSet == before)
-    assert(n == before.size)
-    assert(after.columns.toSet ==
-      Set("g", "__fmt", "__k", "__hashKeys"))
-    // still screens identically after compaction
-    val spans = SubstringDedup.duplicateSpansAgainst(
-        Seq((99L, "cc dd ee ff tail")).toDF("doc_id", "text"),
-        spark.read.parquet(dir), "doc_id", "text", 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(spans == Set((99L, 1L, 4L)))
-    // a foreign/param-less table refuses to be compacted
-    val e = intercept[IllegalArgumentException] {
-      val bare = java.nio.file.Files
-        .createTempDirectory("graft_gram_cmpb").toString + "/idx"
-      spark.read.parquet(dir).drop("__fmt", "__k", "__hashKeys")
-        .write.mode("overwrite").parquet(bare)
-      SubstringDedup.gramIndexCompact(spark, bare, 1)
-    }
-    assert(e.getMessage.contains("acceptUnvalidated"))
-  }
-
   test("no shuffle carries gram text in hash mode (scale shape)") {
     val docs = Seq((1L, "a b c d e f g"), (2L, "c d e f g h i"))
       .toDF("doc_id", "text")
